@@ -6,7 +6,7 @@ Layers:
 - textnorm / stopwords / bm25 ........ the executable spec (pure Python/numpy)
 - functions/ ......................... vectorized pandas/Arrow UDFs
 - index/ ............................. segmented, compressed, checkpointed index build
-- query/ ............................. naive DataFrame scorer + DAAT/block-max WAND kernel
+- query/ ............................. decode-join DataFrame scorer + batched per-segment kernel
 - oracle/ ............................ pure-Python reference search (golden tests)
 - operators/ ......................... training-data ops (dedup, ANN, text quality, ...)
 """

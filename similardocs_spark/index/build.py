@@ -23,7 +23,7 @@ Index layout under <root>/ (parquet; an Iceberg catalog would swap in behind
 the same paths — the runtime jar is absent in this sandbox):
   docs/       doc_id, conv_id, seg, db, instance, update_date, dl, dlq,
               tfnorm, rerank_tokens              (repartitioned by seg)
-  postings/   seg, term, df_seg, blob, block_last, block_max
+  postings/   seg, term, df_seg, blob, block_last, block_min_dlq
               (one partition per seg batch, sorted by term → parquet
               row-group min/max stats prune non-query terms at scan)
   terms/      term, df, idf                       (global term stats)
@@ -37,16 +37,12 @@ import os
 import time
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from .. import bm25
 from ..functions.tokenize import tokenize_with_rerank as tokenize_both_udf
-from . import codec
+from ..util import local_df, scoped_conf
 
 TRUNCATE_CHARS = 10_000
 DEFAULT_SEG_SIZE = 1 << 20
@@ -58,38 +54,6 @@ DEFAULT_SEG_SIZE = 1 << 20
 # floor). 16k mirrors util._kernel_confs; at production shuffle sizes every
 # partition is far above the floor and the setting is inert.
 _BUILD_CONFS = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k"}
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _build_exec_conf(spark: SparkSession):
-    saved: dict[str, str | None] = {}
-    for k, v in _BUILD_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-
-
-def small_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Tiny driver-side table as an Arrow LocalRelation (util.local_df):
-    zero jobs, zero Python tasks at materialization. The former
-    parallelize(rows, 1) form ran a one-task pickled-Python job per
-    lineage/stats write — ~0.3 s × 5 writes per build of pure overhead."""
-    from ..util import local_df
-
-    return local_df(spark, rows, schema)
 
 
 @dataclass
@@ -121,11 +85,6 @@ class IndexPaths:
         return os.path.join(self.root, "lineage")
 
 
-@pandas_udf(T.LongType())
-def _quantize_udf(dl: pd.Series) -> pd.Series:
-    return pd.Series(bm25.quantize_dl_np(dl.to_numpy()))
-
-
 def quantize_dl_col(dl):
     """JVM-native quantize_dl (bm25.quantize_dl round-trip) as a Column —
     exact bit-length via length(bin(v)), down-round by masking the low
@@ -141,28 +100,6 @@ def quantize_dl_col(dl):
         .otherwise(F.lit(bm25._NUM_FREE_VALUES) + quant)
         .cast("long")
     )
-
-
-_ENCODE_RET = T.StructType(
-    [
-        T.StructField("blob", T.BinaryType()),
-        T.StructField("block_last", T.ArrayType(T.LongType())),
-        T.StructField("block_min_dlq", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-@pandas_udf(_ENCODE_RET)
-def _encode_udf(doc_ids: pd.Series, dlqs: pd.Series) -> pd.DataFrame:
-    blobs, lasts, mins = [], [], []
-    for ids, dq in zip(doc_ids, dlqs):
-        ids = np.asarray(ids, dtype=np.int64)
-        dq = np.asarray(dq, dtype=np.int64)
-        blobs.append(codec.encode_docids(ids))
-        bl, bm = codec.block_metadata(ids, dq)
-        lasts.append(bl)
-        mins.append(bm)
-    return pd.DataFrame({"blob": blobs, "block_last": lasts, "block_min_dlq": mins})
 
 
 def assemble_docs(transcripts: DataFrame, docs_meta: DataFrame | None = None) -> DataFrame:
@@ -219,8 +156,6 @@ def assign_doc_ids(docs: DataFrame, partitions: int | None = None) -> DataFrame:
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    from ..util import local_df
-
     offsets_df = F.broadcast(
         local_df(
             docs.sparkSession,
@@ -272,7 +207,7 @@ def build_index(
     dense integer) — skips the generic rank-assignment passes (sampling +
     per-partition offsets). lineage_counts=False skips the per-batch postings
     read-back counting job (rows are logged as -1)."""
-    with _build_exec_conf(spark):
+    with scoped_conf(spark, _BUILD_CONFS):
         return _build_index_impl(
             spark, transcripts, root, docs_meta=docs_meta, seg_size=seg_size,
             seg_batches=seg_batches, resume=resume, doc_id_expr=doc_id_expr,
@@ -357,7 +292,7 @@ def _build_index_impl(
         n_docs, sum_dl = stats["n_docs"], stats["sum_dl"] or 0
         avgdl = float(sum_dl) / max(1, n_docs)
         io.overwrite(
-            small_df(
+            local_df(
                 spark,
                 [(n_docs, int(sum_dl), avgdl, seg_size)],
                 "n_docs long, sum_dl long, avgdl double, seg_size long",
@@ -385,7 +320,7 @@ def _build_index_impl(
             io.overwrite(meta.coalesce(1), paths.meta_stats)
         else:
             io.overwrite(
-                small_df(spark, [], "field string, value string, df long"),
+                local_df(spark, [], "field string, value string, df long"),
                 paths.meta_stats,
             )
         t0 = _t("meta stats", t0)
@@ -516,7 +451,7 @@ def build_terms(spark: SparkSession, paths: IndexPaths) -> None:
 
 
 def _log_lineage(spark: SparkSession, paths: IndexPaths, rows: list[tuple]) -> None:
-    df = small_df(
+    df = local_df(
         spark, rows, "phase string, seg long, rows long, bytes long, status string"
     )
     mode = "append" if os.path.exists(paths.lineage) else "overwrite"

@@ -25,6 +25,11 @@ Block-max metadata (per-term, kept as plain array columns next to the blob):
                                valid when avgdl drifts under incremental
                                updates (Lucene likewise derives avgdl from
                                live index stats at query time).
+
+The block metadata is written by every build and incremental update but read
+by no query path: the per-segment kernel decodes whole lists, which measured
+faster in numpy than block-max skipping (query/wand.py). Dropping the columns
+would change the persisted postings format of existing indexes.
 """
 from __future__ import annotations
 
@@ -73,7 +78,7 @@ def decode_docids(blob: bytes) -> np.ndarray:
 
 
 def block_metadata(doc_ids: np.ndarray, dlqs: np.ndarray) -> tuple[list[int], list[int]]:
-    """Per-128-block (last docID, min quantized dl) for skip + block-max WAND."""
+    """Per-128-block (last docID, min quantized dl); written, not read."""
     ids = np.asarray(doc_ids, dtype=np.int64)
     dq = np.asarray(dlqs, dtype=np.int64)
     last: list[int] = []

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import local_df
 from .build import (
     IndexPaths,
     _log_lineage,
@@ -167,10 +168,8 @@ def _commit_staged(
     full = io.read(spark, paths.docs)
     agg = full.agg(F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
     n_docs, sum_dl = int(agg["n"]), int(agg["s"] or 0)
-    from .build import small_df
-
     io.overwrite(
-        small_df(
+        local_df(
             spark,
             [(n_docs, sum_dl, sum_dl / max(1, n_docs), seg_size)],
             "n_docs long, sum_dl long, avgdl double, seg_size long",

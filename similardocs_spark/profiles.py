@@ -75,12 +75,12 @@ class ProfileStore:
         self._swap_lock = threading.RLock()
 
     def _read(self) -> DataFrame:
-        from .index.build import small_df
+        from .util import local_df
 
         if self._io.mode == "parquet":
             self._recover()
         if not self._io.exists(self.spark, self.path):
-            return small_df(self.spark, [], SCHEMA)
+            return local_df(self.spark, [], SCHEMA)
         return self._io.read(self.spark, self.path)
 
     # ------------------------------------------------------ staged overwrite

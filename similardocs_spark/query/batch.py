@@ -4,10 +4,12 @@ The reference serves one query per servlet request; on Spark the q/s story is
 amortization — scoring 1,000 queries costs barely more than one, because the
 postings scan, decode, joins and shuffles are shared:
 
-  qterms(query_id, term, w_idf)  [tiny, broadcast]
-    ⋈ postings (term-pruned scan, decoded ONCE per distinct term)
+  postings (term-pruned scan, decoded ONCE per distinct term)
+    ⋈ qterms(query_id, term, w_idf)  [tiny, broadcast]
     ⋈ doc stats (bucket/categorical filters pushed to the parquet scan)
     → groupBy(query_id, doc_id) float32-spec scoring
+      [SearchEngine._score_terms; when the batch's terms have a large Σdf,
+       the batched per-segment kernel of query/wand.py scores instead]
     → per-query candidate pool via ranked window (150·k)
     → overlap rerank vs per-query token arrays → per-query top-k window
 
@@ -32,52 +34,9 @@ from ..oracle.refsearch import (
 )
 
 
-def _prepare_batch(engine, queries: dict[str, str]) -> dict[str, dict]:
-    """Per-query prep with ONE terms-table lookup for the union of terms."""
-    import numpy as np
-
-    from .. import bm25
-    from ..synonyms import expanded_query_terms
-    from ..textnorm import query_rerank_tokens, uniform_text
-
-    raw: dict[str, dict] = {}
-    all_terms: set[str] = set()
-    for qid, text in queries.items():
-        words = uniform_text(text)
-        if not words:
-            continue
-        text2 = " ".join(words)
-        weights = expanded_query_terms(text2, engine.synonyms)
-        rr = query_rerank_tokens(text2)
-        raw[qid] = {"weights": weights, "rerank": rr}
-        all_terms.update(weights)
-    if not raw:
-        return {}
-    if engine._term_df is not None:
-        dfs = {t: engine._term_df[t] for t in all_terms if t in engine._term_df}
-    else:
-        from ..util import filter_terms
-
-        dfs = {
-            r["term"]: r["df"]
-            for r in filter_terms(engine._terms, all_terms).collect()
-        }
-    out: dict[str, dict] = {}
-    for qid, info in raw.items():
-        w_idf = {
-            t: float(np.float32(np.float32(w) * bm25.idf(dfs[t], engine.n_docs)))
-            for t, w in info["weights"].items()
-            if t in dfs
-        }
-        if not w_idf:
-            continue
-        out[qid] = {"w_idf": w_idf, "rerank": info["rerank"]}
-    return out
-
-
 def _batch_bucket(
     engine,
-    qinfo: dict[str, dict],
+    qinfo: dict[str, tuple[dict[str, float], list[str]]],
     remaining: dict[str, int],
     min_ngrams: int,
     sources: set[str] | None,
@@ -87,28 +46,22 @@ def _batch_bucket(
     use_wand: bool = False,
 ) -> DataFrame:
     spark = engine.spark
-    active = [q for q, k in remaining.items() if k > 0 and q in qinfo]
-    qterm_rows = [
-        (qid, t, w) for qid in active for t, w in sorted(qinfo[qid]["w_idf"].items())
-    ]
+    active = {q: qinfo[q] for q, k in remaining.items() if k > 0 and q in qinfo}
     meta_rows = [
         (
             qid,
-            qinfo[qid]["rerank"],
-            get_min_ngrams(min_ngrams, len(qinfo[qid]["rerank"])),
+            rerank,
+            get_min_ngrams(min_ngrams, len(rerank)),
             remaining[qid],
             CANDIDATE_FACTOR * remaining[qid],
         )
-        for qid in active
+        for qid, (_, rerank) in active.items()
     ]
     # Arrow LocalRelations: materializing a broadcast of a plain
     # createDataFrame(list) runs a full Python-task stage per table
     # (~1.2 s each measured) — local_df makes them free
     from ..util import local_df
 
-    qterms = F.broadcast(
-        local_df(spark, qterm_rows, "query_id string, term string, w_idf double")
-    )
     qmeta = F.broadcast(
         local_df(
             spark,
@@ -119,13 +72,13 @@ def _batch_bucket(
     if use_wand:
         # batched per-segment kernel: shared decode, numpy scoring, ≤ pool
         # rows per (segment, query) enter the plan — no posting×query row
-        # explosion (the decode-join plan below multiplies every decoded
-        # posting by the number of queries containing that term)
+        # explosion (the decode-join plan multiplies every decoded posting
+        # by the number of queries containing that term)
         from .wand import wand_score_batch
 
         scored = wand_score_batch(
             engine,
-            {qid: qinfo[qid]["w_idf"] for qid in active},
+            {qid: w_idf for qid, (w_idf, _) in active.items()},
             {qid: CANDIDATE_FACTOR * remaining[qid] for qid in active},
             from_str,
             to_str,
@@ -133,32 +86,13 @@ def _batch_bucket(
             instances,
         )
     else:
-        terms_needed = sorted({t for _, t, _ in qterm_rows})
-        from ..util import filter_terms
-        from .engine import _decode_udf
-
-        decoded = (
-            filter_terms(engine._postings, terms_needed)
-            .select("term", F.explode(_decode_udf(F.col("blob"))).alias("doc_id"))
-        )
-        docs = engine._docs.filter(F.col("update_date").between(from_str, to_str))
-        if sources is not None:
-            docs = docs.filter(F.col("db").isin(sorted(sources)))
-        if instances is not None:
-            docs = docs.filter(F.col("instance").isin(sorted(instances)))
-
-        scored = (
-            decoded.join(qterms, "term")
-            .join(docs.select("doc_id", "tfnorm", "db", "instance"), "doc_id")
-            .withColumn(
-                "term_score", (F.col("w_idf").cast("float") * F.col("tfnorm")).cast("float")
-            )
-            .groupBy("query_id", "doc_id", "db", "instance")
-            .agg(F.sum(F.col("term_score").cast("double")).alias("s"))
-            .withColumn(
-                "score", (F.col("s") + engine._const_for(sources, instances)).cast("float")
-            )
-            .select("query_id", "doc_id", "score")
+        scored = engine._score_terms(
+            [
+                (qid, t, w)
+                for qid, (w_idf, _) in active.items()
+                for t, w in sorted(w_idf.items())
+            ],
+            from_str, to_str, sources, instances,
         )
     docs_fields = engine._docs.select(
         "doc_id", "conv_id", "update_date", "rerank_tokens"
@@ -305,7 +239,11 @@ def search_batch(
     column always matches the dict key). Applies to search_batch_mixed
     too (it groups into search_batch calls). For per-query filter overrides
     see search_batch_mixed."""
-    qinfo = _prepare_batch(engine, queries)
+    qinfo = {
+        qid: (w_idf, rerank)
+        for qid, (w_idf, rerank) in engine._prepare_all(queries).items()
+        if w_idf
+    }
     results: dict[str, list] = {qid: [] for qid in queries}
     if not qinfo:
         return results
@@ -316,8 +254,8 @@ def search_batch(
     canon: dict[tuple, str] = {}
     alias_of: dict[str, str] = {}
     for qid in sorted(qinfo):
-        info = qinfo[qid]
-        key = (tuple(sorted(info["w_idf"].items())), tuple(info["rerank"]))
+        w_idf, rerank = qinfo[qid]
+        key = (tuple(sorted(w_idf.items())), tuple(rerank))
         rep = canon.setdefault(key, qid)
         if rep != qid:
             alias_of[qid] = rep
@@ -325,8 +263,8 @@ def search_batch(
         del qinfo[qid]
     if use_wand is None:
         union: dict[str, float] = {}
-        for info in qinfo.values():
-            union.update(info["w_idf"])
+        for w_idf, _ in qinfo.values():
+            union.update(w_idf)
         use_wand = engine._wand_auto(union)
     lower = last_days if last_days else MAX_LOWER_LIMIT
     assert lower >= engine.end_days_ago

@@ -1,17 +1,18 @@
 """BM25 top-k query engine over the segmented index.
 
-Two scoring paths with identical results:
-- `score_bucket(..., use_wand=False)` — declarative DataFrame plan: broadcast
-  the (tiny) query-term table against the postings scan (term pruned via
-  parquet min/max row-group stats thanks to the term-sorted layout), decode
-  blobs with a vectorized UDF, aggregate per docID, join doc stats for
-  filters + tfnorm, distributed top-(150·k) via orderBy+limit
-  (TakeOrderedAndProject — no global sort).
-- `use_wand=True` — per-segment DAAT traversal with block-max WAND pruning and
-  bounded per-partition heaps merged via treeReduce (query/wand.py). This is
-  the 100-TB path: per-executor work is one segment's postings for the query
-  terms only, score accumulation never leaves the executor, and only
-  ≤ heap_size rows per segment cross the wire.
+Two scoring plans with identical results, picked per query from the
+estimated postings volume Σdf of its terms (`_wand_auto`, threshold
+WAND_AUTO_MIN_POSTINGS; `use_wand=` overrides):
+- decode-join (`_score_terms`) for small Σdf: broadcast the (tiny)
+  query-term table against the postings scan (term pruned via parquet
+  min/max row-group stats thanks to the term-sorted layout), decode blobs
+  with a vectorized UDF, explode, join doc stats for filters + tfnorm,
+  aggregate per (query, docID); `score_bucket` cuts the top-(150·k) with
+  orderBy+limit (TakeOrderedAndProject — no global sort).
+- the batched per-segment kernel (query/wand.py) for large Σdf: one search
+  is a batch of one. Per-executor work is one segment's postings for the
+  query terms only, score accumulation never leaves the executor, and only
+  ≤ pool rows per segment cross the wire before the global top-pool cut.
 
 Query lifecycle (reference SimDocsSearch.scala:122-347): text → word prep →
 term weights (duplicate-prefix boosts) → per-day-bucket retrieval (optional
@@ -47,8 +48,9 @@ from ..synonyms import SynonymDict, expanded_query_terms
 from ..textnorm import query_rerank_tokens, uniform_text
 
 # Auto path selection: below this many estimated postings the decode-join
-# plan costs the same as the kernel; above it, WAND's skip-before-decode wins
-# and the decode-join plan's posting explosion becomes the scale-killer.
+# plan costs the same as the kernel; above it, the kernel's in-executor
+# numpy scoring wins and the decode-join plan's posting explosion becomes
+# the scale-killer.
 WAND_AUTO_MIN_POSTINGS = 8192
 
 
@@ -125,9 +127,10 @@ class SearchEngine:
         ):
             # small term dictionary → one collect at init kills a Spark job
             # per query (prefix-6 tokens bound the dictionary hard: ≤ ~37^6).
-            # Beyond either guard the engine runs WITHOUT the preload: prepare()
-            # falls back to a per-query isin() lookup against the terms table
-            # and _wand_auto defaults to WAND (see those methods).
+            # Beyond either guard the engine runs WITHOUT the preload:
+            # _prepare_all falls back to one term-pruned read of the terms
+            # table per prepare and _wand_auto defaults to the kernel (see
+            # those methods).
             self._term_df = {
                 r["term"]: r["df"] for r in self._terms.collect()
             }
@@ -166,33 +169,54 @@ class SearchEngine:
 
     # ------------------------------------------------------------ query prep
 
+    def _prepare_all(
+        self, queries: dict[str, str]
+    ) -> dict[str, tuple[dict[str, float], list[str]]]:
+        """prepare() of every query with ONE term-df lookup for the union of
+        their terms; queries whose normalized text is empty are left out."""
+        analyzed = {}
+        for qid, text in queries.items():
+            words = uniform_text(text)
+            if words:
+                text2 = " ".join(words)
+                analyzed[qid] = (
+                    expanded_query_terms(text2, self.synonyms),
+                    query_rerank_tokens(text2),
+                )
+        if not analyzed:
+            return {}
+        terms = {t for weights, _ in analyzed.values() for t in weights}
+        if self._term_df is not None:
+            dfs = {t: self._term_df[t] for t in terms if t in self._term_df}
+        else:
+            from ..util import filter_terms
+
+            dfs = {
+                r["term"]: r["df"] for r in filter_terms(self._terms, terms).collect()
+            }
+        return {
+            qid: (
+                {
+                    t: float(np.float32(np.float32(w) * bm25.idf(dfs[t], self.n_docs)))
+                    for t, w in weights.items()
+                    if t in dfs
+                },
+                rerank,
+            )
+            for qid, (weights, rerank) in analyzed.items()
+        }
+
     def prepare(self, text: str) -> tuple[dict[str, float], list[str]] | None:
         """→ (term → float32 weight·idf, query rerank tokens) or None if the
         normalized query is empty."""
-        words = uniform_text(text)
-        if not words:
-            return None
-        text2 = " ".join(words)
-        weights = expanded_query_terms(text2, self.synonyms)
-        if self._term_df is not None:
-            dfs = {t: self._term_df[t] for t in weights if t in self._term_df}
-        else:
-            dfs = {
-                r["term"]: r["df"]
-                for r in self._terms.filter(F.col("term").isin(list(weights))).collect()
-            }
-        w_idf = {
-            t: float(np.float32(np.float32(w) * bm25.idf(dfs[t], self.n_docs)))
-            for t, w in weights.items()
-            if t in dfs
-        }
-        return w_idf, query_rerank_tokens(text2)
+        return self._prepare_all({"q": text}).get("q")
 
     def _wand_auto(self, w_idf: dict[str, float]) -> bool:
         """True when the query's estimated postings volume (Σ df over terms)
-        is big enough that skip-before-decode beats decode-and-explode.
-        Unknown sizes (no preloaded term dict) default to WAND — wrong-by-slow
-        is acceptable for tiny queries; wrong-by-explosion at scale is not."""
+        is big enough that the per-segment kernel beats decode-and-explode.
+        Unknown sizes (no preloaded term dict) default to the kernel —
+        wrong-by-slow is acceptable for tiny queries; wrong-by-explosion at
+        scale is not."""
         if self._term_df is None:
             return True
         est = sum(self._term_df.get(t, 0) for t in w_idf)
@@ -217,6 +241,60 @@ class SearchEngine:
 
     # -------------------------------------------------------- bucket scoring
 
+    def _bucket_docs(
+        self,
+        from_str: str,
+        to_str: str,
+        sources: set[str] | None,
+        instances: set[str] | None,
+    ) -> DataFrame:
+        """Doc stats of the date bucket, narrowed by the db/instance filters
+        (all pushed to the docs parquet scan)."""
+        docs = self._docs.filter(F.col("update_date").between(from_str, to_str))
+        if sources is not None:
+            docs = docs.filter(F.col("db").isin(sorted(sources)))
+        if instances is not None:
+            docs = docs.filter(F.col("instance").isin(sorted(instances)))
+        return docs
+
+    def _score_terms(
+        self,
+        qterm_rows: list[tuple[str, str, float]],
+        from_str: str,
+        to_str: str,
+        sources: set[str] | None,
+        instances: set[str] | None,
+    ) -> DataFrame:
+        """Decode-join scorer: (query_id, term, w_idf) rows → DataFrame
+        (query_id, doc_id, score f32) of every matching doc in the bucket.
+        Postings are decoded and exploded BEFORE the query-term join, so each
+        distinct term is decoded once however many queries share it."""
+        from ..util import filter_terms, local_df
+
+        qterms = F.broadcast(
+            local_df(self.spark, qterm_rows, "query_id string, term string, w_idf double")
+        )
+        decoded = filter_terms(self._postings, {t for _, t, _ in qterm_rows}).select(
+            "term", F.explode(_decode_udf(F.col("blob"))).alias("doc_id")
+        )
+        docs = self._bucket_docs(from_str, to_str, sources, instances)
+        # per-term float32 product, float64 sum, + consts, final float32 (spec)
+        return (
+            decoded.join(qterms, "term")
+            .join(docs.select("doc_id", "tfnorm", "db", "instance"), "doc_id")
+            .withColumn(
+                "term_score",
+                (F.col("w_idf").cast("float") * F.col("tfnorm")).cast("float"),
+            )
+            .groupBy("query_id", "doc_id", "db", "instance")
+            .agg(F.sum(F.col("term_score").cast("double")).alias("sum_scores"))
+            .withColumn(
+                "score",
+                (F.col("sum_scores") + self._const_for(sources, instances)).cast("float"),
+            )
+            .select("query_id", "doc_id", "score")
+        )
+
     def score_bucket(
         self,
         w_idf: dict[str, float],
@@ -229,56 +307,38 @@ class SearchEngine:
     ) -> DataFrame:
         """Top-`pool` candidates (doc_id, score f32) within a date bucket.
 
-        `use_wand=None` (default) auto-selects: WAND whenever the estimated
-        postings volume for the query terms exceeds WAND_AUTO_MIN_POSTINGS
-        (or whenever it is unknown) — the 100-TB-safe default; the
-        decode-join plan is kept only for provably tiny postings sets."""
+        `use_wand=None` (default) auto-selects: the per-segment kernel
+        whenever the estimated postings volume for the query terms reaches
+        WAND_AUTO_MIN_POSTINGS (or whenever it is unknown) — the
+        100-TB-safe default; the decode-join plan is kept only for provably
+        small postings sets."""
         if use_wand is None:
             use_wand = self._wand_auto(w_idf)
         if use_wand:
-            from .wand import wand_score_bucket
+            from .wand import wand_score_batch
 
-            return wand_score_bucket(
-                self, w_idf, from_str, to_str, pool, sources, instances
+            scored = wand_score_batch(
+                self, {"q": w_idf}, {"q": pool}, from_str, to_str, sources, instances
             )
+        else:
+            scored = self._score_terms(
+                [("q", t, w) for t, w in sorted(w_idf.items())],
+                from_str, to_str, sources, instances,
+            )
+        top = scored.select("doc_id", "score").orderBy(
+            F.desc("score"), F.asc("doc_id")
+        ).limit(pool)
+        if not use_wand:
+            return top
+        # the kernel must run under its execution confs, so the cut is
+        # collected inside the scope and the rerank plan starts from its rows
+        from ..util import kernel_exec_conf, local_df
 
-        spark = self.spark
-        from ..util import local_df
-
-        qterms = F.broadcast(
-            local_df(
-                spark,
-                [(t, w) for t, w in sorted(w_idf.items())], "term string, w_idf double",
-            )
+        with kernel_exec_conf(self.spark):
+            rows = top.collect()
+        return local_df(
+            self.spark, [(r["doc_id"], r["score"]) for r in rows], "doc_id long, score float"
         )
-        # explicit isin BEFORE the join: the In(term, ...) predicate reaches the
-        # parquet scan (row-group min/max pruning on the term-sorted files);
-        # a bare join would scan every postings row
-        matched = (
-            self._postings.filter(F.col("term").isin(sorted(w_idf)))
-            .join(qterms, "term")
-            .select("w_idf", F.explode(_decode_udf(F.col("blob"))).alias("doc_id"))
-        )
-        docs = self._docs.filter(F.col("update_date").between(from_str, to_str))
-        if sources is not None:
-            docs = docs.filter(F.col("db").isin(sorted(sources)))
-        if instances is not None:
-            docs = docs.filter(F.col("instance").isin(sorted(instances)))
-        # per-term float32 product, float64 sum, + consts, final float32 (spec)
-        scored = (
-            matched.join(docs.select("doc_id", "tfnorm", "db", "instance"), "doc_id")
-            .withColumn(
-                "term_score",
-                (F.col("w_idf").cast("float") * F.col("tfnorm")).cast("float"),
-            )
-            .groupBy("doc_id", "db", "instance")
-            .agg(F.sum(F.col("term_score").cast("double")).alias("sum_scores"))
-            .withColumn(
-                "score", (F.col("sum_scores") + self._const_for(sources, instances)).cast("float")
-            )
-            .select("doc_id", "score")
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(pool)
 
     # ------------------------------------------------------------ one bucket
 

@@ -1,4 +1,4 @@
-"""Small shared utilities for driver-side tables and kernel execution conf."""
+"""Small shared utilities for driver-side tables and scoped execution confs."""
 from __future__ import annotations
 
 import threading
@@ -123,14 +123,53 @@ def filter_terms(df: DataFrame, terms, col: str = "term") -> DataFrame:
     return df.join(tdf, col, "left_semi")
 
 
-_KERNEL_CONF_LOCK = threading.RLock()
-# Per-SparkSession scope state (depth counter + saved confs), keyed weakly so
-# a discarded session (spark.newSession() churn) doesn't pin its entry: two
-# sessions in one process (e.g. a test harness session next to a serving
-# session) must save/set/restore THEIR OWN conf values independently — a
-# process-global depth counter would skip setting the kernel confs on the
+_CONF_LOCK = threading.RLock()
+# Per-SparkSession scope state ({conf key: (depth, saved value)}), keyed
+# weakly so a discarded session (spark.newSession() churn) doesn't pin its
+# entry: two sessions in one process (e.g. a test harness session next to a
+# serving session) must save/set/restore THEIR OWN conf values independently
+# — a process-global depth counter would skip setting the confs on the
 # second session entirely while the first holds a scope open.
-_KERNEL_CONF_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CONF_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set `confs` on `spark` for the duration of the scope.
+
+    The confs are session-global; concurrent scopes on the same session
+    (multi-threaded serving, a build next to a search) must set the SAME
+    value for any key they share, so overlap is compatible — what must not
+    interleave is the save/restore bookkeeping. A per-session, per-key depth
+    counter under a process-wide lock guards it: only the first scope to
+    enter saves a key's prior value, only the last to exit restores it, and
+    the lock is NOT held across the body (queries stay concurrent). An unset
+    key is saved as None and unset again on exit. Residual caveat, by
+    design: an unrelated query planned ON THE SAME SESSION while a scope is
+    open sees these values."""
+    with _CONF_LOCK:
+        state = _CONF_STATE.setdefault(spark, {})
+        for key, val in confs.items():
+            depth, saved = state.get(key, (0, None))
+            if depth == 0:
+                saved = spark.conf.get(key, None)
+                spark.conf.set(key, val)
+            state[key] = (depth + 1, saved)
+    try:
+        yield
+    finally:
+        with _CONF_LOCK:
+            for key in confs:
+                depth, saved = state[key]
+                if depth > 1:
+                    state[key] = (depth - 1, saved)
+                    continue
+                del state[key]
+                if saved is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, saved)
+
 
 # Scoped execution confs for the scoring-kernel plans:
 # - adaptive.enabled=false ON MULTI-EXECUTOR DEPLOYMENTS ONLY: the
@@ -162,47 +201,8 @@ def _kernel_confs(spark: SparkSession) -> dict[str, str]:
     return confs
 
 
-@contextmanager
 def kernel_exec_conf(spark: SparkSession):
-    """Execution-conf scope for plans whose hot stage is a CPU-bound Python
-    kernel over a SMALL shuffle input (cogroup+applyInPandas scoring) —
-    see _kernel_confs for the knobs, the deployment-shape gate, and their
-    measurements.
-
-    The confs are session-global; concurrent scopes on the same session
-    (multi-threaded serving) all set the SAME values, so overlap is
-    compatible — what must not interleave is the save/restore bookkeeping.
-    A PER-SESSION depth counter under a process-wide lock guards it: only
-    the first scope to enter on a given session saves that session's prior
-    values, only the last to exit restores them, and the lock is NOT held
-    across the body (queries stay concurrent). State is keyed by the
-    SparkSession (weakly) because RuntimeConfig is session-scoped — a
-    second session's scopes must set/restore its own confs regardless of
-    scopes open elsewhere. Residual caveat, by design: an unrelated query
-    planned ON THE SAME SESSION while a kernel scope is open sees these
-    values — it loses AQE for that plan, nothing incorrect."""
-    with _KERNEL_CONF_LOCK:
-        state = _KERNEL_CONF_STATE.get(spark)
-        if state is None:
-            state = {"depth": 0, "saved": {}}
-            _KERNEL_CONF_STATE[spark] = state
-        if state["depth"] == 0:
-            for key, val in _kernel_confs(spark).items():
-                try:
-                    state["saved"][key] = spark.conf.get(key)
-                except Exception:
-                    state["saved"][key] = None
-                spark.conf.set(key, val)
-        state["depth"] += 1
-    try:
-        yield
-    finally:
-        with _KERNEL_CONF_LOCK:
-            state["depth"] -= 1
-            if state["depth"] == 0:
-                for key, old in state["saved"].items():
-                    if old is None:
-                        spark.conf.unset(key)
-                    else:
-                        spark.conf.set(key, old)
-                state["saved"].clear()
+    """scoped_conf of _kernel_confs, for plans whose hot stage is a
+    CPU-bound Python kernel over a SMALL shuffle input (cogroup +
+    applyInPandas scoring)."""
+    return scoped_conf(spark, _kernel_confs(spark))

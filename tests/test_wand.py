@@ -1,7 +1,9 @@
-"""WAND kernel parity: use_wand=True must equal the oracle (and hence the
-naive DataFrame path) exactly, including under filters and the bucket ladder.
-Uses a tiny seg_size so queries cross many segments, exercising the
-per-segment kernel + treeReduce heap merge."""
+"""Scoring-plan parity: the engine has two plans, decode-join and the batched
+per-segment kernel (query/wand.py), picked by the query terms' Σdf.
+use_wand=True forces the kernel, which must equal the oracle (and hence the
+decode-join plan) exactly, including under filters and the bucket ladder.
+Uses a tiny seg_size so queries cross many segments, exercising per-segment
+pools cut to the global top-pool."""
 from __future__ import annotations
 
 import pytest
@@ -63,16 +65,17 @@ def test_wand_matches_oracle(corpus, qname):
         assert_hits_equal(got, exp, f"wand {qname} {mode}")
 
 
-@pytest.mark.spark
-def test_wand_kernel_unit():
-    """Kernel-level unit test without Spark: one segment, synthetic postings."""
+def test_batch_score_kernel_unit(monkeypatch):
+    """Kernel-level unit test without Spark: one segment, synthetic postings,
+    two queries in one slice sharing a term (decoded once), each cut to its
+    own pool in exact (score desc, doc_id asc) order — including ties that
+    straddle the pool boundary."""
     import numpy as np
     import pandas as pd
 
-    from similardocs_spark.index import codec
-    from similardocs_spark.query.wand import wand_kernel
-
     from similardocs_spark import bm25
+    from similardocs_spark.index import codec
+    from similardocs_spark.query.wand import batch_score_kernel
 
     rng = np.random.default_rng(3)
     n_docs, seg_size, avgdl = 500, 1024, 42.5
@@ -81,26 +84,87 @@ def test_wand_kernel_unit():
     docs = pd.DataFrame(
         {"doc_id": np.arange(n_docs), "tfnorm": tfn, "const": np.ones(n_docs)}
     )
-    w_idf = {"aaa": 2.0, "bbb": 1.0}
-    rows = []
-    truth = {}
-    for term, w in w_idf.items():
-        ids = np.sort(rng.choice(n_docs, size=200, replace=False))
-        bl, bm = codec.block_metadata(ids, dlq[ids])
-        rows.append(
-            {
-                "term": term,
-                "blob": codec.encode_docids(ids),
-                "block_last": bl,
-                "block_min_dlq": bm,
-            }
+    ids_by_term = {
+        t: np.sort(rng.choice(n_docs, size=200, replace=False)) for t in ("aaa", "bbb")
+    }
+    postings = pd.DataFrame(
+        [{"term": t, "blob": codec.encode_docids(ids)} for t, ids in ids_by_term.items()]
+    )
+    queries = {"q1": {"aaa": 2.0, "bbb": 1.0}, "q2": {"bbb": 1.5}}
+
+    def ranked(w_idf):
+        truth = {}
+        for term, w in w_idf.items():
+            for d in ids_by_term[term]:
+                truth[int(d)] = truth.get(int(d), 0.0) + float(
+                    np.float32(np.float32(w) * tfn[d])
+                )
+        return sorted(
+            ((np.float32(s + 1.0), d) for d, s in truth.items()),
+            key=lambda t: (-t[0], t[1]),
         )
-        for d in ids:
-            truth.setdefault(int(d), 0.0)
-            truth[int(d)] += float(np.float32(np.float32(w) * tfn[d]))
-    exp = sorted(
-        ((np.float32(s + 1.0), d) for d, s in truth.items()), key=lambda t: (-t[0], t[1])
-    )[:50]
-    got = wand_kernel((0,), pd.DataFrame(rows), docs, w_idf, seg_size, 50, avgdl)
-    assert got["doc_id"].tolist() == [d for _, d in exp]
-    assert [float(x) for x in got["score"]] == pytest.approx([float(s) for s, _ in exp], rel=1e-6)
+
+    exp = {qid: ranked(w) for qid, w in queries.items()}
+    # q2 scores by one term, so docs of equal dlq tie: cut q2's pool inside
+    # a tie group, where only the doc_id tiebreak decides membership
+    pool2 = next(
+        i for i in range(20, len(exp["q2"])) if exp["q2"][i - 1][0] == exp["q2"][i][0]
+    )
+    pools = {"q1": 50, "q2": pool2}
+
+    decodes = []
+    real_decode = codec.decode_docids
+    monkeypatch.setattr(
+        codec, "decode_docids", lambda blob: decodes.append(1) or real_decode(blob)
+    )
+    got = batch_score_kernel((0, 0), postings, docs, {0: queries}, seg_size, pools)
+    assert len(decodes) == len(ids_by_term)
+    for qid, pool in pools.items():
+        rows = got[got["query_id"] == qid]
+        assert rows["doc_id"].tolist() == [d for _, d in exp[qid][:pool]], qid
+        assert [float(x) for x in rows["score"]] == pytest.approx(
+            [float(s) for s, _ in exp[qid][:pool]], rel=1e-6
+        ), qid
+
+
+@pytest.mark.spark
+def test_single_query_kernel_plans_no_cross_join(spark, tmp_path):
+    """A search is a batch of one: on a one-segment index, the one-query
+    kernel plan must not slice the query set, i.e. must not cross-join the
+    docs into slices that hold no postings."""
+    from similardocs_spark.plans.audit import _plan
+    from similardocs_spark.query.wand import wand_score_batch
+
+    paths = build_index(spark, transcripts_df(spark, n_convs=30, seed=SEED), str(tmp_path))
+    engine = SearchEngine(spark, paths, PINNED_TODAY, END_DAYS_AGO)
+    assert engine.n_docs <= engine.seg_size  # one segment
+    assert spark.sparkContext.defaultParallelism > 1
+    w_idf, _ = engine.prepare("zika dengue saude")
+    df = wand_score_batch(engine, {"q": w_idf}, {"q": 30}, "19000101", "29991231", None, None)
+    plan = _plan(df)
+    assert "NestedLoopJoin" not in plan and "Cartesian" not in plan, plan
+
+
+@pytest.mark.spark
+def test_synonym_query_search_equals_batch_without_preload(corpus):
+    """search() and search_batch() share one query prep: with no preloaded
+    term dictionary both resolve term dfs through the terms-table fallback,
+    and a synonym-expanded query returns the same rows either way."""
+    from similardocs_spark.synonyms import SynonymDict
+
+    engine, _ = corpus
+    eng = SearchEngine(
+        engine.spark, engine.paths, PINNED_TODAY, END_DAYS_AGO,
+        synonyms=SynonymDict({"zika": ["dengue", "virus"], "saude": ["health"]}),
+        preload_terms_max=0,
+    )
+    assert eng._term_df is None
+    text = "zika saude publica"
+    w_idf, _ = eng.prepare(text)
+    assert {"dengue", "virus"} & set(w_idf)  # expansion reached the terms
+    cols = ("doc_id", "conv_id", "score", "n_common", "update_date")
+    for mode in (dict(), dict(split_time=True)):
+        single = [tuple(r[c] for c in cols) for r in eng.search(text, **mode)]
+        batch = [tuple(r[c] for c in cols) for r in eng.search_batch({"q": text}, **mode)["q"]]
+        assert single, mode
+        assert single == batch, mode
