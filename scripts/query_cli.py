@@ -1,7 +1,7 @@
 """spark-submit entry point: run similar-document queries against an index.
 
     spark-submit --py-files simdocs.zip scripts/query_cli.py \
-        --index <index-root> --text "zika dengue" [--max-docs 10] [--wand] \
+        --index <index-root> --text "zika dengue" [--max-docs 10] \
         [--sources MEDLINE,LILACS] [--last-days 365] [--split-time] \
         [--today 2026-01-02]
 """
@@ -25,7 +25,6 @@ def main() -> None:
     p.add_argument("--instances", default=None)
     p.add_argument("--last-days", type=int, default=None)
     p.add_argument("--split-time", action="store_true")
-    p.add_argument("--wand", action="store_true")
     p.add_argument("--today", default=None, help="pinned clock yyyy-mm-dd")
     p.add_argument("--master", default=None)
     args = p.parse_args()
@@ -49,7 +48,7 @@ def main() -> None:
         hits = engine.search(
             args.text[0], max_docs=args.max_docs, min_ngrams=args.min_ngrams,
             sources=srcs, instances=insts, last_days=args.last_days,
-            split_time=args.split_time, use_wand=args.wand,
+            split_time=args.split_time,
         )
         for h in hits:
             print(f"{h.doc_id}\t{h.conv_id}\t{h.score:.6f}\t{h.n_common}\t{h.update_date}")

@@ -6,7 +6,7 @@ Layers:
 - textnorm / stopwords / bm25 ........ the executable spec (pure Python/numpy)
 - functions/ ......................... vectorized pandas/Arrow UDFs
 - index/ ............................. segmented, compressed, checkpointed index build
-- query/ ............................. decode-join DataFrame scorer + batched per-segment kernel
+- query/ ............................. batched per-segment scoring kernel + rerank + day ladder
 - oracle/ ............................ pure-Python reference search (golden tests)
 - operators/ ......................... training-data ops (dedup, ANN, text quality, ...)
 """

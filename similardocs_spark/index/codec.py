@@ -27,9 +27,11 @@ Block-max metadata (per-term, kept as plain array columns next to the blob):
                                live index stats at query time).
 
 The block metadata is written by every build and incremental update but read
-by no query path: the per-segment kernel decodes whole lists, which measured
-faster in numpy than block-max skipping (query/wand.py). Dropping the columns
-would change the persisted postings format of existing indexes.
+by no query path: the one scoring plan, the per-segment kernel
+(query/wand.py), decodes whole lists, which measured faster in numpy than
+block-max skipping; the inspection tools (index/inspect.py) decode whole
+lists too. Dropping the columns would change the persisted postings format
+of existing indexes.
 """
 from __future__ import annotations
 

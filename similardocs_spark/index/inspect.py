@@ -4,10 +4,24 @@ SearchExplain (per-token hit counts, OR/AND totals), IndexTest (sanity).
 """
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from ..textnorm import analyze, uniform_text
+from . import codec
+
+
+@pandas_udf(T.ArrayType(T.LongType()))
+def _decode_udf(blobs: pd.Series) -> pd.Series:
+    # per-BLOB loop (variable-length codec; one iteration per posting list,
+    # not per doc) returning int64 ndarrays directly — Arrow consumes them
+    # without the per-element tolist() boxing round-trip
+    return pd.Series(
+        [codec.decode_docids(bytes(b)) for b in blobs], index=blobs.index
+    )
 
 
 def show_total_hits(engine) -> DataFrame:
@@ -54,8 +68,6 @@ def search_explain(engine, text: str) -> dict:
 
 def _and_total(engine, terms: list[str]) -> int:
     """#docs containing ALL query terms (the reference's AND probe)."""
-    from ..query.engine import _decode_udf
-
     decoded = (
         engine._postings.filter(F.col("term").isin(terms))
         .select("term", F.explode(_decode_udf(F.col("blob"))).alias("doc_id"))
@@ -76,8 +88,6 @@ def term_search(engine, field: str, value: str, max_hits: int = 1000) -> dict:
     `field='term'` probes the inverted index itself (postings docIDs);
     any stored-field name probes the docs table."""
     if field == "term":
-        from ..query.engine import _decode_udf
-
         hits = (
             engine._postings.filter(F.col("term") == value)
             .select(F.explode(_decode_udf(F.col("blob"))).alias("doc_id"))

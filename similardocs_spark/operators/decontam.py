@@ -57,7 +57,7 @@ def _gram_hashes(text_col, n: int):
     45 s for a log-depth doubling chain — despite the chain's higher
     nominal char traffic. The transform forms only win cold on tiny
     inputs (codegen compile cost); do not swap this for one of them
-    without re-running scripts/gram_form_ab.py."""
+    without re-measuring against GRAM_FORM_AB.json."""
     w = F.filter(
         F.split(F.lower(F.coalesce(text_col, F.lit(""))), "[ \n]+"),
         lambda x: F.length(x) > 0,

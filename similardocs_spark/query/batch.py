@@ -4,12 +4,10 @@ The reference serves one query per servlet request; on Spark the q/s story is
 amortization — scoring 1,000 queries costs barely more than one, because the
 postings scan, decode, joins and shuffles are shared:
 
-  postings (term-pruned scan, decoded ONCE per distinct term)
-    ⋈ qterms(query_id, term, w_idf)  [tiny, broadcast]
-    ⋈ doc stats (bucket/categorical filters pushed to the parquet scan)
-    → groupBy(query_id, doc_id) float32-spec scoring
-      [SearchEngine._score_terms; when the batch's terms have a large Σdf,
-       the batched per-segment kernel of query/wand.py scores instead]
+  postings (term-pruned scan) cogroup doc stats (bucket/categorical filters
+  pushed to the parquet scan), per (segment × query-slice)
+    → batched per-segment kernel (query/wand.py): each posting list decoded
+      ONCE, float32-spec scoring, ≤ pool rows per (segment, query)
     → per-query candidate pool via ranked window (150·k)
     → overlap rerank vs per-query token arrays → per-query top-k window
 
@@ -27,9 +25,6 @@ from ..oracle.refsearch import (
     CANDIDATE_FACTOR,
     DEFAULT_MAX_DOCS,
     DEFAULT_MIN_NGRAMS,
-    MAX_LOWER_LIMIT,
-    days_ago_str,
-    get_day_range,
     get_min_ngrams,
 )
 
@@ -43,7 +38,6 @@ def _batch_bucket(
     instances: set[str] | None,
     from_str: str,
     to_str: str,
-    use_wand: bool = False,
 ) -> DataFrame:
     spark = engine.spark
     active = {q: qinfo[q] for q, k in remaining.items() if k > 0 and q in qinfo}
@@ -69,31 +63,19 @@ def _batch_bucket(
             "query_id string, q_rerank array<string>, min2 int, k int, pool int",
         )
     )
-    if use_wand:
-        # batched per-segment kernel: shared decode, numpy scoring, ≤ pool
-        # rows per (segment, query) enter the plan — no posting×query row
-        # explosion (the decode-join plan multiplies every decoded posting
-        # by the number of queries containing that term)
-        from .wand import wand_score_batch
+    # batched per-segment kernel: shared decode, numpy scoring, ≤ pool rows
+    # per (segment, query) enter the plan — no posting×query row explosion
+    from .wand import wand_score_batch
 
-        scored = wand_score_batch(
-            engine,
-            {qid: w_idf for qid, (w_idf, _) in active.items()},
-            {qid: CANDIDATE_FACTOR * remaining[qid] for qid in active},
-            from_str,
-            to_str,
-            sources,
-            instances,
-        )
-    else:
-        scored = engine._score_terms(
-            [
-                (qid, t, w)
-                for qid, (w_idf, _) in active.items()
-                for t, w in sorted(w_idf.items())
-            ],
-            from_str, to_str, sources, instances,
-        )
+    scored = wand_score_batch(
+        engine,
+        {qid: w_idf for qid, (w_idf, _) in active.items()},
+        {qid: CANDIDATE_FACTOR * remaining[qid] for qid in active},
+        from_str,
+        to_str,
+        sources,
+        instances,
+    )
     docs_fields = engine._docs.select(
         "doc_id", "conv_id", "update_date", "rerank_tokens"
     )
@@ -196,12 +178,11 @@ def search_batch_mixed(
             cfg.get("max_docs", DEFAULT_MAX_DOCS),
             cfg.get("min_ngrams", DEFAULT_MIN_NGRAMS),
             cfg.get("split_time", False),
-            cfg.get("use_wand"),
         )
         groups.setdefault(key, {})[qid] = text
     results: dict[str, list] = {}
     for key, group in groups.items():
-        srcs, insts, last_days, max_docs, min_ngrams, split_time, use_wand = key
+        srcs, insts, last_days, max_docs, min_ngrams, split_time = key
         results.update(
             search_batch(
                 engine,
@@ -212,7 +193,6 @@ def search_batch_mixed(
                 instances=None if insts is None else set(insts),
                 last_days=last_days,
                 split_time=split_time,
-                use_wand=use_wand,
             )
         )
     return results
@@ -227,18 +207,16 @@ def search_batch(
     instances: set[str] | None = None,
     last_days: int | None = None,
     split_time: bool = False,
-    use_wand: bool | None = None,
 ) -> dict[str, list]:
     """→ {query_id: [rows ordered by rank]}; per-query results identical to
-    engine.search(text, ...) with the same settings. use_wand=None (default)
-    auto-selects the batched per-segment kernel whenever the union of the
-    batch's terms has enough estimated postings (same policy as
-    SearchEngine.search). Queries whose effective (term weights, rerank
-    tokens) are identical are scored once and the result rows are copied to
-    every alias with the alias's own query_id substituted (the query_id
-    column always matches the dict key). Applies to search_batch_mixed
-    too (it groups into search_batch calls). For per-query filter overrides
-    see search_batch_mixed."""
+    engine.search(text, ...) with the same settings; like search(), raises
+    ValueError when `last_days` is below engine.end_days_ago. Queries whose
+    effective (term weights, rerank tokens) are identical are scored once
+    and the result rows are copied to every alias with the alias's own
+    query_id substituted (the query_id column always matches the dict key).
+    Applies to search_batch_mixed too (it groups into search_batch calls).
+    For per-query filter overrides see search_batch_mixed."""
+    lower, upper = engine._day_bounds(last_days)
     qinfo = {
         qid: (w_idf, rerank)
         for qid, (w_idf, rerank) in engine._prepare_all(queries).items()
@@ -261,49 +239,22 @@ def search_batch(
             alias_of[qid] = rep
     for qid in alias_of:
         del qinfo[qid]
-    if use_wand is None:
-        union: dict[str, float] = {}
-        for w_idf, _ in qinfo.values():
-            union.update(w_idf)
-        use_wand = engine._wand_auto(union)
-    lower = last_days if last_days else MAX_LOWER_LIMIT
-    assert lower >= engine.end_days_ago
-    upper = engine.end_days_ago
 
     from ..util import kernel_exec_conf
 
-    if not split_time:
-        remaining = {qid: max_docs for qid in qinfo}
-        with kernel_exec_conf(engine.spark):
-            rows = _batch_bucket(
-                engine, qinfo, remaining, min_ngrams, sources, instances,
-                days_ago_str(engine.today, lower), days_ago_str(engine.today, upper),
-                use_wand,
-            ).collect()
-        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
-            results[r["query_id"]].append(r)
-        for qid, rep in alias_of.items():
-            results[qid] = _alias_rows(results[rep], qid)
-        return results
-
-    # bucket ladder: all queries share the global ladder; per-query quotas
+    # one bucket, or the day ladder shared by all queries with per-query
+    # remaining quotas
     remaining = {qid: max_docs for qid in qinfo}
-    cur_day = engine.end_days_ago
     with kernel_exec_conf(engine.spark):
-        while any(k > 0 for k in remaining.values()):
-            rng = get_day_range(cur_day, lower, upper)
-            if rng is None:
+        for from_str, to_str in engine._day_buckets(lower, upper, split_time):
+            if not any(k > 0 for k in remaining.values()):
                 break
-            begin, end = rng
             rows = _batch_bucket(
-                engine, qinfo, remaining, min_ngrams, sources, instances,
-                days_ago_str(engine.today, begin), days_ago_str(engine.today, end),
-                use_wand,
+                engine, qinfo, remaining, min_ngrams, sources, instances, from_str, to_str
             ).collect()
             for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
                 results[r["query_id"]].append(r)
                 remaining[r["query_id"]] -= 1
-            cur_day = begin + 1
     for qid, rep in alias_of.items():
         results[qid] = _alias_rows(results[rep], qid)
     return results

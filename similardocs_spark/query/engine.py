@@ -1,18 +1,11 @@
 """BM25 top-k query engine over the segmented index.
 
-Two scoring plans with identical results, picked per query from the
-estimated postings volume Σdf of its terms (`_wand_auto`, threshold
-WAND_AUTO_MIN_POSTINGS; `use_wand=` overrides):
-- decode-join (`_score_terms`) for small Σdf: broadcast the (tiny)
-  query-term table against the postings scan (term pruned via parquet
-  min/max row-group stats thanks to the term-sorted layout), decode blobs
-  with a vectorized UDF, explode, join doc stats for filters + tfnorm,
-  aggregate per (query, docID); `score_bucket` cuts the top-(150·k) with
-  orderBy+limit (TakeOrderedAndProject — no global sort).
-- the batched per-segment kernel (query/wand.py) for large Σdf: one search
-  is a batch of one. Per-executor work is one segment's postings for the
-  query terms only, score accumulation never leaves the executor, and only
-  ≤ pool rows per segment cross the wire before the global top-pool cut.
+One scoring plan, whatever the postings volume Σdf of the query terms: a
+search is scored by the batched per-segment kernel (query/wand.py) as a
+batch of one, as search_batch scores N queries. Per-executor work is one
+segment's postings for the query terms only, score accumulation never leaves
+the executor, and only ≤ pool rows per segment cross the wire before the
+global top-pool cut (orderBy+limit → TakeOrderedAndProject, no global sort).
 
 Query lifecycle (reference SimDocsSearch.scala:122-347): text → word prep →
 term weights (duplicate-prefix boosts) → per-day-bucket retrieval (optional
@@ -26,15 +19,11 @@ from dataclasses import dataclass
 from datetime import date
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from .. import bm25
 from ..index.build import IndexPaths
-from ..index import codec
 from ..oracle.refsearch import (
     CANDIDATE_FACTOR,
     DEFAULT_MAX_DOCS,
@@ -47,21 +36,10 @@ from ..oracle.refsearch import (
 from ..synonyms import SynonymDict, expanded_query_terms
 from ..textnorm import query_rerank_tokens, uniform_text
 
-# Auto path selection: below this many estimated postings the decode-join
-# plan costs the same as the kernel; above it, the kernel's in-executor
-# numpy scoring wins and the decode-join plan's posting explosion becomes
-# the scale-killer.
-WAND_AUTO_MIN_POSTINGS = 8192
-
-
-@pandas_udf(T.ArrayType(T.LongType()))
-def _decode_udf(blobs: pd.Series) -> pd.Series:
-    # per-BLOB loop (variable-length codec; one iteration per posting list,
-    # not per doc) returning int64 ndarrays directly — Arrow consumes them
-    # without the per-element tolist() boxing round-trip
-    return pd.Series(
-        [codec.decode_docids(bytes(b)) for b in blobs], index=blobs.index
-    )
+# No package code reads this: every query takes the kernel, whatever its
+# postings volume Σdf. It stays because the benchmark's `wand_auto_share`
+# (the share of queries with Σdf ≥ this) imports it; at 0 that share is 1.
+WAND_AUTO_MIN_POSTINGS = 0
 
 
 @dataclass
@@ -129,8 +107,7 @@ class SearchEngine:
             # per query (prefix-6 tokens bound the dictionary hard: ≤ ~37^6).
             # Beyond either guard the engine runs WITHOUT the preload:
             # _prepare_all falls back to one term-pruned read of the terms
-            # table per prepare and _wand_auto defaults to the kernel (see
-            # those methods).
+            # table per prepare.
             self._term_df = {
                 r["term"]: r["df"] for r in self._terms.collect()
             }
@@ -211,17 +188,6 @@ class SearchEngine:
         normalized query is empty."""
         return self._prepare_all({"q": text}).get("q")
 
-    def _wand_auto(self, w_idf: dict[str, float]) -> bool:
-        """True when the query's estimated postings volume (Σ df over terms)
-        is big enough that the per-segment kernel beats decode-and-explode.
-        Unknown sizes (no preloaded term dict) default to the kernel —
-        wrong-by-slow is acceptable for tiny queries; wrong-by-explosion at
-        scale is not."""
-        if self._term_df is None:
-            return True
-        est = sum(self._term_df.get(t, 0) for t in w_idf)
-        return est >= WAND_AUTO_MIN_POSTINGS
-
     def _const_for(self, sources: set[str] | None, instances: set[str] | None):
         """MUST-clause constant score pieces: date range always +1.0; keyword
         filters add a per-value constant → returned as a Column expression."""
@@ -257,42 +223,26 @@ class SearchEngine:
             docs = docs.filter(F.col("instance").isin(sorted(instances)))
         return docs
 
-    def _score_terms(
+    def _kernel_cut(
         self,
-        qterm_rows: list[tuple[str, str, float]],
+        w_idf: dict[str, float],
         from_str: str,
         to_str: str,
+        pool: int,
         sources: set[str] | None,
         instances: set[str] | None,
     ) -> DataFrame:
-        """Decode-join scorer: (query_id, term, w_idf) rows → DataFrame
-        (query_id, doc_id, score f32) of every matching doc in the bucket.
-        Postings are decoded and exploded BEFORE the query-term join, so each
-        distinct term is decoded once however many queries share it."""
-        from ..util import filter_terms, local_df
+        """The kernel run as a batch of one, cut to the top-`pool` by
+        (score desc, doc_id asc): the plan score_bucket collects."""
+        from .wand import wand_score_batch
 
-        qterms = F.broadcast(
-            local_df(self.spark, qterm_rows, "query_id string, term string, w_idf double")
-        )
-        decoded = filter_terms(self._postings, {t for _, t, _ in qterm_rows}).select(
-            "term", F.explode(_decode_udf(F.col("blob"))).alias("doc_id")
-        )
-        docs = self._bucket_docs(from_str, to_str, sources, instances)
-        # per-term float32 product, float64 sum, + consts, final float32 (spec)
         return (
-            decoded.join(qterms, "term")
-            .join(docs.select("doc_id", "tfnorm", "db", "instance"), "doc_id")
-            .withColumn(
-                "term_score",
-                (F.col("w_idf").cast("float") * F.col("tfnorm")).cast("float"),
+            wand_score_batch(
+                self, {"q": w_idf}, {"q": pool}, from_str, to_str, sources, instances
             )
-            .groupBy("query_id", "doc_id", "db", "instance")
-            .agg(F.sum(F.col("term_score").cast("double")).alias("sum_scores"))
-            .withColumn(
-                "score",
-                (F.col("sum_scores") + self._const_for(sources, instances)).cast("float"),
-            )
-            .select("query_id", "doc_id", "score")
+            .select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(pool)
         )
 
     def score_bucket(
@@ -303,39 +253,16 @@ class SearchEngine:
         pool: int,
         sources: set[str] | None,
         instances: set[str] | None,
-        use_wand: bool | None = None,
     ) -> DataFrame:
         """Top-`pool` candidates (doc_id, score f32) within a date bucket.
-
-        `use_wand=None` (default) auto-selects: the per-segment kernel
-        whenever the estimated postings volume for the query terms reaches
-        WAND_AUTO_MIN_POSTINGS (or whenever it is unknown) — the
-        100-TB-safe default; the decode-join plan is kept only for provably
-        small postings sets."""
-        if use_wand is None:
-            use_wand = self._wand_auto(w_idf)
-        if use_wand:
-            from .wand import wand_score_batch
-
-            scored = wand_score_batch(
-                self, {"q": w_idf}, {"q": pool}, from_str, to_str, sources, instances
-            )
-        else:
-            scored = self._score_terms(
-                [("q", t, w) for t, w in sorted(w_idf.items())],
-                from_str, to_str, sources, instances,
-            )
-        top = scored.select("doc_id", "score").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        ).limit(pool)
-        if not use_wand:
-            return top
-        # the kernel must run under its execution confs, so the cut is
-        # collected inside the scope and the rerank plan starts from its rows
+        The kernel must run under its execution confs, so the cut is
+        collected inside the scope and the rerank plan starts from its rows."""
         from ..util import kernel_exec_conf, local_df
 
         with kernel_exec_conf(self.spark):
-            rows = top.collect()
+            rows = self._kernel_cut(
+                w_idf, from_str, to_str, pool, sources, instances
+            ).collect()
         return local_df(
             self.spark, [(r["doc_id"], r["score"]) for r in rows], "doc_id long, score float"
         )
@@ -352,14 +279,11 @@ class SearchEngine:
         instances: set[str] | None,
         from_str: str,
         to_str: str,
-        use_wand: bool | None,
         explain: bool = False,
     ) -> DataFrame:
         min2 = get_min_ngrams(min_ngrams, len(q_rerank))
         pool = CANDIDATE_FACTOR * max_docs
-        cands = self.score_bucket(
-            w_idf, from_str, to_str, pool, sources, instances, use_wand
-        )
+        cands = self.score_bucket(w_idf, from_str, to_str, pool, sources, instances)
         enriched = (
             F.broadcast(cands)
             .join(
@@ -390,6 +314,31 @@ class SearchEngine:
 
     # ------------------------------------------------------------ entrypoint
 
+    def _day_bounds(self, last_days: int | None) -> tuple[int, int]:
+        """(lower, upper) days-ago bounds of a search or batch: `last_days`
+        back (default MAX_LOWER_LIMIT) to the engine's end_days_ago. Raises
+        ValueError when `last_days` ends before end_days_ago, which would
+        leave the bucket ladder an inverted range."""
+        lower = last_days if last_days else MAX_LOWER_LIMIT
+        if lower < self.end_days_ago:
+            raise ValueError(
+                f"last_days={last_days} is below end_days_ago={self.end_days_ago}"
+            )
+        return lower, self.end_days_ago
+
+    def _day_buckets(self, lower: int, upper: int, split_time: bool):
+        """(from_str, to_str) date ranges a search visits in order: the whole
+        [lower, upper] range, or with split_time the reference's day-bucket
+        ladder (SimDocsSearch.scala:185-211). Callers stop once filled."""
+        if not split_time:
+            yield days_ago_str(self.today, lower), days_ago_str(self.today, upper)
+            return
+        cur_day = self.end_days_ago
+        while (rng := get_day_range(cur_day, lower, upper)) is not None:
+            begin, end = rng
+            yield days_ago_str(self.today, begin), days_ago_str(self.today, end)
+            cur_day = begin + 1
+
     def search_batch(self, queries: dict[str, str], **kwargs) -> dict[str, list]:
         """N queries in one DataFrame plan — see query/batch.py."""
         from .batch import search_batch
@@ -414,7 +363,6 @@ class SearchEngine:
         instances: set[str] | None = None,
         last_days: int | None = None,
         split_time: bool = False,
-        use_wand: bool | None = None,
         explain: bool = False,
         parse_syntax: bool = False,
     ) -> list:
@@ -428,6 +376,7 @@ class SearchEngine:
         QueryParser edge: paren strip, boolean-marker drop, field:value →
         db/instance filters — SimDocsSearch.scala:395-403); explicit
         sources/instances arguments take precedence over parsed ones."""
+        lower, upper = self._day_bounds(last_days)
         if parse_syntax:
             from .parse import sanitize_query
 
@@ -440,34 +389,18 @@ class SearchEngine:
         w_idf, q_rerank = prep
         if not w_idf:
             return []
-        lower = last_days if last_days else MAX_LOWER_LIMIT
-        assert lower >= self.end_days_ago
-        upper = self.end_days_ago
-
-        if not split_time:
-            rows = self._bucket_hits(
-                w_idf, q_rerank, min_ngrams, max_docs, sources, instances,
-                days_ago_str(self.today, lower), days_ago_str(self.today, upper),
-                use_wand, explain,
-            ).collect()
-            return _maybe_explain(rows, q_rerank, explain)
 
         hits: list = []
-        cur_day = self.end_days_ago
         remaining = max_docs
-        while remaining > 0:
-            rng = get_day_range(cur_day, lower, upper)
-            if rng is None:
+        for from_str, to_str in self._day_buckets(lower, upper, split_time):
+            if remaining <= 0:
                 break
-            begin, end = rng
             got = self._bucket_hits(
                 w_idf, q_rerank, min_ngrams, remaining, sources, instances,
-                days_ago_str(self.today, begin), days_ago_str(self.today, end),
-                use_wand, explain,
+                from_str, to_str, explain,
             ).collect()
             hits.extend(_maybe_explain(got, q_rerank, explain))
             remaining -= len(got)
-            cur_day = begin + 1
         return hits
 
 

@@ -1,4 +1,4 @@
-"""Batched per-segment scoring kernel — the large-postings query path.
+"""Batched per-segment scoring kernel — the engine's one scoring plan.
 
 Executes per (SEGMENT × query-slice) via `cogroup(...).applyInPandas`: the
 segment's postings rows (term, blob) for the batch's terms, cogrouped with
@@ -7,8 +7,8 @@ postings for a doc range are co-located by the index layout, so the kernel
 decodes every needed posting list once, scatter-adds each query's float32
 term contributions into a dense per-segment float64 accumulator
 (term-at-a-time, exhaustive) and emits ≤ pool rows per (segment, query).
-One search is a batch of one (SearchEngine.score_bucket); the engine picks
-this plan over decode-join when the query terms' Σdf is large.
+Every search and every batch is scored here, whatever the query terms' Σdf;
+one search is a batch of one (SearchEngine.score_bucket).
 
 Design note — no block-max skipping. The codec's per-block metadata could
 skip blocks that cannot reach the current top-k, but on a vectorized

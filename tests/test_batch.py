@@ -40,17 +40,25 @@ def corpus(spark, tmp_path_factory):
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("use_wand", [False, True])
+@pytest.mark.parametrize("with_aliases", [False, True])
 @pytest.mark.parametrize(
     "mode",
     [dict(), dict(split_time=True), dict(sources={"MEDLINE", "LILACS"}), dict(max_docs=20)],
 )
-def test_batch_matches_oracle(corpus, mode, use_wand):
+def test_batch_matches_oracle(corpus, mode, with_aliases):
+    """Every query of the batch equals the oracle. with_aliases adds an
+    analyzer-identical alias (upper-cased text) of every query, so canonical
+    dedup and alias-row copying run under each mode too, the bucket ladder's
+    per-query quotas included."""
     engine, oracle = corpus
-    res = engine.search_batch(dict(REFERENCE_QUERIES), use_wand=use_wand, **mode)
-    for qname, text in REFERENCE_QUERIES.items():
-        exp = oracle.search(text, **mode)
-        assert_hits_equal(res[qname], exp, f"batch {qname} {mode} wand={use_wand}")
+    queries = dict(REFERENCE_QUERIES)
+    if with_aliases:
+        queries.update({f"{n}_alias": t.upper() for n, t in REFERENCE_QUERIES.items()})
+    res = engine.search_batch(queries, **mode)
+    for qid in queries:
+        exp = oracle.search(REFERENCE_QUERIES[qid.removesuffix("_alias")], **mode)
+        assert_hits_equal(res[qid], exp, f"batch {qid} {mode}")
+        assert all(r["query_id"] == qid for r in res[qid]), qid
 
 
 @pytest.mark.spark
@@ -146,22 +154,17 @@ def test_batch_empty_queries(corpus):
 
 
 @pytest.mark.spark
-def test_batch_mixed_empty_set_and_use_wand_grouping(corpus):
-    """Explicitly-empty sources = 'match nothing' (not 'no filter'), and a
-    per-query use_wand override must not leak to its group (results equal
-    either way — grouping is checked behaviorally)."""
+def test_batch_mixed_empty_set_matches_nothing(corpus):
+    """Explicitly-empty sources = 'match nothing' (not 'no filter'), and the
+    empty set stays in its own group: the other queries are unfiltered."""
     engine, oracle = corpus
     names = list(REFERENCE_QUERIES)
     q = {n: REFERENCE_QUERIES[n] for n in names[:3]}
-    per_query = {
-        names[0]: {"sources": set()},  # match nothing
-        names[1]: {"use_wand": True},  # own group; same results as False
-    }
-    res = engine.search_batch_mixed(q, per_query, use_wand=False)
+    res = engine.search_batch_mixed(q, {names[0]: {"sources": set()}})
     assert res[names[0]] == []
     for n in names[1:3]:
         exp = oracle.search(REFERENCE_QUERIES[n])
-        assert_hits_equal(res[n], exp, f"mixed wand-group {n}")
+        assert_hits_equal(res[n], exp, f"mixed empty-set group {n}")
 
 
 @pytest.mark.spark

@@ -87,10 +87,24 @@ def test_empty_and_stopword_queries(corpus):
 
 
 @pytest.mark.spark
+def test_last_days_below_end_days_ago_raises(corpus):
+    """A last_days window that ends before end_days_ago is an inverted day
+    range: search() and search_batch() refuse it with ValueError, which,
+    unlike an assert, survives python -O."""
+    engine, _ = corpus
+    assert engine.end_days_ago == 7
+    text = REFERENCE_QUERIES["profile_1"]
+    with pytest.raises(ValueError, match="last_days"):
+        engine.search(text, last_days=3)
+    with pytest.raises(ValueError, match="last_days"):
+        engine.search_batch({"q": text}, last_days=3)
+
+
+@pytest.mark.spark
 def test_no_preload_byte_guard(corpus):
     """Byte-aware preload guard: with preload_terms_max_bytes=0 the engine
     must skip the driver-side term dict (falling back to per-query isin
-    lookups + WAND default) and still match the oracle exactly."""
+    lookups) and still match the oracle exactly."""
     engine, oracle = corpus
     eng2 = SearchEngine(
         engine.spark, engine.paths, PINNED_TODAY, END_DAYS_AGO,

@@ -96,8 +96,6 @@ def test_incremental_merge_matches_oracle(spark, tmp_path):
         got = engine.search(q)
         exp = oracle.search(q)
         assert_hits_equal(got, exp, f"incremental {q}")
-        got_w = engine.search(q, use_wand=True)
-        assert_hits_equal(got_w, exp, f"incremental wand {q}")
 
 
 @pytest.mark.spark

@@ -88,8 +88,10 @@ def test_plan_audit(spark, tmp_path):
     engine = SearchEngine(spark, IndexPaths(root), PINNED_TODAY, END_DAYS_AGO)
     checks = audit_query_plan(engine, "zika dengue saude")
     assert checks["term_filter_pushed"], checks
-    assert checks["broadcast_join"], checks
+    assert checks["kernel_cogroup"], checks
+    assert checks["no_nested_loop"], checks
     assert checks["topk_not_global_sort"], checks
+    assert checks["column_pruned_docs"], checks
 
 
 @pytest.mark.spark

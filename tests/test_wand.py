@@ -1,9 +1,8 @@
-"""Scoring-plan parity: the engine has two plans, decode-join and the batched
-per-segment kernel (query/wand.py), picked by the query terms' Σdf.
-use_wand=True forces the kernel, which must equal the oracle (and hence the
-decode-join plan) exactly, including under filters and the bucket ladder.
-Uses a tiny seg_size so queries cross many segments, exercising per-segment
-pools cut to the global top-pool."""
+"""Scoring-kernel parity: every query is scored by the batched per-segment
+kernel (query/wand.py), with no Σdf threshold, and must equal the oracle
+exactly, including under filters and the bucket ladder. Uses a tiny seg_size
+so queries cross many segments, exercising per-segment pools cut to the
+global top-pool."""
 from __future__ import annotations
 
 import pytest
@@ -60,7 +59,7 @@ def test_wand_matches_oracle(corpus, qname):
     engine, oracle = corpus
     text = REFERENCE_QUERIES[qname]
     for mode in WAND_MODES:
-        got = engine.search(text, use_wand=True, **mode)
+        got = engine.search(text, **mode)
         exp = oracle.search(text, **mode)
         assert_hits_equal(got, exp, f"wand {qname} {mode}")
 
