@@ -194,9 +194,21 @@ def _tokenize_batch_arrow(
     else:
         values = flat
         counts = np.zeros(n_rows, dtype=np.int64)
-    offsets = np.zeros(n_rows + 1, dtype=np.int32)
+    return pa.ListArray.from_arrays(_list_offsets(counts), values)
+
+
+def _list_offsets(counts):
+    """Per-row token counts → int32 ListArray offsets. Summed in int64 and
+    checked: past 2^31 − 1 tokens in one batch, int32 offsets would wrap
+    silently and corrupt the ListArray."""
+    import numpy as np
+    import pyarrow as pa
+
+    offsets = np.zeros(len(counts) + 1, dtype=np.int64)
     np.cumsum(counts, out=offsets[1:])
-    return pa.ListArray.from_arrays(pa.array(offsets), values)
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError(f"{offsets[-1]} tokens in one Arrow batch overflow int32 offsets")
+    return pa.array(offsets.astype(np.int32))
 
 
 def _tokenize_series(texts: pd.Series, pre_uniform: bool, max_tokens: int | None) -> pd.Series:

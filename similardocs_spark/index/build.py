@@ -14,8 +14,9 @@ Dataflow (all DataFrame/Arrow; reference semantics cited per stage):
       of DAAT scoring, checkpointing and skew defusal — a term's postings
       WITHIN a segment are bounded by seg_size, so the groupBy(seg, term)
       shuffle key structurally spreads hot terms across reducers)
-    → tokenize (vectorized UDF) → explode → groupBy(seg, term) →
-      docID-sorted arrays → delta+FOR blob + block-max metadata (codec.py)
+    → tokenize (vectorized UDF) → explode → sort on (seg, term, docID) →
+      one docID-sorted array per (seg, term), parquet DELTA_BINARY_PACKED
+      (sortbuild.py)
     → per-segment-batch Iceberg-style commits with lineage rows
       (rows/bytes/status) enabling resume without recomputation
 
@@ -23,8 +24,8 @@ Index layout under <root>/ (parquet; an Iceberg catalog would swap in behind
 the same paths — the runtime jar is absent in this sandbox):
   docs/       doc_id, conv_id, seg, db, instance, update_date, dl, dlq,
               tfnorm, rerank_tokens              (repartitioned by seg)
-  postings/   seg, term, df_seg, blob, block_last, block_min_dlq
-              (one partition per seg batch, sorted by term → parquet
+  postings/   seg, term, df_seg, doc_ids        (sortbuild.POSTINGS_SCHEMA;
+              one partition per seg batch, sorted by term → parquet
               row-group min/max stats prune non-query terms at scan)
   terms/      term, df, idf                       (global term stats)
   stats/      n_docs, sum_dl, avgdl
@@ -353,8 +354,9 @@ def build_postings(
     lineage_counts: bool = True,
     segs: list[int] | None = None,
 ) -> None:
-    """Postings per (seg, term): docID-sorted, delta+FOR-compressed, with
-    block-max metadata. Committed in seg batches (resume skips done ones).
+    """Postings per (seg, term): the docID-sorted ids as one array column
+    (sortbuild.py owns the format). Committed in seg batches (resume skips
+    done ones).
     `docs_df` (e.g. the build's cached docs) avoids the parquet re-read.
     `segs` (trusted caller knowledge, e.g. dense-rank builds) skips the
     distinct-seg discovery job."""
@@ -385,25 +387,14 @@ def build_postings(
         if not todo:
             continue
         d = docs.filter(F.col("seg").isin([int(s) for s in batch]))
-        # sort-based encoding (see sortbuild.py): the hash-agg/collect_list
-        # alternative anti-scales under thread-count growth (JVM agg garbage)
-        from .sortbuild import build_postings_sorted
+        # sort-based build (see sortbuild.py): the hash-agg/collect_list
+        # alternative anti-scales under thread-count growth (JVM agg garbage).
+        # The write touches ONLY this batch's seg dirs — an idempotent
+        # per-segment commit (a crash between write and lineage log is
+        # repaired by redoing the batch; no duplicate rows possible)
+        from .sortbuild import build_postings_sorted, write_postings
 
-        encoded = build_postings_sorted(d)
-        # encoded is ALREADY range-partitioned + sorted on (seg, term): the
-        # encoder is partition-preserving over build_postings_sorted's range
-        # shuffle. Re-range-partitioning here would add a shuffle AND a
-        # RangePartitioner sampling pass that executes the whole
-        # explode→sort→encode pipeline a second time (measured ~2× on the
-        # postings phase). The term-ranged file layout the query path's
-        # row-group pruning relies on is identical either way.
-        #
-        # Dynamic partition overwrite touches ONLY this batch's seg dirs —
-        # an idempotent per-segment commit (a crash between write and lineage
-        # log is repaired by redoing the batch; no duplicate rows possible)
-        io.overwrite_dynamic(
-            encoded.sortWithinPartitions("seg", "term"), paths.postings
-        )
+        write_postings(io, build_postings_sorted(d), paths.postings)
         rows_by_seg = {}
         if lineage_counts:
             rows_by_seg = {

@@ -71,11 +71,16 @@ class ParquetIO:
         df.write.partitionBy(col).mode("overwrite").parquet(path)
         self._mark(path)
 
-    def overwrite_dynamic(self, df: DataFrame, path: str, col: str = "seg") -> None:
+    def overwrite_dynamic(
+        self, df: DataFrame, path: str, col: str = "seg",
+        options: dict[str, str] | None = None,
+    ) -> None:
         """Replace ONLY the partitions present in df (overwritePartitions
-        snapshot): the idempotent per-segment commit unit."""
+        snapshot): the idempotent per-segment commit unit. `options` are
+        parquet writer options (e.g. sortbuild's postings encoding)."""
         (
             df.write.partitionBy(col)
+            .options(**(options or {}))
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(path)
@@ -148,8 +153,14 @@ class IcebergIO:
             col
         ).createOrReplace()
 
-    def overwrite_dynamic(self, df: DataFrame, path: str, col: str = "seg") -> None:
-        # native snapshot commit: replaces exactly the partitions in df
+    def overwrite_dynamic(
+        self, df: DataFrame, path: str, col: str = "seg",
+        options: dict[str, str] | None = None,
+    ) -> None:
+        """Native snapshot commit: replaces exactly the partitions in df.
+        `options` are ignored: Iceberg's own parquet writer and table
+        properties choose the encoding. The arrays are the same, but their
+        encoding is untested (the tests run without the Iceberg jar)."""
         df.writeTo(self._ident(path)).overwritePartitions()
 
     def overwrite(self, df: DataFrame, path: str) -> None:

@@ -30,6 +30,7 @@ from .build import (
     build_terms,
     tokenize_docs,
 )
+from .sortbuild import check_postings_format
 
 
 def incremental_update(
@@ -42,6 +43,7 @@ def incremental_update(
     from .catalog import get_io_for_index
 
     io = get_io_for_index(spark, paths)
+    check_postings_format(io.read(spark, paths.postings))
     stats_row = io.read(spark, paths.stats).collect()[0]
     seg_size = int(stats_row["seg_size"])
 
@@ -156,13 +158,9 @@ def _commit_staged(
         .withColumn("seg", F.col("seg").cast("long"))
         .filter(F.col("seg").isin(affected))
     )
-    from .sortbuild import build_postings_sorted
+    from .sortbuild import build_postings_sorted, write_postings
 
-    encoded = build_postings_sorted(docs)
-    # already range-partitioned + sorted on (seg, term) by the sort-build
-    # shuffle; a second repartitionByRange would re-run the encode pipeline
-    # for RangePartitioner sampling (see build.build_postings)
-    io.overwrite_dynamic(encoded.sortWithinPartitions("seg", "term"), paths.postings)
+    write_postings(io, build_postings_sorted(docs), paths.postings)
 
     # refresh corpus stats, term dictionary, meta stats
     full = io.read(spark, paths.docs)
@@ -195,9 +193,11 @@ def optimize(spark: SparkSession, paths: IndexPaths, seg_batches: int = 1) -> in
     """Full index optimize — the reference's forceMerge(1)
     (LuceneIndexAkka.scala:112): rebuild every segment's postings from the
     live docs table in one pass, compacting incremental-update fragmentation
-    (posting blobs are per-(seg, term) rows, so 'merge' here = re-encode each
-    segment from its current docs; segment BOUNDARIES are docID ranges and
-    never fragment). Refreshes the term dictionary. Returns #segments."""
+    (postings are per-(seg, term) rows, so 'merge' here = rewrite each
+    segment's postings from its current docs; segment BOUNDARIES are docID
+    ranges and never fragment). It is also the migration path for an index
+    written in an older postings format (sortbuild.check_postings_format).
+    Refreshes the term dictionary. Returns #segments."""
     from .build import build_postings
     from .catalog import get_io_for_index
 
@@ -224,6 +224,7 @@ def resume_incremental(spark: SparkSession, paths: IndexPaths) -> dict[str, int]
     from .catalog import get_io_for_index
 
     io = get_io_for_index(spark, paths)
+    check_postings_format(io.read(spark, paths.postings))
     stage = paths.docs + ".staging"
     if not io.exists(spark, stage):
         return {"repaired_segs": 0}

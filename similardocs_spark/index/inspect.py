@@ -4,24 +4,10 @@ SearchExplain (per-token hit counts, OR/AND totals), IndexTest (sanity).
 """
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..textnorm import analyze, uniform_text
-from . import codec
-
-
-@pandas_udf(T.ArrayType(T.LongType()))
-def _decode_udf(blobs: pd.Series) -> pd.Series:
-    # per-BLOB loop (variable-length codec; one iteration per posting list,
-    # not per doc) returning int64 ndarrays directly — Arrow consumes them
-    # without the per-element tolist() boxing round-trip
-    return pd.Series(
-        [codec.decode_docids(bytes(b)) for b in blobs], index=blobs.index
-    )
 
 
 def show_total_hits(engine) -> DataFrame:
@@ -57,10 +43,11 @@ def search_explain(engine, text: str) -> dict:
     if prep is not None:
         w_idf, _ = prep
         if w_idf:
-            decoded = engine._postings.filter(
-                F.col("term").isin(sorted(w_idf))
-            ).select("term", "df_seg")
-            counts = decoded.groupBy().agg(F.sum("df_seg")).collect()[0][0]
+            counts = (
+                engine._postings.filter(F.col("term").isin(sorted(w_idf)))
+                .agg(F.sum("df_seg"))
+                .collect()[0][0]
+            )
             or_total = int(counts or 0)
             and_total = _and_total(engine, sorted(w_idf))
     return {"tokens": per_token, "or_total_postings": or_total, "and_total_docs": and_total}
@@ -68,15 +55,14 @@ def search_explain(engine, text: str) -> dict:
 
 def _and_total(engine, terms: list[str]) -> int:
     """#docs containing ALL query terms (the reference's AND probe)."""
-    decoded = (
+    return int(
         engine._postings.filter(F.col("term").isin(terms))
-        .select("term", F.explode(_decode_udf(F.col("blob"))).alias("doc_id"))
+        .select("term", F.explode("doc_ids").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count_distinct("term").alias("nt"))
         .filter(F.col("nt") == len(terms))
         .count()
     )
-    return int(decoded)
 
 
 STORED_FIELDS = ["doc_id", "conv_id", "update_date", "db", "instance", "dl", "dlq"]
@@ -90,7 +76,7 @@ def term_search(engine, field: str, value: str, max_hits: int = 1000) -> dict:
     if field == "term":
         hits = (
             engine._postings.filter(F.col("term") == value)
-            .select(F.explode(_decode_udf(F.col("blob"))).alias("doc_id"))
+            .select(F.explode("doc_ids").alias("doc_id"))
             .orderBy("doc_id")
         )
     else:

@@ -272,10 +272,7 @@ class ProfileStore:
             max_docs=DEFAULT_MAX_DOCS, min_ngrams=DEFAULT_MIN_NGRAMS,
             split_time=True,
         )
-        if hasattr(engine, "search_batch"):
-            res = engine.search_batch(dict(chunk), **kwargs)
-        else:  # engines without batch support (e.g. test fakes)
-            res = {pid: engine.search(content, **kwargs) for pid, content in chunk}
+        res = engine.search_batch(dict(chunk), **kwargs)
         return [
             (
                 pid,
@@ -397,8 +394,7 @@ class ProfileStore:
             for r in self._read().filter(F.col("id").isin(pids)).collect()
         }
         # refresh ALL stale requested profiles in one batch call (one grouped
-        # plan instead of a serial engine.search per profile) when the engine
-        # supports it; _search_chunk falls back to serial search otherwise
+        # plan instead of a serial engine.search per profile)
         stale = [
             (pid, table[pid]["prof_content"])
             for pid in pids

@@ -2,11 +2,11 @@
 
 The reference serves one query per servlet request; on Spark the q/s story is
 amortization — scoring 1,000 queries costs barely more than one, because the
-postings scan, decode, joins and shuffles are shared:
+postings scan, joins and shuffles are shared:
 
   postings (term-pruned scan) cogroup doc stats (bucket/categorical filters
   pushed to the parquet scan), per (segment × query-slice)
-    → batched per-segment kernel (query/wand.py): each posting list decoded
+    → batched per-segment kernel (query/wand.py): each posting list read
       ONCE, float32-spec scoring, ≤ pool rows per (segment, query)
     → per-query candidate pool via ranked window (150·k)
     → overlap rerank vs per-query token arrays → per-query top-k window
@@ -63,8 +63,9 @@ def _batch_bucket(
             "query_id string, q_rerank array<string>, min2 int, k int, pool int",
         )
     )
-    # batched per-segment kernel: shared decode, numpy scoring, ≤ pool rows
-    # per (segment, query) enter the plan — no posting×query row explosion
+    # batched per-segment kernel: shared posting lists, numpy scoring,
+    # ≤ pool rows per (segment, query) enter the plan — no posting×query
+    # row explosion
     from .wand import wand_score_batch
 
     scored = wand_score_batch(

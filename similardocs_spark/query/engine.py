@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import bm25
 from ..index.build import IndexPaths
+from ..index.sortbuild import check_postings_format
 from ..oracle.refsearch import (
     CANDIDATE_FACTOR,
     DEFAULT_MAX_DOCS,
@@ -97,6 +98,7 @@ class SearchEngine:
         self._postings = io.read(self.spark, self.paths.postings).withColumn(
             "seg", F.col("seg").cast("long")
         )
+        check_postings_format(self._postings)
         self._terms = io.read(self.spark, self.paths.terms)
         self._term_df: dict[str, int] | None = None
         if (

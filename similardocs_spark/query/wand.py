@@ -1,23 +1,24 @@
 """Batched per-segment scoring kernel — the engine's one scoring plan.
 
 Executes per (SEGMENT × query-slice) via `cogroup(...).applyInPandas`: the
-segment's postings rows (term, blob) for the batch's terms, cogrouped with
-its bucket-filtered doc stats (doc_id, tfnorm, const). All of a term's
-postings for a doc range are co-located by the index layout, so the kernel
-decodes every needed posting list once, scatter-adds each query's float32
-term contributions into a dense per-segment float64 accumulator
-(term-at-a-time, exhaustive) and emits ≤ pool rows per (segment, query).
-Every search and every batch is scored here, whatever the query terms' Σdf;
-one search is a batch of one (SearchEngine.score_bucket).
+segment's postings rows (term, doc_ids) for the batch's terms, cogrouped
+with its bucket-filtered doc stats (doc_id, tfnorm, const). All of a term's
+postings for a doc range are co-located by the index layout, and Arrow hands
+each posting list to the kernel as an int64 array, so the kernel localizes
+every needed list once, scatter-adds each query's float32 term
+contributions into a dense per-segment float64 accumulator (term-at-a-time,
+exhaustive) and emits ≤ pool rows per (segment, query). Every search and
+every batch is scored here, whatever the query terms' Σdf; one search is a
+batch of one (SearchEngine.score_bucket).
 
-Design note — no block-max skipping. The codec's per-block metadata could
-skip blocks that cannot reach the current top-k, but on a vectorized
-(numpy) runtime the Python loop over blocks costs more than it saves.
-Measured on one segment without Spark (4 synthetic terms, one query, one
-core of a 4-vCPU x86 host), outputs identical: a block-max WAND kernel took
-7.3 / 31.1 / 109 ms at 8k / 64k / 262k docs (pool 1500) against 3.2 / 9.8 /
-34.3 ms for this kernel, and 23.4 vs 9.7 ms at 64k docs with pool 30, where
-skipping should help most.
+Design note — no block-max skipping. Per-block (last docID, min doc length)
+metadata could skip blocks that cannot reach the current top-k, but on a
+vectorized (numpy) runtime the Python loop over blocks costs more than it
+saves. Measured on one segment without Spark (4 synthetic terms, one query,
+one core of a 4-vCPU x86 host), outputs identical: a block-max WAND kernel
+took 7.3 / 31.1 / 109 ms at 8k / 64k / 262k docs (pool 1500) against 3.2 /
+9.8 / 34.3 ms for this kernel, and 23.4 vs 9.7 ms at 64k docs with pool 30,
+where skipping should help most.
 """
 from __future__ import annotations
 
@@ -25,8 +26,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..index import codec
 
 
 def batch_score_kernel(
@@ -37,7 +36,7 @@ def batch_score_kernel(
     seg_size: int,
     pools: dict[str, int],
 ) -> pd.DataFrame:
-    """Per-(segment, query-slice) batched scoring: decode every needed
+    """Per-(segment, query-slice) batched scoring: localize every needed
     posting list ONCE, then scatter-add each query's term contributions into
     a dense per-segment accumulator. Float discipline is the pinned spec
     (bm25.py): f32 per-term product, f64 accumulate + const, final f32.
@@ -65,26 +64,26 @@ def batch_score_kernel(
     allowed = np.zeros(n_local, dtype=bool)
     allowed[local] = True
 
-    decoded: dict[str, np.ndarray] = {}
+    ids_by_term: dict[str, np.ndarray] = {}
     for row in postings.itertuples(index=False):
-        if row.term not in decoded:
-            ids = codec.decode_docids(bytes(row.blob)) - base
+        if row.term not in ids_by_term:
+            ids = np.asarray(row.doc_ids, dtype=np.int64) - base
             # docs outside the filtered window were never materialized in
             # the dense arrays; clip before indexing (NaN tfnorm + allowed
             # mask handles in-range disallowed docs)
-            decoded[row.term] = ids[(ids >= 0) & (ids < n_local)]
+            ids_by_term[row.term] = ids[(ids >= 0) & (ids < n_local)]
 
     frames: list[pd.DataFrame] = []
     acc = np.zeros(n_local, dtype=np.float64)
     matched = np.zeros(n_local, dtype=bool)
     for qid, w_idf in queries.items():
-        terms = [t for t in w_idf if t in decoded]
+        terms = [t for t in w_idf if t in ids_by_term]
         if not terms:
             continue
         acc[:] = 0.0
         matched[:] = False
         for t in terms:
-            ids = decoded[t]
+            ids = ids_by_term[t]
             contrib = (np.float32(w_idf[t]) * tfnorm[ids]).astype(np.float32)
             acc[ids] += contrib.astype(np.float64)
             matched[ids] = True
@@ -121,7 +120,7 @@ def wand_score_batch(
     (segment × query-slice): with few segments (small corpora) the queries
     are hash-sliced so the kernel still fans out across all executor slots;
     postings rows are replicated only to the slices whose queries need that
-    term (bounded decode duplication, factor ≤ n_slices). There are never
+    term (bounded duplication, factor ≤ n_slices). There are never
     more slices than queries: an empty slice would only cross-join docs
     that meet no postings."""
     import math
@@ -146,7 +145,7 @@ def wand_score_batch(
     from ..util import filter_terms
 
     postings = filter_terms(engine._postings, all_terms).select(
-        "seg", "term", "blob"
+        "seg", "term", "doc_ids"
     )
     docs = engine._bucket_docs(from_str, to_str, sources, instances).select(
         "seg",

@@ -23,6 +23,16 @@ from tests.test_engine_golden import assert_hits_equal
 QUERIES = ["zika dengue", "mortalidade infantil", "saude brasil brazil"]
 
 
+def _postings_rows(spark, root):
+    """Every postings row as (seg, term, df_seg, doc_ids), sorted."""
+    return sorted(
+        (r["seg"], r["term"], r["df_seg"], list(r["doc_ids"]))
+        for r in spark.read.parquet(os.path.join(root, "postings"))
+        .select("seg", "term", "df_seg", "doc_ids")
+        .collect()
+    )
+
+
 @pytest.mark.spark
 def test_incremental_merge_matches_oracle(spark, tmp_path):
     root = str(tmp_path / "idx")
@@ -148,15 +158,7 @@ def test_incremental_crash_repair(spark, tmp_path, monkeypatch):
     assert read_docs(root_b) == read_docs(root_a)
 
     # postings equality too (repair rebuilt the affected segments)
-    def read_postings(root):
-        return sorted(
-            (r["seg"], r["term"], bytes(r["blob"]))
-            for r in spark.read.parquet(os.path.join(root, "postings"))
-            .select("seg", "term", "blob")
-            .collect()
-        )
-
-    assert read_postings(root_b) == read_postings(root_a)
+    assert _postings_rows(spark, root_b) == _postings_rows(spark, root_a)
     assert I.resume_incremental(spark, paths_b) == {"repaired_segs": 0}  # no-op
 
 
@@ -176,18 +178,10 @@ def test_optimize_rebuilds_identical_postings(spark, tmp_path):
     build_index(spark, base, root, seg_size=16)
     incremental_update(spark, IndexPaths(root), delta)
 
-    def postings_of(root):
-        return sorted(
-            (r["seg"], r["term"], bytes(r["blob"]))
-            for r in spark.read.parquet(os.path.join(root, "postings"))
-            .select("seg", "term", "blob")
-            .collect()
-        )
-
-    before = postings_of(root)
+    before = _postings_rows(spark, root)
     n = optimize(spark, IndexPaths(root))
     assert n > 0
-    assert postings_of(root) == before  # idempotent re-encode of live docs
+    assert _postings_rows(spark, root) == before  # idempotent rewrite of live docs
     engine = SearchEngine(spark, IndexPaths(root), PINNED_TODAY, END_DAYS_AGO)
     assert engine.search("zika dengue")
 
@@ -232,16 +226,7 @@ def test_resume_skips_done_segments(spark, tmp_path):
         assert os.path.getmtime(d) == t, f"recomputed {d}"
 
     # content equality with the uninterrupted build
-    cols = ["seg", "term", "df_seg", "blob", "block_last", "block_min_dlq"]
-    a = sorted(
-        (r["seg"], r["term"], r["df_seg"], bytes(r["blob"]))
-        for r in spark.read.parquet(IndexPaths(root_a).postings).select(cols).collect()
-    )
-    b = sorted(
-        (r["seg"], r["term"], r["df_seg"], bytes(r["blob"]))
-        for r in spark.read.parquet(paths_b.postings).select(cols).collect()
-    )
-    assert a == b
+    assert _postings_rows(spark, root_b) == _postings_rows(spark, root_a)
 
 
 @pytest.mark.spark
@@ -287,3 +272,56 @@ def test_resume_discards_uncommitted_staging(spark, tmp_path):
     assert read_docs() == pre
     # second call: clean no-op
     assert I.resume_incremental(spark, paths) == {"repaired_segs": 0}
+
+
+@pytest.mark.spark
+def test_legacy_postings_fail_loudly_until_optimize(spark, tmp_path):
+    """An index whose postings predate the doc_ids format (an encoded `blob`
+    column instead) must not be opened, incrementally updated or repaired:
+    each raises ValueError naming optimize. optimize() rewrites every segment's
+    postings, after which search() matches the oracle again."""
+    from similardocs_spark.fixtures import docs_meta_for
+    from similardocs_spark.index.incremental import optimize, resume_incremental
+
+    n_convs, seed = 40, 42
+    turns = make_transcripts(n_convs, seed=seed)
+    meta = docs_meta_for(turns)
+    meta_df = spark.createDataFrame(
+        [(cid, m["db"], m["instance"], m["update_date"]) for cid, m in meta.items()],
+        "conv_id string, db string, instance string, update_date string",
+    )
+    root = str(tmp_path / "legacy")
+    paths = build_index(
+        spark, transcripts_df(spark, n_convs=n_convs, seed=seed), root,
+        docs_meta=meta_df, seg_size=16,
+    )
+    legacy = [
+        (seg, term, df_seg, bytes([0, 1, 2, 3]))
+        for seg, term, df_seg, _ in _postings_rows(spark, root)
+    ]
+    (
+        spark.createDataFrame(
+            legacy, "seg long, term string, df_seg long, blob binary"
+        )
+        .write.partitionBy("seg")
+        .mode("overwrite")
+        .parquet(paths.postings)
+    )
+
+    with pytest.raises(ValueError, match="optimize"):
+        SearchEngine(spark, paths, PINNED_TODAY, END_DAYS_AGO)
+    delta = transcripts_df(spark, n_convs=3, seed=7).withColumn(
+        "conv_id", F.concat(F.lit("nv"), "conv_id")
+    )
+    with pytest.raises(ValueError, match="optimize"):
+        incremental_update(spark, paths, delta)
+    with pytest.raises(ValueError, match="optimize"):
+        resume_incremental(spark, paths)
+
+    optimize(spark, paths)
+    engine = SearchEngine(spark, paths, PINNED_TODAY, END_DAYS_AGO)
+    oracle = OracleSearch(
+        OracleIndex.build(oracle_docs(turns)), PINNED_TODAY, END_DAYS_AGO
+    )
+    for q in QUERIES:
+        assert_hits_equal(engine.search(q), oracle.search(q), f"after optimize {q}")

@@ -22,15 +22,18 @@ class FakeHit:
 
 
 class FakeEngine:
-    """search() returns doc ids derived from the content length (stable)."""
+    """search_batch() returns doc ids derived from each content's length
+    (stable); `calls` counts queries, not batches."""
 
     def __init__(self):
         self.calls = 0
 
-    def search(self, content, **kw):
-        self.calls += 1
-        base = len(content)
-        return [FakeHit(base + i, 1.0 / (i + 1)) for i in range(3)]
+    def search_batch(self, queries, **kw):
+        self.calls += len(queries)
+        return {
+            qid: [FakeHit(len(content) + i, 1.0 / (i + 1)) for i in range(3)]
+            for qid, content in queries.items()
+        }
 
 
 @pytest.mark.spark

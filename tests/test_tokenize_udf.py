@@ -119,3 +119,17 @@ def test_ngram_text_vectorized_adversarial():
 )
 def test_ngram_text_property_parity(texts, num_tokens):
     _check_ngram(texts, num_tokens)
+
+
+def test_list_offsets_overflow_raises():
+    """Token counts summing past int32 must fail loudly instead of wrapping
+    the ListArray offsets; a sum that fits stays exact."""
+    import numpy as np
+
+    from similardocs_spark.functions.tokenize import _list_offsets
+
+    assert _list_offsets(np.array([2, 0, 3], dtype=np.int64)).to_pylist() == [0, 2, 2, 5]
+    fits = np.array([2**30, 2**30 - 1], dtype=np.int64)
+    assert _list_offsets(fits).to_pylist()[-1] == 2**31 - 1
+    with pytest.raises(ValueError, match="overflow int32"):
+        _list_offsets(np.array([2**30, 2**30], dtype=np.int64))

@@ -64,16 +64,15 @@ def test_wand_matches_oracle(corpus, qname):
         assert_hits_equal(got, exp, f"wand {qname} {mode}")
 
 
-def test_batch_score_kernel_unit(monkeypatch):
-    """Kernel-level unit test without Spark: one segment, synthetic postings,
-    two queries in one slice sharing a term (decoded once), each cut to its
-    own pool in exact (score desc, doc_id asc) order — including ties that
-    straddle the pool boundary."""
+def test_batch_score_kernel_unit():
+    """Kernel-level unit test without Spark: one segment, synthetic postings
+    (doc_ids arrays), two queries in one slice sharing a term, each cut to
+    its own pool in exact (score desc, doc_id asc) order — including ties
+    that straddle the pool boundary."""
     import numpy as np
     import pandas as pd
 
     from similardocs_spark import bm25
-    from similardocs_spark.index import codec
     from similardocs_spark.query.wand import batch_score_kernel
 
     rng = np.random.default_rng(3)
@@ -87,7 +86,7 @@ def test_batch_score_kernel_unit(monkeypatch):
         t: np.sort(rng.choice(n_docs, size=200, replace=False)) for t in ("aaa", "bbb")
     }
     postings = pd.DataFrame(
-        [{"term": t, "blob": codec.encode_docids(ids)} for t, ids in ids_by_term.items()]
+        [{"term": t, "doc_ids": ids} for t, ids in ids_by_term.items()]
     )
     queries = {"q1": {"aaa": 2.0, "bbb": 1.0}, "q2": {"bbb": 1.5}}
 
@@ -111,13 +110,7 @@ def test_batch_score_kernel_unit(monkeypatch):
     )
     pools = {"q1": 50, "q2": pool2}
 
-    decodes = []
-    real_decode = codec.decode_docids
-    monkeypatch.setattr(
-        codec, "decode_docids", lambda blob: decodes.append(1) or real_decode(blob)
-    )
     got = batch_score_kernel((0, 0), postings, docs, {0: queries}, seg_size, pools)
-    assert len(decodes) == len(ids_by_term)
     for qid, pool in pools.items():
         rows = got[got["query_id"] == qid]
         assert rows["doc_id"].tolist() == [d for _, d in exp[qid][:pool]], qid
