@@ -13,6 +13,7 @@ hand on parquet paths:
 | MERGE INTO                   | staged two-phase merge (incremental.py)     |
 | snapshot lineage             | lineage/ journal rows (build._log_lineage)  |
 | createOrReplace              | mode("overwrite") parquet write             |
+| createOrReplace of n tables  | replace_staged: swap, `_READY` roll-forward |
 
 When the jar IS present (a real deployment), `get_io` returns IcebergIO,
 which maps every write onto native Iceberg table operations via a Hadoop
@@ -25,8 +26,14 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
+from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..util import local_df
 
 CATALOG_NAME = "simdocs"
 
@@ -113,8 +120,6 @@ class ParquetIO:
         )
 
     def drop(self, spark: SparkSession, path: str) -> None:
-        import shutil
-
         shutil.rmtree(path, ignore_errors=True)
 
 
@@ -232,3 +237,72 @@ def get_io_for_index(spark: SparkSession, paths) -> ParquetIO | IcebergIO:
     if recorded == {"iceberg"}:
         return IcebergIO(spark, paths.root)  # raises if the jar is absent
     return get_io(spark, paths.root)
+
+
+def read_committed(
+    spark: SparkSession,
+    io: ParquetIO | IcebergIO,
+    path: str,
+    schema: str,
+    col: str,
+    exclude: str | None = None,
+) -> DataFrame:
+    """The table at `path` minus its partition `col=exclude`; an empty
+    frame of `schema` while the table is absent or uncommitted."""
+    if not (io.exists(spark, path) and io.committed(spark, path)):
+        return local_df(spark, [], schema)
+    try:
+        df = io.read(spark, path)
+    except AnalysisException:
+        # committed-but-empty table (zero-row partitioned write leaves a
+        # marker and no data files — schema inference has nothing to read)
+        return local_df(spark, [], schema)
+    if exclude is not None:
+        # partition-pruned: a replayed tick must see exactly the state
+        # the original run saw, minus any partial rows it wrote itself
+        df = df.filter(F.col(col) != exclude)
+    return df
+
+
+def replace_staged(
+    io: ParquetIO | IcebergIO,
+    root: str,
+    names: tuple[str, ...],
+    write: Callable[[ParquetIO | IcebergIO, str], None],
+) -> None:
+    """Replace the tables `root/<name>` with what `write(io, root)` writes.
+
+    Iceberg: `write` rewrites the live tables in place (each table commit
+    is atomic). Parquet: `write` fills `root/_compact`, `_READY` marks the
+    staging complete, then `recover_staged` swaps each table in through
+    `root/_trash_<name>` — the same call that finishes, on the next open,
+    a swap a crash interrupted, so the tables are never lost."""
+    if io.mode != "parquet":
+        write(io, root)
+        return
+    recover_staged(root, names)
+    write(ParquetIO(), f"{root}/_compact")
+    with open(f"{root}/_compact/_READY", "w"):
+        pass
+    recover_staged(root, names)
+
+
+def recover_staged(root: str, names: tuple[str, ...]) -> None:
+    """Roll a staged replace forward (the staged tables are complete once
+    `_READY` exists) or discard an incomplete staging."""
+    staged = f"{root}/_compact"
+    if not os.path.exists(staged):
+        return
+    if not os.path.exists(f"{staged}/_READY"):
+        shutil.rmtree(staged, ignore_errors=True)
+        return
+    for name in names:
+        src, dst = f"{staged}/{name}", f"{root}/{name}"
+        trash = f"{root}/_trash_{name}"
+        if os.path.exists(src):  # absent: swapped before a crash
+            shutil.rmtree(trash, ignore_errors=True)
+            if os.path.exists(dst):
+                os.rename(dst, trash)
+            os.rename(src, dst)
+        shutil.rmtree(trash, ignore_errors=True)
+    shutil.rmtree(staged, ignore_errors=True)

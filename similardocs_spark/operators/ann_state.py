@@ -16,12 +16,14 @@ Layout (all under one root, through the storage-substrate shim):
                  partitioned by `ingest_batch` — one partition per
                  accepted tick plus "base" after bootstrap/compaction.
 
-Same write discipline as the text edition (and the same crash/replay
-matrix — see dedup_state.py): every tick is a DYNAMIC partition
-overwrite of its own `ingest_batch=label` partition (idempotent
-replays); bootstrap and compaction are FULL partitioned replaces
-(overwrite_partitioned — a dynamic overwrite would leave old tick
-partitions alive next to the base rows that subsume them).
+The text edition's crash/replay matrix (dedup_state.py) holds here too:
+every tick is a DYNAMIC partition overwrite of its own
+`ingest_batch=label` partition (idempotent replays), reads go through
+`catalog.read_committed`, and compaction replaces state/ and meta/
+through `catalog.replace_staged`. Bootstrap and compaction are FULL
+partitioned replaces (overwrite_partitioned — a dynamic overwrite would
+leave old tick partitions alive next to the base rows that subsume
+them).
 
 `compact(reband_bits=...)` optionally re-sizes the bucket space during
 the fold (`ann_incremental.reband_state`, one projection pass over the
@@ -31,19 +33,17 @@ the follow-up tick's shuffle dropping 3×).
 """
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.catalog import ParquetIO, get_io
+from ..index.catalog import get_io, read_committed, recover_staged, replace_staged
 from ..util import local_df
 from . import ann_incremental as inc
 from .ann import lsh_bits_for
 
 BATCH_COL = "ingest_batch"
 BASE_LABEL = "base"
+_TABLES = ("state", "meta")
 
 
 def _state_schema(tables: int) -> str:
@@ -77,7 +77,7 @@ class VectorDedupState:
         self.io = get_io(spark, self.root)
         self.state_path = f"{self.root}/state"
         self.meta_path = f"{self.root}/meta"
-        self._recover_compaction()
+        recover_staged(self.root, _TABLES)
         if self.io.exists(spark, self.meta_path):
             row = self.io.read(spark, self.meta_path).collect()[0]
             stored = {
@@ -109,30 +109,15 @@ class VectorDedupState:
                 dim, bits, tables if tables is not None else 2,
                 seed if seed is not None else 42,
             )
-            self.io.overwrite(
-                local_df(
-                    spark,
-                    [(self.dim, self.bits, self.tables, self.seed)],
-                    "dim int, bits int, tables int, seed int",
-                ),
-                self.meta_path,
-            )
+            self._write_meta(self.io, self.root, self.bits)
 
     # ------------------------------------------------------------- reads
 
     def read_state(self, exclude: str | None = None) -> DataFrame:
-        if not (
-            self.io.exists(self.spark, self.state_path)
-            and self.io.committed(self.spark, self.state_path)
-        ):
-            df = local_df(self.spark, [], _state_schema(self.tables))
-        else:
-            try:
-                df = self.io.read(self.spark, self.state_path)
-            except Exception:  # committed-but-empty partitioned table
-                df = local_df(self.spark, [], _state_schema(self.tables))
-        if exclude is not None:
-            df = df.filter(F.col(BATCH_COL) != exclude)
+        df = read_committed(
+            self.spark, self.io, self.state_path, _state_schema(self.tables),
+            BATCH_COL, exclude,
+        )
         # re-stamp the LSH config as field metadata (meta/ is the truth;
         # partitioned round-trips may drop it) so ann_incremental's
         # fail-fast validation and config resolution keep working
@@ -147,12 +132,9 @@ class VectorDedupState:
         ]
         return df.select(*cols)
 
-    def vec_ids(self, exclude: str | None = None) -> DataFrame:
+    def ids(self, exclude: str | None = None) -> DataFrame:
+        """The `vec_id` column the ingest gate checks arrivals against."""
         return self.read_state(exclude).select("vec_id")
-
-    # alias so stream drivers can treat text/vector states uniformly
-    def doc_ids(self, exclude: str | None = None) -> DataFrame:
-        return self.vec_ids(exclude).withColumnRenamed("vec_id", "doc_id")
 
     # ------------------------------------------------------------ writes
 
@@ -226,9 +208,9 @@ class VectorDedupState:
         """Fold per-tick partitions into "base"; with `reband_bits`,
         re-derive the bucket columns at the new size in the same pass
         (`reband_state` — one projection over the stored vectors) and
-        update meta so subsequent ticks pick the new config up. Staged
-        swap with roll-forward on parquet; atomic per-table replaces on
-        Iceberg. Run from maintenance, not concurrently with ticks."""
+        update meta so subsequent ticks pick the new config up. state/
+        and meta/ are replaced through `catalog.replace_staged`. Run from
+        maintenance, not concurrently with ticks."""
         rows = self.read_state().localCheckpoint(eager=True)
         new_bits = self.bits
         if reband_bits is not None and reband_bits != self.bits:
@@ -236,20 +218,21 @@ class VectorDedupState:
                 rows, bits=reband_bits
             ).localCheckpoint(eager=True)
             new_bits = reband_bits
-        if self.io.mode != "parquet":
-            self._compact_into(self.io, self.root, rows)
-            self._write_meta(self.io, self.root, new_bits)
-            self.bits = new_bits
-            return
-        staged = f"{self.root}/_compact"
-        shutil.rmtree(staged, ignore_errors=True)
-        pio = ParquetIO()
-        self._compact_into(pio, staged, rows)
-        self._write_meta(pio, staged, new_bits)
-        with open(f"{staged}/_READY", "w"):
-            pass
-        self._swap_compacted()
+        replace_staged(
+            self.io,
+            self.root,
+            _TABLES,
+            lambda io, root: self._compact_into(io, root, rows, new_bits),
+        )
         self.bits = new_bits
+
+    def _compact_into(self, io, root: str, rows: DataFrame, bits: int) -> None:
+        io.overwrite_partitioned(
+            rows.withColumn(BATCH_COL, F.lit(BASE_LABEL)),
+            f"{root}/state",
+            col=BATCH_COL,
+        )
+        self._write_meta(io, root, bits)
 
     def _write_meta(self, io, root: str, bits: int) -> None:
         io.overwrite(
@@ -260,34 +243,3 @@ class VectorDedupState:
             ),
             f"{root}/meta",
         )
-
-    def _compact_into(self, io, root: str, rows: DataFrame) -> None:
-        io.overwrite_partitioned(
-            rows.withColumn(BATCH_COL, F.lit(BASE_LABEL)),
-            f"{root}/state",
-            col=BATCH_COL,
-        )
-
-    def _swap_compacted(self) -> None:
-        staged = f"{self.root}/_compact"
-        for name in ("state", "meta"):
-            src = f"{staged}/{name}"
-            dst = f"{self.root}/{name}"
-            if not os.path.exists(src):
-                continue  # roll-forward: already swapped
-            trash = f"{self.root}/_trash_{name}"
-            shutil.rmtree(trash, ignore_errors=True)
-            if os.path.exists(dst):
-                os.rename(dst, trash)
-            os.rename(src, dst)
-            shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-
-    def _recover_compaction(self) -> None:
-        staged = f"{self.root}/_compact"
-        if not os.path.exists(staged):
-            return
-        if os.path.exists(f"{staged}/_READY"):
-            self._swap_compacted()
-        else:
-            shutil.rmtree(staged, ignore_errors=True)

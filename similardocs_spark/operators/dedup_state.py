@@ -17,17 +17,17 @@ shuffle proportional to CORPUS size. This class makes a tick O(batch):
                                                     summed on read)
 
 all three partitioned by `ingest_batch` (one partition per accepted tick,
-plus "base" after bootstrap/compaction). Every write is a DYNAMIC PARTITION
-OVERWRITE of the tick's own partition through the storage-substrate shim
-(index/catalog.py — Iceberg overwritePartitions when the runtime is
-present, committed parquet otherwise), which makes a replayed tick
+plus "base" after bootstrap/compaction). Every tick write is a DYNAMIC
+PARTITION OVERWRITE of the tick's own partition through the
+storage-substrate shim (index/catalog.py), which makes a replayed tick
 IDEMPOTENT: it replaces its own partition with identical content instead
-of appending duplicates. Reads EXCLUDE the in-flight tick's partition
-(partition-pruned filter), so a replay adjudicates against exactly the
-state the original run saw, at any crash point.
+of appending duplicates. Reads go through `catalog.read_committed`, which
+excludes the in-flight tick's partition, so a replay adjudicates against
+exactly the state the original run saw, at any crash point. Compaction
+replaces the three tables through `catalog.replace_staged`.
 
 Crash/replay matrix (tick label L, caller writes its corpus partition for
-L BEFORE calling tick — see streaming/dedup_stream.py):
+L BEFORE committing the state — see streaming.gated_ingest):
   - crash before any write ........ replay recomputes everything
   - crash mid-state-writes ........ replay reads state minus partition L
                                     (untouched), overwrites L identically
@@ -47,13 +47,10 @@ the Lucene index there is likewise the only state the updater consults.
 """
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.catalog import ParquetIO, get_io
+from ..index.catalog import get_io, read_committed, recover_staged, replace_staged
 from ..util import local_df
 from .dedup import MAX_BUCKET, N_BANDS, N_HASHES, _band_buckets
 from .dedup_incremental import (
@@ -64,6 +61,7 @@ from .dedup_incremental import (
 
 BATCH_COL = "ingest_batch"
 BASE_LABEL = "base"
+_TABLES = ("sig", "bands", "counts")
 
 
 def _sig_schema(n_hashes: int) -> str:
@@ -94,7 +92,7 @@ class BandedDedupState:
         self.bands_path = f"{self.root}/bands"
         self.counts_path = f"{self.root}/counts"
         self.meta_path = f"{self.root}/meta"
-        self._recover_compaction()
+        recover_staged(self.root, _TABLES)
         if self.io.exists(spark, self.meta_path):
             row = self.io.read(spark, self.meta_path).collect()[0]
             if (row["n_hashes"], row["n_bands"]) != (n_hashes, n_bands):
@@ -116,22 +114,9 @@ class BandedDedupState:
     # ------------------------------------------------------------- reads
 
     def _read(self, path: str, schema: str, exclude: str | None) -> DataFrame:
-        if not (
-            self.io.exists(self.spark, path)
-            and self.io.committed(self.spark, path)
-        ):
-            return local_df(self.spark, [], schema)
-        try:
-            df = self.io.read(self.spark, path)
-        except Exception:
-            # committed-but-empty table (zero-row partitioned write leaves a
-            # marker and no data files — schema inference has nothing to read)
-            return local_df(self.spark, [], schema)
-        if exclude is not None:
-            # partition-pruned: a replayed tick must see exactly the state
-            # the original run saw, minus any partial rows it wrote itself
-            df = df.filter(F.col(BATCH_COL) != exclude)
-        return df
+        return read_committed(
+            self.spark, self.io, path, schema, BATCH_COL, exclude
+        )
 
     def read_signatures(self, exclude: str | None = None) -> DataFrame:
         return self._read(
@@ -161,32 +146,26 @@ class BandedDedupState:
             .agg(F.sum("cnt").alias("cnt"))
         )
 
-    def doc_ids(self, exclude: str | None = None) -> DataFrame:
-        return self._read(
-            self.sig_path, _sig_schema(self.n_hashes), exclude
-        ).select("doc_id")
+    def ids(self, exclude: str | None = None) -> DataFrame:
+        """The `doc_id` column the ingest gate checks arrivals against."""
+        return self.read_signatures(exclude).select("doc_id")
 
     # ------------------------------------------------------------ writes
 
-    def _append_partition(self, sig_rows: DataFrame, label: str) -> None:
-        """Write one tick's partition to all three tables. `sig_rows` must
-        already be MATERIALIZED (localCheckpoint) by the caller — its plan
-        must not read the directories this replaces. Idempotent: dynamic
-        overwrite replaces partition `label` wholesale on replay."""
-        tagged = sig_rows.withColumn(BATCH_COL, F.lit(label))
-        self.io.overwrite_dynamic(tagged, self.sig_path, col=BATCH_COL)
-        bands = _band_buckets(sig_rows, self.n_hashes, self.n_bands)
-        self.io.overwrite_dynamic(
-            bands.withColumn(BATCH_COL, F.lit(label)),
-            self.bands_path,
-            col=BATCH_COL,
-        )
+    def _write_tables(self, write, root: str, sig: DataFrame, label: str) -> None:
+        """Write `sig` and the bands and bucket counts derived from it as
+        partition `label` of sig/, bands/ and counts/ under `root`, through
+        `write` (a TableIO overwrite method). `sig` must already be
+        MATERIALIZED (localCheckpoint) — its plan must not read the
+        directories this replaces, nor shingle once per table."""
+        bands = _band_buckets(sig, self.n_hashes, self.n_bands)
         counts = bands.groupBy("band", "key").agg(F.count("*").alias("cnt"))
-        self.io.overwrite_dynamic(
-            counts.withColumn(BATCH_COL, F.lit(label)),
-            self.counts_path,
-            col=BATCH_COL,
-        )
+        for name, df in zip(_TABLES, (sig, bands, counts)):
+            write(
+                df.withColumn(BATCH_COL, F.lit(label)),
+                f"{root}/{name}",
+                col=BATCH_COL,
+            )
 
     def bootstrap(
         self,
@@ -195,38 +174,18 @@ class BandedDedupState:
         text_col: str = "text",
     ) -> None:
         """One-time O(corpus) build of the state from an existing accepted
-        corpus (docs, or a pre-computed signature table): signatures are
-        written first, then bands/counts are derived from the WRITTEN
-        parquet (one materialization — the shingle lineage never runs
-        twice). FULL partitioned replaces, not dynamic overwrites: a
-        re-bootstrap of a state that already has tick partitions must
-        replace them, not coexist with them (same reasoning as
-        `_compact_into`)."""
+        corpus (docs, or a pre-computed signature table): the signatures
+        are materialized once, then written as a compaction writes them —
+        FULL partitioned replaces, not dynamic overwrites: a re-bootstrap
+        of a state that already has tick partitions must replace them, not
+        coexist with them."""
         if (corpus_docs is None) == (corpus_sig is None):
             raise ValueError("pass exactly one of corpus_docs / corpus_sig")
         if corpus_sig is None:
             corpus_sig = signatures_for(corpus_docs, text_col, self.n_hashes)
         keep = ["doc_id", *[f"mh{i}" for i in range(self.n_hashes)]]
-        self.io.overwrite_partitioned(
-            corpus_sig.select(*keep).withColumn(BATCH_COL, F.lit(BASE_LABEL)),
-            self.sig_path,
-            col=BATCH_COL,
-        )
-        written = self.read_signatures()
-        bands = _band_buckets(written, self.n_hashes, self.n_bands)
-        self.io.overwrite_partitioned(
-            bands.withColumn(BATCH_COL, F.lit(BASE_LABEL)),
-            self.bands_path,
-            col=BATCH_COL,
-        )
-        self.io.overwrite_partitioned(
-            self.read_bands()
-            .groupBy("band", "key")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn(BATCH_COL, F.lit(BASE_LABEL)),
-            self.counts_path,
-            col=BATCH_COL,
-        )
+        sig = corpus_sig.select(*keep).localCheckpoint(eager=True)
+        self._compact_into(self.io, self.root, sig)
 
     # -------------------------------------------------------------- tick
 
@@ -282,7 +241,7 @@ class BandedDedupState:
         partition (sig + bands + counts, all `ingest_batch=label`).
         Idempotent — a replay with the same label replaces its own
         partitions."""
-        self._append_partition(state_rows, label)
+        self._write_tables(self.io.overwrite_dynamic, self.root, state_rows, label)
 
     def tick(
         self,
@@ -309,22 +268,16 @@ class BandedDedupState:
         """Fold the per-tick partitions into one "base" partition: sig/ is
         rewritten as-is; bands/ and counts/ are REBUILT from sig/ (they are
         projections of it — this also heals a torn tick that committed sig
-        but crashed before bands/counts). Parquet mode stages the three
-        rewrites and swaps with roll-forward recovery (a crash never loses
-        the state); Iceberg mode rewrites in place (per-table commits are
-        atomic). Run from maintenance, not concurrently with ticks."""
-        if self.io.mode != "parquet":
-            sig = self.read_signatures().localCheckpoint(eager=True)
-            self._compact_into(self.io, self.root, sig)
-            return
-        staged = f"{self.root}/_compact"
-        ready = f"{staged}/_READY"
-        shutil.rmtree(staged, ignore_errors=True)
+        but crashed before bands/counts). The three tables are replaced
+        through `catalog.replace_staged` (a crash never loses the state).
+        Run from maintenance, not concurrently with ticks."""
         sig = self.read_signatures().localCheckpoint(eager=True)
-        self._compact_into(ParquetIO(), staged, sig)
-        with open(ready, "w"):
-            pass
-        self._swap_compacted()
+        replace_staged(
+            self.io,
+            self.root,
+            _TABLES,
+            lambda io, root: self._compact_into(io, root, sig),
+        )
 
     def _compact_into(self, io, root: str, sig: DataFrame) -> None:
         # overwrite_partitioned (FULL replace, keeping the partition layout),
@@ -336,50 +289,7 @@ class BandedDedupState:
         # place, that means every previously-ticked row duplicated; the
         # parquet path stages into a fresh dir, where the two are
         # equivalent, but uses the same call for contract parity)
-        io.overwrite_partitioned(
-            sig.withColumn(BATCH_COL, F.lit(BASE_LABEL)),
-            f"{root}/sig",
-            col=BATCH_COL,
-        )
-        bands = _band_buckets(sig, self.n_hashes, self.n_bands)
-        io.overwrite_partitioned(
-            bands.withColumn(BATCH_COL, F.lit(BASE_LABEL)),
-            f"{root}/bands",
-            col=BATCH_COL,
-        )
-        io.overwrite_partitioned(
-            bands.groupBy("band", "key")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn(BATCH_COL, F.lit(BASE_LABEL)),
-            f"{root}/counts",
-            col=BATCH_COL,
-        )
-
-    def _swap_compacted(self) -> None:
-        staged = f"{self.root}/_compact"
-        for name in ("sig", "bands", "counts"):
-            src = f"{staged}/{name}"
-            dst = f"{self.root}/{name}"
-            if not os.path.exists(src):
-                continue  # roll-forward: this table already swapped
-            trash = f"{self.root}/_trash_{name}"
-            shutil.rmtree(trash, ignore_errors=True)
-            if os.path.exists(dst):
-                os.rename(dst, trash)
-            os.rename(src, dst)
-            shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-
-    def _recover_compaction(self) -> None:
-        """Roll a compaction interrupted mid-swap forward (staged tables are
-        complete once _READY exists) or discard an incomplete staging."""
-        staged = f"{self.root}/_compact"
-        if not os.path.exists(staged):
-            return
-        if os.path.exists(f"{staged}/_READY"):
-            self._swap_compacted()
-        else:
-            shutil.rmtree(staged, ignore_errors=True)
+        self._write_tables(io.overwrite_partitioned, root, sig, BASE_LABEL)
 
     # ------------------------------------------------------------- audit
 

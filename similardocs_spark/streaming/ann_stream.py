@@ -1,28 +1,20 @@
-"""Continuous EMBEDDING ingestion with near-duplicate gating — the vector
-edition of `streaming/dedup_stream.py`, draining a landing directory of
-(vec_id, embedding) rows through the persistent LSH state
-(`operators/ann_state.VectorDedupState`).
-
-Same exactly-once construction as the text edition (see dedup_stream.py's
-docstring for the full argument): file-source stream + AvailableNow, every
-write a dynamic overwrite of the batch's own `ingest_batch` partition,
-existence gate anti-joining arriving vec_ids against the state, corpus
-partition written BEFORE the state partition, labels salted with a
-checkpoint fingerprint. `compact_state_every=k` folds the state every k
-batches; `reband_bits_fn(n_state_rows)` (e.g. `ann.lsh_bits_for`) lets
-the compaction re-size the bucket space as the corpus grows — the
-maintenance dial ANN_TICK_SCALING.json measures.
+"""Continuous EMBEDDING ingestion with near-duplicate gating: the vector
+edition of `dedup_stream`, draining (vec_id, embedding) rows through the
+persistent LSH state (`operators/ann_state.VectorDedupState`) with the
+same driver, `streaming.gated_ingest`. `reband_bits_fn(n_state_rows)`
+(e.g. `ann.lsh_bits_for`) lets each compaction re-size the bucket space
+as the corpus grows — the maintenance dial ANN_TICK_SCALING.json
+measures.
 """
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from ..index.catalog import get_io
-from ..operators.ann_state import BATCH_COL, VectorDedupState
+from ..operators.ann_state import VectorDedupState
+from . import gated_ingest
 
 VEC_SCHEMA = T.StructType(
     [
@@ -54,66 +46,22 @@ def run_embedding_ingest(
     state = VectorDedupState(
         spark, state_dir, dim=dim, bits=bits, tables=tables, seed=seed
     )
-    io = get_io(spark, corpus_dir)
-    results: list[dict] = []
-    # per-incarnation salt (uuid marker in the checkpoint dir) — see
-    # streaming.incarnation_salt and the rationale in dedup_stream
-    from . import incarnation_salt
 
-    salt = incarnation_salt(checkpoint_dir)
+    def compact() -> None:
+        rb = None
+        if reband_bits_fn is not None:
+            rb = reband_bits_fn(state.read_state().count())
+        state.compact(reband_bits=rb)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        label = f"{salt}_b{batch_id}"
-        batch_ids = batch_df.select("vec_id")
-        seen = state.vec_ids(exclude=label).join(
-            F.broadcast(batch_ids), "vec_id", "left_semi"
-        )
-        flagged = batch_df.join(
-            F.broadcast(seen.withColumn("_seen", F.lit(True))),
-            "vec_id",
-            "left",
-        ).localCheckpoint(eager=True)
-        counts = flagged.agg(
-            F.count("*").alias("arrived"),
-            F.count(F.when(F.col("_seen").isNull(), 1)).alias("fresh"),
-        ).collect()[0]
-        fresh = flagged.filter(F.col("_seen").isNull()).drop("_seen")
-
-        accepted, pairs, state_rows = state.adjudicate(
-            fresh, label, threshold=threshold, max_bucket=max_bucket
-        )
-        io.overwrite_dynamic(
-            accepted.withColumn(BATCH_COL, F.lit(label)),
-            corpus_dir,
-            col=BATCH_COL,
-        )
-        state.commit_batch(state_rows, label)
-        n_accepted = accepted.count()
-        results.append(
-            {
-                "batch_id": batch_id,
-                "n_arrived": counts["arrived"],
-                "n_replayed": counts["arrived"] - counts["fresh"],
-                "n_accepted": n_accepted,
-                "n_rejected": counts["fresh"] - n_accepted,
-                "n_pairs": pairs.count(),
-            }
-        )
-        if compact_state_every and len(results) % compact_state_every == 0:
-            rb = None
-            if reband_bits_fn is not None:
-                rb = reband_bits_fn(state.read_state().count())
-            state.compact(reband_bits=rb)
-
-    stream = (
-        spark.readStream.schema(VEC_SCHEMA)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return gated_ingest(
+        spark,
+        state,
+        VEC_SCHEMA,
+        landing_dir,
+        corpus_dir,
+        checkpoint_dir,
+        compact_state_every,
+        compact,
+        threshold=threshold,
+        max_bucket=max_bucket,
     )
-    stream.awaitTermination()
-    return results

@@ -2,11 +2,9 @@
 documents drained through the persistent banded signature state
 (`operators/dedup_state.BandedDedupState`).
 
-Pattern-matches incremental_stream.py (the reference's scheduled-batch
-semantics — SURVEY.md §2.9): file-source stream, `Trigger.AvailableNow`,
-one adjudication per micro-batch. Output is two tables, BOTH partitioned
-by `ingest_batch` and BOTH written as per-batch dynamic partition
-overwrites through the storage-substrate shim:
+Output is two tables, BOTH partitioned by `ingest_batch` and BOTH written
+as per-batch dynamic partition overwrites through the storage-substrate
+shim:
 
   corpus_dir — accepted documents (what a training pipeline reads);
   state_dir  — BandedDedupState root: signatures + pre-banded rows +
@@ -15,37 +13,18 @@ overwrites through the storage-substrate shim:
                shuffle is O(batch), never O(corpus) — the batch's touched
                buckets are broadcast and the state is streamed map-side).
 
-Exactly-once story (round-6: TRANSACTIONAL per batch, closing the round-5
-advice finding that two bare appends could double-write on replay):
-Structured Streaming redelivers an uncommitted micro-batch with the SAME
-batch_id, and every write here is a dynamic overwrite of the partition
-`ingest_batch=b<batch_id>` — a replay REPLACES its own partitions with
-recomputed-identical content instead of appending next to them. Replays
-are deterministic because (a) state reads exclude the in-flight batch's
-own partition and (b) the existence gate anti-joins arriving doc_ids
-against the signature state, so docs adjudicated by a crashed-but-
-state-committed run are skipped. The corpus partition is written BEFORE
-the state partition: at every crash point the replay either recomputes
-the identical accepted set (state not yet written) or finds the corpus
-partition already present (state written ⇒ corpus was written first) —
-no duplicate rows, no lost docs, including when `compact_state_every`
-folds the state between crash and replay (see dedup_state.py's
-crash/replay matrix).
-
-Counter cost: ONE scan of the arriving batch per tick — the existence
-gate is a left join against the (broadcast) already-seen subset of the
-batch's own ids, and arrived/replayed are one aggregate over that join;
-accepted/rejected counts read the tick's localCheckpointed outputs.
+The tick runs through `streaming.gated_ingest`, the exactly-once driver
+shared with `ann_stream` (the `streaming` package docstring holds the
+crash/replay argument).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from ..index.catalog import get_io
 from ..operators.dedup import MAX_BUCKET, N_BANDS, N_HASHES
-from ..operators.dedup_state import BATCH_COL, BandedDedupState
+from ..operators.dedup_state import BandedDedupState
+from . import gated_ingest
 
 DOC_SCHEMA = T.StructType(
     [
@@ -76,75 +55,15 @@ def run_dedup_ingest(
     the state survives a crash at any point of the fold). Returns
     per-batch counters (arrived / replayed / accepted / rejected)."""
     state = BandedDedupState(spark, state_dir, n_hashes, n_bands)
-    io = get_io(spark, corpus_dir)
-    results: list[dict] = []
-    # partition labels are salted PER INCARNATION (uuid marker persisted
-    # inside the checkpoint dir — see streaming.incarnation_salt): batch
-    # ids are only unique within one checkpoint incarnation, and both a
-    # fresh checkpoint dir AND a deleted-and-recreated one restart them at
-    # 0 — an unsalted (or path-derived) label would collide with an older
-    # incarnation's partition and the dynamic overwrite would replace
-    # previously accepted docs. Crash-restarts of the SAME checkpoint keep
-    # the marker (replay keeps its label → stays idempotent).
-    from . import incarnation_salt
-
-    salt = incarnation_salt(checkpoint_dir)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        label = f"{salt}_b{batch_id}"
-        # existence gate, batch-shaped: only the batch's own ids can match,
-        # so semi-join the state down to that subset FIRST (state streamed
-        # map-side against the broadcast batch ids — no state shuffle),
-        # then flag arrivals with one small broadcast join
-        batch_ids = batch_df.select("doc_id")
-        seen = state.doc_ids(exclude=label).join(
-            F.broadcast(batch_ids), "doc_id", "left_semi"
-        )
-        flagged = batch_df.join(
-            F.broadcast(seen.withColumn("_seen", F.lit(True))),
-            "doc_id",
-            "left",
-        ).localCheckpoint(eager=True)
-        counts = flagged.agg(
-            F.count("*").alias("arrived"),
-            F.count(F.when(F.col("_seen").isNull(), 1)).alias("fresh"),
-        ).collect()[0]
-        fresh = flagged.filter(F.col("_seen").isNull()).drop("_seen")
-
-        # adjudicate WITHOUT touching the state yet; the corpus partition
-        # must land between the phases — see module docstring
-        accepted, pairs, state_rows = state.adjudicate(
-            fresh, label, min_jaccard=min_jaccard, max_bucket=max_bucket
-        )
-        io.overwrite_dynamic(
-            accepted.withColumn(BATCH_COL, F.lit(label)),
-            corpus_dir,
-            col=BATCH_COL,
-        )
-        state.commit_batch(state_rows, label)
-        n_accepted = accepted.count()
-        results.append(
-            {
-                "batch_id": batch_id,
-                "n_arrived": counts["arrived"],
-                "n_replayed": counts["arrived"] - counts["fresh"],
-                "n_accepted": n_accepted,
-                "n_rejected": counts["fresh"] - n_accepted,
-                "n_pairs": pairs.count(),
-            }
-        )
-        if compact_state_every and len(results) % compact_state_every == 0:
-            state.compact()
-
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return gated_ingest(
+        spark,
+        state,
+        DOC_SCHEMA,
+        landing_dir,
+        corpus_dir,
+        checkpoint_dir,
+        compact_state_every,
+        state.compact,
+        min_jaccard=min_jaccard,
+        max_bucket=max_bucket,
     )
-    stream.awaitTermination()
-    return results

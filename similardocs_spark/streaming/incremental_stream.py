@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from ..index.build import IndexPaths
 from ..index.incremental import incremental_update
+from . import drain
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -41,19 +42,9 @@ def run_available_now(
     paths = IndexPaths(index_root)
 
     def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         res = incremental_update(spark, paths, batch_df)
         res["batch_id"] = batch_id
         results.append(res)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination()
+    drain(spark, TRANSCRIPT_SCHEMA, landing_dir, checkpoint_dir, apply_batch)
     return results

@@ -1,6 +1,7 @@
 """Banded persistent dedup state: O(batch)-shuffle ticks must be
 pair-for-pair identical to the round-5 corpus-window strategy, idempotent
-under replay, and crash-safe through compaction."""
+under replay, and crash-safe through compaction (the crash matrix covers
+the vector state too: both compact through catalog.replace_staged)."""
 from __future__ import annotations
 
 import os
@@ -190,35 +191,157 @@ def test_state_compact_preserves_semantics_and_heals_torn_tick(
     assert accepted.count() == 0 and pairs.count() >= 1
 
 
-@pytest.mark.spark
-def test_compaction_crash_recovery(spark, tmp_path, corpus_and_batch):
-    """Roll-forward: a staged compaction with _READY completes on open;
-    one without _READY is discarded and the live state is untouched."""
+class _Crash(Exception):
+    pass
+
+
+def _vec(seed: int, dim: int = 16) -> list[float]:
+    import numpy as np
+
+    return [float(x) for x in np.random.default_rng(seed).standard_normal(dim)]
+
+
+def _text_state(spark, root, corpus_and_batch):
     from similardocs_spark.operators.dedup_state import BandedDedupState
 
-    corpus, _ = corpus_and_batch
-    root = str(tmp_path / "st")
+    corpus, batch = corpus_and_batch
     st = BandedDedupState(spark, root)
     st.bootstrap(corpus_docs=corpus)
-    n = st.read_signatures().count()
+    st.tick(batch, "t1")
 
-    # incomplete staging (no _READY) → discarded
-    os.makedirs(f"{root}/_compact/sig", exist_ok=True)
-    st2 = BandedDedupState(spark, root)
-    assert not os.path.exists(f"{root}/_compact")
-    assert st2.read_signatures().count() == n
 
-    # complete staging (_READY) → rolled forward on open
-    sig = st2.read_signatures().localCheckpoint(eager=True)
-    st2._compact_into(st2.io, f"{root}/_compact", sig)
-    with open(f"{root}/_compact/_READY", "w"):
-        pass
-    st3 = BandedDedupState(spark, root)
-    assert not os.path.exists(f"{root}/_compact")
-    assert st3.read_signatures().count() == n
-    assert st3.read_bands().count() == st3.read_counts().agg(
-        F.sum("cnt")
-    ).collect()[0][0]
+def _vector_state(spark, root, corpus_and_batch):
+    from similardocs_spark.operators.ann_state import VectorDedupState
+
+    emb = "vec_id long, embedding array<float>"
+    st = VectorDedupState(spark, root, dim=16, bits=6)
+    st.bootstrap(spark.createDataFrame([(i, _vec(i)) for i in range(12)], emb))
+    st.tick(spark.createDataFrame([(100, _vec(3)), (101, _vec(101))], emb), "t1")
+
+
+def _open_text(spark, root):
+    from similardocs_spark.operators.dedup_state import BandedDedupState
+
+    return BandedDedupState(spark, root), lambda st: st.compact()
+
+
+def _open_vector(spark, root):
+    from similardocs_spark.operators.ann_state import VectorDedupState
+
+    return VectorDedupState(spark, root), lambda st: st.compact(reband_bits=7)
+
+
+# kind → (build a ticked state, open it + its compaction, swapped tables,
+# rename/delete steps of one uninterrupted swap)
+_KINDS = {
+    "text": (_text_state, _open_text, ("sig", "bands", "counts"), 13),
+    "vector": (_vector_state, _open_vector, ("state", "meta"), 9),
+}
+
+
+def _table_rows(spark, root, names):
+    out = {}
+    for name in names:
+        df = spark.read.parquet(f"{root}/{name}")
+        cols = sorted(df.columns)
+        out[name] = sorted(tuple(r[c] for c in cols) for r in df.collect())
+    return out
+
+
+def _fail_fs_step(m, root, fail_at):
+    """Route the swap's rename/delete primitives through a counter that
+    raises _Crash at step `fail_at` (None: never); returns the step log."""
+    from similardocs_spark.index import catalog
+
+    steps: list[str] = []
+
+    def counted(real):
+        def run(path, *args, **kwargs):
+            if str(path).startswith(root):
+                if len(steps) == fail_at:
+                    raise _Crash(f"step {fail_at}: {real.__name__} {path}")
+                steps.append(str(path))
+            return real(path, *args, **kwargs)
+
+        return run
+
+    m.setattr(catalog.os, "rename", counted(os.rename))
+    m.setattr(catalog.shutil, "rmtree", counted(shutil.rmtree))
+    return steps
+
+
+@pytest.fixture(scope="module")
+def crash_templates(spark, tmp_path_factory, corpus_and_batch):
+    """Per state kind, built once: a ticked (uncompacted) state, its
+    table rows, and the rows of one uninterrupted compaction."""
+    built = {}
+
+    def get(kind):
+        if kind not in built:
+            make, open_state, names, n_steps = _KINDS[kind]
+            base = tmp_path_factory.mktemp(f"crash_{kind}")
+            template = str(base / "template")
+            make(spark, template, corpus_and_batch)
+            clean = str(base / "clean")
+            shutil.copytree(template, clean)
+            st, compact = open_state(spark, clean)
+            with pytest.MonkeyPatch.context() as m:
+                steps = _fail_fs_step(m, clean, None)
+                compact(st)
+            # the matrix below must cover every step of the swap
+            assert len(steps) == n_steps, steps
+            built[kind] = (
+                template,
+                _table_rows(spark, template, names),
+                _table_rows(spark, clean, names),
+            )
+        return built[kind]
+
+    return get
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize(
+    "kind,step",
+    [
+        (kind, step)
+        for kind, (_, _, _, n_steps) in _KINDS.items()
+        for step in ["before_ready", *range(n_steps)]
+    ],
+)
+def test_compaction_crash_recovery(spark, tmp_path, crash_templates, kind, step):
+    """Fault matrix for the shared staged swap (catalog.replace_staged):
+    a compaction that crashes after staging but before _READY leaves the
+    live state untouched; one that crashes at any rename/delete of the
+    swap is rolled forward on reopen to exactly the rows of an
+    uninterrupted compaction."""
+    _, open_state, names, _ = _KINDS[kind]
+    template, before, after = crash_templates(kind)
+    root = str(tmp_path / "st")
+    shutil.copytree(template, root)
+    st, compact = open_state(spark, root)
+    with pytest.MonkeyPatch.context() as m:
+        if step == "before_ready":
+            real = st._compact_into
+
+            def staged_then_crash(*args):
+                real(*args)
+                raise _Crash("before _READY")
+
+            m.setattr(st, "_compact_into", staged_then_crash)
+        else:
+            _fail_fs_step(m, root, step)
+        with pytest.raises(_Crash):
+            compact(st)
+
+    open_state(spark, root)  # recovery runs on open
+    assert _table_rows(spark, root, names) == (
+        before if step == "before_ready" else after
+    )
+    leftovers = [
+        e for e in os.listdir(root) if e.startswith(("_compact", "_trash_"))
+    ]
+    assert leftovers == []
 
 
 @pytest.mark.spark

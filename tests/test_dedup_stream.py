@@ -143,3 +143,97 @@ def test_dedup_stream_fresh_checkpoint_does_not_clobber_partitions(
     assert sum(r["n_accepted"] for r in res) == 1
     kept = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
     assert kept == {1, 2, 50}  # docs 1,2 survived the colliding batch id
+
+
+def _land_vectors(spark, path, rows):
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).coalesce(1).write.mode("append").parquet(path)
+
+
+def _unit_vec(seed: int, eps: float = 0.0) -> list[float]:
+    import numpy as np
+
+    v = np.random.default_rng(seed).standard_normal(16)
+    v = v + eps * np.random.default_rng(10_000 + seed).standard_normal(16)
+    return [float(x) for x in v]
+
+
+def _text_stream(spark, landing):
+    from similardocs_spark.operators.dedup_state import BandedDedupState
+    from similardocs_spark.streaming.dedup_stream import run_dedup_ingest
+
+    _land(spark, landing, [
+        (1, LONG + " one"),
+        (2, "totally different matter argon boron carbon dalton erbium "
+            "fluorine gallium"),
+        (3, LONG + " ones"),
+        (4, "entirely novel content platypus wombat echidna kookaburra "
+            "cassowary dingo numbat quokka bilby"),
+    ])
+    return BandedDedupState, "doc_id", "sig", run_dedup_ingest, {}
+
+
+def _vector_stream(spark, landing):
+    from similardocs_spark.operators.ann_state import VectorDedupState
+    from similardocs_spark.streaming.ann_stream import run_embedding_ingest
+
+    _land_vectors(spark, landing, [
+        (1, _unit_vec(1)), (2, _unit_vec(2)),
+        (3, _unit_vec(1, eps=0.01)), (4, _unit_vec(4)),
+    ])
+    return (
+        VectorDedupState, "vec_id", "state", run_embedding_ingest,
+        {"dim": 16, "bits": 6},
+    )
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("kind", ["text", "vector"])
+def test_tick_commit_crash_replays_under_same_label(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A crash between the corpus-partition write and the state commit:
+    the drain fails, the rerun on the SAME checkpoint redelivers the batch
+    under the same label, and the corpus ends exactly as an uninterrupted
+    run's — no id twice, state ids == corpus ids."""
+    from pyspark.errors import StreamingQueryException
+
+    landing = str(tmp_path / "landing")
+    make = {"text": _text_stream, "vector": _vector_stream}[kind]
+    state_cls, key, table, run, kw = make(spark, landing)
+
+    def ids(path):
+        return [r[key] for r in spark.read.parquet(path).collect()]
+
+    clean = tmp_path / "clean"
+    run(spark, landing, str(clean / "corpus"), str(clean / "state"),
+        str(clean / "ckpt"), **kw)
+    expected = sorted(ids(str(clean / "corpus")))
+    assert len(expected) == 3  # one near-dup rejected
+
+    corpus, state, ckpt = (str(tmp_path / n) for n in ("corpus", "state", "ckpt"))
+    real_commit = state_cls.commit_batch
+    crashed: list[str] = []
+
+    def commit_crashes_once(self, state_rows, label):
+        if not crashed:
+            crashed.append(label)
+            raise RuntimeError("crash after the corpus partition")
+        return real_commit(self, state_rows, label)
+
+    monkeypatch.setattr(state_cls, "commit_batch", commit_crashes_once)
+    with pytest.raises(StreamingQueryException):
+        run(spark, landing, corpus, state, ckpt, **kw)
+    assert sorted(ids(corpus)) == expected  # corpus partition landed first
+
+    res = run(spark, landing, corpus, state, ckpt, **kw)
+    assert [r["n_accepted"] for r in res] == [3]
+    got = ids(corpus)
+    assert len(got) == len(set(got)) and sorted(got) == expected
+    assert sorted(ids(f"{state}/{table}")) == expected
+    labels = {
+        r["ingest_batch"]
+        for r in spark.read.parquet(corpus).select("ingest_batch").collect()
+    }
+    assert labels == set(crashed)

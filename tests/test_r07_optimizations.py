@@ -5,7 +5,8 @@
 - the Arrow tokenizer fast path == the pandas reference path on MIXED
   batches (ascii / non-ascii / >255-char-token rows interleaved)
 - streaming.incarnation_salt: stable across restarts of the same
-  checkpoint, DISTINCT after a delete-and-recreate of the same path
+  checkpoint, DISTINCT after a delete-and-recreate of the same path,
+  kept through the checkpoint's own filesystem
 - util.local_df empty branch: zero-row typed plan, no RDD
 - util.read_spread: spreads a deficient scan, memoizes the probe
 """
@@ -88,19 +89,44 @@ def test_arrow_fast_path_matches_pandas_reference():
             )
 
 
-def test_incarnation_salt(tmp_path):
+def test_incarnation_salt(spark, tmp_path):
     from similardocs_spark.streaming import incarnation_salt
 
     ckpt = str(tmp_path / "ckpt")
-    s1 = incarnation_salt(ckpt)
+    s1 = incarnation_salt(spark, ckpt)
     # stable across crash-restarts of the SAME checkpoint
-    assert incarnation_salt(ckpt) == s1
+    assert incarnation_salt(spark, ckpt) == s1
     # a delete-and-recreate of the same PATH is a new incarnation:
     # labels must not collide with the previous incarnation's partitions
     shutil.rmtree(ckpt)
-    s2 = incarnation_salt(ckpt)
+    s2 = incarnation_salt(spark, ckpt)
     assert s2 != s1
-    assert incarnation_salt(ckpt) == s2
+    assert incarnation_salt(spark, ckpt) == s2
+    # an empty marker counts as absent
+    with open(f"{ckpt}/_incarnation_id", "w"):
+        pass
+    s3 = incarnation_salt(spark, ckpt)
+    assert s3 and s3 != s2
+    assert incarnation_salt(spark, ckpt) == s3
+
+
+def test_incarnation_salt_follows_checkpoint_filesystem(
+    spark, tmp_path, monkeypatch
+):
+    """The salt marker lives where the checkpoint lives: a file:// URI and
+    the plain path name the same checkpoint, so they share one salt, and
+    nothing is created under the working directory."""
+    from similardocs_spark.streaming import incarnation_salt
+
+    work = tmp_path / "cwd"
+    work.mkdir()
+    monkeypatch.chdir(work)
+    p = str(tmp_path / "ckpt")
+    s1 = incarnation_salt(spark, "file://" + p)
+    assert incarnation_salt(spark, p) == s1
+    with open(f"{p}/_incarnation_id") as f:
+        assert f.read().strip() == s1
+    assert not any(e.name.startswith("file:") for e in work.iterdir())
 
 
 def test_local_df_empty_is_typed_zero_row_plan(spark):
