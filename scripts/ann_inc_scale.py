@@ -4,18 +4,18 @@ O(corpus)" evidence for the vector modality).
 
 Protocol: the SAME 5k-vector batch (dim 96) is adjudicated against
 persisted LSH states of 300k and 3M vectors (isotropic synthetics + 2%
-planted near-dup partners of batch vectors, cosine ≈ 0.999), once per
-strategy:
+planted near-dup partners of batch vectors, cosine ≈ 0.999):
 
-  window    — round-5 shape: corpus ∪ batch bucket rows through a
-              corpus-wide bucket-size window (shuffle ∝ corpus vectors)
-  broadcast — round-6 default: touched buckets broadcast per table,
-              corpus streamed map-side; verify vectors fetched by a
-              second broadcast semi-join on the bounded pair-member ids
+  broadcast — stateless pairs_against: touched buckets broadcast, corpus
+              streamed map-side; verify vectors fetched by a second
+              broadcast semi-join on the bounded pair-member ids
+  state     — the full tick through the persisted VectorDedupState
+  reband    — a +1-bit reband of the state, then a tick against it
 
 Per measure: wall seconds + stage-windowed shuffle read/write bytes (UI
-REST). Done-criterion: broadcast shuffle stays FLAT from 300k to 3M
-while window grows ~10×, identical pairs from both.
+REST). Done-criterion: broadcast shuffle stays FLAT from 300k to 3M.
+(ANN_TICK_SCALING.json also holds a corpus-window strategy, since
+deleted.)
 
 Usage:
   python scripts/ann_inc_scale.py --cores 32 --out ANN_TICK_SCALING.json
@@ -44,9 +44,9 @@ PLANT_EVERY = 50
 # so per-tick corpus hits ≈ expected_bucket_size × touched — O(batch)
 # ONLY when expected bucket size is held ~constant by scaling bits with
 # the corpus. A FIXED bits=14 was measured corpus-proportional from
-# 300k→3M (broadcast 256→3883 MB, 15×, WORSE than window at 3M because
-# a batch touches most of the 16k-bucket space and the semi join
-# filters nothing); corpus-sized bits is what this campaign evidences.
+# 300k→3M (broadcast 256→3883 MB, 15×, because a batch touches most of
+# the 16k-bucket space and the semi join filters nothing); corpus-sized
+# bits is what this campaign evidences.
 
 
 def make_vectors(spark, ids_and_seeds):
@@ -123,7 +123,7 @@ def main() -> None:
     out: dict = {
         "protocol": "same 5k-vector batch (dim 96) vs 300k/3M LSH states; "
         "2% planted near-dup partners; wall + stage-windowed shuffle "
-        "bytes per strategy",
+        "bytes per measure",
         "cores": args.cores,
         "n_batch": n_batch,
         "levels": {},
@@ -184,18 +184,15 @@ def main() -> None:
                 **extra,
             }
 
-        def adjudicate(broadcast: bool):
-            pairs = inc.pairs_against(
-                batch, state, dim=DIM, bits=bits, broadcast_batch=broadcast
-            )
+        def adjudicate():
+            pairs = inc.pairs_against(batch, state, dim=DIM, bits=bits)
             n_pairs = pairs.count()
             n_planted = pairs.filter(
                 F.col("vec_b") - 1_000_000_000 == F.col("vec_a")
             ).count()
             return {"n_pairs": n_pairs, "n_planted_found": n_planted}
 
-        measured("window_adjudicate", lambda: adjudicate(False))
-        measured("broadcast_adjudicate", lambda: adjudicate(True))
+        measured("broadcast_adjudicate", adjudicate)
 
         # full tick through the PERSISTENT state (adjudicate + the tick's
         # own partition write) — the streaming-ingest cost, text edition's
@@ -252,7 +249,6 @@ def main() -> None:
             return round(b / a, 2) if a else None
 
         out["shuffle_growth_10x_corpus"] = {
-            "window": ratio("window_adjudicate"),
             "broadcast": ratio("broadcast_adjudicate"),
         }
     with open(args.out, "w") as f:

@@ -3,19 +3,19 @@
 
 Protocol: the SAME 5k-doc batch is adjudicated against signature corpora
 of 300k and 3M rows (synthetic signatures + ~2% planted near-dup partners
-of batch docs, so the candidate join has real hits), once per strategy:
+of batch docs, so the candidate join has real hits), two ways:
 
-  window    — round-5 shape: corpus ∪ batch band rows through a
-              corpus-wide bucket-size window (shuffle ∝ corpus)
-  broadcast — round-6 default: touched buckets broadcast, corpus streamed
-              map-side (shuffle ∝ batch + hits)
-  banded    — broadcast strategy fed from the PERSISTED BandedDedupState
-              (pre-banded rows + materialized counts), i.e. the full
-              stream tick including the state-partition writes
+  broadcast — stateless accept_batch: touched buckets broadcast, corpus
+              streamed map-side (shuffle ∝ batch + hits)
+  banded    — the same candidate join fed from the PERSISTED
+              BandedDedupState (pre-banded rows + materialized counts),
+              i.e. the full stream tick including the state-partition
+              writes
 
 Per measure: wall seconds + stage-windowed shuffle read/write bytes (UI
 REST). Done-criterion: broadcast/banded shuffle stays FLAT from 300k to
-3M while window grows ~10×.
+3M. (INC_TICK_SCALING*.json also hold a corpus-window strategy, since
+deleted.)
 
 Usage:
   python scripts/inc_scale.py --cores 32 --out INC_TICK_SCALING.json
@@ -138,7 +138,7 @@ def main() -> None:
 
     out: dict = {
         "protocol": "same 5k-doc batch vs 300k/3M signature corpora; "
-        "wall + stage-windowed shuffle bytes per strategy",
+        "wall + stage-windowed shuffle bytes per measure",
         "cores": args.cores,
         "n_batch": n_batch,
         "levels": {},
@@ -182,16 +182,11 @@ def main() -> None:
                 **extra,
             }
 
-        def adjudicate(broadcast: bool):
-            accepted, pairs, _state_rows = accept_batch(
-                batch, sig, broadcast_batch=broadcast
-            )
-            n_acc = accepted.count()
-            n_pairs = pairs.count()
-            return {"n_accepted": n_acc, "n_pairs": n_pairs}
+        def adjudicate():
+            accepted, pairs, _state_rows = accept_batch(batch, sig)
+            return {"n_accepted": accepted.count(), "n_pairs": pairs.count()}
 
-        measured("window_adjudicate", lambda: adjudicate(False))
-        measured("broadcast_adjudicate", lambda: adjudicate(True))
+        measured("broadcast_adjudicate", adjudicate)
 
         def banded_tick():
             accepted, pairs = st.tick(batch, "t_measure")
@@ -229,7 +224,6 @@ def main() -> None:
             return round(b / a, 2) if a else None
 
         out["shuffle_growth_10x_corpus"] = {
-            "window": ratio("window_adjudicate"),
             "broadcast": ratio("broadcast_adjudicate"),
             "banded_tick": ratio("banded_full_tick"),
         }

@@ -350,24 +350,18 @@ def build_postings(
     seg_batches: int = 1,
     resume: bool = False,
     max_batches: int | None = None,
-    docs_df: DataFrame | None = None,
     lineage_counts: bool = True,
     segs: list[int] | None = None,
 ) -> None:
     """Postings per (seg, term): the docID-sorted ids as one array column
     (sortbuild.py owns the format). Committed in seg batches (resume skips
     done ones).
-    `docs_df` (e.g. the build's cached docs) avoids the parquet re-read.
     `segs` (trusted caller knowledge, e.g. dense-rank builds) skips the
     distinct-seg discovery job."""
     from .catalog import get_io_for_index
 
     io = get_io_for_index(spark, paths)
-    docs = (
-        docs_df
-        if docs_df is not None
-        else io.read(spark, paths.docs).withColumn("seg", F.col("seg").cast("long"))
-    )
+    docs = io.read(spark, paths.docs).withColumn("seg", F.col("seg").cast("long"))
     if segs is None:
         segs = sorted(
             int(r["seg"]) for r in docs.select("seg").distinct().collect()

@@ -6,14 +6,17 @@ State is the ACCEPTED embeddings enriched with their LSH artifacts —
 per-table hyperplane buckets (b0..b{tables-1}) and the vector norm —
 so per ingest tick the corpus side is read as-is: no re-projection
 (the matmul bucket UDF runs over the new batch only), no norm
-recompute, and (broadcast-batch strategy, the default) no corpus
-shuffle — the state is STREAMED through broadcast semi-joins on the
-batch's touched buckets and on the bounded pair-member ids, so a tick
-shuffles O(batch + hits) rows regardless of corpus size. Unlike the text case the vectors themselves must live in
-state anyway (exact cosine verification needs them), so the win is
-compute + the ingestion CONTRACT: new×corpus and new×new candidates
-only, never corpus×corpus, with the same bucket-cap observability and
-every emitted pair exactly verified.
+recompute, and no corpus shuffle. The candidate join, the edge-wise
+rejection and the tick are dedup_incremental's (`touched_bucket_pairs`
+over the tables stacked as bands, `edgewise_survivors`,
+`adjudicate_batch`): the state is STREAMED through broadcast semi-joins
+on the batch's touched buckets and on the bounded pair-member ids, so a
+tick shuffles O(batch + hits) rows regardless of corpus size. Unlike the
+text case the vectors themselves must live in state anyway (exact cosine
+verification needs them), so the win is compute + the ingestion
+CONTRACT: new×corpus and new×new candidates only, never corpus×corpus,
+with the same bucket-cap observability and every emitted pair exactly
+verified.
 
 The LSH configuration (dim, bits, tables, seed) is stamped into the
 bucket columns' field metadata — Spark persists field metadata through
@@ -25,18 +28,22 @@ the rows in buckets the batch touches ≈ expected_bucket_size × touched
 buckets — corpus-INDEPENDENT only while expected bucket size is held
 ~constant. At a fixed bits the tick degrades to O(corpus) as the corpus
 outgrows its 2^bits bucket space (measured: bits=14, 300k→3M vectors,
-broadcast-strategy shuffle 256→3883 MB and slower than the window —
-scripts/ann_inc_scale.py), so when the corpus grows ~10× past its
-bootstrap sizing, re-band the state with more bits at a compaction
-(one projection pass; cheaper than every tick paying the full corpus).
+tick shuffle 256→3883 MB — scripts/ann_inc_scale.py), so when the
+corpus grows ~10× past its bootstrap sizing, re-band the state with more
+bits at a compaction (one projection pass; cheaper than every tick
+paying the full corpus).
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .ann import _dot, _norm, hyperplanes, infer_dim, lsh_bucket_col
+from .dedup_incremental import (
+    adjudicate_batch,
+    pair_member_rows,
+    touched_bucket_pairs,
+)
 
 
 def _resolve_dim(
@@ -163,6 +170,18 @@ def _validate_state(state: DataFrame, tables: int, expect: dict) -> None:
                 )
 
 
+def _bucket_rows(state: DataFrame, id_col: str, tables: int) -> DataFrame:
+    """(doc_id, band, key) rows: the LSH tables stacked as bands — one
+    pass over the state (posexplode, as dedup._band_buckets), null
+    buckets (null vectors) dropped."""
+    return state.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(F.array(*[F.col(f"b{t}") for t in range(tables)])).alias(
+            "band", "key"
+        ),
+    ).filter(F.col("key").isNotNull())
+
+
 def pairs_against(
     new_embeddings: DataFrame,
     corpus_state: DataFrame,
@@ -175,7 +194,6 @@ def pairs_against(
     vec_col: str = "embedding",
     dim: int | None = None,
     new_state: DataFrame | None = None,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Verified near-dup pairs (vec_a, vec_b, cosine_e6) with ≥1 side in
     the new batch; vec_a < vec_b; corpus×corpus pairs never produced.
@@ -184,15 +202,12 @@ def pairs_against(
     every emitted pair. `new_state` lets a caller reuse `state_for`
     output computed for the append.
 
-    `broadcast_batch=True` (default) mirrors dedup_incremental: the
-    batch's touched buckets are broadcast per table and the corpus state
-    is left-semi-joined against them — a broadcast-hash join streams the
-    corpus map-side, so a tick SHUFFLES O(batch + hits) id/bucket rows
-    and the verify join fetches corpus vectors by a second broadcast
-    semi-join on the bounded pair-member ids, never shuffling corpus
-    vectors. `broadcast_batch=False` keeps the round-5 corpus-wide window
-    (per-tick shuffle proportional to corpus size) for batches too large
-    to broadcast their bucket sets.
+    Candidates come from dedup_incremental's `touched_bucket_pairs` over
+    the tables stacked as bands (one join and one cap window for all
+    tables), so the corpus state is streamed through a broadcast
+    semi-join and a tick SHUFFLES O(batch + hits) id/bucket rows; the
+    verify join fetches corpus vectors by a second broadcast semi-join on
+    the bounded pair-member ids, never shuffling corpus vectors.
 
     bits/tables/seed default to the config stamped in the corpus state's
     metadata (then 6/2/42), so ticks follow the bootstrap sizing — pass
@@ -207,96 +222,19 @@ def pairs_against(
     _validate_state(corpus_state, tables, expect)
     _validate_state(new_state, tables, expect)
 
-    keep = [id_col, vec_col, "_n", *[f"b{t}" for t in range(tables)]]
-    if broadcast_batch:
-        pair_frames = []
-        for t in range(tables):
-            nb = new_state.select(
-                F.col(id_col), F.col(f"b{t}").alias("bucket")
-            ).filter(F.col("bucket").isNotNull())
-            touched = nb.select("bucket").distinct()
-            hits = (
-                corpus_state.select(
-                    F.col(id_col), F.col(f"b{t}").alias("bucket")
-                )
-                .filter(F.col("bucket").isNotNull())
-                .join(F.broadcast(touched), "bucket", "left_semi")
-            )
-            both = nb.withColumn("is_new", F.lit(True)).unionByName(
-                hits.withColumn("is_new", F.lit(False))
-            )
-            capped = (
-                both.withColumn(
-                    "_bsz", F.count("*").over(Window.partitionBy("bucket"))
-                )
-                .filter(F.col("_bsz") <= max_bucket)
-                .drop("_bsz")
-            )
-            a, b = capped.alias("a"), capped.alias("b")
-            pair_frames.append(
-                a.join(
-                    b,
-                    (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                    & (F.col("a.is_new") | F.col("b.is_new")),
-                ).select(
-                    F.col(f"a.{id_col}").alias("vec_a"),
-                    F.col(f"b.{id_col}").alias("vec_b"),
-                )
-            )
-        cands = pair_frames[0]
-        for x in pair_frames[1:]:
-            cands = cands.unionByName(x)
-        # feeds the member-id broadcast AND the verify join
-        cands = cands.dropDuplicates(["vec_a", "vec_b"]).persist()
-        members = (
-            cands.select(F.col("vec_a").alias(id_col))
-            .unionByName(cands.select(F.col("vec_b").alias(id_col)))
-            .distinct()
+    cands = (
+        touched_bucket_pairs(
+            _bucket_rows(new_state, id_col, tables),
+            _bucket_rows(corpus_state, id_col, tables),
+            max_bucket,
         )
-        vec_src = (
-            corpus_state.select(*keep)
-            .join(F.broadcast(members), id_col, "left_semi")
-            .unionByName(new_state.select(*keep))
-            .persist()  # bounded: pair members + batch; feeds va AND vb
-        )
-    else:
-        vec_src = (
-            corpus_state.select(*keep)
-            .withColumn("is_new", F.lit(False))
-            .unionByName(
-                new_state.select(*keep).withColumn("is_new", F.lit(True))
-            )
-            .persist()  # feeds per-table bucket joins + the verify join
-        )
-        pair_frames = []
-        for t in range(tables):
-            bt = vec_src.select(
-                F.col(id_col), F.col(f"b{t}").alias("bucket"), "is_new"
-            ).filter(F.col("bucket").isNotNull())
-            capped = (
-                bt.withColumn(
-                    "_bsz", F.count("*").over(Window.partitionBy("bucket"))
-                )
-                .filter(F.col("_bsz") <= max_bucket)
-                .drop("_bsz")
-            )
-            a, b = capped.alias("a"), capped.alias("b")
-            pair_frames.append(
-                a.join(
-                    b,
-                    (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                    & (F.col("a.is_new") | F.col("b.is_new")),
-                ).select(
-                    F.col(f"a.{id_col}").alias("vec_a"),
-                    F.col(f"b.{id_col}").alias("vec_b"),
-                )
-            )
-        cands = pair_frames[0]
-        for x in pair_frames[1:]:
-            cands = cands.unionByName(x)
-        cands = cands.dropDuplicates(["vec_a", "vec_b"])
+        .select(F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b"))
+        .persist()  # feeds the member-id broadcast AND the verify join
+    )
+    vec_src = pair_member_rows(
+        cands, corpus_state, new_state, [id_col, vec_col, "_n"],
+        "vec_a", "vec_b",
+    ).persist()  # bounded: pair members + batch; feeds va AND vb
     va = vec_src.select(
         F.col(id_col).alias("vec_a"),
         F.col(vec_col).alias("_va"),
@@ -334,55 +272,25 @@ def accept_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    broadcast_batch: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One ingest tick: (accepted_embeddings, pairs, new_state_rows).
-    Rejection is id-order-agnostic and edge-wise, identical to
-    dedup_incremental.accept_batch: a corpus match drops the new side,
-    an in-batch pair drops the higher id. LSH config defaults to the
-    corpus state's stamped metadata (see pairs_against)."""
+    Rejection is id-order-agnostic and edge-wise, dedup_incremental's
+    `edgewise_survivors`: a corpus match drops the new side, an in-batch
+    pair drops the higher id. LSH config defaults to the corpus state's
+    stamped metadata (see pairs_against)."""
     dim = _resolve_dim(dim, corpus_state, new_embeddings, vec_col)
     bits, tables, seed = _resolve_config(corpus_state, bits, tables, seed)
-    new_state = state_for(
-        new_embeddings, dim, bits, tables, seed, id_col, vec_col
-    )
-    pairs = pairs_against(
+    return adjudicate_batch(
         new_embeddings,
-        corpus_state,
-        threshold,
-        bits,
-        tables,
-        seed,
-        max_bucket,
+        state_for(new_embeddings, dim, bits, tables, seed, id_col, vec_col),
+        lambda new_state: pairs_against(
+            new_embeddings, corpus_state, threshold, bits, tables, seed,
+            max_bucket, id_col, vec_col, dim, new_state=new_state,
+        ),
         id_col,
-        vec_col,
-        dim,
-        new_state=new_state,
-        broadcast_batch=broadcast_batch,
-    )
-    new_ids = new_state.select(F.col(id_col).alias("doc_id"))
-    flagged = pairs.join(
-        new_ids.select(
-            F.col("doc_id").alias("vec_a"), F.lit(True).alias("_a_new")
-        ),
         "vec_a",
-        "left",
-    ).join(
-        new_ids.select(
-            F.col("doc_id").alias("vec_b"), F.lit(True).alias("_b_new")
-        ),
         "vec_b",
-        "left",
     )
-    rejected = flagged.select(
-        F.when(F.col("_a_new") & F.col("_b_new").isNull(), F.col("vec_a"))
-        .otherwise(F.col("vec_b"))
-        .alias(id_col)
-    ).distinct()
-    survivors = new_state.select(id_col).join(rejected, id_col, "left_anti")
-    accepted = new_embeddings.join(survivors, id_col, "left_semi")
-    state = new_state.join(survivors, id_col, "left_semi")
-    return accepted, pairs, state
 
 
 def oversized_buckets_against(
@@ -404,18 +312,15 @@ def oversized_buckets_against(
     new_state = state_for(
         new_embeddings, dim, bits, tables, seed, id_col, vec_col
     )
-    frames = []
-    for t in range(tables):
-        frames.append(
-            corpus_state.select(F.col(f"b{t}").alias("bucket"))
-            .unionByName(new_state.select(F.col(f"b{t}").alias("bucket")))
-            .filter(F.col("bucket").isNotNull())
-            .groupBy("bucket")
-            .agg(F.count("*").alias("bucket_size"))
-            .filter(F.col("bucket_size") > max_bucket)
-            .select(F.lit(t).alias("table"), "bucket", "bucket_size")
+    return (
+        _bucket_rows(corpus_state, id_col, tables)
+        .unionByName(_bucket_rows(new_state, id_col, tables))
+        .groupBy("band", "key")
+        .agg(F.count("*").alias("bucket_size"))
+        .filter(F.col("bucket_size") > max_bucket)
+        .select(
+            F.col("band").alias("table"),
+            F.col("key").alias("bucket"),
+            "bucket_size",
         )
-    out = frames[0]
-    for x in frames[1:]:
-        out = out.unionByName(x)
-    return out
+    )

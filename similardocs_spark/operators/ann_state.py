@@ -40,6 +40,7 @@ from ..index.catalog import get_io, read_committed, recover_staged, replace_stag
 from ..util import local_df
 from . import ann_incremental as inc
 from .ann import lsh_bits_for
+from .dedup_incremental import adjudicate_batch
 
 BATCH_COL = "ingest_batch"
 BASE_LABEL = "base"
@@ -161,24 +162,26 @@ class VectorDedupState:
         max_bucket: int = 2000,
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Phase 1 of a tick (no writes): (accepted, pairs, state_rows),
-        eagerly materialized — phase 2 replaces the directories their
-        plans would otherwise re-read. Reads exclude the in-flight
-        label's own partition (replay sees the original's state)."""
+        phased and eagerly materialized as BandedDedupState.adjudicate's
+        (dedup_incremental.adjudicate_batch) — phase 2 replaces the
+        directories their plans would otherwise re-read. Reads exclude the
+        in-flight label's own partition (replay sees the original's
+        state)."""
         corpus = self.read_state(exclude=label)
-        accepted, pairs, state_rows = inc.accept_batch(
+        return adjudicate_batch(
             new_embeddings,
-            corpus,
-            threshold=threshold,
-            bits=self.bits,
-            tables=self.tables,
-            seed=self.seed,
-            max_bucket=max_bucket,
-            dim=self.dim,
+            inc.state_for(
+                new_embeddings, self.dim, self.bits, self.tables, self.seed
+            ),
+            lambda new_state: inc.pairs_against(
+                new_embeddings, corpus, threshold, self.bits, self.tables,
+                self.seed, max_bucket, dim=self.dim, new_state=new_state,
+            ),
+            "vec_id",
+            "vec_a",
+            "vec_b",
+            materialize=True,
         )
-        pairs = pairs.localCheckpoint(eager=True)
-        accepted = accepted.localCheckpoint(eager=True)
-        state_rows = state_rows.localCheckpoint(eager=True)
-        return accepted, pairs, state_rows
 
     def commit_batch(self, state_rows: DataFrame, label: str) -> None:
         """Phase 2: dynamic overwrite of the tick's own partition

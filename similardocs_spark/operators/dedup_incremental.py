@@ -16,9 +16,15 @@ this module is that idea applied to the dedup signature state):
   - `pairs_against(new_docs, corpus_sig)` computes signatures for the NEW
     batch only, bands BOTH sides (banding corpus signatures is a cheap
     projection of the stored state — no text I/O), and joins candidates
-    within buckets requiring ≥1 new side: new×new and new×corpus pairs,
-    never corpus×corpus (already adjudicated when those docs were accepted);
-  - `accept_batch` = the two-call composition callers run per ingest tick.
+    within the buckets the batch touches, requiring ≥1 new side: new×new
+    and new×corpus pairs, never corpus×corpus (already adjudicated when
+    those docs were accepted);
+  - `accept_batch` = pairs + edge-wise rejection, the tick callers run
+    per ingested batch.
+
+The candidate join (`touched_bucket_pairs`), the rejection
+(`edgewise_survivors`) and the tick (`adjudicate_batch`) are shared with
+the vector modality (ann_incremental.py, LSH tables stacked as bands).
 
 The seed-i hash family (dedup._minhash_cols) is shared across configs and
 widening `n_hashes` only APPENDS columns, so a corpus signature table
@@ -30,6 +36,8 @@ a bucket in the corpus keeps capping it for new batches (observable via
 `oversized_buckets_against`, never silent).
 """
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,8 +79,7 @@ def _validate_sig(sig: DataFrame, n_hashes: int) -> None:
 
 def _pairs_from_bands(capped: DataFrame) -> DataFrame:
     """(doc_a, doc_b) with doc_a < doc_b and ≥1 new side, from capped
-    (doc_id, band, key, is_new) band rows — the shared core of both
-    candidate strategies."""
+    (doc_id, band, key, is_new) band rows."""
     a, b = capped.alias("a"), capped.alias("b")
     return (
         a.join(
@@ -86,6 +93,85 @@ def _pairs_from_bands(capped: DataFrame) -> DataFrame:
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
+    )
+
+
+def touched_bucket_pairs(
+    new_rows: DataFrame,
+    corpus_rows: DataFrame,
+    max_bucket: int,
+    corpus_counts: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate (doc_a, doc_b) pairs, doc_a < doc_b, with ≥1 side in the
+    new batch, from (doc_id, band, key) bucket rows of the batch and of the
+    corpus — the one candidate join of both incremental modalities (text:
+    MinHash bands; vectors: LSH tables stacked as bands).
+
+    A tick SHUFFLES O(batch + hits), never O(corpus): the batch's touched
+    (band, key) set is broadcast and the corpus rows are left-semi-joined
+    against it, so the corpus side is STREAMED map-side; only rows in
+    buckets the batch touches ("hits") flow on. The cap on the COMBINED
+    (corpus ∪ new) bucket is a window count over hits ∪ batch — untouched
+    buckets can produce no pair with a new side, so this equals a
+    corpus-wide cap.
+
+    `corpus_counts` takes materialized (band, key, cnt) corpus bucket
+    sizes, possibly as per-tick deltas: a bucket whose corpus size alone
+    reaches the cap can never pass it, so it is dropped from both sides
+    BEFORE its rows stream through the semi join. The counts are
+    restricted to the touched keys (broadcast semi) before summing."""
+    touched = new_rows.select("band", "key").distinct()
+    if corpus_counts is not None:
+        hot = (
+            corpus_counts.join(
+                F.broadcast(touched), ["band", "key"], "left_semi"
+            )
+            .groupBy("band", "key")
+            .agg(F.sum("cnt").alias("cnt"))
+            .filter(F.col("cnt") >= max_bucket)
+            .select("band", "key")
+        )
+        new_rows = new_rows.join(
+            F.broadcast(hot), ["band", "key"], "left_anti"
+        )
+        touched = touched.join(F.broadcast(hot), ["band", "key"], "left_anti")
+    hits = corpus_rows.select("doc_id", "band", "key").join(
+        F.broadcast(touched), ["band", "key"], "left_semi"
+    )
+    both = new_rows.select("doc_id", "band", "key").withColumn(
+        "is_new", F.lit(True)
+    ).unionByName(hits.withColumn("is_new", F.lit(False)))
+    capped = (
+        both.withColumn(
+            "_bsz", F.count("*").over(Window.partitionBy("band", "key"))
+        )
+        .filter(F.col("_bsz") <= max_bucket)
+        .drop("_bsz")
+    )
+    return _pairs_from_bands(capped)
+
+
+def pair_member_rows(
+    pairs: DataFrame,
+    corpus: DataFrame,
+    new: DataFrame,
+    cols: list[str],
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """`cols` (id column first) of every pair member: the batch rows plus
+    the corpus rows fetched by a broadcast semi-join on the bounded
+    member ids — the corpus is streamed, never shuffled."""
+    id_col = cols[0]
+    members = (
+        pairs.select(F.col(a).alias(id_col))
+        .unionByName(pairs.select(F.col(b).alias(id_col)))
+        .distinct()
+    )
+    return (
+        corpus.select(*cols)
+        .join(F.broadcast(members), id_col, "left_semi")
+        .unionByName(new.select(*cols))
     )
 
 
@@ -130,7 +216,6 @@ def pairs_against(
     estimate_jaccard: bool = False,
     min_jaccard: float | None = None,
     new_sig: DataFrame | None = None,
-    broadcast_batch: bool = True,
     corpus_bands: DataFrame | None = None,
     corpus_counts: DataFrame | None = None,
 ) -> DataFrame:
@@ -141,33 +226,20 @@ def pairs_against(
     (those documents were already adjudicated when accepted). doc_id
     spaces must be disjoint between corpus and batch — the caller's id
     allocator owns that invariant (same contract as index ingestion).
-
-    Scale shape (`broadcast_batch=True`, the default): a tick SHUFFLES
-    O(batch + hits), never O(corpus). The batch's touched (band, key) set
-    is broadcast and the corpus band rows are left-semi-joined against it
-    — a broadcast-hash join, so the corpus side is STREAMED map-side (one
-    columnar scan, zero corpus shuffle); only rows in buckets the batch
-    touches ("hits") flow on. The combined-bucket cap is then a window
-    count over the bounded hits ∪ batch set — identical pair semantics to
-    the corpus-wide window, because untouched buckets can produce no pair
-    with a new side. The round-5 shape (window over corpus ∪ batch —
-    per-tick shuffle proportional to corpus size) is kept under
-    `broadcast_batch=False` for batches so large the touched-key
-    broadcast would not fit the driver.
+    Candidates come from `touched_bucket_pairs` over both sides' band
+    rows, so a tick shuffles O(batch + hits), never O(corpus).
 
     `corpus_bands` takes PRE-BANDED state rows (band, key, doc_id) —
     e.g. BandedDedupState, which persists banding once per accepted doc —
     skipping the per-tick re-banding projection; `corpus_counts` takes
-    materialized (band, key, cnt) corpus bucket sizes, used to pre-drop
-    buckets that can never pass the cap BEFORE their rows stream through
-    the semi join (cnt ≥ max_bucket ⇒ combined > max_bucket). Both are
-    derived from `corpus_sig` when omitted. `new_sig` lets a caller that
+    materialized (band, key, cnt) corpus bucket sizes (see
+    `touched_bucket_pairs`). Both are derived from `corpus_sig` (bands)
+    or skipped (counts) when omitted. `new_sig` lets a caller that
     already ran `signatures_for` on the batch (to append state) reuse it.
 
     `estimate_jaccard` / `min_jaccard` behave as in minhash_lsh_pairs:
-    the signature-agreement estimator; in broadcast mode the corpus
-    signatures for it are fetched by a second broadcast semi-join on the
-    bounded pair-member ids (again no corpus shuffle).
+    the signature-agreement estimator, over signatures fetched by
+    `pair_member_rows` (again no corpus shuffle).
     """
     if new_sig is None:
         # the batch lineage (tokenize → shingle → minhash) feeds the
@@ -177,95 +249,21 @@ def pairs_against(
         new_sig = signatures_for(new_docs, text_col, n_hashes).persist()
     _validate_sig(corpus_sig, n_hashes)
     _validate_sig(new_sig, n_hashes)
-    want_est = estimate_jaccard or min_jaccard is not None
     keep = ["doc_id", *[f"mh{i}" for i in range(n_hashes)]]
-
-    if not broadcast_batch:
-        sig = (
-            corpus_sig.select(*keep)
-            .withColumn("is_new", F.lit(False))
-            .unionByName(
-                new_sig.select(*keep).withColumn("is_new", F.lit(True))
-            )
-        )
-        if want_est:
-            # sig feeds band rows + both estimate joins — persist the compact
-            # signature union so nothing runs twice (see minhash_lsh_pairs)
-            sig = sig.persist()
-        bands = _band_buckets(sig, n_hashes, n_bands).join(
-            sig.select("doc_id", "is_new"), "doc_id"
-        )
-        capped = (
-            bands.withColumn(
-                "_bsz", F.count("*").over(Window.partitionBy("band", "key"))
-            )
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-        pairs = _pairs_from_bands(capped)
-        if not want_est:
-            return pairs
-        return _attach_estimate(pairs, sig, n_hashes, min_jaccard)
-
-    new_bands = _band_buckets(new_sig, n_hashes, n_bands)
     if corpus_bands is None:
         corpus_bands = _band_buckets(
             corpus_sig.select(*keep), n_hashes, n_bands
         )
-    touched = new_bands.select("band", "key").distinct()
-    if corpus_counts is not None:
-        # buckets whose CORPUS size alone reaches the cap can never pass the
-        # combined cap once the batch adds ≥1 row — drop them from both
-        # sides up front so a mega-hot boilerplate bucket's rows never even
-        # stream through the semi join. corpus_counts may carry PER-TICK
-        # DELTAS (multiple rows per bucket); restrict to the touched keys
-        # FIRST (broadcast semi — counts streamed map-side, no corpus
-        # shuffle), then sum the bounded remainder
-        hot = (
-            corpus_counts.join(
-                F.broadcast(touched), ["band", "key"], "left_semi"
-            )
-            .groupBy("band", "key")
-            .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") >= max_bucket)
-            .select("band", "key")
-        )
-        new_bands = new_bands.join(
-            F.broadcast(hot), ["band", "key"], "left_anti"
-        )
-        touched = touched.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    hits = corpus_bands.select("band", "key", "doc_id").join(
-        F.broadcast(touched), ["band", "key"], "left_semi"
+    pairs = touched_bucket_pairs(
+        _band_buckets(new_sig, n_hashes, n_bands),
+        corpus_bands,
+        max_bucket,
+        corpus_counts,
     )
-    both = new_bands.withColumn("is_new", F.lit(True)).unionByName(
-        hits.withColumn("is_new", F.lit(False))
-    )
-    if want_est:
-        # `both` feeds the window+pair subtree AND the pair-member id
-        # broadcast below; bounded (batch bands + hits), so persist rather
-        # than re-streaming the corpus scan
-        both = both.persist()
-    capped = (
-        both.withColumn(
-            "_bsz", F.count("*").over(Window.partitionBy("band", "key"))
-        )
-        .filter(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
-    )
-    pairs = _pairs_from_bands(capped)
-    if not want_est:
+    if not (estimate_jaccard or min_jaccard is not None):
         return pairs
     pairs = pairs.persist()  # feeds member-id broadcast + estimate join
-    members = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sig_small = (
-        corpus_sig.select(*keep)
-        .join(F.broadcast(members), "doc_id", "left_semi")
-        .unionByName(new_sig.select(*keep))
-    )
+    sig_small = pair_member_rows(pairs, corpus_sig, new_sig, keep)
     return _attach_estimate(pairs, sig_small, n_hashes, min_jaccard)
 
 
@@ -294,31 +292,61 @@ def oversized_buckets_against(
     )
 
 
-def edgewise_survivors(pairs: DataFrame, new_ids: DataFrame) -> DataFrame:
-    """Batch doc_ids surviving edge-wise rejection: a pair against the
-    corpus drops the new side, an in-batch pair drops the higher id.
-    Id-order-agnostic (keys on WHICH side is new, not on id order); shared
-    by accept_batch and the banded state's phased tick (which checkpoints
-    `pairs` first so this derivation is a cheap re-read)."""
+def edgewise_survivors(
+    pairs: DataFrame, new_ids: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """Batch ids (the one column of `new_ids`) surviving edge-wise
+    rejection of the (a, b) pairs: a pair against the corpus drops the new
+    side, an in-batch pair drops the higher id. Id-order-agnostic (keys on
+    WHICH side is new, not on id order)."""
+    (id_col,) = new_ids.columns
     flagged = pairs.join(
-        new_ids.select(
-            F.col("doc_id").alias("doc_a"), F.lit(True).alias("_a_new")
-        ),
-        "doc_a",
+        new_ids.select(F.col(id_col).alias(a), F.lit(True).alias("_a_new")),
+        a,
         "left",
     ).join(
-        new_ids.select(
-            F.col("doc_id").alias("doc_b"), F.lit(True).alias("_b_new")
-        ),
-        "doc_b",
+        new_ids.select(F.col(id_col).alias(b), F.lit(True).alias("_b_new")),
+        b,
         "left",
     )
     rejected = flagged.select(
-        F.when(F.col("_a_new") & F.col("_b_new").isNull(), F.col("doc_a"))
-        .otherwise(F.col("doc_b"))
-        .alias("doc_id")
+        F.when(F.col("_a_new") & F.col("_b_new").isNull(), F.col(a))
+        .otherwise(F.col(b))
+        .alias(id_col)
     ).distinct()
-    return new_ids.join(rejected, "doc_id", "left_anti")
+    return new_ids.join(rejected, id_col, "left_anti")
+
+
+def adjudicate_batch(
+    new_docs: DataFrame,
+    new_state: DataFrame,
+    pairs_of: Callable[[DataFrame], DataFrame],
+    id_col: str = "doc_id",
+    a: str = "doc_a",
+    b: str = "doc_b",
+    materialize: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One ingest tick of either modality: (accepted, pairs, state_rows).
+
+    `new_state` is the batch's state rows (signatures or LSH rows) and
+    `pairs_of(new_state)` its (a, b) pairs against the corpus; the
+    edge-wise survivors select the accepted batch rows and the state rows
+    to append. `materialize` phases the tick for a persistent state: the
+    batch's state rows are materialized once, then the pairs, and the
+    accepted/state rows — cheap derivations of those two — last, so no
+    output's plan re-reads the state directories the commit replaces.
+    (Checkpointing the three outputs of one lazy tick re-ran the whole
+    adjudication per output.)"""
+
+    def done(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=True) if materialize else df
+
+    new_state = done(new_state)
+    pairs = done(pairs_of(new_state))
+    survivors = edgewise_survivors(pairs, new_state.select(id_col), a, b)
+    accepted = done(new_docs.join(survivors, id_col, "left_semi"))
+    state_rows = done(new_state.join(survivors, id_col, "left_semi"))
+    return accepted, pairs, state_rows
 
 
 def accept_batch(
@@ -329,7 +357,6 @@ def accept_batch(
     max_bucket: int = MAX_BUCKET,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
-    broadcast_batch: bool = True,
     corpus_bands: DataFrame | None = None,
     corpus_counts: DataFrame | None = None,
     new_sig: DataFrame | None = None,
@@ -351,20 +378,19 @@ def accept_batch(
     """
     if new_sig is None:
         new_sig = signatures_for(new_docs, text_col, n_hashes)
-    pairs = pairs_against(
+    return adjudicate_batch(
         new_docs,
-        corpus_sig,
-        text_col,
-        max_bucket=max_bucket,
-        n_hashes=n_hashes,
-        n_bands=n_bands,
-        min_jaccard=min_jaccard,
-        new_sig=new_sig,
-        broadcast_batch=broadcast_batch,
-        corpus_bands=corpus_bands,
-        corpus_counts=corpus_counts,
+        new_sig,
+        lambda sig: pairs_against(
+            new_docs,
+            corpus_sig,
+            text_col,
+            max_bucket=max_bucket,
+            n_hashes=n_hashes,
+            n_bands=n_bands,
+            min_jaccard=min_jaccard,
+            new_sig=sig,
+            corpus_bands=corpus_bands,
+            corpus_counts=corpus_counts,
+        ),
     )
-    survivors = edgewise_survivors(pairs, new_sig.select("doc_id"))
-    accepted = new_docs.join(survivors, "doc_id", "left_semi")
-    state = new_sig.join(survivors, "doc_id", "left_semi")
-    return accepted, pairs, state

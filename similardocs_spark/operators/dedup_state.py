@@ -2,9 +2,9 @@
 the storage layer under operators/dedup_incremental.py (which is pure
 dataflow over caller-supplied DataFrames).
 
-Round-5 shape: the stream re-read the whole signature table per tick and
-re-derived band rows + bucket-size windows over corpus ∪ batch — per-tick
-shuffle proportional to CORPUS size. This class makes a tick O(batch):
+Banding is stored once per accepted doc and bucket sizes are
+materialized, so a tick neither re-bands the corpus nor counts its
+buckets:
 
   <root>/meta/    one row (n_hashes, n_bands) — config pinned at creation;
                   opening with a different config fails fast (band keys
@@ -53,11 +53,7 @@ from pyspark.sql import functions as F
 from ..index.catalog import get_io, read_committed, recover_staged, replace_staged
 from ..util import local_df
 from .dedup import MAX_BUCKET, N_BANDS, N_HASHES, _band_buckets
-from .dedup_incremental import (
-    edgewise_survivors,
-    pairs_against,
-    signatures_for,
-)
+from .dedup_incremental import adjudicate_batch, pairs_against, signatures_for
 
 BATCH_COL = "ingest_batch"
 BASE_LABEL = "base"
@@ -197,44 +193,32 @@ class BandedDedupState:
         min_jaccard: float | None = None,
         max_bucket: int = MAX_BUCKET,
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """Phase 1 of a tick: adjudicate `new_docs` against the state
-        (broadcast-batch strategy — the corpus is STREAMED through two
-        broadcast semi-joins, shuffle is O(batch + hits)) WITHOUT writing
-        anything. Returns (accepted_docs, pairs, state_rows), all three
-        eagerly materialized — their plans must not re-read the state
+        """Phase 1 of a tick: adjudicate `new_docs` against the state (the
+        corpus is STREAMED through two broadcast semi-joins, shuffle is
+        O(batch + hits)) WITHOUT writing anything. Returns (accepted_docs,
+        pairs, state_rows), all three eagerly materialized by the phased
+        `adjudicate_batch` — their plans must not re-read the state
         directories once phase 2 starts replacing them, and a caller may
         durably commit its own outputs (e.g. the accepted-corpus
         partition) BETWEEN the phases for the crash ordering documented in
-        the module docstring.
-
-        Checkpoint staging: the batch signatures are materialized once
-        (one shingle pass), then the candidate pairs (one banded join),
-        and the accepted/state outputs are cheap derivations of those two
-        — three naive independent localCheckpoints would re-execute the
-        whole adjudication lineage each (measured ~3× the tick)."""
-        new_sig = signatures_for(
-            new_docs, text_col, self.n_hashes
-        ).localCheckpoint(eager=True)
-        pairs = pairs_against(
+        the module docstring."""
+        return adjudicate_batch(
             new_docs,
-            self.read_signatures(exclude=label),
-            text_col,
-            max_bucket=max_bucket,
-            n_hashes=self.n_hashes,
-            n_bands=self.n_bands,
-            min_jaccard=min_jaccard,
-            new_sig=new_sig,
-            corpus_bands=self.read_bands(exclude=label),
-            corpus_counts=self.read_count_deltas(exclude=label),
-        ).localCheckpoint(eager=True)
-        survivors = edgewise_survivors(pairs, new_sig.select("doc_id"))
-        accepted = new_docs.join(
-            survivors, "doc_id", "left_semi"
-        ).localCheckpoint(eager=True)
-        state_rows = new_sig.join(
-            survivors, "doc_id", "left_semi"
-        ).localCheckpoint(eager=True)
-        return accepted, pairs, state_rows
+            signatures_for(new_docs, text_col, self.n_hashes),
+            lambda new_sig: pairs_against(
+                new_docs,
+                self.read_signatures(exclude=label),
+                text_col,
+                max_bucket=max_bucket,
+                n_hashes=self.n_hashes,
+                n_bands=self.n_bands,
+                min_jaccard=min_jaccard,
+                new_sig=new_sig,
+                corpus_bands=self.read_bands(exclude=label),
+                corpus_counts=self.read_count_deltas(exclude=label),
+            ),
+            materialize=True,
+        )
 
     def commit_batch(self, state_rows: DataFrame, label: str) -> None:
         """Phase 2 of a tick: write the accepted signatures' state

@@ -78,20 +78,24 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
-# (context-id, path, parallelism) → spread decision. The probe costs ~0.1 s
-# of driver planning per call; the answer is stable for a given file set
-# within a session, and the driver/bench harnesses re-read the same paths
-# dozens of times per session.
+# (application id, path, parallelism, file count) → spread decision. The
+# probe costs ~0.1 s of driver planning per call; the answer is stable for
+# a given file set within an application, and the driver/bench harnesses
+# re-read the same paths dozens of times per session. The file count comes
+# from the scan's own listing, so a table rewritten with another file
+# count is probed again, and a new context (whose id() may recycle a dead
+# one's) never reads an old answer.
 _SPREAD_CACHE: dict = {}
 
 
 def read_spread(spark: SparkSession, path: str) -> DataFrame:
     """spark.read.parquet(path) + scale-adaptive spread (see spread_input),
-    with the partition-count probe memoized per (context, path)."""
+    with the partition-count probe memoized per (application, path, file
+    count)."""
     sc = spark.sparkContext
     target = sc.defaultParallelism
-    key = (id(sc), path, target)
     df = spark.read.parquet(path)
+    key = (sc.applicationId, path, target, len(df.inputFiles()))
     dec = _SPREAD_CACHE.get(key)
     if dec is None:
         dec = df.rdd.getNumPartitions() < target

@@ -1,4 +1,6 @@
 """Incremental embedding near-dedup vs stored LSH bucket state."""
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 import pytest
@@ -105,13 +107,8 @@ def test_oversized_buckets_against(spark):
     assert inc.pairs_against(batch, state, dim=8, max_bucket=2).count() == 0
 
 
-@pytest.mark.spark
-def test_broadcast_strategy_matches_window_strategy(spark):
-    """The broadcast-batch candidate strategy (corpus streamed, O(batch)
-    tick shuffle) is pair-for-pair identical to the round-5 corpus-window
-    strategy, including cosine values."""
-    from similardocs_spark.operators import ann_incremental as inc
-
+def _clustered(spark):
+    """40 corpus + 13 batch vectors around 6 bases (+ one loner)."""
     rng = np.random.default_rng(17)
     bases = [_mk(100 + i) for i in range(6)]
     corpus = _vecs(
@@ -126,19 +123,62 @@ def test_broadcast_strategy_matches_window_strategy(spark):
         ]
         + [(200, _mk(999))],
     )
+    return corpus, batch
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("max_bucket", [2000, 8], ids=["uncapped", "capped"])
+def test_pairs_against_matches_batch_operator(spark, max_bucket):
+    """pairs_against emits exactly embedding_near_dup_pairs' pairs AND
+    cosine values on corpus ∪ batch, minus corpus×corpus pairs — also
+    when the combined-bucket cap drops pairs (max_bucket=8: each base's
+    buckets hold ~9 vectors)."""
+    from similardocs_spark.operators import ann, ann_incremental as inc
+
+    corpus, batch = _clustered(spark)
     state = inc.state_for(corpus, dim=8)
 
-    def got(broadcast):
+    def rows(df):
         return sorted(
-            (r["vec_a"], r["vec_b"], r["cosine_e6"])
-            for r in inc.pairs_against(
-                batch, state, threshold=0.95, dim=8,
-                broadcast_batch=broadcast,
-            ).collect()
+            (r["vec_a"], r["vec_b"], r["cosine_e6"]) for r in df.collect()
         )
 
-    window, broadcast = got(False), got(True)
-    assert broadcast == window and len(broadcast) >= 5
+    got = rows(
+        inc.pairs_against(
+            batch, state, threshold=0.95, dim=8, max_bucket=max_bucket
+        )
+    )
+    union = rows(
+        ann.embedding_near_dup_pairs(
+            corpus.unionByName(batch), threshold=0.95, dim=8,
+            max_bucket=max_bucket,
+        )
+    )
+    expect = [r for r in union if not (r[0] < 100 and r[1] < 100)]
+    assert got == expect and len(got) >= 5
+    if max_bucket == 8:  # the cap binds
+        uncapped = rows(inc.pairs_against(batch, state, threshold=0.95, dim=8))
+        assert set(got) < set(uncapped)
+
+
+@pytest.mark.spark
+def test_pairs_against_one_cap_window_for_all_tables(spark):
+    """The LSH tables are stacked as bands: one candidate self-join over
+    ONE bucket-cap window for tables=3, not one per table. The physical
+    plan holds that window once per side of the self-join (2 distinct
+    Window nodes; a per-table plan holds 2 × tables)."""
+    from similardocs_spark.operators import ann_incremental as inc
+
+    corpus, batch = _clustered(spark)
+    state = inc.state_for(corpus, dim=8, tables=3)
+    plan = (
+        inc.pairs_against(batch, state)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    # a persisted subtree is printed at every use: count distinct nodes
+    assert len(set(re.findall(r"Window \[[^\]]*\]", plan))) == 2, plan
 
 
 @pytest.mark.spark

@@ -1,7 +1,8 @@
 """Banded persistent dedup state: O(batch)-shuffle ticks must be
-pair-for-pair identical to the round-5 corpus-window strategy, idempotent
-under replay, and crash-safe through compaction (the crash matrix covers
-the vector state too: both compact through catalog.replace_staged)."""
+pair-for-pair identical to the batch operator on corpus ∪ batch (minus
+corpus×corpus pairs), idempotent under replay, and crash-safe through
+compaction (the crash matrix covers the vector state too: both compact
+through catalog.replace_staged)."""
 from __future__ import annotations
 
 import os
@@ -48,27 +49,52 @@ def corpus_and_batch(spark):
 
 
 @pytest.mark.spark
-def test_broadcast_strategy_matches_window_strategy(spark, corpus_and_batch):
-    """The broadcast-batch candidate strategy (corpus streamed, O(batch)
-    shuffle) must emit exactly the window strategy's pairs AND estimates."""
+@pytest.mark.parametrize("max_bucket", [2000, 2], ids=["uncapped", "capped"])
+def test_pairs_against_matches_batch_operator(
+    spark, corpus_and_batch, max_bucket
+):
+    """pairs_against emits exactly the batch operator's pairs AND
+    estimates on corpus ∪ batch, minus corpus×corpus pairs — also when
+    the combined-bucket cap drops pairs (max_bucket=2: the BASE[3]
+    family's buckets hold 3 docs)."""
+    from similardocs_spark.operators.dedup import minhash_lsh_pairs
     from similardocs_spark.operators.dedup_incremental import (
         pairs_against,
         signatures_for,
     )
 
     corpus, batch = corpus_and_batch
-    sig = signatures_for(corpus)
+    corpus_ids = {r["doc_id"] for r in corpus.collect()}
 
-    def got(broadcast):
+    def rows(df):
         return sorted(
             (r["doc_a"], r["doc_b"], round(r["jaccard_est"], 6))
-            for r in pairs_against(
-                batch, sig, estimate_jaccard=True, broadcast_batch=broadcast
-            ).collect()
+            for r in df.collect()
         )
 
-    window, broadcast = got(False), got(True)
-    assert broadcast == window and len(broadcast) >= 3
+    got = rows(
+        pairs_against(
+            batch, signatures_for(corpus), estimate_jaccard=True,
+            max_bucket=max_bucket,
+        )
+    )
+    # batch doc 103 is an exact copy of corpus doc 2: collapsed=True keeps
+    # both, as pairs_against does (it collapses within each side only)
+    union = rows(
+        minhash_lsh_pairs(
+            corpus.unionByName(batch), max_bucket=max_bucket,
+            collapsed=True, estimate_jaccard=True,
+        )
+    )
+    expect = [
+        r for r in union if not (r[0] in corpus_ids and r[1] in corpus_ids)
+    ]
+    assert got == expect and len(got) >= 2
+    if max_bucket == 2:  # the cap binds
+        uncapped = rows(
+            pairs_against(batch, signatures_for(corpus), estimate_jaccard=True)
+        )
+        assert set(got) < set(uncapped)
 
 
 @pytest.mark.spark

@@ -114,6 +114,87 @@ def test_staged_swap_crash_recovery(spark, tmp_path):
     assert not os.path.exists(store._stage()) and not os.path.exists(store._old())
 
 
+class _Crash(Exception):
+    """Injected crash — not an OSError, so no code path swallows it."""
+
+
+def _fail_swap_step(m, prefix, fail_at):
+    """Route os.rename/shutil.rmtree on paths under `prefix` through a
+    counter that raises _Crash INSTEAD of step `fail_at` (None: never);
+    returns the log of (primitive, path) steps run."""
+    import os
+    import shutil
+
+    steps: list[tuple[str, str]] = []
+
+    def counted(real):
+        def run(path, *args, **kwargs):
+            if str(path).startswith(prefix):
+                if len(steps) == fail_at:
+                    raise _Crash(f"step {fail_at}: {real.__name__} {path}")
+                steps.append((real.__name__, str(path)))
+            return real(path, *args, **kwargs)
+
+        return run
+
+    m.setattr(os, "rename", counted(os.rename))
+    m.setattr(shutil, "rmtree", counted(shutil.rmtree))
+    return steps
+
+
+_SWAP_STEPS = 5  # rmtree staging, rmtree .old, park, promote, rmtree .old
+
+
+def _profile_names(store):
+    return [(p["prof_name"], p["prof_content"]) for p in store.get_profiles("u")]
+
+
+@pytest.fixture(scope="module")
+def swap_steps(spark, tmp_path_factory):
+    """The (primitive, path suffix) rename/delete steps of one
+    uninterrupted parquet-mode `_write_staged` over a live table; the
+    matrix below must cover them all."""
+    root = str(tmp_path_factory.mktemp("swap_steps") / "pr")
+    store = ProfileStore(spark, root)
+    store.add_profile("u", "a", "zika", now_ms=10)
+    with pytest.MonkeyPatch.context() as m:
+        steps = _fail_swap_step(m, root, None)
+        store.add_profile("u", "c", "chikungunya", now_ms=20)
+    assert len(steps) == _SWAP_STEPS, steps
+    return [(name, path[len(root):]) for name, path in steps]
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("step", range(_SWAP_STEPS))
+def test_staged_swap_crash_matrix(spark, tmp_path, swap_steps, step):
+    """Fault matrix for the parquet staged swap: a write that crashes at
+    any rename/delete of `_write_staged` leaves a store that a fresh
+    ProfileStore reads as exactly the pre-write rows (crash before the
+    promote) or the post-write rows (crash at or after it) — never fewer;
+    the next write clears every stray .staging/.old directory."""
+    import os
+
+    root = str(tmp_path / "pr")
+    store = ProfileStore(spark, root)
+    store.add_profile("u", "a", "zika", now_ms=10)
+    store.add_profile("u", "b", "dengue", now_ms=10)
+    pre = _profile_names(store)
+    with pytest.MonkeyPatch.context() as m:
+        _fail_swap_step(m, root, step)
+        with pytest.raises(_Crash):
+            store.add_profile("u", "c", "chikungunya", now_ms=20)
+
+    promote = swap_steps.index(("rename", ".staging"))
+    expect = pre + [("c", "chikungunya")] if step >= promote else pre
+    assert _profile_names(ProfileStore(spark, root)) == expect
+
+    after = ProfileStore(spark, root)
+    after.add_profile("u", "d", "malaria", now_ms=30)
+    assert _profile_names(after) == expect + [("d", "malaria")]
+    assert not os.path.exists(after._stage())
+    assert not os.path.exists(after._old())
+
+
 class RecorderIO:
     """Substrate fake: records which TableIO methods ProfileStore routes
     writes through, so the Iceberg branch (native snapshot overwrite, no

@@ -157,3 +157,24 @@ def test_read_spread_spreads_and_memoizes(spark, tmp_path):
     key_count = len(util._SPREAD_CACHE) - len(before)
     util.read_spread(spark, p)
     assert len(util._SPREAD_CACHE) - len(before) == key_count
+
+
+def test_read_spread_reprobes_a_rewritten_table(spark, tmp_path):
+    """The memo is keyed on the scan's file count: a one-file table is
+    spread, and the same path rewritten with more files than the
+    parallelism keeps the scan's own partitions (no stale spread)."""
+    from similardocs_spark import util
+
+    p = str(tmp_path / "rewritten")
+    target = spark.sparkContext.defaultParallelism
+    # an open cost above the split size gives every file its own
+    # partition (tiny files are otherwise packed ~target per scan)
+    with util.scoped_conf(spark, {"spark.sql.files.openCostInBytes": "1g"}):
+        spark.range(1000).coalesce(1).write.parquet(p)
+        assert util.read_spread(spark, p).rdd.getNumPartitions() == target
+        spark.range(1000).repartition(2 * target).write.mode(
+            "overwrite"
+        ).parquet(p)
+        own = spark.read.parquet(p).rdd.getNumPartitions()
+        assert own == 2 * target
+        assert util.read_spread(spark, p).rdd.getNumPartitions() == own
