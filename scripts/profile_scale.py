@@ -9,7 +9,7 @@ search_batch → spill parquet → ONE merge join → staged swap).
 
 Records: profiles/sec, per-chunk batch seconds, spill parquet size (measured
 while it exists, just before the merge write), peak driver RSS, index build
-time. Writes PROFILE_UPDATER_SCALE.json.
+time. Writes evidence/PROFILE_UPDATER_SCALE.json.
 
 Usage:
   python scripts/profile_scale.py --cores 32 --convs 300000 --profiles 50000
@@ -44,7 +44,10 @@ def main() -> None:
     p.add_argument("--convs", type=int, default=300_000)
     p.add_argument("--profiles", type=int, default=50_000)
     p.add_argument("--chunk-size", type=int, default=10_000)
-    p.add_argument("--out", default=os.path.join(REPO, "PROFILE_UPDATER_SCALE.json"))
+    p.add_argument(
+        "--out",
+        default=os.path.join(REPO, "evidence", "PROFILE_UPDATER_SCALE.json"),
+    )
     args = p.parse_args()
 
     from pyspark.sql import SparkSession

@@ -13,7 +13,7 @@ hand on parquet paths:
 | MERGE INTO                   | staged two-phase merge (incremental.py)     |
 | snapshot lineage             | lineage/ journal rows (build._log_lineage)  |
 | createOrReplace              | mode("overwrite") parquet write             |
-| createOrReplace of n tables  | replace_staged: swap, `_READY` roll-forward |
+| createOrReplace of n tables  | replace_staged: dedup states, profile store |
 
 When the jar IS present (a real deployment), `get_io` returns IcebergIO,
 which maps every write onto native Iceberg table operations via a Hadoop
@@ -269,40 +269,47 @@ def replace_staged(
     root: str,
     names: tuple[str, ...],
     write: Callable[[ParquetIO | IcebergIO, str], None],
+    staging: str,
 ) -> None:
-    """Replace the tables `root/<name>` with what `write(io, root)` writes.
+    """Replace the tables `root/<name>` with what `write(io, dir)` writes
+    as `dir/<name>`.
 
     Iceberg: `write` rewrites the live tables in place (each table commit
-    is atomic). Parquet: `write` fills `root/_compact`, `_READY` marks the
-    staging complete, then `recover_staged` swaps each table in through
+    is atomic). Parquet: `write` fills `staging`, `_READY` marks it
+    complete, then `recover_staged` swaps each table in through
     `root/_trash_<name>` — the same call that finishes, on the next open,
-    a swap a crash interrupted, so the tables are never lost."""
+    a swap a crash interrupted, so the tables are never lost. `staging`
+    belongs to this table set alone: recovery discards it while it lacks
+    `_READY`, so a staging shared with another writer loses its writes."""
     if io.mode != "parquet":
         write(io, root)
         return
-    recover_staged(root, names)
-    write(ParquetIO(), f"{root}/_compact")
-    with open(f"{root}/_compact/_READY", "w"):
+    recover_staged(root, names, staging)
+    write(ParquetIO(), staging)
+    with open(f"{staging}/_READY", "w"):
         pass
-    recover_staged(root, names)
+    recover_staged(root, names, staging)
 
 
-def recover_staged(root: str, names: tuple[str, ...]) -> None:
+def recover_staged(root: str, names: tuple[str, ...], staging: str) -> None:
     """Roll a staged replace forward (the staged tables are complete once
     `_READY` exists) or discard an incomplete staging."""
-    staged = f"{root}/_compact"
-    if not os.path.exists(staged):
+    if not os.path.exists(staging):
         return
-    if not os.path.exists(f"{staged}/_READY"):
-        shutil.rmtree(staged, ignore_errors=True)
+    if not os.path.exists(f"{staging}/_READY"):
+        shutil.rmtree(staging, ignore_errors=True)
         return
     for name in names:
-        src, dst = f"{staged}/{name}", f"{root}/{name}"
+        src, dst = f"{staging}/{name}", f"{root}/{name}"
         trash = f"{root}/_trash_{name}"
         if os.path.exists(src):  # absent: swapped before a crash
             shutil.rmtree(trash, ignore_errors=True)
             if os.path.exists(dst):
                 os.rename(dst, trash)
-            os.rename(src, dst)
+            try:
+                os.rename(src, dst)
+            except OSError:  # lost to another process's roll-forward
+                if os.path.exists(src) or not os.path.exists(dst):
+                    raise
         shutil.rmtree(trash, ignore_errors=True)
-    shutil.rmtree(staged, ignore_errors=True)
+    shutil.rmtree(staging, ignore_errors=True)

@@ -229,12 +229,14 @@ def pairs_against(
             max_bucket,
         )
         .select(F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b"))
-        .persist()  # feeds the member-id broadcast AND the verify join
+        # feeds the member-id broadcast AND the verify join; checkpointed,
+        # not persisted: a CacheManager entry would pin it for the session
+        .localCheckpoint(eager=False)
     )
     vec_src = pair_member_rows(
         cands, corpus_state, new_state, [id_col, vec_col, "_n"],
         "vec_a", "vec_b",
-    ).persist()  # bounded: pair members + batch; feeds va AND vb
+    ).localCheckpoint(eager=False)  # pair members + batch; feeds va AND vb
     va = vec_src.select(
         F.col(id_col).alias("vec_a"),
         F.col(vec_col).alias("_va"),

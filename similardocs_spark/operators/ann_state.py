@@ -78,7 +78,7 @@ class VectorDedupState:
         self.io = get_io(spark, self.root)
         self.state_path = f"{self.root}/state"
         self.meta_path = f"{self.root}/meta"
-        recover_staged(self.root, _TABLES)
+        recover_staged(self.root, _TABLES, f"{self.root}/_compact")
         if self.io.exists(spark, self.meta_path):
             row = self.io.read(spark, self.meta_path).collect()[0]
             stored = {
@@ -226,6 +226,7 @@ class VectorDedupState:
             self.root,
             _TABLES,
             lambda io, root: self._compact_into(io, root, rows, new_bits),
+            f"{self.root}/_compact",
         )
         self.bits = new_bits
 

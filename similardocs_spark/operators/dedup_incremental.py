@@ -243,10 +243,11 @@ def pairs_against(
     """
     if new_sig is None:
         # the batch lineage (tokenize → shingle → minhash) feeds the
-        # touched-bucket broadcast AND the banded union — persist the
-        # compact batch-bounded signature table so it runs once
-        # (ContextCleaner unpersists when the result goes out of scope)
-        new_sig = signatures_for(new_docs, text_col, n_hashes).persist()
+        # touched-bucket broadcast AND the banded union — checkpoint the
+        # compact batch-bounded signature table so it runs once (unlike
+        # persist(), no CacheManager entry pins it for the session)
+        new_sig = signatures_for(new_docs, text_col, n_hashes)
+        new_sig = new_sig.localCheckpoint(eager=False)
     _validate_sig(corpus_sig, n_hashes)
     _validate_sig(new_sig, n_hashes)
     keep = ["doc_id", *[f"mh{i}" for i in range(n_hashes)]]
@@ -262,7 +263,7 @@ def pairs_against(
     )
     if not (estimate_jaccard or min_jaccard is not None):
         return pairs
-    pairs = pairs.persist()  # feeds member-id broadcast + estimate join
+    pairs = pairs.localCheckpoint(eager=False)  # id broadcast + estimate
     sig_small = pair_member_rows(pairs, corpus_sig, new_sig, keep)
     return _attach_estimate(pairs, sig_small, n_hashes, min_jaccard)
 

@@ -88,7 +88,7 @@ class BandedDedupState:
         self.bands_path = f"{self.root}/bands"
         self.counts_path = f"{self.root}/counts"
         self.meta_path = f"{self.root}/meta"
-        recover_staged(self.root, _TABLES)
+        recover_staged(self.root, _TABLES, f"{self.root}/_compact")
         if self.io.exists(spark, self.meta_path):
             row = self.io.read(spark, self.meta_path).collect()[0]
             if (row["n_hashes"], row["n_bands"]) != (n_hashes, n_bands):
@@ -261,6 +261,7 @@ class BandedDedupState:
             self.root,
             _TABLES,
             lambda io, root: self._compact_into(io, root, sig),
+            f"{self.root}/_compact",
         )
 
     def _compact_into(self, io, root: str, sig: DataFrame) -> None:

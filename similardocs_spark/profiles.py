@@ -13,11 +13,12 @@ one-at-a-time Future loop. `update_time == 0` is the stale marker, exactly
 as the reference (TopIndex.scala:651,697-698).
 
 Scale shape: every mutation is a DATAFLOW — filter / join against a
-LocalRelation of changed rows, staged write, atomic-ish swap — never a
-full-table collect to the driver. Driver residency is bounded by one
-updater CHUNK (ids + contents of `chunk_size` stale profiles at a time via
-toLocalIterator) plus the per-chunk result id lists, which stream to a
-spill parquet before the final merge join. The reference's table is tiny
+LocalRelation of changed rows, then one crash-safe whole-table replace
+(`catalog.replace_staged`) — never a full-table collect to the driver.
+Driver residency is bounded by one updater CHUNK (ids + contents of
+`chunk_size` stale profiles at a time via toLocalIterator) plus the
+per-chunk result id lists, which stream to a spill parquet before the
+final merge join. The reference's table is tiny
 (per-user profiles), but at millions of profiles the old read-modify-write
 was a driver bottleneck (round-3 review)."""
 from __future__ import annotations
@@ -30,6 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .index.catalog import get_io, recover_staged, replace_staged
 from .oracle.refsearch import DEFAULT_MAX_DOCS, DEFAULT_MIN_NGRAMS, days_ago_str
 
 SCHEMA = (
@@ -55,110 +57,63 @@ def profile_id(user: str, name: str) -> str:
 class ProfileStore:
     """Substrate-routed: on deployments with the Iceberg runtime the store
     is a catalog table and every overwrite is a native snapshot commit
-    (createOrReplace — atomic, no staging dance); the parquet fallback
-    implements the same semantics with a staged directory swap plus crash
-    recovery. Selection mirrors index/catalog.get_io (SIMDOCS_SUBSTRATE
-    override honored)."""
+    (createOrReplace — atomic, no staging); the parquet fallback replaces
+    the table through `catalog.replace_staged`, staged at `<path>.staging`
+    and rolled forward by the next read that finds `path` missing.
+    Selection mirrors index/catalog.get_io (SIMDOCS_SUBSTRATE override
+    honored)."""
 
     spark: SparkSession
     path: str
 
     def __post_init__(self) -> None:
-        from .index.catalog import get_io
-
         self._io = get_io(self.spark, self.path)
-        # serializes _recover/_write_staged within this process (background
+        # serializes recovery/_write_staged within this process (background
         # updater thread vs serving reads — the reference's deployment
         # shape). Multi-PROCESS writers additionally need external
         # coordination (or the Iceberg substrate, whose commits are atomic);
         # the reference runs a single updater service per store.
         self._swap_lock = threading.RLock()
+        self._parent, self._name = os.path.split(os.path.abspath(self.path))
+        self._staging = self.path + ".staging"
 
     def _read(self) -> DataFrame:
         from .util import local_df
 
-        if self._io.mode == "parquet":
-            self._recover()
+        if self._io.mode == "parquet" and not os.path.exists(self.path):
+            # only a missing live table takes the lock and recovers, so a
+            # reader never touches the staging of a write in flight
+            with self._swap_lock:
+                recover_staged(self._parent, (self._name,), self._staging)
+            if os.path.exists(self.path + ".old") and not os.path.exists(self.path):
+                raise RuntimeError(
+                    f"{self.path}.old holds the table parked by an interrupted "
+                    f"swap of an older version: move it back to {self.path}"
+                )
         if not self._io.exists(self.spark, self.path):
             return local_df(self.spark, [], SCHEMA)
         return self._io.read(self.spark, self.path)
 
-    # ------------------------------------------------------ staged overwrite
-
-    def _stage(self) -> str:
-        return self.path + ".staging"
-
-    def _old(self) -> str:
-        return self.path + ".old"
-
-    def _recover(self) -> None:
-        """(parquet mode only) Finish or roll back a swap interrupted by a
-        crash: a COMMITTED staging next to a missing live table is rolled
-        forward; anything else partial is discarded (the live table —
-        possibly parked at .old — is restored).
-
-        Repair acts ONLY when the live table is actually missing. An
-        unconditional cleanup here would let a reader concurrent with an
-        in-flight _write_staged delete the writer's staging dir mid-write
-        (round-4 review); stray .staging/.old dirs from a crash that left
-        the live table intact are instead cleared by the NEXT _write_staged
-        before it stages. In-process, the swap lock serializes repair
-        against writes; the transient path-missing window inside a write is
-        additionally tolerated by _write_staged's promote check below."""
-        if os.path.exists(self.path):
-            return  # live table intact — nothing to repair, touch nothing
-        stage, old = self._stage(), self._old()
-        # lock-free fast path above: readers only contend here when the live
-        # table is missing — either a real crash (repair below) or the
-        # in-flight writer's two-rename swap window (they block until the
-        # writer releases, then re-check and no-op)
-        with self._swap_lock:
-            if os.path.exists(self.path):
-                return
-            if os.path.exists(stage) and self._io.committed(self.spark, stage):
-                os.rename(stage, self.path)  # roll forward
-            elif os.path.exists(old):
-                os.rename(old, self.path)  # roll back
-            shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-
     def _write_staged(self, df: DataFrame) -> None:
-        """Overwrite the store FROM A PLAN THAT READS IT.
+        """Overwrite the store FROM A PLAN THAT READS IT, through
+        `catalog.replace_staged`: on parquet the job writes `<path>.staging`
+        while the source stays live. On Iceberg a self-referential
+        replace-table-as-select is not guaranteed to be accepted, so the
+        rows are materialized (localCheckpoint) first, cutting the lineage
+        back to the source table — kept conservative: untested without the
+        runtime jar."""
 
-        Iceberg substrate: one native createOrReplace — but a self-referential
-        replace-table-as-select (plan reads the table it replaces) is not
-        guaranteed to be accepted, so the derived rows are materialized
-        (localCheckpoint) first, cutting the lineage back to the source
-        table before the atomic snapshot swap. A real deployment can instead
-        route CRUD through MERGE INTO / DELETE; unverifiable in this sandbox
-        (no runtime jar), kept conservative.
+        def write(io, root: str) -> None:
+            out = df if io.mode == "parquet" else df.localCheckpoint(eager=True)
+            io.overwrite(out, f"{root}/{self._name}")
 
-        Parquet substrate: write to a staging dir first (the source parquet
-        stays live while the job runs), then swap directories — the same
-        crash-repairable two-phase shape as index/incremental, with
-        `_recover` rolling an interrupted swap forward or back."""
-        if self._io.mode != "parquet":
-            self._io.overwrite(df.localCheckpoint(eager=True), self.path)
-            return
-        stage, old = self._stage(), self._old()
         with self._swap_lock:
-            # clear leftovers from any earlier crash BEFORE staging (readers
-            # no longer clean these; see _recover) — also guarantees the
-            # os.rename(self.path, old) below has a clear target
-            shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            self._io.overwrite(df, stage)  # writes the commit marker
             if os.path.exists(self.path):
-                os.rename(self.path, old)
-            try:
-                os.rename(stage, self.path)
-            except OSError:
-                # a concurrent _recover (other process) caught the
-                # path-missing window and promoted the committed stage
-                # itself — converged to the same result
-                if not (os.path.exists(self.path) and not os.path.exists(stage)):
-                    raise
-            shutil.rmtree(old, ignore_errors=True)
+                # a staging beside the intact live table is left by a write
+                # that crashed before its swap; rolling it forward would
+                # move away the live files `df` is planned to read
+                shutil.rmtree(self._staging, ignore_errors=True)
+            replace_staged(self._io, self._parent, (self._name,), write, self._staging)
 
     def _merge_rows(self, changed: list[dict]) -> None:
         """Upsert a bounded set of fully-specified rows: anti-join the live

@@ -88,11 +88,12 @@ def _batch_bucket(
     # broadcast (q_rerank arrays must not ride along: they'd be replicated
     # onto every pre-cut candidate row).
     #
-    # Negative result, measured (round 4, PROFILE_FUSED_AB_8X2.json +
-    # PROFILE_4X4_FUSED.json): a FUSED variant that joined docs first and
-    # did pool-cut + rank in ONE query_id exchange (one fewer shuffle
-    # stage) LOSES at both 4x4 (11.3 s vs 8.0 s warm) and 8x2 (13.4 s vs
-    # 6.9 s best-of-3 interleaved): without the pre-cut, per-SEGMENT pools
+    # Negative result, measured (round 4,
+    # evidence/PROFILE_FUSED_AB_8X2.json + evidence/PROFILE_4X4_FUSED.json):
+    # a FUSED variant that joined docs first and did pool-cut + rank in
+    # ONE query_id exchange (one fewer shuffle stage) LOSES at both 4x4
+    # (11.3 s vs 8.0 s warm) and 8x2 (13.4 s vs 6.9 s best-of-3
+    # interleaved): without the pre-cut, per-SEGMENT pools
     # (n_segs× rows, 283 MB vs 65+1.5 MB here) ride through the rerank
     # join and the exchange. The pool cut's data reduction is worth more
     # than a stage — keep cuts as early as possible.

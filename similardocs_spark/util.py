@@ -182,9 +182,9 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 #   driver re-plan round is pure latency when each round is a
 #   cross-process RTT — measured interleaved A/B at local-cluster[4,2]:
 #   8.15 -> 7.28 s best-of-3 per 1152-query batch
-#   (PROFILE_AQE_AB_4X2.json), and +82% batch throughput at 8x4 in the
-#   scaling campaign. In a single-JVM local[N] session the re-plan is an
-#   in-process call and AQE's empty/tiny-partition coalescing WINS for
+#   (evidence/PROFILE_AQE_AB_4X2.json), and +82% batch throughput at 8x4
+#   in the scaling campaign. In a single-JVM local[N] session the re-plan
+#   is an in-process call and AQE's empty/tiny-partition coalescing WINS for
 #   the many micro-stages of the single-query path (interleaved A/B at
 #   local[32], sf0.1: 9 WAND queries 8.6 s with AQE vs 10.8 s without;
 #   batch a wash) — so local[N] keeps AQE. Skew splitting is not needed

@@ -19,3 +19,47 @@ def spark():
     )
     yield s
     s.stop()
+
+
+class SwapCrash(Exception):
+    """An injected crash inside `catalog.replace_staged` — not an OSError,
+    so no code path swallows it."""
+
+    @staticmethod
+    def inject(m, prefix: str, at) -> list[tuple[str, str]]:
+        """Crash a staged replace under `prefix` at `at`: "before_ready"
+        raises once the staging is written but before its `_READY`; an
+        int raises INSTEAD of that rename/rmtree step; None never raises.
+        Returns the log of (primitive, path) steps run."""
+        import os
+        import shutil
+
+        from similardocs_spark.index import catalog
+
+        steps: list[tuple[str, str]] = []
+
+        def counted(real):
+            def run(path, *args, **kwargs):
+                if str(path).startswith(prefix):
+                    if len(steps) == at:
+                        raise SwapCrash(f"step {at}: {real.__name__} {path}")
+                    steps.append((real.__name__, str(path)))
+                return real(path, *args, **kwargs)
+
+            return run
+
+        def ready_crashes(path, *args, **kwargs):
+            if str(path).endswith("/_READY"):
+                raise SwapCrash("before _READY")
+            return open(path, *args, **kwargs)
+
+        m.setattr(os, "rename", counted(os.rename))
+        m.setattr(shutil, "rmtree", counted(shutil.rmtree))
+        if at == "before_ready":
+            m.setattr(catalog, "open", ready_crashes, raising=False)
+        return steps
+
+
+@pytest.fixture(scope="session")
+def swap_crash():
+    return SwapCrash

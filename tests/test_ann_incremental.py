@@ -162,22 +162,30 @@ def test_pairs_against_matches_batch_operator(spark, max_bucket):
 
 
 @pytest.mark.spark
-def test_pairs_against_one_cap_window_for_all_tables(spark):
+def test_pairs_against_one_cap_window_for_all_tables(spark, monkeypatch):
     """The LSH tables are stacked as bands: one candidate self-join over
     ONE bucket-cap window for tables=3, not one per table. The physical
     plan holds that window once per side of the self-join (2 distinct
     Window nodes; a per-table plan holds 2 × tables)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from similardocs_spark.operators import ann_incremental as inc
 
+    # the candidates are locally checkpointed, so the verify plan scans the
+    # checkpoint: inspect the plan of the frame that was checkpointed
+    checkpointed, real = [], DataFrame.localCheckpoint
+
+    def record(self, eager=True):
+        checkpointed.append(self)
+        return real(self, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", record)
     corpus, batch = _clustered(spark)
     state = inc.state_for(corpus, dim=8, tables=3)
-    plan = (
-        inc.pairs_against(batch, state)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # a persisted subtree is printed at every use: count distinct nodes
+    inc.pairs_against(batch, state)
+    cands = next(df for df in checkpointed if df.columns == ["vec_a", "vec_b"])
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    # a subtree is printed at every use: count distinct nodes
     assert len(set(re.findall(r"Window \[[^\]]*\]", plan))) == 2, plan
 
 

@@ -217,10 +217,6 @@ def test_state_compact_preserves_semantics_and_heals_torn_tick(
     assert accepted.count() == 0 and pairs.count() >= 1
 
 
-class _Crash(Exception):
-    pass
-
-
 def _vec(seed: int, dim: int = 16) -> list[float]:
     import numpy as np
 
@@ -274,30 +270,8 @@ def _table_rows(spark, root, names):
     return out
 
 
-def _fail_fs_step(m, root, fail_at):
-    """Route the swap's rename/delete primitives through a counter that
-    raises _Crash at step `fail_at` (None: never); returns the step log."""
-    from similardocs_spark.index import catalog
-
-    steps: list[str] = []
-
-    def counted(real):
-        def run(path, *args, **kwargs):
-            if str(path).startswith(root):
-                if len(steps) == fail_at:
-                    raise _Crash(f"step {fail_at}: {real.__name__} {path}")
-                steps.append(str(path))
-            return real(path, *args, **kwargs)
-
-        return run
-
-    m.setattr(catalog.os, "rename", counted(os.rename))
-    m.setattr(catalog.shutil, "rmtree", counted(shutil.rmtree))
-    return steps
-
-
 @pytest.fixture(scope="module")
-def crash_templates(spark, tmp_path_factory, corpus_and_batch):
+def crash_templates(spark, tmp_path_factory, corpus_and_batch, swap_crash):
     """Per state kind, built once: a ticked (uncompacted) state, its
     table rows, and the rows of one uninterrupted compaction."""
     built = {}
@@ -312,7 +286,7 @@ def crash_templates(spark, tmp_path_factory, corpus_and_batch):
             shutil.copytree(template, clean)
             st, compact = open_state(spark, clean)
             with pytest.MonkeyPatch.context() as m:
-                steps = _fail_fs_step(m, clean, None)
+                steps = swap_crash.inject(m, clean, None)
                 compact(st)
             # the matrix below must cover every step of the swap
             assert len(steps) == n_steps, steps
@@ -335,7 +309,9 @@ def crash_templates(spark, tmp_path_factory, corpus_and_batch):
         for step in ["before_ready", *range(n_steps)]
     ],
 )
-def test_compaction_crash_recovery(spark, tmp_path, crash_templates, kind, step):
+def test_compaction_crash_recovery(
+    spark, tmp_path, crash_templates, swap_crash, kind, step
+):
     """Fault matrix for the shared staged swap (catalog.replace_staged):
     a compaction that crashes after staging but before _READY leaves the
     live state untouched; one that crashes at any rename/delete of the
@@ -347,17 +323,8 @@ def test_compaction_crash_recovery(spark, tmp_path, crash_templates, kind, step)
     shutil.copytree(template, root)
     st, compact = open_state(spark, root)
     with pytest.MonkeyPatch.context() as m:
-        if step == "before_ready":
-            real = st._compact_into
-
-            def staged_then_crash(*args):
-                real(*args)
-                raise _Crash("before _READY")
-
-            m.setattr(st, "_compact_into", staged_then_crash)
-        else:
-            _fail_fs_step(m, root, step)
-        with pytest.raises(_Crash):
+        swap_crash.inject(m, root, step)
+        with pytest.raises(swap_crash):
             compact(st)
 
     open_state(spark, root)  # recovery runs on open
@@ -473,3 +440,31 @@ def test_compact_and_bootstrap_use_full_partitioned_replace(
     # signature row per accepted doc, none doubled
     assert st.read_signatures().count() == n_state
     assert st.read_signatures().select("doc_id").distinct().count() == n_state
+
+
+@pytest.mark.spark
+def test_compaction_promote_lost_to_concurrent_roll_forward(
+    spark, tmp_path, crash_templates
+):
+    """While the compaction has a live table parked, a reader in another
+    process opens the state and rolls the swap forward first; the
+    compaction's own promote then finds its source gone and returns
+    normally with the compacted rows."""
+    template, _, after = crash_templates("text")
+    root = str(tmp_path / "st")
+    shutil.copytree(template, root)
+    st, compact = _open_text(spark, root)
+    real, raced = os.rename, []
+
+    def racing_rename(src, dst):
+        if str(src).startswith(f"{root}/_compact/") and not raced:
+            raced.append(src)
+            _open_text(spark, root)  # the other process's open recovers
+        return real(src, dst)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(os, "rename", racing_rename)
+        compact(st)
+    assert raced
+    assert _table_rows(spark, root, _KINDS["text"][2]) == after
+    assert not [e for e in os.listdir(root) if e.startswith(("_compact", "_trash_"))]

@@ -81,97 +81,65 @@ def test_reset_and_update_all(spark, tmp_path):
 
 @pytest.mark.spark
 def test_staged_swap_crash_recovery(spark, tmp_path):
-    """Parquet-mode crash windows: (a) killed between parking the live dir
-    at .old and promoting a COMMITTED staging → next read rolls the staging
-    forward; (b) killed after parking but with a PARTIAL staging → next
-    read rolls the .old table back; stray dirs are cleaned either way."""
+    """(a) A crash that left a `_READY` staging and no live table (the
+    live table parked for the swap) rolls forward on the next read.
+    (b) A live table parked at `.old` by the swap of an older version is
+    never looked at by the recovery: the read fails loudly, naming it."""
     import os
     import shutil
-
-    from similardocs_spark.index.catalog import COMMIT_MARKER
 
     store = ProfileStore(spark, str(tmp_path / "pr"))
     store.add_profile("u", "a", "zika", now_ms=10)
     store.add_profile("u", "b", "dengue", now_ms=10)
 
-    # (a) roll FORWARD: live dir gone, committed staging present
-    shutil.copytree(store.path, store._stage())
+    # (a) roll FORWARD: live dir gone, complete staging present
+    staging = store.path + ".staging"
+    shutil.copytree(store.path, os.path.join(staging, "pr"))
+    open(os.path.join(staging, "_READY"), "w").close()
     shutil.rmtree(store.path)
-    profs = store.get_profiles("u")  # _recover runs inside _read
+    profs = store.get_profiles("u")  # recovery runs inside _read
     assert [p["prof_name"] for p in profs] == ["a", "b"]
-    assert os.path.exists(store.path) and not os.path.exists(store._stage())
+    assert os.path.exists(store.path) and not os.path.exists(staging)
 
-    # (b) roll BACK: live dir parked at .old, staging uncommitted
-    shutil.copytree(store.path, store._stage())
-    for m in ("_SUCCESS", COMMIT_MARKER):
-        p = os.path.join(store._stage(), m)
-        if os.path.exists(p):
-            os.remove(p)
-    os.rename(store.path, store._old())
-    profs = store.get_profiles("u")
-    assert [p["prof_name"] for p in profs] == ["a", "b"]
-    assert os.path.exists(store.path)
-    assert not os.path.exists(store._stage()) and not os.path.exists(store._old())
-
-
-class _Crash(Exception):
-    """Injected crash — not an OSError, so no code path swallows it."""
-
-
-def _fail_swap_step(m, prefix, fail_at):
-    """Route os.rename/shutil.rmtree on paths under `prefix` through a
-    counter that raises _Crash INSTEAD of step `fail_at` (None: never);
-    returns the log of (primitive, path) steps run."""
-    import os
-    import shutil
-
-    steps: list[tuple[str, str]] = []
-
-    def counted(real):
-        def run(path, *args, **kwargs):
-            if str(path).startswith(prefix):
-                if len(steps) == fail_at:
-                    raise _Crash(f"step {fail_at}: {real.__name__} {path}")
-                steps.append((real.__name__, str(path)))
-            return real(path, *args, **kwargs)
-
-        return run
-
-    m.setattr(os, "rename", counted(os.rename))
-    m.setattr(shutil, "rmtree", counted(shutil.rmtree))
-    return steps
-
-
-_SWAP_STEPS = 5  # rmtree staging, rmtree .old, park, promote, rmtree .old
+    # (b) legacy interrupted swap: the live table parked at .old
+    os.rename(store.path, store.path + ".old")
+    with pytest.raises(RuntimeError, match=r"pr\.old"):
+        store.get_profiles("u")
 
 
 def _profile_names(store):
     return [(p["prof_name"], p["prof_content"]) for p in store.get_profiles("u")]
 
 
+# rmtree a stale staging, then catalog.recover_staged's rmtree trash,
+# park, promote, rmtree trash, rmtree staging
+_SWAP_STEPS = 6
+
+
 @pytest.fixture(scope="module")
-def swap_steps(spark, tmp_path_factory):
+def swap_steps(spark, tmp_path_factory, swap_crash):
     """The (primitive, path suffix) rename/delete steps of one
     uninterrupted parquet-mode `_write_staged` over a live table; the
     matrix below must cover them all."""
-    root = str(tmp_path_factory.mktemp("swap_steps") / "pr")
-    store = ProfileStore(spark, root)
+    parent = str(tmp_path_factory.mktemp("swap_steps"))
+    store = ProfileStore(spark, f"{parent}/pr")
     store.add_profile("u", "a", "zika", now_ms=10)
     with pytest.MonkeyPatch.context() as m:
-        steps = _fail_swap_step(m, root, None)
+        steps = swap_crash.inject(m, parent, None)
         store.add_profile("u", "c", "chikungunya", now_ms=20)
     assert len(steps) == _SWAP_STEPS, steps
-    return [(name, path[len(root):]) for name, path in steps]
+    return [(name, path[len(parent):]) for name, path in steps]
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("step", range(_SWAP_STEPS))
-def test_staged_swap_crash_matrix(spark, tmp_path, swap_steps, step):
-    """Fault matrix for the parquet staged swap: a write that crashes at
-    any rename/delete of `_write_staged` leaves a store that a fresh
-    ProfileStore reads as exactly the pre-write rows (crash before the
-    promote) or the post-write rows (crash at or after it) — never fewer;
-    the next write clears every stray .staging/.old directory."""
+@pytest.mark.parametrize("step", ["before_ready", *range(_SWAP_STEPS)])
+def test_staged_swap_crash_matrix(spark, tmp_path, swap_steps, swap_crash, step):
+    """Fault matrix for the profile store's `catalog.replace_staged`: a
+    write that crashes before `_READY` or at any rename/delete of the
+    swap leaves a store that a fresh ProfileStore reads as exactly the
+    pre-write rows (live table not yet parked) or the post-write rows
+    (parked: the read rolls the staging forward) — never fewer; the next
+    write leaves no staging and no `_trash_pr`."""
     import os
 
     root = str(tmp_path / "pr")
@@ -180,19 +148,70 @@ def test_staged_swap_crash_matrix(spark, tmp_path, swap_steps, step):
     store.add_profile("u", "b", "dengue", now_ms=10)
     pre = _profile_names(store)
     with pytest.MonkeyPatch.context() as m:
-        _fail_swap_step(m, root, step)
-        with pytest.raises(_Crash):
+        swap_crash.inject(m, str(tmp_path), step)
+        with pytest.raises(swap_crash):
             store.add_profile("u", "c", "chikungunya", now_ms=20)
 
-    promote = swap_steps.index(("rename", ".staging"))
-    expect = pre + [("c", "chikungunya")] if step >= promote else pre
+    park = swap_steps.index(("rename", "/pr"))
+    post = step != "before_ready" and step > park
+    expect = pre + [("c", "chikungunya")] if post else pre
     assert _profile_names(ProfileStore(spark, root)) == expect
 
     after = ProfileStore(spark, root)
     after.add_profile("u", "d", "malaria", now_ms=30)
     assert _profile_names(after) == expect + [("d", "malaria")]
-    assert not os.path.exists(after._stage())
-    assert not os.path.exists(after._old())
+    assert sorted(os.listdir(tmp_path)) == ["pr"]
+
+
+@pytest.mark.spark
+def test_two_stores_under_one_parent_keep_their_staging(
+    spark, tmp_path, swap_steps, swap_crash
+):
+    """Each store stages beside its own table: store A crashes after
+    `_READY` with its live table parked, store B in the same directory
+    then writes, and a fresh A still rolls its own staging forward."""
+    a = ProfileStore(spark, str(tmp_path / "profiles_en"))
+    b = ProfileStore(spark, str(tmp_path / "profiles_es"))
+    a.add_profile("u", "a", "zika", now_ms=10)
+    b.add_profile("u", "b", "dengue", now_ms=10)
+    promote = swap_steps.index(("rename", "/pr.staging/pr"))
+    with pytest.MonkeyPatch.context() as m:
+        swap_crash.inject(m, str(tmp_path), promote)
+        with pytest.raises(swap_crash):
+            a.add_profile("u", "c", "chikungunya", now_ms=20)
+    b.add_profile("u", "d", "malaria", now_ms=20)
+
+    assert _profile_names(b) == [("b", "dengue"), ("d", "malaria")]
+    assert _profile_names(ProfileStore(spark, a.path)) == [
+        ("a", "zika"), ("c", "chikungunya"),
+    ]
+
+
+@pytest.mark.spark
+def test_promote_lost_to_concurrent_roll_forward(spark, tmp_path):
+    """While a write has the live table parked, a reader in another
+    process (a fresh store: its own swap lock) sees the table missing and
+    rolls the staging forward first; the write's own promote then finds
+    its source gone and returns normally with the post-write rows."""
+    import os
+
+    root = str(tmp_path / "pr")
+    store = ProfileStore(spark, root)
+    store.add_profile("u", "a", "zika", now_ms=10)
+    real, raced = os.rename, []
+
+    def racing_rename(src, dst):
+        if str(src).startswith(root + ".staging/") and not raced:
+            raced.append(src)
+            ProfileStore(spark, root)._read()
+        return real(src, dst)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(os, "rename", racing_rename)
+        store.add_profile("u", "b", "dengue", now_ms=20)
+    assert raced
+    assert _profile_names(store) == [("a", "zika"), ("b", "dengue")]
+    assert sorted(os.listdir(tmp_path)) == ["pr"]
 
 
 class RecorderIO:
@@ -225,15 +244,14 @@ class RecorderIO:
 @pytest.mark.spark
 def test_iceberg_substrate_routing(spark, tmp_path):
     """mode='iceberg' routes every store rewrite through ONE io.overwrite
-    (native createOrReplace) — no .staging/.old directory dance, no
-    parquet crash-recovery path."""
+    (native createOrReplace) — no staging directory, no parquet
+    crash-recovery path."""
     store = ProfileStore(spark, str(tmp_path / "pice"))
     fake = RecorderIO("iceberg", str(tmp_path / "backing"))
     store._io = fake
     store.add_profile("u", "a", "zika dengue", now_ms=10)
     assert [c[0] for c in fake.calls if c[0] == "overwrite"] == ["overwrite"]
     assert not (tmp_path / "pice.staging").exists()
-    assert not (tmp_path / "pice.old").exists()
     fake.calls.clear()
     eng = FakeEngine()
     assert store.update_stale(eng, now_ms=100) == 1
@@ -389,26 +407,24 @@ def test_import_json_profiles_one_staged_write(spark, tmp_path):
 
 @pytest.mark.spark
 def test_recover_leaves_inflight_staging_alone(spark, tmp_path):
-    """Round-4 ADVICE (medium): a reader's _recover must NOT clean
-    .staging/.old while the live table exists — a concurrent writer may
-    own them mid-write. Stray dirs are cleared by the next write instead."""
+    """Round-4 ADVICE (medium): a reader must NOT touch the staging while
+    the live table exists — a concurrent writer may own it mid-write. A
+    stray staging is cleared by the next write instead."""
     import os
 
     store = ProfileStore(spark, str(tmp_path / "pr2"))
     store.add_profile("u", "a", "zika", now_ms=10)
-    os.makedirs(store._stage(), exist_ok=True)
-    (tmp_path / "pr2.staging" / "part-inflight").write_text("x")
-    os.makedirs(store._old(), exist_ok=True)
+    inflight = tmp_path / "pr2.staging" / "pr2"
+    os.makedirs(inflight)
+    (inflight / "part-inflight").write_text("x")
 
-    profs = store.get_profiles("u")  # _recover runs inside _read
+    profs = store.get_profiles("u")
     assert [p["prof_name"] for p in profs] == ["a"]
-    assert os.path.exists(store._stage())  # untouched: live table intact
-    assert os.path.exists(store._old())
+    assert (inflight / "part-inflight").exists()  # untouched: live intact
 
-    # the next write clears the leftovers before staging its own data
+    # the next write discards the incomplete staging before staging its own
     store.add_profile("u", "b", "dengue", now_ms=20)
-    assert not os.path.exists(store._stage())
-    assert not os.path.exists(store._old())
+    assert sorted(os.listdir(tmp_path)) == ["pr2"]
     assert len(store.get_profiles("u")) == 2
 
 
