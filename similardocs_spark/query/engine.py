@@ -8,10 +8,11 @@ the executor, and only ≤ pool rows per segment cross the wire before the
 global top-pool cut (orderBy+limit → TakeOrderedAndProject, no global sort).
 
 Query lifecycle (reference SimDocsSearch.scala:122-347): text → word prep →
-term weights (duplicate-prefix boosts) → per-day-bucket retrieval (optional
-ladder recursion with shrinking k) → MUST-clause score constants → candidate
-pool 150·k by (score desc, docID asc) → overlap rerank vs adaptive threshold →
-(n_common desc, update_date desc) → take k.
+term weights (duplicate-prefix boosts) → MUST-clause score constants →
+candidate pool 150·k by (score desc, docID asc) → overlap rerank vs adaptive
+threshold → (n_common desc, update_date desc) → take k. split_time repeats
+that per day bucket with a shrinking k: one plan scores the first bucket and
+one more scores all later buckets at once (query/batch.py:ladder_hits).
 """
 from __future__ import annotations
 
@@ -19,7 +20,7 @@ from dataclasses import dataclass
 from datetime import date
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .. import bm25
@@ -41,6 +42,10 @@ from ..textnorm import query_rerank_tokens, uniform_text
 # postings volume Σdf. It stays because the benchmark's `wand_auto_share`
 # (the share of queries with Σdf ≥ this) imports it; at 0 that share is 1.
 WAND_AUTO_MIN_POSTINGS = 0
+
+# a search hit; search_batch rows carry query_id and rank in front
+HIT_COLS = ("doc_id", "conv_id", "score", "n_common", "update_date")
+Hit = Row(*HIT_COLS)
 
 
 @dataclass
@@ -211,19 +216,24 @@ class SearchEngine:
 
     def _bucket_docs(
         self,
-        from_str: str,
-        to_str: str,
+        buckets: list[tuple[str, str]],
         sources: set[str] | None,
         instances: set[str] | None,
     ) -> DataFrame:
-        """Doc stats of the date bucket, narrowed by the db/instance filters
-        (all pushed to the docs parquet scan)."""
-        docs = self._docs.filter(F.col("update_date").between(from_str, to_str))
+        """Doc stats of the span of `buckets` (_day_buckets), narrowed by the
+        db/instance filters (all pushed to the docs parquet scan), with each
+        doc's `bucket`: the index of its range in `buckets`."""
+        docs = self._docs.filter(
+            F.col("update_date").between(buckets[-1][0], buckets[0][1])
+        )
         if sources is not None:
             docs = docs.filter(F.col("db").isin(sorted(sources)))
         if instances is not None:
             docs = docs.filter(F.col("instance").isin(sorted(instances)))
-        return docs
+        bucket = F.lit(len(buckets) - 1)
+        for i in range(len(buckets) - 2, -1, -1):
+            bucket = F.when(F.col("update_date") >= buckets[i][0], i).otherwise(bucket)
+        return docs.withColumn("bucket", bucket.cast("int"))
 
     def _kernel_cut(
         self,
@@ -240,7 +250,7 @@ class SearchEngine:
 
         return (
             wand_score_batch(
-                self, {"q": w_idf}, {"q": pool}, from_str, to_str, sources, instances
+                self, {"q": w_idf}, pool, [(from_str, to_str)], sources, instances
             )
             .select("doc_id", "score")
             .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -328,18 +338,20 @@ class SearchEngine:
             )
         return lower, self.end_days_ago
 
-    def _day_buckets(self, lower: int, upper: int, split_time: bool):
-        """(from_str, to_str) date ranges a search visits in order: the whole
-        [lower, upper] range, or with split_time the reference's day-bucket
-        ladder (SimDocsSearch.scala:185-211). Callers stop once filled."""
+    def _day_buckets(
+        self, lower: int, upper: int, split_time: bool
+    ) -> list[tuple[str, str]]:
+        """(from_str, to_str) date ranges of a search, newest first: the
+        whole [lower, upper] range, or with split_time the reference's
+        day-bucket ladder (SimDocsSearch.scala:185-211). Ladder buckets are
+        adjacent and disjoint, so one plan can score several (query/batch.py)."""
         if not split_time:
-            yield days_ago_str(self.today, lower), days_ago_str(self.today, upper)
-            return
-        cur_day = self.end_days_ago
+            return [(days_ago_str(self.today, lower), days_ago_str(self.today, upper))]
+        out, cur_day = [], self.end_days_ago
         while (rng := get_day_range(cur_day, lower, upper)) is not None:
-            begin, end = rng
-            yield days_ago_str(self.today, begin), days_ago_str(self.today, end)
-            cur_day = begin + 1
+            out.append((days_ago_str(self.today, rng[0]), days_ago_str(self.today, rng[1])))
+            cur_day = rng[0] + 1
+        return out
 
     def search_batch(self, queries: dict[str, str], **kwargs) -> dict[str, list]:
         """N queries in one DataFrame plan — see query/batch.py."""
@@ -392,38 +404,33 @@ class SearchEngine:
         if not w_idf:
             return []
 
-        hits: list = []
-        remaining = max_docs
-        for from_str, to_str in self._day_buckets(lower, upper, split_time):
-            if remaining <= 0:
-                break
-            got = self._bucket_hits(
-                w_idf, q_rerank, min_ngrams, remaining, sources, instances,
+        if split_time:
+            from .batch import ladder_hits
+
+            rows = ladder_hits(
+                self, {"q": (w_idf, q_rerank)}, max_docs, min_ngrams, sources,
+                instances, self._day_buckets(lower, upper, True), explain,
+            )["q"]
+        else:
+            [(from_str, to_str)] = self._day_buckets(lower, upper, False)
+            rows = self._bucket_hits(
+                w_idf, q_rerank, min_ngrams, max_docs, sources, instances,
                 from_str, to_str, explain,
             ).collect()
-            hits.extend(_maybe_explain(got, q_rerank, explain))
-            remaining -= len(got)
-        return hits
+        if explain:
+            return [ExplainedHit(r, q_rerank) for r in rows]
+        return [Hit(*(r[c] for c in HIT_COLS)) for r in rows]
 
 
 class ExplainedHit:
     """Hit + (original, similar, common) ngram triple (explain mode)."""
 
-    __slots__ = ("doc_id", "conv_id", "score", "n_common", "update_date", "ngrams")
+    __slots__ = (*HIT_COLS, "ngrams")
 
     def __init__(self, row, q_rerank: list[str]):
-        self.doc_id = row["doc_id"]
-        self.conv_id = row["conv_id"]
-        self.score = row["score"]
-        self.n_common = row["n_common"]
-        self.update_date = row["update_date"]
+        for c in HIT_COLS:
+            setattr(self, c, row[c])
         similar = list(row["rerank_tokens"])
         sim_set = set(similar)
         common = [t for t in q_rerank if t in sim_set]
         self.ngrams = (list(q_rerank), similar, common)
-
-
-def _maybe_explain(rows: list, q_rerank: list[str], explain: bool) -> list:
-    if not explain:
-        return rows
-    return [ExplainedHit(r, q_rerank) for r in rows]

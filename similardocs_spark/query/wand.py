@@ -2,14 +2,16 @@
 
 Executes per (SEGMENT × query-slice) via `cogroup(...).applyInPandas`: the
 segment's postings rows (term, doc_ids) for the batch's terms, cogrouped
-with its bucket-filtered doc stats (doc_id, tfnorm, const). All of a term's
+with its filtered doc stats (doc_id, tfnorm, const, bucket). All of a term's
 postings for a doc range are co-located by the index layout, and Arrow hands
 each posting list to the kernel as an int64 array, so the kernel localizes
 every needed list once, scatter-adds each query's float32 term
 contributions into a dense per-segment float64 accumulator (term-at-a-time,
-exhaustive) and emits ≤ pool rows per (segment, query). Every search and
-every batch is scored here, whatever the query terms' Σdf; one search is a
-batch of one (SearchEngine.score_bucket).
+exhaustive) and emits ≤ pool rows per (segment, query, bucket). `bucket` is
+a doc's day-bucket in the split_time ladder (0 for every doc of a single
+range), so one pass scores a whole ladder. Every search and every batch is
+scored here, whatever the query terms' Σdf; one search is a batch of one
+(SearchEngine.score_bucket).
 
 Design note — no block-max skipping. Per-block (last docID, min doc length)
 metadata could skip blocks that cannot reach the current top-k, but on a
@@ -34,19 +36,20 @@ def batch_score_kernel(
     docs: pd.DataFrame,
     by_slice: dict[int, dict[str, dict[str, float]]],
     seg_size: int,
-    pools: dict[str, int],
+    pool: int,
 ) -> pd.DataFrame:
     """Per-(segment, query-slice) batched scoring: localize every needed
     posting list ONCE, then scatter-add each query's term contributions into
     a dense per-segment accumulator. Float discipline is the pinned spec
     (bm25.py): f32 per-term product, f64 accumulate + const, final f32.
-    Emits ≤ pool rows per (segment, query), in (score desc, doc_id asc)
-    order."""
+    Emits ≤ pool rows per (segment, query, bucket), in (bucket, score desc,
+    doc_id asc) order."""
     empty = pd.DataFrame(
         {
             "query_id": pd.Series(dtype="object"),
             "doc_id": pd.Series(dtype="int64"),
             "score": pd.Series(dtype="float32"),
+            "bucket": pd.Series(dtype="int32"),
         }
     )
     queries = by_slice.get(int(key[1]), {})
@@ -63,6 +66,8 @@ def batch_score_kernel(
     const[local] = docs["const"].to_numpy(dtype=np.float64)
     allowed = np.zeros(n_local, dtype=bool)
     allowed[local] = True
+    bucket = np.zeros(n_local, dtype=np.int32)
+    bucket[local] = docs["bucket"].to_numpy(dtype=np.int32)
 
     ids_by_term: dict[str, np.ndarray] = {}
     for row in postings.itertuples(index=False):
@@ -91,15 +96,19 @@ def batch_score_kernel(
         if idxs.size == 0:
             continue
         scores = (acc[idxs] + const[idxs]).astype(np.float32)
-        # exact (score desc, doc_id asc) order; n_local ≤ seg_size so a full
-        # lexsort is micro-cheap and tiebreak-correct at the pool boundary
-        order = np.lexsort((idxs, -scores))[: pools.get(qid, 0)]
+        # exact (bucket, score desc, doc_id asc) order; n_local ≤ seg_size so
+        # a full lexsort is micro-cheap and tiebreak-correct at the pool
+        # boundary; a row's rank is its offset from its bucket's first row
+        order = np.lexsort((idxs, -scores, bucket[idxs]))
+        b = bucket[idxs[order]]
+        order = order[np.arange(order.size) - np.searchsorted(b, b) < pool]
         frames.append(
             pd.DataFrame(
                 {
                     "query_id": qid,
                     "doc_id": (idxs[order] + base).astype(np.int64),
                     "score": scores[order],
+                    "bucket": bucket[idxs[order]],
                 }
             )
         )
@@ -109,20 +118,19 @@ def batch_score_kernel(
 def wand_score_batch(
     engine,
     w_idf_by_qid: dict[str, dict[str, float]],
-    pools: dict[str, int],
-    from_str: str,
-    to_str: str,
+    pool: int,
+    buckets: list[tuple[str, str]],
     sources: set[str] | None,
     instances: set[str] | None,
 ) -> DataFrame:
-    """Per-segment top-`pool` candidates for EVERY query in one cogrouped
-    pass → DataFrame(query_id, doc_id, score f32). Parallelism axis is
-    (segment × query-slice): with few segments (small corpora) the queries
-    are hash-sliced so the kernel still fans out across all executor slots;
-    postings rows are replicated only to the slices whose queries need that
-    term (bounded duplication, factor ≤ n_slices). There are never
-    more slices than queries: an empty slice would only cross-join docs
-    that meet no postings."""
+    """Per-segment top-`pool` candidates of each of `buckets` for EVERY query
+    in one cogrouped pass → DataFrame(query_id, doc_id, score f32, bucket
+    int). Parallelism axis is (segment × query-slice): with few segments
+    (small corpora) the queries are hash-sliced so the kernel still fans out
+    across all executor slots; postings rows are replicated only to the
+    slices whose queries need that term (bounded duplication, factor ≤
+    n_slices). There are never more slices than queries: an empty slice
+    would only cross-join docs that meet no postings."""
     import math
     import zlib
 
@@ -147,11 +155,12 @@ def wand_score_batch(
     postings = filter_terms(engine._postings, all_terms).select(
         "seg", "term", "doc_ids"
     )
-    docs = engine._bucket_docs(from_str, to_str, sources, instances).select(
+    docs = engine._bucket_docs(buckets, sources, instances).select(
         "seg",
         "doc_id",
         "tfnorm",
         engine._const_for(sources, instances).alias("const"),
+        "bucket",
     )
     if n_slices == 1:
         # no query slicing needed (enough segments for full fan-out, or a
@@ -173,10 +182,12 @@ def wand_score_batch(
     seg_size = engine.seg_size
 
     def kernel(key, p, d):
-        return batch_score_kernel(key, p, d, by_slice, seg_size, pools)
+        return batch_score_kernel(key, p, d, by_slice, seg_size, pool)
 
     return (
         postings.groupBy("seg", "slice")
         .cogroup(docs.groupBy("seg", "slice"))
-        .applyInPandas(kernel, schema="query_id string, doc_id long, score float")
+        .applyInPandas(
+            kernel, schema="query_id string, doc_id long, score float, bucket int"
+        )
     )

@@ -204,3 +204,40 @@ def test_kernel_conf_scopes_keyed_per_session(spark):
         assert s2.conf.get(key) == base2
         assert spark.conf.get(key) == "16k"
     assert spark.conf.get(key) == base1
+
+
+def _jobs_run(spark, fn) -> int:
+    """The number of Spark jobs fn() runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.spark
+def test_split_time_batch_runs_two_plans(corpus):
+    """The day-bucket ladder is at most two plans, the first bucket and then
+    every later one at once: a split_time batch runs as many Spark jobs over
+    2 ladder buckets as over all 11, and at most twice the jobs of the same
+    batch over one range."""
+    engine, oracle = corpus
+    queries = dict(REFERENCE_QUERIES)
+    # the full ladder really visits more buckets than the short one
+    assert any(
+        oracle.search(t, split_time=True) != oracle.search(t, split_time=True, last_days=40)
+        for t in queries.values()
+    )
+    engine.search_batch(queries, split_time=True)  # warm-up
+    one = _jobs_run(engine.spark, lambda: engine.search_batch(queries))
+    short = _jobs_run(
+        engine.spark, lambda: engine.search_batch(queries, split_time=True, last_days=40)
+    )
+    full = _jobs_run(engine.spark, lambda: engine.search_batch(queries, split_time=True))
+    assert full == short <= 2 * one, (one, short, full)

@@ -78,6 +78,32 @@ def test_engine_matches_oracle(corpus, qname):
 
 
 @pytest.mark.spark
+def test_split_time_explain_matches_oracle(corpus):
+    """search(split_time=True, explain=True): the hits equal the oracle's
+    ladder, and each .ngrams triple is (query rerank tokens, the doc's
+    rerank_tokens as the index stores them, their common tokens)."""
+    from pyspark.sql import functions as F
+
+    engine, oracle = corpus
+    for qname, text in sorted(REFERENCE_QUERIES.items()):
+        got = engine.search(text, split_time=True, explain=True)
+        assert_hits_equal(got, oracle.search(text, split_time=True), qname)
+        _, q_rerank = engine.prepare(text)
+        stored = {
+            r["doc_id"]: list(r["rerank_tokens"])
+            for r in engine._docs.filter(F.col("doc_id").isin([h.doc_id for h in got]))
+            .select("doc_id", "rerank_tokens")
+            .collect()
+        }
+        for h in got:
+            similar = stored[h.doc_id]
+            common = [t for t in q_rerank if t in set(similar)]
+            assert h.ngrams == (q_rerank, similar, common), (qname, h.doc_id)
+            assert set(similar) == oracle.idx.rerank_tokens[h.doc_id], (qname, h.doc_id)
+            assert len(common) == h.n_common, (qname, h.doc_id)
+
+
+@pytest.mark.spark
 def test_empty_and_stopword_queries(corpus):
     engine, oracle = corpus
     for text in ["the and for", "a b", "...", "xyzzyplugh"]:

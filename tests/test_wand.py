@@ -66,9 +66,10 @@ def test_wand_matches_oracle(corpus, qname):
 
 def test_batch_score_kernel_unit():
     """Kernel-level unit test without Spark: one segment, synthetic postings
-    (doc_ids arrays), two queries in one slice sharing a term, each cut to
-    its own pool in exact (score desc, doc_id asc) order — including ties
-    that straddle the pool boundary."""
+    (doc_ids arrays), two queries in one slice sharing a term, docs spread
+    over 3 day buckets. Each (query, bucket) is cut to the pool in exact
+    (score desc, doc_id asc) order — including ties that straddle the pool
+    boundary — and a single-bucket input is cut over the whole segment."""
     import numpy as np
     import pandas as pd
 
@@ -79,44 +80,60 @@ def test_batch_score_kernel_unit():
     n_docs, seg_size, avgdl = 500, 1024, 42.5
     dlq = rng.integers(5, 120, n_docs).astype(np.int64)
     tfn = bm25.tfnorm_np(dlq, avgdl)
-    docs = pd.DataFrame(
-        {"doc_id": np.arange(n_docs), "tfnorm": tfn, "const": np.ones(n_docs)}
-    )
+    bucket = rng.integers(0, 3, n_docs).astype(np.int32)
     ids_by_term = {
-        t: np.sort(rng.choice(n_docs, size=200, replace=False)) for t in ("aaa", "bbb")
+        t: np.sort(rng.choice(n_docs, size=300, replace=False)) for t in ("aaa", "bbb")
     }
     postings = pd.DataFrame(
         [{"term": t, "doc_ids": ids} for t, ids in ids_by_term.items()]
     )
     queries = {"q1": {"aaa": 2.0, "bbb": 1.0}, "q2": {"bbb": 1.5}}
 
-    def ranked(w_idf):
+    def ranked(w_idf, in_bucket):
         truth = {}
         for term, w in w_idf.items():
             for d in ids_by_term[term]:
-                truth[int(d)] = truth.get(int(d), 0.0) + float(
-                    np.float32(np.float32(w) * tfn[d])
-                )
+                if in_bucket(d):
+                    truth[int(d)] = truth.get(int(d), 0.0) + float(
+                        np.float32(np.float32(w) * tfn[d])
+                    )
         return sorted(
             ((np.float32(s + 1.0), d) for d, s in truth.items()),
             key=lambda t: (-t[0], t[1]),
         )
 
-    exp = {qid: ranked(w) for qid, w in queries.items()}
-    # q2 scores by one term, so docs of equal dlq tie: cut q2's pool inside
-    # a tie group, where only the doc_id tiebreak decides membership
-    pool2 = next(
-        i for i in range(20, len(exp["q2"])) if exp["q2"][i - 1][0] == exp["q2"][i][0]
-    )
-    pools = {"q1": 50, "q2": pool2}
+    def check(got, exp, pool):
+        for (qid, b), truth in exp.items():
+            rows = got[(got["query_id"] == qid) & (got["bucket"] == b)]
+            assert rows["doc_id"].tolist() == [d for _, d in truth[:pool]], (qid, b)
+            assert [float(x) for x in rows["score"]] == pytest.approx(
+                [float(s) for s, _ in truth[:pool]], rel=1e-6
+            ), (qid, b)
+        assert len(got) == sum(min(pool, len(t)) for t in exp.values())
 
-    got = batch_score_kernel((0, 0), postings, docs, {0: queries}, seg_size, pools)
-    for qid, pool in pools.items():
-        rows = got[got["query_id"] == qid]
-        assert rows["doc_id"].tolist() == [d for _, d in exp[qid][:pool]], qid
-        assert [float(x) for x in rows["score"]] == pytest.approx(
-            [float(s) for s, _ in exp[qid][:pool]], rel=1e-6
-        ), qid
+    exp = {
+        (qid, b): ranked(w, lambda d, b=b: bucket[d] == b)
+        for qid, w in queries.items()
+        for b in range(3)
+    }
+    # q2 scores by one term, so docs of equal dlq tie: cut the pool inside
+    # a tie group of bucket 0, where only the doc_id tiebreak decides
+    # membership
+    q2 = exp[("q2", 0)]
+    pool = next(i for i in range(20, len(q2)) if q2[i - 1][0] == q2[i][0])
+    docs = pd.DataFrame(
+        {
+            "doc_id": np.arange(n_docs),
+            "tfnorm": tfn,
+            "const": np.ones(n_docs),
+            "bucket": bucket,
+        }
+    )
+    check(batch_score_kernel((0, 0), postings, docs, {0: queries}, seg_size, pool), exp, pool)
+
+    one = docs.assign(bucket=np.zeros(n_docs, dtype=np.int32))
+    exp_one = {(qid, 0): ranked(w, lambda d: True) for qid, w in queries.items()}
+    check(batch_score_kernel((0, 0), postings, one, {0: queries}, seg_size, pool), exp_one, pool)
 
 
 @pytest.mark.spark
@@ -132,7 +149,7 @@ def test_single_query_kernel_plans_no_cross_join(spark, tmp_path):
     assert engine.n_docs <= engine.seg_size  # one segment
     assert spark.sparkContext.defaultParallelism > 1
     w_idf, _ = engine.prepare("zika dengue saude")
-    df = wand_score_batch(engine, {"q": w_idf}, {"q": 30}, "19000101", "29991231", None, None)
+    df = wand_score_batch(engine, {"q": w_idf}, 30, [("19000101", "29991231")], None, None)
     plan = _plan(df)
     assert "NestedLoopJoin" not in plan and "Cartesian" not in plan, plan
 
