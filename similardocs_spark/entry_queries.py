@@ -113,8 +113,10 @@ FROM per
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure BM25 text score (no MUST constants) for BM25_QUERY over documents."""
-    toks = _toks(spark, sf_dir).cache()  # reused by df-agg, scoring join
-    stats = q_doc_stats(spark, sf_dir).cache()  # doc_id, dl, dlq
+    # both feed two subtrees: toks the df-agg and the scoring join, stats
+    # (doc_id, dl, dlq) the corpus agg and the tfnorm join
+    toks = _toks(spark, sf_dir).localCheckpoint(eager=False)
+    stats = q_doc_stats(spark, sf_dir).localCheckpoint(eager=False)
     corpus = stats.agg(
         F.count("*").alias("n_docs"), (F.sum("dl") / F.count("*")).alias("avgdl")
     )

@@ -251,17 +251,24 @@ def read_committed(
     frame of `schema` while the table is absent or uncommitted."""
     if not (io.exists(spark, path) and io.committed(spark, path)):
         return local_df(spark, [], schema)
+    # a replayed tick must see exactly the state the original run saw,
+    # minus any partial rows it wrote itself. On parquet, list the other
+    # partitions rather than filter: a filter on the partition column
+    # reads as selective to the optimizer, which then builds a runtime
+    # bloom filter over this read (1 MiB for an unknown row count) and
+    # ships it inside every task of the join it feeds
+    listed = exclude is not None and io.mode == "parquet"
     try:
-        df = io.read(spark, path)
+        df = spark.read.option("basePath", path).parquet(*[
+            f"{path}/{d}" for d in os.listdir(path)
+            if d.startswith(f"{col}=") and d != f"{col}={exclude}"
+        ]) if listed else io.read(spark, path)
     except AnalysisException:
         # committed-but-empty table (zero-row partitioned write leaves a
-        # marker and no data files — schema inference has nothing to read)
+        # marker and no data files), or no partition left to list — schema
+        # inference has nothing to read
         return local_df(spark, [], schema)
-    if exclude is not None:
-        # partition-pruned: a replayed tick must see exactly the state
-        # the original run saw, minus any partial rows it wrote itself
-        df = df.filter(F.col(col) != exclude)
-    return df
+    return df if exclude is None or listed else df.filter(F.col(col) != exclude)
 
 
 def replace_staged(

@@ -125,7 +125,7 @@ def _band_buckets(
     ]
     # ONE pass over sig (posexplode of the key array), not n_bands unioned
     # selects: each union branch re-evaluated the whole signature lineage
-    # when sig was not persisted (measured 4x tokenize→shingle→minhash in
+    # when sig was not materialized (measured 4x tokenize→shingle→minhash in
     # the incremental path's corpus side). Identical rows: band = position.
     return sig.select(
         "doc_id", F.posexplode(F.array(*keys)).alias("band", "key")
@@ -192,12 +192,11 @@ def minhash_lsh_pairs(
     want_est = estimate_jaccard or min_jaccard is not None
     sig = minhash_signatures(reps, text_col, n_hashes)
     if want_est:
-        # sig feeds three subtrees (band rows + both estimate joins); persist
-        # the compact signature table (n_hashes hex strings per doc — far
-        # smaller than the texts) so the tokenize→shingle→minhash lineage
-        # still runs exactly once. ContextCleaner unpersists when the result
-        # DataFrame is dropped.
-        sig = sig.persist()
+        # sig feeds three subtrees (band rows + both estimate joins);
+        # checkpoint the compact signature table (n_hashes hex strings per
+        # doc — far smaller than the texts) so the tokenize→shingle→minhash
+        # lineage still runs exactly once.
+        sig = sig.localCheckpoint(eager=False)
     all_bands = _band_buckets(sig, n_hashes, n_bands)
     capped = (
         all_bands.withColumn(
@@ -292,7 +291,7 @@ def deduplicate(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # only docs that appear in some edge can change label — everything else
     # keeps itself; iterate over the (small) edge-touched vertex set only
@@ -300,72 +299,66 @@ def deduplicate(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    try:
-        converged = False
-        n_iter = 0
-        for _ in range(max_iter):
-            n_iter += 1
-            nbr_min = (
-                edges.join(
-                    labels.select(
-                        F.col("doc_id").alias("dst"), F.col("label").alias("nl")
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.min("nl").alias("nbr"))
+    converged = False
+    n_iter = 0
+    for _ in range(max_iter):
+        n_iter += 1
+        nbr_min = (
+            edges.join(
+                labels.select(
+                    F.col("doc_id").alias("dst"), F.col("label").alias("nl")
+                ),
+                "dst",
             )
-            # ONE join per pass: carry the old label through the update so
-            # convergence detection is a marker scan over the (eagerly
-            # materialized) localCheckpoint blocks — no second join job
-            stepped = (
-                labels.join(nbr_min.withColumnRenamed("src", "doc_id"), "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.col("label").alias("_old"),
-                    F.least(F.col("label"), F.coalesce("nbr", F.col("label"))).alias(
-                        "label"
-                    ),
-                )
-                .localCheckpoint()  # truncate iterative lineage (eager)
-            )
-            changed = (
-                stepped.filter(F.col("label") != F.col("_old")).limit(1).count()
-            )
-            new_labels = stepped.select("doc_id", "label")
-            labels.unpersist()
-            labels = new_labels.persist()
-            if changed == 0:
-                converged = True
-                break
-        if stats is not None:
-            stats.update({"iterations": n_iter, "converged": converged})
-        if not converged:
-            # no-silent-caps: a component with propagation distance > max_iter
-            # keeps >1 representative — surface it (mirrors the
-            # lsh_oversized_buckets observability pattern)
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "deduplicate: min-label propagation hit max_iter=%d with labels "
-                "still changing; some connected components may retain duplicate "
-                "representatives. Raise max_iter for deeper components.",
-                max_iter,
-            )
-        # non-keeper = label smaller than own id; reps not touched by any
-        # edge survive implicitly (anti-join against the dropped set, which
-        # is materialized so both caches can be released here)
-        dropped = (
-            labels.filter(F.col("label") != F.col("doc_id"))
-            .select("doc_id")
-            .localCheckpoint()
+            .groupBy("src")
+            .agg(F.min("nl").alias("nbr"))
         )
-        labels.unpersist()
-        return reps.join(dropped, "doc_id", "left_anti")
-    finally:
-        edges.unpersist()
+        # ONE join per pass: carry the old label through the update so
+        # convergence detection is a marker scan over the (eagerly
+        # materialized) localCheckpoint blocks — no second join job; the
+        # next pass reads its labels from the same blocks
+        stepped = (
+            labels.join(nbr_min.withColumnRenamed("src", "doc_id"), "doc_id", "left")
+            .select(
+                "doc_id",
+                F.col("label").alias("_old"),
+                F.least(F.col("label"), F.coalesce("nbr", F.col("label"))).alias(
+                    "label"
+                ),
+            )
+            .localCheckpoint()  # truncate iterative lineage (eager)
+        )
+        changed = stepped.filter(F.col("label") != F.col("_old")).limit(1).count()
+        labels = stepped.select("doc_id", "label")
+        if changed == 0:
+            converged = True
+            break
+    if stats is not None:
+        stats.update({"iterations": n_iter, "converged": converged})
+    if not converged:
+        # no-silent-caps: a component with propagation distance > max_iter
+        # keeps >1 representative — surface it (mirrors the
+        # lsh_oversized_buckets observability pattern)
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "deduplicate: min-label propagation hit max_iter=%d with labels "
+            "still changing; some connected components may retain duplicate "
+            "representatives. Raise max_iter for deeper components.",
+            max_iter,
+        )
+    # non-keeper = label smaller than own id; reps not touched by any edge
+    # survive implicitly (anti-join against the dropped set, eagerly
+    # checkpointed: the result's lineage ends there, so it pins only the
+    # dropped ids, not the last pass's labels)
+    dropped = (
+        labels.filter(F.col("label") != F.col("doc_id"))
+        .select("doc_id")
+        .localCheckpoint()
+    )
+    return reps.join(dropped, "doc_id", "left_anti")
 
 
 def simhash32(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -442,9 +435,8 @@ def ngram_jaccard_pairs(
         ).alias("shingle"),
     ).distinct()
     # sh feeds the per-doc counts AND the corpus side of the intersection
-    # join — persist so the tokenize→shingle→distinct lineage runs once
-    # (ContextCleaner releases it with the result)
-    sh = sh.persist()
+    # join — checkpoint so the tokenize→shingle→distinct lineage runs once
+    sh = sh.localCheckpoint(eager=False)
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     probe = sh.filter(F.col("doc_id").isin(probe_ids)).withColumnRenamed(
         "doc_id", "probe_id"
@@ -582,12 +574,11 @@ def simhash_near_dup_pairs(
         bits = _resolve_simhash_bits(docs, bits)
         # the signature lineage (tokenize → per-token votes → per-doc bit
         # assembly) feeds THREE subtrees: the band rows and both verify
-        # joins — persist the compact (doc_id, simhash) table so it runs
-        # once (same convention as minhash_lsh_pairs' sig persist;
-        # ContextCleaner releases it with the result)
+        # joins — checkpoint the compact (doc_id, simhash) table so it runs
+        # once (same convention as minhash_lsh_pairs' sig checkpoint)
         sh = (
             (simhash32 if bits == SIMHASH_BITS else simhash64)(docs, text_col)
-            .persist()
+            .localCheckpoint(eager=False)
         )
     all_bands = _simhash_bands(sh, max_hamming, bits)
     capped = (

@@ -105,18 +105,20 @@ def bigram_lm_scores(
     """Per-document add-one bigram cross-entropy under an LM fit on
     `lm_docs` (default: `docs` itself). See module docstring."""
     self_lm = lm_docs is None
-    # ONE tokenizer pass: the hashed-gram arrays are persisted (2 longs per
-    # token, disk-backed) and every consumer — unigram/bigram count tables,
-    # V, the scoring stream — reads the cache. The round-6 form re-ran the
+    # ONE tokenizer pass: the hashed-gram arrays are checkpointed (2 longs
+    # per token) and every consumer — unigram/bigram count tables, V, the
+    # scoring stream — reads the blocks. The round-6 form re-ran the
     # tokenize + gram chain per consumer (3 full passes for self-scoring).
-    dh = _hashed_grams(docs, text_col, id_col).persist()
-    lmh = dh if self_lm else _hashed_grams(lm_docs, text_col).persist()
+    dh = _hashed_grams(docs, text_col, id_col).localCheckpoint(eager=False)
+    lmh = dh if self_lm else (
+        _hashed_grams(lm_docs, text_col).localCheckpoint(eager=False)
+    )
 
     uni = lmh.select(F.explode("_h1").alias("h1")).groupBy("h1").agg(
         F.count("*").alias("c1")
     )
-    uni = uni.persist()
-    vocab = uni.count()  # exact V; model-sized job on the cached table
+    uni = uni.localCheckpoint(eager=False)
+    vocab = uni.count()  # exact V; model-sized job on the checkpointed table
 
     big = lmh.select(F.explode("_h2").alias("h2")).groupBy("h2").agg(
         F.count("*").alias("c2")
@@ -209,11 +211,13 @@ def trigram_backoff_scores(
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
 
-    # ONE tokenizer pass (see bigram_lm_scores): persisted hashed-gram
+    # ONE tokenizer pass (see bigram_lm_scores): checkpointed hashed-gram
     # arrays feed all three count tables, V, T AND the scoring stream —
     # the round-6 form ran the tokenize + gram chain five times.
-    dh = _hashed_grams(docs, text_col, id_col, tri=True).persist()
-    lmh = dh if self_lm else _hashed_grams(lm_docs, text_col, tri=True).persist()
+    dh = _hashed_grams(docs, text_col, id_col, tri=True).localCheckpoint(eager=False)
+    lmh = dh if self_lm else (
+        _hashed_grams(lm_docs, text_col, tri=True).localCheckpoint(eager=False)
+    )
 
     def counts(col, name):
         return (
@@ -222,7 +226,7 @@ def trigram_backoff_scores(
             .agg(F.count("*").alias(name))
         )
 
-    uni = counts("_h1", "c1").persist()
+    uni = counts("_h1", "c1").localCheckpoint(eager=False)
     vocab = uni.count()
     total = lmh.select(F.sum("_nw").alias("t")).collect()[0]["t"] or 0
 

@@ -53,7 +53,7 @@ all flagged, identical outputs from both strategies). Round-6 numbers
 consumer): broadcast 277 s / 637 MB shuffle, shuffle-join 220 s /
 1701 MB. Round 7 rebuilt the projection — tokens hashed once per row,
 window ids combined pairwise over longs, the compact (doc_id, n_tokens,
-window-ids) rows persisted on the broadcast path so the chain runs ONCE
+window-ids) rows materialized on the broadcast path so the chain runs ONCE
 — see CORPUS_OPS_SCALE.json for the re-measured walls (broadcast now
 beats the shuffle-join strategy while keeping its ~2.7× smaller
 exchange).
@@ -142,12 +142,11 @@ def duplicate_spans(
     if broadcast:
         # the window projection feeds BOTH the frequency pass and the
         # attribution probe; with the dup set broadcast there is no common
-        # exchange to reuse, so persist the compact (doc_id, n_tokens, _h)
-        # rows — the chain runs ONCE and the probe/stats read the cache
-        # (round-6 measured the un-persisted form computing the chain
-        # twice; ContextCleaner unpersists when the result goes out of
-        # scope, same convention as operators/dedup.py)
-        base = base.persist()
+        # exchange to reuse, so checkpoint the compact (doc_id, n_tokens,
+        # _h) rows — the chain runs ONCE and the probe/stats read the
+        # blocks (round-6 measured the unmaterialized form computing the
+        # chain twice; the rule is in similardocs_spark/util.py)
+        base = base.localCheckpoint(eager=False)
     wins = base.select(
         "doc_id", F.posexplode("_h").alias("pos", "h")
     )
@@ -247,9 +246,9 @@ def strip_duplicate_spans(
     """
     base = _window_df(docs, n, text_col)
     if broadcast:
-        # chain feeds the canon agg AND the occurrence probe — persist the
-        # compact window rows so it runs once (same note as duplicate_spans)
-        base = base.persist()
+        # chain feeds the canon agg AND the occurrence probe — checkpoint the
+        # compact window rows so it runs once (the reuse rule in util.py)
+        base = base.localCheckpoint(eager=False)
     wins = base.select("doc_id", F.posexplode("_h").alias("pos", "h"))
     canon = (
         wins.groupBy("h")

@@ -435,12 +435,13 @@ def top_ngrams(
     hashed = docs.select(
         F.explode(F.transform(grams, lambda g: F.xxhash64(g))).alias("g")
     )
-    # persist: the hashed count table feeds the k-th-count driver action AND
-    # the candidate filter — unpersisted, the gram explode + exchange ran
-    # twice (actions cannot share shuffles). The table is distinct-gram-sized
-    # bare longs, disk-backed; at any scale that is cheaper than a second
-    # full text pass. ContextCleaner releases it with the result.
-    cnt = hashed.groupBy("g").agg(F.count("*").alias("cnt")).persist()
+    # checkpoint: the hashed count table feeds the k-th-count driver action
+    # AND the candidate filter — unmaterialized, the gram explode + exchange
+    # ran twice (actions cannot share shuffles). The table is
+    # distinct-gram-sized bare longs; at any scale that is cheaper than a
+    # second full text pass.
+    cnt = hashed.groupBy("g").agg(F.count("*").alias("cnt"))
+    cnt = cnt.localCheckpoint(eager=False)
     kth = cnt.orderBy(F.desc("cnt")).limit(k).agg(F.min("cnt")).collect()[0][0]
     if kth is None:
         from ..util import local_df
@@ -516,9 +517,10 @@ def top_ngrams_approx(
     sampled = occ.filter(
         uniform32_col(key, seed) < int(round(p * 2**32))
     ).select(F.xxhash64("gram").alias("g"))
-    # persist: feeds the boundary action AND the candidate filter (see
-    # top_ngrams); sample-count-sized bare longs
-    scnt = sampled.groupBy("g").agg(F.count("*").alias("cnt")).persist()
+    # checkpoint: feeds the boundary action AND the candidate filter (the
+    # reuse rule in util.py); sample-count-sized bare longs
+    scnt = sampled.groupBy("g").agg(F.count("*").alias("cnt"))
+    scnt = scnt.localCheckpoint(eager=False)
     boundary = (
         scnt.orderBy(F.desc("cnt"))
         .limit(cand_factor * k)

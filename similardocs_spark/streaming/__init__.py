@@ -141,7 +141,8 @@ def gated_ingest(
         # existence gate, batch-shaped: only the batch's own ids can match,
         # so semi-join the state down to that subset FIRST (state streamed
         # map-side against the broadcast batch ids — no state shuffle),
-        # then flag arrivals with one small broadcast join
+        # then flag arrivals with one small broadcast join. Eager: the flags
+        # are a snapshot of the state taken before this tick commits to it
         ids = state.ids(exclude=label)
         key = ids.columns[0]
         seen = ids.join(F.broadcast(batch_df.select(key)), key, "left_semi")

@@ -1,4 +1,19 @@
-"""Small shared utilities for driver-side tables and scoped execution confs."""
+"""Small shared utilities for driver-side tables and scoped execution confs.
+
+The package's one materialization rule:
+  - A frame that one query computes once and reads from several subtrees
+    or actions is reused through `df.localCheckpoint(eager=False)`. The
+    first job that reads it writes its blocks; once the result is dropped,
+    the ContextCleaner releases them. Nothing enters the CacheManager, so
+    nothing outlives the query.
+  - An eager `localCheckpoint()` is used only where a lazy one cannot do
+    the job, and its comment says which reason holds: it pins a sampled
+    range partitioner, it cuts an iterative lineage, or it snapshots rows
+    before a commit overwrites the table they are read from.
+  - `persist()`/`cache()` belong to the serving engine's `cache=True`
+    tables alone (`query/engine.py`), which are meant to outlive a query.
+`tests/test_materialization_rule.py` fails on any other persist, cache or
+unpersist call."""
 from __future__ import annotations
 
 import threading

@@ -21,6 +21,37 @@ def spark():
     s.stop()
 
 
+def _persistent_rdds(spark, floor: int = 0) -> int:
+    """RDDs the context still holds persisted, read after dropped frames
+    are collected. The context holds persisted RDDs weakly, so one that
+    nothing references leaves once the JVM collects it; a CacheManager
+    entry references its RDD and never leaves. Python releases dropped JVM
+    objects from a py4j worker that wakes once a second, and each read
+    returns a map that pins every RDD in it until that worker releases
+    it. So poll: `gc.collect()`, wait one worker wake, `System.gc()`, then
+    re-read; stop at `floor`, once the count stops falling, or after 5 s."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    start, last = time.monotonic(), None
+    while True:
+        gc.collect()
+        time.sleep(1.1)
+        sc._jvm.System.gc()
+        n = sc._jsc.getPersistentRDDs().size()
+        if n <= floor or (last is not None and n >= last):
+            return n
+        if time.monotonic() - start > 5.0:
+            return n
+        last = n
+
+
+@pytest.fixture(scope="session")
+def persistent_rdds():
+    return _persistent_rdds
+
+
 class SwapCrash(Exception):
     """An injected crash inside `catalog.replace_staged` — not an OSError,
     so no code path swallows it."""

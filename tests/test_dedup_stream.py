@@ -239,46 +239,63 @@ def test_tick_commit_crash_replays_under_same_label(
     assert labels == set(crashed)
 
 
-def _persistent_rdds(spark) -> int:
-    """RDDs the context still holds persisted. An RDD nothing references
-    leaves the context's (weak) registry once the JVM collects it; a
-    CacheManager entry never does. Python releases dropped JVM objects
-    from a py4j worker that polls once a second, and this count itself
-    returns a map of every persisted RDD, so the JVM collects only after
-    that worker has caught up."""
-    import gc
-    import time
+def _dag_log(spark):
+    """Start copying what the DAGScheduler logs into a buffer; returns
+    `stop()`, which detaches the copy and returns the lines."""
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    logger = jvm.org.apache.logging.log4j.LogManager.getContext(False).getLogger(
+        "org.apache.spark.scheduler.DAGScheduler"
+    )
+    buf = jvm.java.io.StringWriter()
+    app = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.createDefaultLayout(), None, buf,
+        "dag-log-copy", False, True,
+    )
+    app.start()
+    logger.addAppender(app)
 
-    gc.collect()
-    time.sleep(2.5)
-    spark.sparkContext._jvm.System.gc()
-    return len(spark.sparkContext._jsc.getPersistentRDDs())
+    def stop() -> list[str]:
+        logger.removeAppender(app)
+        app.stop()
+        return buf.toString().splitlines()
+
+    return stop
 
 
 @pytest.mark.spark
 @pytest.mark.parametrize("kind", ["text", "vector"])
-def test_ticks_pin_no_persisted_rdds(spark, tmp_path, kind):
-    """A tick releases everything it persisted: after the first tick,
+def test_ticks_pin_no_persisted_rdds(spark, tmp_path, kind, persistent_rdds):
+    """A tick releases everything it materialized: after the first tick,
     three more landing batches (each with a near-dup pair, so the pair
-    estimate or verify join runs) leave the persisted-RDD count flat."""
+    estimate or verify join runs) leave the persisted-RDD count flat. And
+    no stage of a tick that reads a committed state ships a task binary
+    large enough for Spark to warn about (a runtime bloom filter built
+    over the state read once rode in every such task, 2.1–4.1 MiB)."""
     from similardocs_spark.streaming.ann_stream import run_embedding_ingest
     from similardocs_spark.streaming.dedup_stream import run_dedup_ingest
 
     landing = str(tmp_path / "landing")
     dirs = [str(tmp_path / n) for n in ("corpus", "state", "ckpt")]
     counts = []
-    for t in range(4):
-        if kind == "text":
-            _land(spark, landing, [
-                (10 * t + 1, f"{LONG} tick{t}"),
-                (10 * t + 2, f"{LONG} tick{t}s"),
-            ])
-            run_dedup_ingest(spark, landing, *dirs, min_jaccard=0.5)
-        else:
-            _land_vectors(spark, landing, [
-                (10 * t + 1, _unit_vec(t)),
-                (10 * t + 2, _unit_vec(t, eps=0.01)),
-            ])
-            run_embedding_ingest(spark, landing, *dirs, dim=16, bits=6)
-        counts.append(_persistent_rdds(spark))
+    stop_log = _dag_log(spark)
+    try:
+        for t in range(4):
+            if kind == "text":
+                _land(spark, landing, [
+                    (10 * t + 1, f"{LONG} tick{t}"),
+                    (10 * t + 2, f"{LONG} tick{t}s"),
+                ])
+                run_dedup_ingest(spark, landing, *dirs, min_jaccard=0.5)
+            else:
+                _land_vectors(spark, landing, [
+                    (10 * t + 1, _unit_vec(t)),
+                    (10 * t + 2, _unit_vec(t, eps=0.01)),
+                ])
+                run_embedding_ingest(spark, landing, *dirs, dim=16, bits=6)
+            counts.append(persistent_rdds(spark))
+    finally:
+        log = stop_log()
     assert max(counts[1:]) <= counts[0], counts
+    large = [line for line in log if "large task binary" in line]
+    assert not large, large

@@ -29,19 +29,28 @@ def _canon(rows, cols):
 
 
 @pytest.mark.spark
-def test_all_pairs(spark, duck):
+def test_all_pairs(spark, duck, persistent_rdds):
+    """Every declared query matches its oracle, and none leaves a persisted
+    RDD behind: after its result is dropped, the persisted-RDD count is
+    back where it was before the query ran."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
     sqls = entry.oracle_sql()
     assert set(sqls) <= set(qs)
-    failures = []
+    failures, leaks = [], []
+    floor = persistent_rdds(spark)
     for name, fn in qs.items():
-        if name not in sqls:
-            continue
         sdf = fn(spark, SF_DIR)
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
+        del sdf
+        held = persistent_rdds(spark, floor)
+        if held != floor:
+            leaks.append(name)
+            floor = held
+        if name not in sqls:
+            continue
         res = duck.execute(sqls[name])
         dcols = [d[0] for d in res.description]
         drows = res.fetchall()
@@ -56,6 +65,7 @@ def test_all_pairs(spark, duck):
             diff = [(x, y) for x, y in zip(a, b) if x != y][:5]
             failures.append((name, "values", diff))
     assert not failures, failures
+    assert not leaks, f"queries that left persisted RDDs: {leaks}"
 
 
 @pytest.mark.spark

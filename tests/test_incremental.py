@@ -108,13 +108,9 @@ def test_incremental_merge_matches_oracle(spark, tmp_path):
         assert_hits_equal(got, exp, f"incremental {q}")
 
 
-@pytest.mark.spark
-def test_incremental_crash_repair(spark, tmp_path, monkeypatch):
-    """A merge that dies between the staging write and the live commit leaves
-    the live table's pre-image intact; resume_incremental redoes the commit
-    from staging and converges to the uninterrupted result."""
-    import similardocs_spark.index.incremental as I
-
+def _crash_base_delta(spark):
+    """A 40-conversation base and a delta that updates 6 of them and
+    inserts 4."""
     base = transcripts_df(spark, n_convs=40, seed=42)
     delta = (
         base.filter(F.col("conv_id") < "conv00000006")
@@ -125,6 +121,17 @@ def test_incremental_crash_repair(spark, tmp_path, monkeypatch):
             "conv_id", F.concat(F.lit("nv"), "conv_id")
         )
     )
+    return base, delta
+
+
+@pytest.mark.spark
+def test_incremental_crash_repair(spark, tmp_path, monkeypatch):
+    """A merge that dies between the staging write and the live commit leaves
+    the live table's pre-image intact; resume_incremental redoes the commit
+    from staging and converges to the uninterrupted result."""
+    import similardocs_spark.index.incremental as I
+
+    base, delta = _crash_base_delta(spark)
 
     root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
     for root in (root_a, root_b):
@@ -160,6 +167,101 @@ def test_incremental_crash_repair(spark, tmp_path, monkeypatch):
     # postings equality too (repair rebuilt the affected segments)
     assert _postings_rows(spark, root_b) == _postings_rows(spark, root_a)
     assert I.resume_incremental(spark, paths_b) == {"repaired_segs": 0}  # no-op
+
+
+# the writes of `incremental._commit_staged`, in order, and the ParquetIO
+# call each one makes
+COMMIT_WRITES = [
+    ("docs", "overwrite_dynamic"),
+    ("postings", "overwrite_dynamic"),
+    ("stats", "overwrite"),
+    ("terms", "overwrite"),
+    ("meta_stats", "overwrite"),
+    ("staging_drop", "drop"),
+]
+
+
+class CommitCrash(Exception):
+    """An injected crash inside `incremental._commit_staged`."""
+
+
+def _index_state(spark, root):
+    """What an index answers from: the docs, postings, stats, terms and
+    meta_stats rows (sorted) and the search hits for QUERIES."""
+    tables = {
+        name: sorted(
+            (tuple(r) for r in spark.read.parquet(os.path.join(root, name)).collect()),
+            key=repr,
+        )
+        for name in ("docs", "postings", "stats", "terms", "meta_stats")
+    }
+    engine = SearchEngine(spark, IndexPaths(root), PINNED_TODAY, END_DAYS_AGO)
+    hits = {q: [tuple(r) for r in engine.search(q)] for q in QUERIES}
+    return tables, hits
+
+
+@pytest.fixture(scope="module")
+def commit_twin(spark, tmp_path_factory):
+    """A built base index, the crash delta, and the state an uninterrupted
+    update of the base with it leaves."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("commit_twin")
+    base, delta = _crash_base_delta(spark)
+    build_index(spark, base, str(root / "base"), seg_size=16)
+    shutil.copytree(root / "base", root / "twin")
+    incremental_update(spark, IndexPaths(str(root / "twin")), delta)
+    return str(root / "base"), delta, _index_state(spark, str(root / "twin"))
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("at", range(len(COMMIT_WRITES)), ids=[w for w, _ in COMMIT_WRITES])
+def test_commit_crash_matrix(spark, tmp_path, monkeypatch, commit_twin, at):
+    """A crash at each write of the incremental commit in turn (instead of
+    that write): resume_incremental converges to the same tables and the
+    same search hits as the uninterrupted update."""
+    import shutil
+
+    import similardocs_spark.index.incremental as I
+    from similardocs_spark.index.catalog import ParquetIO
+
+    base, delta, want = commit_twin
+    root = str(tmp_path / "idx")
+    shutil.copytree(base, root)
+    inside, done = [], []
+    real_commit = I._commit_staged
+
+    def commit(*args, **kwargs):
+        inside.append(True)
+        try:
+            return real_commit(*args, **kwargs)
+        finally:
+            inside.clear()
+
+    def counted(method):
+        real = getattr(ParquetIO, method)
+
+        def write(self, *args, **kwargs):
+            if inside:
+                if len(done) == at:
+                    raise CommitCrash(COMMIT_WRITES[at][0])
+                done.append(method)
+            return real(self, *args, **kwargs)
+
+        return write
+
+    monkeypatch.setattr(I, "_commit_staged", commit)
+    for method in {m for _, m in COMMIT_WRITES}:
+        monkeypatch.setattr(ParquetIO, method, counted(method))
+    with pytest.raises(CommitCrash):
+        incremental_update(spark, IndexPaths(root), delta)
+    monkeypatch.undo()
+    assert done == [m for _, m in COMMIT_WRITES[:at]]
+
+    assert I.resume_incremental(spark, IndexPaths(root))["repaired_segs"] > 0
+    assert not os.path.exists(os.path.join(root, "docs.staging"))
+    assert _index_state(spark, root) == want
+    assert I.resume_incremental(spark, IndexPaths(root)) == {"repaired_segs": 0}
 
 
 @pytest.mark.spark
