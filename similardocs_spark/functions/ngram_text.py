@@ -16,7 +16,10 @@ asc), and the top `num_tokens` are joined with single spaces in rank order.
 """
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,7 +34,10 @@ from ..textnorm import (
     java_trim,
     uniform_string,
 )
-from .tokenize import _token_frame
+from .tokenize import _arrow_strings, _first_k_per_row, _rows_to_lists, _token_keys, _token_stream
+
+# every char Python's str.strip() removes (str.isspace(); all are <= U+3000)
+_PY_WS = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
 
 
 def token_stream(text: str) -> list[str]:
@@ -70,31 +76,20 @@ def ngram_text(text: str, num_tokens: int) -> str | None:
 
 
 def _ngram_text_series(texts: pd.Series, num_tokens: int) -> pd.Series:
-    """Vectorized ngram_text over a batch: the tokenize.py explode-frame
-    pattern, but counting PRE-dedup frequencies via groupby(row, tok) and
-    ranking by (freq desc, first-occurrence asc). No per-row Python loop —
-    parity with the scalar `ngram_text` is pinned by tests (incl. Hypothesis)."""
+    """Vectorized ngram_text over a batch: the tokenizer's Arrow token
+    stream, with PRE-dedup frequency and first occurrence per (row, token)
+    counted in numpy and ranked (freq desc, first-occurrence asc). Parity
+    with the scalar `ngram_text` is pinned by tests (incl. Hypothesis)."""
     # scalar form does Python str.strip() before tokenizing (strips a few
     # non-Java-ws chars like NBSP at the edges) — replicate exactly
-    texts = texts.fillna("").str.strip()
-    frame = _token_frame(texts)
-    out = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-    if not len(frame):
-        return out
-    frame = frame.reset_index(drop=True)
-    frame["pos"] = frame.index  # stream order is global-monotone per row
-    stats = (
-        frame.groupby(["row", "tok"], sort=False)["pos"]
-        .agg(freq="size", first="min")
-        .reset_index()
-    )
-    stats = stats.sort_values(
-        ["row", "freq", "first"], ascending=[True, False, True], kind="stable"
-    )
-    top = stats.groupby("row", sort=False).head(num_tokens)
-    joined = top.groupby("row", sort=False)["tok"].agg(" ".join)
-    out.loc[joined.index] = joined
-    return out
+    arr = pc.utf8_trim(_arrow_strings(texts), characters=_PY_WS)
+    flat, row = _token_stream(arr, pre_uniform=False)
+    _, first, freq = np.unique(_token_keys(flat, row), return_index=True, return_counts=True)
+    ranked = first[np.lexsort((first, -freq, row[first]))]
+    top = ranked[_first_k_per_row(row[ranked], num_tokens)]
+    joined = pc.binary_join(_rows_to_lists(flat.take(top), row[top], len(arr)), " ")
+    has_tokens = pa.array(np.bincount(row, minlength=len(arr)) > 0)
+    return pc.if_else(has_tokens, joined, None).to_pandas().set_axis(texts.index)
 
 
 def ngram_text_col(
@@ -104,8 +99,8 @@ def ngram_text_col(
     out_col: str = "ngram_text",
 ) -> DataFrame:
     """DataFrame form: adds `out_col` = ngram_text(text, num_tokens). Arrow-
-    batched pandas UDF running the vectorized explode-frame analyzer (same
-    cost class as the tokenizer itself); everything around it stays JVM-side."""
+    batched pandas UDF running the tokenizer's Arrow kernel; everything
+    around it stays JVM-side."""
 
     @pandas_udf(T.StringType())
     def _udf(texts: pd.Series) -> pd.Series:

@@ -13,7 +13,7 @@ hand on parquet paths:
 | MERGE INTO                   | staged two-phase merge (incremental.py)     |
 | snapshot lineage             | lineage/ journal rows (build._log_lineage)  |
 | createOrReplace              | mode("overwrite") parquet write             |
-| createOrReplace of n tables  | replace_staged: dedup states, profile store |
+| createOrReplace of n tables  | replace_staged: dedup states, profile store, index stats |
 
 When the jar IS present (a real deployment), `get_io` returns IcebergIO,
 which maps every write onto native Iceberg table operations via a Hadoop

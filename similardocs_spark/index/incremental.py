@@ -18,6 +18,8 @@ track the updated corpus exactly like Lucene's live index stats do.
 """
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -144,7 +146,7 @@ def _commit_staged(
     """Swap staged segment docs into the live table, rebuild the affected
     segments' postings, refresh stats/terms/meta, drop the staging dir.
     Idempotent: re-running after a crash anywhere in here converges."""
-    from .catalog import get_io_for_index
+    from .catalog import get_io_for_index, replace_staged
 
     io = get_io_for_index(spark, paths)
     staged = io.read(spark, stage).withColumn("seg", F.col("seg").cast("long"))
@@ -164,13 +166,17 @@ def _commit_staged(
     full = io.read(spark, paths.docs)
     agg = full.agg(F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
     n_docs, sum_dl = int(agg["n"]), int(agg["s"] or 0)
-    io.overwrite(
-        local_df(
-            spark,
-            [(n_docs, sum_dl, sum_dl / max(1, n_docs), seg_size)],
-            "n_docs long, sum_dl long, avgdl double, seg_size long",
-        ),
-        paths.stats,
+    stats = local_df(
+        spark,
+        [(n_docs, sum_dl, sum_dl / max(1, n_docs), seg_size)],
+        "n_docs long, sum_dl long, avgdl double, seg_size long",
+    )
+    # staged, not overwritten in place: an overwrite deletes stats/ before
+    # its job runs, and resume_incremental reads seg_size from it
+    replace_staged(
+        io, paths.root, ("stats",),
+        lambda w, d: w.overwrite(stats, os.path.join(d, "stats")),
+        paths.stats + ".staging",
     )
     build_terms(spark, paths)
     meta = (
@@ -217,10 +223,12 @@ def resume_incremental(spark: SparkSession, paths: IndexPaths) -> dict[str, int]
     _commit_staged is idempotent. A staging table whose write job never
     COMMITTED (no _SUCCESS marker / no Iceberg snapshot) is partial data;
     committing it would overwrite live segments with incomplete rows, so it
-    is discarded instead and the caller reruns the merge. No-op when there
-    is nothing to repair."""
-    from .catalog import get_io_for_index
+    is discarded instead and the caller reruns the merge. A stats swap a
+    crash cut short is rolled forward first. No-op when there is nothing
+    to repair."""
+    from .catalog import get_io_for_index, recover_staged
 
+    recover_staged(paths.root, ("stats",), paths.stats + ".staging")
     io = get_io_for_index(spark, paths)
     check_postings_format(io.read(spark, paths.postings))
     stage = paths.docs + ".staging"

@@ -179,6 +179,12 @@ COMMIT_WRITES = [
     ("meta_stats", "overwrite"),
     ("staging_drop", "drop"),
 ]
+# (id, index into COMMIT_WRITES of the write that crashes, whether the crash
+# comes after that write deleted its target: an overwrite clears the path
+# before its job runs)
+COMMIT_CRASHES = [(w, at, False) for at, (w, _) in enumerate(COMMIT_WRITES)] + [
+    ("stats_after_delete", 2, True)
+]
 
 
 class CommitCrash(Exception):
@@ -215,11 +221,12 @@ def commit_twin(spark, tmp_path_factory):
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("at", range(len(COMMIT_WRITES)), ids=[w for w, _ in COMMIT_WRITES])
-def test_commit_crash_matrix(spark, tmp_path, monkeypatch, commit_twin, at):
+@pytest.mark.parametrize("at,wipe", [c[1:] for c in COMMIT_CRASHES], ids=[c[0] for c in COMMIT_CRASHES])
+def test_commit_crash_matrix(spark, tmp_path, monkeypatch, commit_twin, at, wipe):
     """A crash at each write of the incremental commit in turn (instead of
-    that write): resume_incremental converges to the same tables and the
-    same search hits as the uninterrupted update."""
+    that write, or inside it once it deleted its target):
+    resume_incremental converges to the same tables and the same search
+    hits as the uninterrupted update."""
     import shutil
 
     import similardocs_spark.index.incremental as I
@@ -244,6 +251,8 @@ def test_commit_crash_matrix(spark, tmp_path, monkeypatch, commit_twin, at):
         def write(self, *args, **kwargs):
             if inside:
                 if len(done) == at:
+                    if wipe:
+                        shutil.rmtree(args[1], ignore_errors=True)
                     raise CommitCrash(COMMIT_WRITES[at][0])
                 done.append(method)
             return real(self, *args, **kwargs)
@@ -262,6 +271,30 @@ def test_commit_crash_matrix(spark, tmp_path, monkeypatch, commit_twin, at):
     assert not os.path.exists(os.path.join(root, "docs.staging"))
     assert _index_state(spark, root) == want
     assert I.resume_incremental(spark, IndexPaths(root)) == {"repaired_segs": 0}
+
+
+@pytest.mark.spark
+def test_stats_swap_crash_rolls_forward(spark, tmp_path, monkeypatch, commit_twin, swap_crash):
+    """A crash inside the staged stats swap, after the live stats/ moved
+    aside and before the staged row moved in: resume_incremental rolls the
+    swap forward before it reads seg_size, then converges like the
+    uninterrupted update."""
+    import shutil
+
+    import similardocs_spark.index.incremental as I
+
+    base, delta, want = commit_twin
+    root = str(tmp_path / "idx")
+    shutil.copytree(base, root)
+    paths = IndexPaths(root)
+    steps = swap_crash.inject(monkeypatch, paths.stats, 1)
+    with pytest.raises(swap_crash):
+        incremental_update(spark, paths, delta)
+    monkeypatch.undo()
+    assert steps == [("rename", paths.stats)] and not os.path.exists(paths.stats)
+
+    assert I.resume_incremental(spark, paths)["repaired_segs"] > 0
+    assert _index_state(spark, root) == want
 
 
 @pytest.mark.spark

@@ -2,8 +2,8 @@
 
 - quantize_dl_col (JVM SmallFloat quantization) == bm25.quantize_dl
 - tokenize_with_rerank (fused UDF) == tokenize + rerank_tokens
-- the Arrow tokenizer fast path == the pandas reference path on MIXED
-  batches (ascii / non-ascii / >255-char-token rows interleaved)
+- the Arrow tokenizer kernel == textnorm.analyze on MIXED batches (ascii /
+  non-ascii / >255-char-token rows interleaved)
 - streaming.incarnation_salt: stable across restarts of the same
   checkpoint, DISTINCT after a delete-and-recreate of the same path,
   kept through the checkpoint's own filesystem
@@ -62,13 +62,11 @@ def test_fused_tokenizer_udf_matches_parts(spark):
         assert list(row["b"]["rr_tokens"]) == list(row["r"])
 
 
-def test_arrow_fast_path_matches_pandas_reference():
+def test_tokenizer_matches_analyze_on_mixed_batches():
     import pandas as pd
 
-    from similardocs_spark.functions.tokenize import (
-        _tokenize_series,
-        _tokenize_series_pandas,
-    )
+    from similardocs_spark.functions.tokenize import _tokenize_series
+    from similardocs_spark.textnorm import analyze
 
     rng = random.Random(99)
     words = ["alpha", "Beta", "the", "and", "x1", "naïve", "tök", "été"]
@@ -76,15 +74,13 @@ def test_arrow_fast_path_matches_pandas_reference():
     for i in range(400):
         n = rng.randint(0, 40)
         texts.append(" ".join(rng.choice(words) for _ in range(n)))
-    # force every gate: pure-ascii rows, non-ascii rows, a >255 run,
-    # empties, None
+    # one batch of pure-ascii rows, non-ascii rows, >255 runs, empties, None
     texts += ["", None, "y" * 256, "z" * 255 + " ok", "ascii only words here"]
     s = pd.Series(texts)
     for pre, cap in ((False, None), (True, 100), (False, 3)):
         got = _tokenize_series(s, pre, cap)
-        ref = _tokenize_series_pandas(s.fillna(""), pre, cap)
         for i in range(len(s)):
-            assert list(got.iloc[i]) == list(ref.iloc[i]), (
+            assert list(got.iloc[i]) == analyze(texts[i] or "", pre, cap), (
                 i, texts[i], pre, cap,
             )
 

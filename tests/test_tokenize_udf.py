@@ -1,7 +1,10 @@
-"""Parity: vectorized pandas tokenizer == pure-Python spec (textnorm.analyze).
+"""Parity: the Arrow analyzer kernel == the pure-Python spec
+(textnorm.analyze for the tokenizer, ngram_text.ngram_text for NGramText).
 
-Pandas-level tests run without Spark (fast, incl. Hypothesis properties); one
-Spark round-trip test validates the Arrow UDF wiring end-to-end.
+Kernel-level tests run without Spark (fast, incl. Hypothesis properties over
+all Unicode categories and over >255-char whitespace-free runs); the Spark
+round trips validate the UDF wiring end-to-end, one of them over the mixed
+ASCII / non-ASCII transcript fixture.
 """
 from __future__ import annotations
 
@@ -11,7 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from similardocs_spark.functions.tokenize import _tokenize_series
-from similardocs_spark.textnorm import analyze
+from similardocs_spark.textnorm import MAX_TOKEN_LEN, analyze
 
 ADVERSARIAL = [
     "",
@@ -30,6 +33,23 @@ ADVERSARIAL = [
     "tab\tsep\nnewline\rcr",
     " ".join(f"w{i:03d}" for i in range(300)),
 ]
+
+
+# texts holding whitespace-free runs longer than MAX_TOKEN_LEN, which the
+# kernel chunks like Lucene's buffer flush (the all-category strategies,
+# capped at 80 chars, never reach that code)
+_RUN_CHARS = st.one_of(
+    st.sampled_from("abcxyzÉéÇ_-.\u0301"),
+    st.characters(codec="utf-8", categories=("L", "N", "M", "P", "S")),
+)
+_LONG_RUN_TEXT = st.lists(
+    st.one_of(
+        st.text(alphabet=_RUN_CHARS, min_size=MAX_TOKEN_LEN + 1, max_size=3 * MAX_TOKEN_LEN),
+        st.text(alphabet="ab é\t", max_size=12),
+    ),
+    min_size=1,
+    max_size=4,
+).map(" ".join)
 
 
 def _check(cases: list[str]) -> None:
@@ -72,21 +92,34 @@ def test_property_parity_focused(texts):
     _check(texts)
 
 
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_LONG_RUN_TEXT, min_size=1, max_size=4))
+def test_property_parity_long_runs(texts):
+    _check(texts)
+
+
 @pytest.mark.spark
 def test_udf_on_spark(spark):
     from pyspark.sql import functions as F
 
-    from similardocs_spark.functions.tokenize import rerank_tokens, tokenize
+    from similardocs_spark.functions.tokenize import rerank_tokens, tokenize, uniform
+    from similardocs_spark.textnorm import uniform_string
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(ADVERSARIAL)], "id int, text string")
     rows = (
-        df.select("id", tokenize("text").alias("toks"), rerank_tokens("text").alias("rr"))
+        df.select(
+            "id",
+            tokenize("text").alias("toks"),
+            rerank_tokens("text").alias("rr"),
+            uniform("text").alias("u"),
+        )
         .orderBy("id")
         .collect()
     )
     for r, text in zip(rows, ADVERSARIAL):
         assert r.toks == analyze(text), text
         assert r.rr == analyze(text, pre_uniform=True, max_tokens=100), text
+        assert r.u == uniform_string(text), text
 
 
 def _check_ngram(cases: list[str], num_tokens: int = 5) -> None:
@@ -119,6 +152,39 @@ def test_ngram_text_vectorized_adversarial():
 )
 def test_ngram_text_property_parity(texts, num_tokens):
     _check_ngram(texts, num_tokens)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(_LONG_RUN_TEXT, min_size=1, max_size=4), st.integers(min_value=1, max_value=12))
+def test_ngram_text_property_parity_long_runs(texts, num_tokens):
+    _check_ngram(texts, num_tokens)
+
+
+@pytest.mark.spark
+def test_mixed_corpus_round_trip_on_spark(spark):
+    """The transcript fixture mixes ASCII and non-ASCII rows inside every
+    Arrow batch: through Spark, each row's tokens, rerank tokens and
+    ngram_text equal the scalar oracles."""
+    from pyspark.sql import functions as F
+
+    from similardocs_spark.fixtures import make_transcripts
+    from similardocs_spark.functions.ngram_text import ngram_text, ngram_text_col
+    from similardocs_spark.functions.tokenize import tokenize_with_rerank
+
+    texts = [t.text for t in make_transcripts(n_convs=300)]
+    assert 0 < sum(t.isascii() for t in texts) < len(texts)
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    rows = (
+        ngram_text_col(df, num_tokens=10)
+        .select("id", "ngram_text", tokenize_with_rerank(F.col("text"), F.col("text")).alias("b"))
+        .orderBy("id")
+        .collect()
+    )
+    assert [r.id for r in rows] == list(range(len(texts)))
+    for r, text in zip(rows, texts):
+        assert r.b.tokens == analyze(text), text
+        assert r.b.rr_tokens == analyze(text, pre_uniform=True, max_tokens=100), text
+        assert r.ngram_text == ngram_text(text, 10), text
 
 
 def test_list_offsets_overflow_raises():
