@@ -16,7 +16,8 @@ Dataflow (all DataFrame/Arrow; reference semantics cited per stage):
       shuffle key structurally spreads hot terms across reducers)
     → tokenize (vectorized UDF) → explode → sort on (seg, term, docID) →
       one docID-sorted array per (seg, term), parquet DELTA_BINARY_PACKED
-      (sortbuild.py)
+      (sortbuild.py); the rerank tokens get posting lists too, under the
+      term prefix sortbuild.RERANK_NS
     → per-segment-batch Iceberg-style commits with lineage rows
       (rows/bytes/status) enabling resume without recomputation
 
@@ -25,6 +26,7 @@ the same paths — the runtime jar is absent in this sandbox):
   docs/       doc_id, conv_id, seg, db, instance, update_date, dl, dlq,
               tfnorm, rerank_tokens              (repartitioned by seg)
   postings/   seg, term, df_seg, doc_ids        (sortbuild.POSTINGS_SCHEMA;
+              index terms and RERANK_NS-prefixed rerank tokens;
               one partition per seg batch, sorted by term → parquet
               row-group min/max stats prune non-query terms at scan)
   terms/      term, df, idf                       (global term stats)
@@ -52,8 +54,9 @@ DEFAULT_SEG_SIZE = 1 << 20
 # shuffle feeds the CPU-per-byte-heavy tokenizer kernel, so at small corpus
 # sizes byte-based coalescing collapses the tokenizer stage to a handful of
 # cores (measured sf0.1 local[32]: staging write 3.1 s → 1.8 s with the
-# floor). 16k mirrors util._kernel_confs; at production shuffle sizes every
-# partition is far above the floor and the setting is inert.
+# floor). util._kernel_confs sets the same kind of floor for the scoring
+# kernel; at production shuffle sizes every partition is far above the
+# floor and the setting is inert.
 _BUILD_CONFS = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k"}
 
 
@@ -418,12 +421,14 @@ def build_postings(
 
 def build_terms(spark: SparkSession, paths: IndexPaths) -> None:
     """Global term stats: df = Σ per-segment df (two-phase agg: the partial
-    per-(seg,term) counts already exist → map-side combine into global)."""
+    per-(seg,term) counts already exist → map-side combine into global).
+    Rerank postings are not index terms and stay out."""
     from .catalog import get_io_for_index
+    from .sortbuild import RERANK_NS
 
     io = get_io_for_index(spark, paths)
     n_docs = io.read(spark, paths.stats).collect()[0]["n_docs"]
-    postings = io.read(spark, paths.postings)
+    postings = io.read(spark, paths.postings).filter(~F.col("term").startswith(RERANK_NS))
     terms = postings.groupBy("term").agg(F.sum("df_seg").alias("df"))
     terms = terms.withColumn(
         "idf",

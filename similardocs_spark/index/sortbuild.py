@@ -22,6 +22,12 @@ global ids as a parquet-native array column. Parquet's v2 writer with
 dictionary encoding off stores them DELTA_BINARY_PACKED — delta + bit-packed
 frame-of-reference blocks (_WRITER_OPTIONS; Spark's default v1 writer would
 dictionary-encode them).
+
+The same table holds the rerank postings: one row per (seg, RERANK_NS +
+token) for each token of the docs' `rerank_tokens`. The analyzer only emits
+[a-z0-9_-], so no index term carries the prefix, and a search reads the lists
+of its query terms and of its rerank tokens in one postings scan. The terms
+table and every df leave these rows out (build.build_terms).
 """
 from __future__ import annotations
 
@@ -33,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 POSTINGS_SCHEMA = "seg long, term string, df_seg long, doc_ids array<long>"
+# prefix of a rerank posting's term; sorts after every analyzer token
+RERANK_NS = "~"
 _COLUMNS = ["seg", "term", "df_seg", "doc_ids"]
 
 _WRITER_OPTIONS = {
@@ -81,10 +89,14 @@ def _encode_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def build_postings_sorted(docs: DataFrame, partitions: int | None = None) -> DataFrame:
-    """docs(seg, doc_id, tokens) → postings DataFrame (POSTINGS_SCHEMA)."""
+    """docs(seg, doc_id, tokens, rerank_tokens) → postings DataFrame
+    (POSTINGS_SCHEMA) of the index terms and the namespaced rerank tokens."""
     spark = docs.sparkSession
     n_part = partitions or spark.sparkContext.defaultParallelism
-    exploded = docs.select("seg", "doc_id", F.explode("tokens").alias("term"))
+    terms = F.concat(
+        "tokens", F.transform("rerank_tokens", lambda t: F.concat(F.lit(RERANK_NS), t))
+    )
+    exploded = docs.select("seg", "doc_id", F.explode(terms).alias("term"))
     sorted_run = exploded.repartitionByRange(n_part, "seg", "term").sortWithinPartitions(
         "seg", "term", "doc_id"
     )
@@ -104,11 +116,18 @@ def write_postings(io, encoded: DataFrame, path: str) -> None:
 
 
 def check_postings_format(postings: DataFrame) -> None:
-    """Fail loudly on an index whose postings predate the doc_ids format
-    (an encoded `blob` column). Reads only the schema."""
+    """Fail loudly on an index whose postings predate the current format:
+    an encoded `blob` column instead of doc_ids (read from the schema), or
+    no rerank postings (one probe for a RERANK_NS row; a second, for any
+    row, runs only when the first finds none)."""
     if "doc_ids" not in postings.columns:
-        raise ValueError(
-            f"postings columns {postings.columns} lack doc_ids: the index predates "
-            "the current postings format; run index.incremental.optimize() to "
-            "rewrite every segment's postings from the docs table"
-        )
+        missing = "lack doc_ids"
+    elif not postings.filter(F.col("term").startswith(RERANK_NS)).head(1) and postings.head(1):
+        missing = "hold no rerank postings"
+    else:
+        return
+    raise ValueError(
+        f"the index's postings {missing}: the index predates the current postings "
+        "format; run index.incremental.optimize() to rewrite every segment's "
+        "postings from the docs table"
+    )

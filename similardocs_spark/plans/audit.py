@@ -1,12 +1,14 @@
 """Physical-plan audit: assert the plans we rely on actually materialize.
 
 Run against a built index to verify, from `explain(formatted)` output of the
-kernel cut that `SearchEngine.score_bucket` collects:
+one plan a search runs (query/batch.py:rerank_plan):
   - query-term predicate reaches the postings parquet scan (PushedFilters)
   - doc-stats scan prunes columns (ReadSchema excludes text/tokens)
   - postings and doc stats meet in the per-segment kernel cogroup
     (FlatMapCoGroupsInPandas), never in a nested-loop or cartesian join
-  - the candidate top-k is a TakeOrderedAndProject (no global sort)
+  - the candidate pool is cut by a window per query, never a global sort
+  - no candidate join: the plan joins nothing, and the docs are scanned
+    once, for the kernel
 
 Used by tests/test_sources_streaming_plans.py and handy interactively:
     from similardocs_spark.plans.audit import audit_query_plan
@@ -14,7 +16,7 @@ Used by tests/test_sources_streaming_plans.py and handy interactively:
 """
 from __future__ import annotations
 
-from ..oracle.refsearch import days_ago_str
+import re
 
 
 def _plan(df) -> str:
@@ -23,36 +25,38 @@ def _plan(df) -> str:
     )
 
 
-def _kernel_cut_plan(engine, w_idf: dict[str, float]) -> str:
-    """Formatted plan of score_bucket's kernel cut, planned under the same
-    execution confs it is collected with."""
+def _search_plan(engine, text: str) -> str:
+    """Formatted plan of a default search() of `text`, planned under the
+    same execution confs it is collected with."""
+    from ..oracle.refsearch import DEFAULT_MAX_DOCS, DEFAULT_MIN_NGRAMS
+    from ..query.batch import rerank_plan
     from ..util import kernel_exec_conf
 
+    prep = engine.prepare(text)
+    assert prep is not None
+    buckets = engine._day_buckets(*engine._day_bounds(None), False)
     with kernel_exec_conf(engine.spark):
         return _plan(
-            engine._kernel_cut(
-                w_idf,
-                days_ago_str(engine.today, 18250),
-                days_ago_str(engine.today, engine.end_days_ago),
-                1500,
-                None,
-                None,
+            rerank_plan(
+                engine, {"q": prep}, {"q": DEFAULT_MAX_DOCS}, DEFAULT_MIN_NGRAMS,
+                buckets, None, None,
             )
         )
 
 
 def audit_query_plan(engine, text: str) -> dict[str, bool]:
-    prep = engine.prepare(text)
-    assert prep is not None
-    w_idf, _ = prep
-    plan = _kernel_cut_plan(engine, w_idf)
+    plan = _search_plan(engine, text)
+    joins = re.findall(r"^\(\d+\) (\w*Join)\b", plan, re.M)
     return {
         "term_filter_pushed": "PushedFilters: [In(term" in plan or "In(term," in plan,
-        "kernel_cogroup": "FlatMapCoGroupsInPandas" in plan,
+        "kernel_cogroup": plan.count("FlatMapCoGroupsInPandas (") == 1,
         "no_nested_loop": "BroadcastNestedLoopJoin" not in plan
         and "CartesianProduct" not in plan,
-        "topk_not_global_sort": "TakeOrderedAndProject" in plan,
+        "topk_not_global_sort": "Window (" in plan
+        and not re.search(r"Sort \(\d+\)\nArguments: \[.*\], true", plan),
         "column_pruned_docs": "text" not in _read_schema_of(plan, "docs"),
+        "no_candidate_join": not joins
+        and len(re.findall(r"Location: \w+ \[\S*/docs\]", plan)) == 1,
     }
 
 
@@ -65,9 +69,7 @@ def _read_schema_of(plan: str, table_hint: str) -> str:
 
 
 def explain_all(engine, text: str = "zika dengue") -> str:
-    """Full formatted plan of the kernel cut (debugging aid)."""
-    prep = engine.prepare(text)
-    if prep is None:
+    """Full formatted plan of a default search (debugging aid)."""
+    if engine.prepare(text) is None:
         return "(empty query)"
-    w_idf, _ = prep
-    return _kernel_cut_plan(engine, w_idf)
+    return _search_plan(engine, text)

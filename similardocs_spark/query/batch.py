@@ -2,28 +2,31 @@
 
 The reference serves one query per servlet request; on Spark the q/s story is
 amortization — scoring 1,000 queries costs barely more than one, because the
-postings scan, joins and shuffles are shared:
+postings scan and the shuffles are shared:
 
-  postings (term-pruned scan) cogroup doc stats (filters pushed to the
-  parquet scan, each doc tagged with its day bucket), per (segment × slice)
+  postings (term-pruned scan: query terms and rerank tokens) cogroup doc
+  stats (filters pushed to the parquet scan, each doc tagged with its day
+  bucket), per (segment × slice)
     → batched per-segment kernel (query/wand.py): each posting list read
-      ONCE, float32-spec scoring, ≤ pool rows per (segment, query, bucket)
-    → per-(query, bucket) candidate pool via ranked window (150·max_docs)
-    → overlap rerank vs per-query token arrays → per-(query, bucket, tier)
-      top-max_docs window → per-query bucket quotas settled on the executors
+      ONCE, float32-spec scoring and the rerank's n_common, ≤ pool rows per
+      (segment, query, bucket)
+    → one exchange on query_id
+    → per-(query, bucket) candidate pool via ranked window (150·quota)
+    → n_common ≥ min2 → per-(query, bucket, tier) top-quota window →
+      per-query bucket quotas settled on the executors
     → one collect of ≤ max_docs rows per query
 
 All queries in a batch share the filter settings (sources/instances/last_days/
 split_time), like a profile-updater sweep does. The split_time day-bucket
 ladder (SimDocsSearch.scala:185-211) takes at most two such plans: the first
 bucket, then every later bucket at once for the queries still short; see
-ladder_hits. search(split_time=True) runs it as a batch of one.
+ladder_hits. search() runs the same plans as a batch of one.
 """
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Row, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from ..oracle.refsearch import (
@@ -32,7 +35,7 @@ from ..oracle.refsearch import (
     DEFAULT_MIN_NGRAMS,
     get_min_ngrams,
 )
-from .engine import HIT_COLS
+from .engine import HIT_COLS, Hit
 
 BatchHit = Row("query_id", "rank", *HIT_COLS)
 
@@ -45,99 +48,90 @@ def ladder_hits(
     sources: set[str] | None,
     instances: set[str] | None,
     buckets: list[tuple[str, str]],
-    explain: bool = False,
-) -> dict[str, list]:
-    """{query_id: hit rows in result order} of every (term weights, rerank
+) -> dict[str, list[Hit]]:
+    """{query_id: hits in result order} of every (term weights, rerank
     tokens) in `qinfo` over `buckets` (one range, or the split_time ladder),
     in at most two plans: the first bucket, so a batch whose queries fill
     there scores nothing older; then ONE plan over every later bucket for
-    the queries still short, their shortfall as the quota.
+    the queries still short, their shortfall as the quota."""
+    from ..util import kernel_exec_conf
 
-    The reference reranks bucket b's top-150·remaining_b BM25 pool. A doc's
-    score does not depend on its bucket, and a top-150·r pool is a prefix of
-    the top-150·quota pool. So a plan numbers each (query, bucket)'s top
-    150·quota by (score desc, doc_id asc) as `_r` and keeps the rerank's top
-    quota per (query, bucket, tier = (_r-1) // 150). The tier cut is exact: a
-    hit of tier t is among the top r ≤ quota of its bucket's pool, which
-    holds all of tier t. A plan's first bucket is visited with the whole
-    quota, so it is one tier, and over one bucket the window already ranks
-    the hits; over several, `_settle` walks each query's buckets on the
-    executors. Either way the collect is ≤ quota rows per query."""
-    from ..util import kernel_exec_conf, local_df
-    from .wand import wand_score_batch
-
-    wc = Window.partitionBy("query_id", "bucket").orderBy(F.desc("score"), F.asc("doc_id"))
-    wf = Window.partitionBy("query_id", "bucket", "tier").orderBy(
-        F.desc("n_common"), F.desc("update_date"), F.desc("score"), F.asc("doc_id")
-    )
-    tier = F.floor((F.col("_r") - 1) / CANDIDATE_FACTOR)
-    docs_fields = engine._docs.select(
-        "doc_id", "conv_id", "update_date", "rerank_tokens"
-    )
-    hits: dict[str, list] = {qid: [] for qid in qinfo}
+    hits: dict[str, list[Hit]] = {qid: [] for qid in qinfo}
     for part in (buckets[:1], buckets[1:]):
         quota = {q: max_docs - len(rows) for q, rows in hits.items() if len(rows) < max_docs}
         if not part or not quota:
             break
-        # local_df: an Arrow LocalRelation broadcasts without a Python-task stage
-        qmeta = F.broadcast(
-            local_df(
-                engine.spark,
-                [
-                    (qid, qinfo[qid][1], get_min_ngrams(min_ngrams, len(qinfo[qid][1])), k)
-                    for qid, k in quota.items()
-                ],
-                "query_id string, q_rerank array<string>, min2 int, quota int",
-            )
-        )
-        pool = CANDIDATE_FACTOR * max(quota.values())
-        scored = wand_score_batch(
-            engine, {qid: qinfo[qid][0] for qid in quota}, pool, part, sources, instances
-        )
-        # PRE-CUT plan: the pool cut runs before the rerank join, and
-        # q_rerank joins after it. A FUSED variant (join docs first, pool
-        # cut + rank in one exchange) lost at 4x4 (11.3 vs 8.0 s) and 8x2
-        # (13.4 vs 6.9 s): per-SEGMENT pools rode through the join (283 MB
-        # vs 65+1.5 MB) (evidence/PROFILE_FUSED_AB_8X2.json,
-        # evidence/PROFILE_4X4_FUSED.json).
-        cands = (
-            scored.withColumn("_r", F.row_number().over(wc))
-            .filter(F.col("_r") <= pool)
-            .withColumn("tier", F.when(F.col("bucket") > 0, tier).otherwise(0))
-        )
-        # docs-stationary join: the candidate side is bounded, and shuffling
-        # the docs side moved 284 MB of rerank_tokens per batch call
-        # (measured). cache=True: docs are cached pre-partitioned on doc_id,
-        # so a shuffled-hash join moves only the candidates (a broadcast
-        # built the full candidate relation per executor JVM, ~4.5 s each at
-        # 8 executors). cache=False: broadcast the candidates to the docs scan.
-        if engine.cache:
-            joined = cands.hint("shuffle_hash").join(docs_fields, "doc_id")
-        else:
-            joined = F.broadcast(cands).join(docs_fields, "doc_id")
-        ranked = (
-            joined.join(qmeta, "query_id")
-            .filter(F.col("_r") <= CANDIDATE_FACTOR * F.col("quota"))
-            .withColumn(
-                "n_common", F.size(F.array_intersect("rerank_tokens", "q_rerank"))
-            )
-            .filter(F.col("n_common") >= F.col("min2"))
-            # one exchange for the tier window and the per-query settle
-            .repartition("query_id")
-            .withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= F.col("quota"))
-            .select(
-                "query_id", "quota", "bucket", "_r", *HIT_COLS,
-                *(["rerank_tokens"] if explain else []), "rank",
-            )
-        )
-        if len(part) > 1:
-            ranked = ranked.groupBy("query_id").applyInPandas(_settle, ranked.schema)
+        plan = rerank_plan(engine, qinfo, quota, min_ngrams, part, sources, instances)
         with kernel_exec_conf(engine.spark):
-            rows = ranked.collect()
+            rows = plan.collect()
         for r in sorted(rows, key=lambda r: r["rank"]):
-            hits[r["query_id"]].append(r)
+            hits[r["query_id"]].append(
+                Hit(r["doc_id"], r["conv_id"], r["score"], r["n_common"], str(r["update_date"]))
+            )
     return hits
+
+
+def rerank_plan(
+    engine,
+    qinfo: dict[str, tuple[dict[str, float], list[str]]],
+    quota: dict[str, int],
+    min_ngrams: int,
+    buckets: list[tuple[str, str]],
+    sources: set[str] | None,
+    instances: set[str] | None,
+) -> DataFrame:
+    """The one plan of a search or batch over `buckets`: each query in
+    `quota` gets its first quota hits, as rows (query_id, quota, bucket, _r,
+    *HIT_COLS, rank), update_date an int.
+
+    kernel (scores and n_common per pool row) → one exchange on query_id →
+    pool cut → rerank filter → rerank window → _settle. The reference
+    reranks bucket b's top-150·remaining_b BM25 pool. A doc's score does not
+    depend on its bucket, and a top-150·r pool is a prefix of the top
+    150·quota pool. So the plan numbers each (query, bucket)'s top 150·quota
+    by (score desc, doc_id asc) as `_r` and keeps the rerank's top quota per
+    (query, bucket, tier = (_r-1) // 150). The tier cut is exact: a hit of
+    tier t is among the top r ≤ quota of its bucket's pool, which holds all
+    of tier t. A plan's first bucket is visited with the whole quota, so it
+    is one tier, and over one bucket the window already ranks the hits;
+    over several, `_settle` walks each query's buckets on the executors.
+    Either way the collect is ≤ quota rows per query."""
+    from .wand import Rerank, wand_score_batch
+
+    wc = Window.partitionBy("query_id", "bucket").orderBy(F.desc("score"), F.asc("doc_id"))
+    tier = F.when(F.col("bucket") > 0, F.floor((F.col("_r") - 1) / CANDIDATE_FACTOR))
+    wf = Window.partitionBy("query_id", "bucket", tier.otherwise(0)).orderBy(
+        F.desc("n_common"), F.desc("update_date"), F.desc("score"), F.asc("doc_id")
+    )
+    ranked = (
+        wand_score_batch(
+            engine,
+            {qid: qinfo[qid][0] for qid in quota},
+            CANDIDATE_FACTOR * max(quota.values()),
+            buckets,
+            sources,
+            instances,
+            {
+                qid: Rerank(qinfo[qid][1], get_min_ngrams(min_ngrams, len(qinfo[qid][1])), k)
+                for qid, k in quota.items()
+            },
+        )
+        # one exchange for both windows and the per-query settle
+        .repartition("query_id")
+        .select("*", F.row_number().over(wc).alias("_r"))
+        .filter(
+            (F.col("_r") <= CANDIDATE_FACTOR * F.col("quota"))
+            & (F.col("n_common") >= F.col("min2"))
+        )
+        .select(
+            "query_id", "quota", "bucket", "_r", *HIT_COLS,
+            F.row_number().over(wf).alias("rank"),
+        )
+        .filter(F.col("rank") <= F.col("quota"))
+    )
+    if len(buckets) > 1:
+        ranked = ranked.groupBy("query_id").applyInPandas(_settle, ranked.schema)
+    return ranked
 
 
 def _settle(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -255,10 +249,7 @@ def search_batch(
         engine._day_buckets(lower, upper, split_time),
     )
     for qid, rows in hits.items():
-        results[qid] = [
-            BatchHit(qid, rank, *(r[c] for c in HIT_COLS))
-            for rank, r in enumerate(rows, 1)
-        ]
+        results[qid] = [BatchHit(qid, rank, *hit) for rank, hit in enumerate(rows, 1)]
     # an alias's rows carry its own query_id, so the column always names the
     # dict key it lives under (consumers that flatten results to a table
     # would otherwise misattribute alias hits to the representative)

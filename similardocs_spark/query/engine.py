@@ -1,11 +1,14 @@
 """BM25 top-k query engine over the segmented index.
 
-One scoring plan, whatever the postings volume Σdf of the query terms: a
-search is scored by the batched per-segment kernel (query/wand.py) as a
-batch of one, as search_batch scores N queries. Per-executor work is one
-segment's postings for the query terms only, score accumulation never leaves
-the executor, and only ≤ pool rows per segment cross the wire before the
-global top-pool cut (orderBy+limit → TakeOrderedAndProject, no global sort).
+One plan per search, whatever the postings volume Σdf of the query terms: a
+search is a batch of one (query/batch.py:rerank_plan), as search_batch scores
+N queries. The per-segment kernel (query/wand.py) reads one segment's
+postings for the query terms and the query's rerank tokens only, scores the
+docs and counts each pool row's common rerank tokens on the executor; the
+kernel's ≤ pool rows per segment meet in one exchange on query_id, where a
+window cuts the global pool and a second one reranks it. Nothing joins the
+docs: conv_id and update_date ride through the kernel, and only explain=True
+reads `rerank_tokens`, for its own hits.
 
 Query lifecycle (reference SimDocsSearch.scala:122-347): text → word prep →
 term weights (duplicate-prefix boosts) → MUST-clause score constants →
@@ -20,20 +23,18 @@ from dataclasses import dataclass
 from datetime import date
 
 import numpy as np
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .. import bm25
 from ..index.build import IndexPaths
 from ..index.sortbuild import check_postings_format
 from ..oracle.refsearch import (
-    CANDIDATE_FACTOR,
     DEFAULT_MAX_DOCS,
     DEFAULT_MIN_NGRAMS,
     MAX_LOWER_LIMIT,
     days_ago_str,
     get_day_range,
-    get_min_ngrams,
 )
 from ..synonyms import SynonymDict, expanded_query_terms
 from ..textnorm import query_rerank_tokens, uniform_text
@@ -41,6 +42,7 @@ from ..textnorm import query_rerank_tokens, uniform_text
 # No package code reads this: every query takes the kernel, whatever its
 # postings volume Σdf. It stays because the benchmark's `wand_auto_share`
 # (the share of queries with Σdf ≥ this) imports it; at 0 that share is 1.
+# It goes with the benchmark's next revision, like score_bucket.
 WAND_AUTO_MIN_POSTINGS = 0
 
 # a search hit; search_batch rows carry query_id and rank in front
@@ -100,6 +102,10 @@ class SearchEngine:
                 )
             ).cast("float"),
         )
+        # the doc columns a search reads: the scoring plan's and conv_id
+        self._doc_stats = self._docs.select(
+            "seg", "doc_id", "tfnorm", "update_date", "db", "instance", "conv_id"
+        )
         self._postings = io.read(self.spark, self.paths.postings).withColumn(
             "seg", F.col("seg").cast("long")
         )
@@ -119,17 +125,20 @@ class SearchEngine:
                 r["term"]: r["df"] for r in self._terms.collect()
             }
         if self.cache:
-            # serving mode: cache docs PRE-PARTITIONED on doc_id so candidate
-            # joins (batch rerank enrichment) reuse the cached partitioning —
-            # only the bounded candidate side shuffles; the docs side never
-            # moves and, unlike a broadcast build, no per-executor hash
-            # relation of the full candidate set is built (measured: the
-            # broadcast variant cost ~4.5 s per executor JVM at 8 executors)
-            n_part = int(
-                self.spark.conf.get("spark.sql.shuffle.partitions", "64")
-            )
-            self._docs = self._docs.repartition(n_part, "doc_id").persist()
-            self._postings = self._postings.persist()
+            # serving mode: the search columns stay in executor memory as
+            # read, unshuffled (the scoring plan shuffles them by segment
+            # anyway); tokens and rerank_tokens never enter it
+            self._doc_stats = self._doc_stats.persist()
+            # postings term-sorted in 1000-row column batches: each batch's
+            # term min/max lets the scan skip it. Measured on the benchmark's
+            # serve index (341k rows, 4 partitions): 0.157 s of executor CPU
+            # per term filter at the default 10k-row batches, 0.021 s so
+            from ..util import scoped_conf
+
+            with scoped_conf(
+                self.spark, {"spark.sql.inMemoryColumnarStorage.batchSize": "1000"}
+            ):
+                self._postings = self._postings.sortWithinPartitions("term").persist()
 
     def _terms_bytes_estimate(self) -> int:
         """On-disk byte size of the terms table (cheap driver-side walk for
@@ -219,42 +228,30 @@ class SearchEngine:
         buckets: list[tuple[str, str]],
         sources: set[str] | None,
         instances: set[str] | None,
+        *extra: Column,
     ) -> DataFrame:
-        """Doc stats of the span of `buckets` (_day_buckets), narrowed by the
-        db/instance filters (all pushed to the docs parquet scan), with each
-        doc's `bucket`: the index of its range in `buckets`."""
-        docs = self._docs.filter(
-            F.col("update_date").between(buckets[-1][0], buckets[0][1])
-        )
+        """The kernel's docs side: the doc stats of the span of `buckets`
+        (_day_buckets), narrowed by the db/instance filters (all pushed to the
+        docs scan), as (seg, doc_id, tfnorm, const, bucket, update_date int,
+        conv_id, *extra). `bucket` is the index of the doc's range in
+        `buckets`; update_date stays yyyyMMdd as an int."""
+        cond = F.col("update_date").between(buckets[-1][0], buckets[0][1])
         if sources is not None:
-            docs = docs.filter(F.col("db").isin(sorted(sources)))
+            cond = cond & F.col("db").isin(sorted(sources))
         if instances is not None:
-            docs = docs.filter(F.col("instance").isin(sorted(instances)))
+            cond = cond & F.col("instance").isin(sorted(instances))
         bucket = F.lit(len(buckets) - 1)
         for i in range(len(buckets) - 2, -1, -1):
             bucket = F.when(F.col("update_date") >= buckets[i][0], i).otherwise(bucket)
-        return docs.withColumn("bucket", bucket.cast("int"))
-
-    def _kernel_cut(
-        self,
-        w_idf: dict[str, float],
-        from_str: str,
-        to_str: str,
-        pool: int,
-        sources: set[str] | None,
-        instances: set[str] | None,
-    ) -> DataFrame:
-        """The kernel run as a batch of one, cut to the top-`pool` by
-        (score desc, doc_id asc): the plan score_bucket collects."""
-        from .wand import wand_score_batch
-
-        return (
-            wand_score_batch(
-                self, {"q": w_idf}, pool, [(from_str, to_str)], sources, instances
-            )
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(pool)
+        return self._doc_stats.filter(cond).select(
+            "seg",
+            "doc_id",
+            "tfnorm",
+            self._const_for(sources, instances).alias("const"),
+            bucket.cast("int").alias("bucket"),
+            F.col("update_date").cast("int").alias("update_date"),
+            "conv_id",
+            *extra,
         )
 
     def score_bucket(
@@ -266,62 +263,20 @@ class SearchEngine:
         sources: set[str] | None,
         instances: set[str] | None,
     ) -> DataFrame:
-        """Top-`pool` candidates (doc_id, score f32) within a date bucket.
-        The kernel must run under its execution confs, so the cut is
-        collected inside the scope and the rerank plan starts from its rows."""
-        from ..util import kernel_exec_conf, local_df
+        """One query's top-`pool` BM25 candidates (doc_id, score f32) within a
+        date bucket, in pool order (score desc, doc_id asc): the kernel's
+        candidate pool before the rerank, as a lazy plan. Searches take the
+        rerank plan (query/batch.py), which cuts this pool per query inside
+        it; this view of the pool alone stays for pool-level checks."""
+        from .wand import wand_score_batch
 
-        with kernel_exec_conf(self.spark):
-            rows = self._kernel_cut(
-                w_idf, from_str, to_str, pool, sources, instances
-            ).collect()
-        return local_df(
-            self.spark, [(r["doc_id"], r["score"]) for r in rows], "doc_id long, score float"
-        )
-
-    # ------------------------------------------------------------ one bucket
-
-    def _bucket_hits(
-        self,
-        w_idf: dict[str, float],
-        q_rerank: list[str],
-        min_ngrams: int,
-        max_docs: int,
-        sources: set[str] | None,
-        instances: set[str] | None,
-        from_str: str,
-        to_str: str,
-        explain: bool = False,
-    ) -> DataFrame:
-        min2 = get_min_ngrams(min_ngrams, len(q_rerank))
-        pool = CANDIDATE_FACTOR * max_docs
-        cands = self.score_bucket(w_idf, from_str, to_str, pool, sources, instances)
-        enriched = (
-            F.broadcast(cands)
-            .join(
-                self._docs.select("doc_id", "conv_id", "update_date", "rerank_tokens"),
-                "doc_id",
-            )
-            .withColumn(
-                "n_common",
-                F.size(
-                    F.array_intersect(
-                        F.col("rerank_tokens"),
-                        F.array(*[F.lit(t) for t in q_rerank]),
-                    )
-                ),
-            )
-            .filter(F.col("n_common") >= min2)
-        )
-        cols = ["doc_id", "conv_id", "score", "n_common", "update_date"]
-        if explain:
-            cols.append("rerank_tokens")
         return (
-            enriched.orderBy(
-                F.desc("n_common"), F.desc("update_date"), F.desc("score"), F.asc("doc_id")
+            wand_score_batch(
+                self, {"q": w_idf}, pool, [(from_str, to_str)], sources, instances
             )
-            .limit(max_docs)
-            .select(*cols)
+            .select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(pool)
         )
 
     # ------------------------------------------------------------ entrypoint
@@ -404,22 +359,21 @@ class SearchEngine:
         if not w_idf:
             return []
 
-        if split_time:
-            from .batch import ladder_hits
+        from .batch import ladder_hits
 
-            rows = ladder_hits(
-                self, {"q": (w_idf, q_rerank)}, max_docs, min_ngrams, sources,
-                instances, self._day_buckets(lower, upper, True), explain,
-            )["q"]
-        else:
-            [(from_str, to_str)] = self._day_buckets(lower, upper, False)
-            rows = self._bucket_hits(
-                w_idf, q_rerank, min_ngrams, max_docs, sources, instances,
-                from_str, to_str, explain,
-            ).collect()
-        if explain:
-            return [ExplainedHit(r, q_rerank) for r in rows]
-        return [Hit(*(r[c] for c in HIT_COLS)) for r in rows]
+        hits = ladder_hits(
+            self, {"q": (w_idf, q_rerank)}, max_docs, min_ngrams, sources,
+            instances, self._day_buckets(lower, upper, split_time),
+        )["q"]
+        if not explain or not hits:
+            return hits
+        tokens = {
+            r["doc_id"]: list(r["rerank_tokens"])
+            for r in self._docs.filter(F.col("doc_id").isin([h.doc_id for h in hits]))
+            .select("doc_id", "rerank_tokens")
+            .collect()
+        }
+        return [ExplainedHit(h, tokens[h.doc_id], q_rerank) for h in hits]
 
 
 class ExplainedHit:
@@ -427,10 +381,9 @@ class ExplainedHit:
 
     __slots__ = (*HIT_COLS, "ngrams")
 
-    def __init__(self, row, q_rerank: list[str]):
+    def __init__(self, hit, similar: list[str], q_rerank: list[str]):
         for c in HIT_COLS:
-            setattr(self, c, row[c])
-        similar = list(row["rerank_tokens"])
+            setattr(self, c, getattr(hit, c))
         sim_set = set(similar)
         common = [t for t in q_rerank if t in sim_set]
         self.ngrams = (list(q_rerank), similar, common)

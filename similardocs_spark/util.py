@@ -205,11 +205,20 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 #   batch a wash) — so local[N] keeps AQE. Skew splitting is not needed
 #   on this path either way: postings are bounded per segment and kernel
 #   output is capped at pool rows per (segment, query).
-# - minPartitionSize=16k: byte-based coalescing collapsed the CPU-bound
+# - minPartitionSize=64k, applied whenever AQE is active in the scope.
+#   Byte-based coalescing at the 1 MB default collapsed the CPU-bound
 #   kernel stage reading ~8 MB to 7 tasks on 32 cores (4.1 s for 22 s of
-#   executor CPU); applied whenever AQE is active in the scope.
+#   executor CPU); AQE's target is max(floor, bytes / parallelism), so
+#   there the floor does not bind. On small inputs it decides how many
+#   Python tasks a stage runs, and each one costs ~0.17 s of worker CPU
+#   whatever its row count (4-vCPU x86 host, local[4]); ~60 ms of that is
+#   pyspark's per-task importlib.invalidate_caches() (worker_util), which
+#   re-reads pyspark.zip's directory for 14 zipimporters. A serve search's
+#   kernel stage reads ~55 KB (the docs side carries conv_id): at a 16k
+#   floor that ran as 2 Python tasks, at 64k as 1 (median process CPU per
+#   search 0.61-0.69 s against 0.79 s).
 def _kernel_confs(spark: SparkSession) -> dict[str, str]:
-    confs = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k"}
+    confs = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k"}
     master = spark.sparkContext.master or ""
     # single-JVM masters are `local` or `local[N]`/`local[*]`;
     # `local-cluster[...]` and real cluster managers run executors in

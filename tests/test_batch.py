@@ -193,16 +193,16 @@ def test_kernel_conf_scopes_keyed_per_session(spark):
     s2 = spark.newSession()
     key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     base1, base2 = spark.conf.get(key), s2.conf.get(key)
-    assert base1 != "16k" and base2 != "16k"
+    assert base1 != "64k" and base2 != "64k"
 
     with kernel_exec_conf(spark):
-        assert spark.conf.get(key) == "16k"
+        assert spark.conf.get(key) == "64k"
         with kernel_exec_conf(s2):
             # second session gets its own scope despite the open first scope
-            assert s2.conf.get(key) == "16k"
+            assert s2.conf.get(key) == "64k"
         # and restores independently, while the first stays active
         assert s2.conf.get(key) == base2
-        assert spark.conf.get(key) == "16k"
+        assert spark.conf.get(key) == "64k"
     assert spark.conf.get(key) == base1
 
 
@@ -219,6 +219,21 @@ def _jobs_run(spark, fn) -> int:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.spark
+def test_search_runs_one_plan(corpus):
+    """A non-split search() is one plan: at most 4 Spark jobs (with AQE, the
+    postings and docs map stages, the kernel stage and the result stage),
+    one kernel cogroup, and no candidate join against the docs."""
+    from similardocs_spark.plans.audit import audit_query_plan
+
+    engine, _ = corpus
+    text = REFERENCE_QUERIES[sorted(REFERENCE_QUERIES)[0]]
+    assert engine.search(text)  # warm-up, and the search has hits
+    assert _jobs_run(engine.spark, lambda: engine.search(text)) <= 4
+    checks = audit_query_plan(engine, text)
+    assert checks["kernel_cogroup"] and checks["no_candidate_join"], checks
 
 
 @pytest.mark.spark

@@ -179,11 +179,15 @@ COMMIT_WRITES = [
     ("meta_stats", "overwrite"),
     ("staging_drop", "drop"),
 ]
-# (id, index into COMMIT_WRITES of the write that crashes, whether the crash
-# comes after that write deleted its target: an overwrite clears the path
-# before its job runs)
-COMMIT_CRASHES = [(w, at, False) for at, (w, _) in enumerate(COMMIT_WRITES)] + [
-    ("stats_after_delete", 2, True)
+# (id, index into COMMIT_WRITES of the write that crashes, what that write
+# deleted before the crash: nothing, the whole table (an overwrite clears
+# the path before its job runs) or the segments it replaces (a dynamic
+# overwrite clears those partitions at job commit). The postings write
+# carries the rerank postings too, so a crash inside it loses the affected
+# segments' index-term and rerank lists alike.)
+COMMIT_CRASHES = [(w, at, None) for at, (w, _) in enumerate(COMMIT_WRITES)] + [
+    ("stats_after_delete", 2, "table"),
+    ("postings_after_delete", 1, "segs"),
 ]
 
 
@@ -224,7 +228,7 @@ def commit_twin(spark, tmp_path_factory):
 @pytest.mark.parametrize("at,wipe", [c[1:] for c in COMMIT_CRASHES], ids=[c[0] for c in COMMIT_CRASHES])
 def test_commit_crash_matrix(spark, tmp_path, monkeypatch, commit_twin, at, wipe):
     """A crash at each write of the incremental commit in turn (instead of
-    that write, or inside it once it deleted its target):
+    that write, or inside it once it deleted what it replaces):
     resume_incremental converges to the same tables and the same search
     hits as the uninterrupted update."""
     import shutil
@@ -251,8 +255,13 @@ def test_commit_crash_matrix(spark, tmp_path, monkeypatch, commit_twin, at, wipe
         def write(self, *args, **kwargs):
             if inside:
                 if len(done) == at:
-                    if wipe:
+                    if wipe == "table":
                         shutil.rmtree(args[1], ignore_errors=True)
+                    elif wipe == "segs":
+                        for r in args[0].select("seg").distinct().collect():
+                            shutil.rmtree(
+                                os.path.join(args[1], f"seg={r['seg']}"), ignore_errors=True
+                            )
                     raise CommitCrash(COMMIT_WRITES[at][0])
                 done.append(method)
             return real(self, *args, **kwargs)
@@ -454,6 +463,51 @@ def test_legacy_postings_fail_loudly_until_optimize(spark, tmp_path):
         resume_incremental(spark, paths)
 
     optimize(spark, paths)
+    engine = SearchEngine(spark, paths, PINNED_TODAY, END_DAYS_AGO)
+    oracle = OracleSearch(
+        OracleIndex.build(oracle_docs(turns)), PINNED_TODAY, END_DAYS_AGO
+    )
+    for q in QUERIES:
+        assert_hits_equal(engine.search(q), oracle.search(q), f"after optimize {q}")
+
+
+@pytest.mark.spark
+def test_missing_rerank_postings_fail_loudly_until_optimize(spark, tmp_path):
+    """An index whose postings hold the index terms but no rerank postings
+    (written before them) must not be opened or incrementally updated: each
+    raises ValueError naming optimize. optimize() writes the rerank postings,
+    after which search() matches the oracle again."""
+    from similardocs_spark.index.incremental import optimize
+    from similardocs_spark.index.sortbuild import RERANK_NS
+
+    n_convs, seed = 40, 42
+    turns = make_transcripts(n_convs, seed=seed)
+    root = str(tmp_path / "no_rerank")
+    paths = build_index(
+        spark, transcripts_df(spark, n_convs=n_convs, seed=seed), root, seg_size=16
+    )
+    rows = _postings_rows(spark, root)
+    assert any(term.startswith(RERANK_NS) for _, term, _, _ in rows)
+    (
+        spark.createDataFrame(
+            [r for r in rows if not r[1].startswith(RERANK_NS)],
+            "seg long, term string, df_seg long, doc_ids array<long>",
+        )
+        .write.partitionBy("seg")
+        .mode("overwrite")
+        .parquet(paths.postings)
+    )
+
+    with pytest.raises(ValueError, match="optimize"):
+        SearchEngine(spark, paths, PINNED_TODAY, END_DAYS_AGO)
+    delta = transcripts_df(spark, n_convs=3, seed=7).withColumn(
+        "conv_id", F.concat(F.lit("nv"), "conv_id")
+    )
+    with pytest.raises(ValueError, match="optimize"):
+        incremental_update(spark, paths, delta)
+
+    optimize(spark, paths)
+    assert _postings_rows(spark, root) == rows
     engine = SearchEngine(spark, paths, PINNED_TODAY, END_DAYS_AGO)
     oracle = OracleSearch(
         OracleIndex.build(oracle_docs(turns)), PINNED_TODAY, END_DAYS_AGO

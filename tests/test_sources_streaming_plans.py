@@ -92,6 +92,7 @@ def test_plan_audit(spark, tmp_path):
     assert checks["no_nested_loop"], checks
     assert checks["topk_not_global_sort"], checks
     assert checks["column_pruned_docs"], checks
+    assert checks["no_candidate_join"], checks
 
 
 @pytest.mark.spark
