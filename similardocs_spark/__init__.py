@@ -9,6 +9,70 @@ Layers:
 - query/ ............................. batched per-segment scoring kernel + rerank + day ladder
 - oracle/ ............................ pure-Python reference search (golden tests)
 - operators/ ......................... training-data ops (dedup, ANN, text quality, ...)
+
+Importing the package inside a pyspark worker also makes the worker's
+per-task `importlib.invalidate_caches()` cheap; see _install_zip_dir_reuse.
 """
+import sys
 
 __version__ = "0.1.0"
+
+
+def _stat_checked(read_all):
+    """A `zipimporter.invalidate_caches` that calls `read_all` (the stdlib
+    one, which re-reads the archive's whole directory) only when the
+    archive's (st_ino, st_size, st_mtime_ns) differs from its last read;
+    otherwise the importer takes the directory already cached for its
+    archive. An archive's first call after install reads it, since nothing
+    says which file its cached directory came from."""
+    import os
+    import zipimport
+
+    last_read: dict[str, tuple[int, int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            sig = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            sig = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if sig is not None and files is not None and last_read.get(self.archive) == sig:
+            self._files = files
+            return
+        read_all(self)
+        # stat was taken before the read: a rewrite in between reads again
+        if sig is not None and self.archive in zipimport._zip_directory_cache:
+            last_read[self.archive] = sig
+        else:
+            last_read.pop(self.archive, None)
+
+    return invalidate_caches
+
+
+def _install_zip_dir_reuse() -> None:
+    """In a pyspark worker on CPython < 3.13, replace
+    `zipimport.zipimporter.invalidate_caches` by its _stat_checked form.
+    The worker calls `importlib.invalidate_caches()` at the start of every
+    task, and the stdlib form re-reads the directory of pyspark.zip (1,328
+    entries in pyspark 4.1) once for each of the ~16 zipimporters it holds:
+    ~0.08 s of worker CPU per task (an empty cogroup task measured 0.10 s
+    of worker CPU with it and 0.015 s without, local[4] on a 4-vCPU x86
+    host). CPython 3.13 made the invalidation lazy. Every package UDF
+    imports this package, so a reused worker pays it only on its first
+    task. The driver and other processes keep the stdlib form:
+    the worker is recognized by pyspark's own SparkFiles flag, looked up in
+    sys.modules so that nothing is imported here."""
+    if sys.implementation.name != "cpython" or sys.version_info >= (3, 13):
+        return
+    files = sys.modules.get("pyspark.core.files") or sys.modules.get("pyspark.files")
+    if not getattr(getattr(files, "SparkFiles", None), "_is_running_on_worker", False):
+        return
+    import zipimport
+
+    zipimport.zipimporter.invalidate_caches = _stat_checked(
+        zipimport.zipimporter.invalidate_caches
+    )
+
+
+_install_zip_dir_reuse()

@@ -5,10 +5,13 @@ one plan a search runs (query/batch.py:rerank_plan):
   - query-term predicate reaches the postings parquet scan (PushedFilters)
   - doc-stats scan prunes columns (ReadSchema excludes text/tokens)
   - postings and doc stats meet in the per-segment kernel cogroup
-    (FlatMapCoGroupsInPandas), never in a nested-loop or cartesian join
+    (FlatMapCoGroupsInArrow), never in a nested-loop or cartesian join
   - the candidate pool is cut by a window per query, never a global sort
   - no candidate join: the plan joins nothing, and the docs are scanned
     once, for the kernel
+  - no pandas UDF: neither that plan nor the later-bucket plan of a
+    split_time ladder (the one with the settle) holds an *InPandas node,
+    so both Python steps exchange Arrow tables only
 
 Used by tests/test_sources_streaming_plans.py and handy interactively:
     from similardocs_spark.plans.audit import audit_query_plan
@@ -25,16 +28,19 @@ def _plan(df) -> str:
     )
 
 
-def _search_plan(engine, text: str) -> str:
+def _search_plan(engine, text: str, split_time: bool = False) -> str:
     """Formatted plan of a default search() of `text`, planned under the
-    same execution confs it is collected with."""
+    same execution confs it is collected with; with `split_time`, the plan
+    of the ladder's later buckets (query/batch.py:ladder_hits)."""
     from ..oracle.refsearch import DEFAULT_MAX_DOCS, DEFAULT_MIN_NGRAMS
     from ..query.batch import rerank_plan
     from ..util import kernel_exec_conf
 
     prep = engine.prepare(text)
     assert prep is not None
-    buckets = engine._day_buckets(*engine._day_bounds(None), False)
+    buckets = engine._day_buckets(*engine._day_bounds(None), split_time)
+    if split_time:
+        buckets = buckets[1:]
     with kernel_exec_conf(engine.spark):
         return _plan(
             rerank_plan(
@@ -46,10 +52,11 @@ def _search_plan(engine, text: str) -> str:
 
 def audit_query_plan(engine, text: str) -> dict[str, bool]:
     plan = _search_plan(engine, text)
+    ladder = _search_plan(engine, text, split_time=True)
     joins = re.findall(r"^\(\d+\) (\w*Join)\b", plan, re.M)
     return {
         "term_filter_pushed": "PushedFilters: [In(term" in plan or "In(term," in plan,
-        "kernel_cogroup": plan.count("FlatMapCoGroupsInPandas (") == 1,
+        "kernel_cogroup": plan.count("FlatMapCoGroupsInArrow (") == 1,
         "no_nested_loop": "BroadcastNestedLoopJoin" not in plan
         and "CartesianProduct" not in plan,
         "topk_not_global_sort": "Window (" in plan
@@ -57,6 +64,7 @@ def audit_query_plan(engine, text: str) -> dict[str, bool]:
         "column_pruned_docs": "text" not in _read_schema_of(plan, "docs"),
         "no_candidate_join": not joins
         and len(re.findall(r"Location: \w+ \[\S*/docs\]", plan)) == 1,
+        "no_pandas_udf": "InPandas" not in plan + ladder,
     }
 
 

@@ -7,14 +7,18 @@ postings scan and the shuffles are shared:
   postings (term-pruned scan: query terms and rerank tokens) cogroup doc
   stats (filters pushed to the parquet scan, each doc tagged with its day
   bucket), per (segment × slice)
-    → batched per-segment kernel (query/wand.py): each posting list read
-      ONCE, float32-spec scoring and the rerank's n_common, ≤ pool rows per
-      (segment, query, bucket)
+    → batched per-segment kernel (query/wand.py, cogroup applyInArrow):
+      each posting list read ONCE, float32-spec scoring and the rerank's
+      n_common, ≤ pool rows per (segment, query, bucket)
     → one exchange on query_id
     → per-(query, bucket) candidate pool via ranked window (150·quota)
     → n_common ≥ min2 → per-(query, bucket, tier) top-quota window →
-      per-query bucket quotas settled on the executors
+      per-query bucket quotas settled on the executors (_settle, a
+      groupBy(query_id) applyInArrow, over several buckets only)
     → one collect of ≤ max_docs rows per query
+
+Both Python steps take and return Arrow tables: no pandas frame is built on
+the query path.
 
 All queries in a batch share the filter settings (sources/instances/last_days/
 split_time), like a profile-updater sweep does. The split_time day-bucket
@@ -25,7 +29,7 @@ ladder_hits. search() runs the same plans as a batch of one.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
@@ -130,26 +134,34 @@ def rerank_plan(
         .filter(F.col("rank") <= F.col("quota"))
     )
     if len(buckets) > 1:
-        ranked = ranked.groupBy("query_id").applyInPandas(_settle, ranked.schema)
+        ranked = ranked.groupBy("query_id").applyInArrow(_settle, ranked.schema)
     return ranked
 
 
-def _settle(pdf: pd.DataFrame) -> pd.DataFrame:
+def _settle(table: pa.Table) -> pa.Table:
     """One query's survivors → its hits, `rank` renumbered in result order:
     in bucket order, the first `remaining` survivors of pool rank _r ≤
     150·remaining, in rerank order (n_common desc, update_date desc, then
     the pool order that _r numbers)."""
-    days = np.unique(pdf["update_date"].to_numpy(), return_inverse=True)[1]
-    pdf = pdf.iloc[np.lexsort((pdf["_r"], -days, -pdf["n_common"], pdf["bucket"]))]
-    b, r = pdf["bucket"].to_numpy(), pdf["_r"].to_numpy()
+
+    def col(name: str) -> np.ndarray:
+        return table.column(name).to_numpy()
+
+    days = np.unique(col("update_date"), return_inverse=True)[1]
+    order = np.lexsort((col("_r"), -days, -col("n_common"), col("bucket")))
+    b, r = col("bucket")[order], col("_r")[order]
     starts = np.flatnonzero(np.r_[True, b[1:] != b[:-1]])
-    left = int(pdf["quota"].iat[0])
-    keep: list = []
+    left = table.column("quota")[0].as_py()
+    keep: list[np.ndarray] = []
     for s, e in zip(starts, [*starts[1:], len(b)]):
         got = s + np.flatnonzero(r[s:e] <= CANDIDATE_FACTOR * left)[:left]
-        keep.extend(got)
+        keep.append(got)
         left -= len(got)
-    return pdf.iloc[keep].assign(rank=np.arange(1, len(keep) + 1, dtype=np.int32))
+    kept = order[np.concatenate(keep)]
+    i = table.schema.get_field_index("rank")
+    return table.take(kept).set_column(
+        i, table.schema.field(i), pa.array(np.arange(1, kept.size + 1, dtype=np.int32))
+    )
 
 
 def search_batch_mixed(

@@ -1,15 +1,17 @@
 """Batched per-segment scoring kernel — the engine's one scoring plan.
 
-Executes per (SEGMENT × query-slice) via `cogroup(...).applyInPandas`: the
+Executes per (SEGMENT × query-slice) via `cogroup(...).applyInArrow`: the
 segment's postings rows (term, doc_ids) for the batch's terms and rerank
 tokens, cogrouped with its filtered doc stats (doc_id, tfnorm, const,
 bucket, update_date, conv_id). All of a term's postings for a doc range are
-co-located by the index layout, and Arrow hands each posting list to the
-kernel as an int64 array, so the kernel localizes every needed list once,
-scatter-adds each query's float32 term contributions into a dense
-per-segment float64 accumulator (term-at-a-time, exhaustive), counts each
-doc's common rerank tokens the same way from the rerank postings, and emits
-≤ pool rows per (segment, query, bucket). `bucket` is a doc's day-bucket in
+co-located by the index layout, and the kernel reads each posting list as a
+slice of the Arrow `list<int64>` column's one values buffer, with no pandas
+in between (the round trip cost more than the numpy it wrapped). It
+localizes every needed list once, scatter-adds each query's float32 term
+contributions into a dense per-segment float64 accumulator
+(term-at-a-time, exhaustive), counts each doc's common rerank tokens the
+same way from the rerank postings, and emits ≤ pool rows per (segment,
+query, bucket) as one Arrow table. `bucket` is a doc's day-bucket in
 the split_time ladder (0 for every doc of a single range), so one pass
 scores a whole ladder. Every search and every batch is scored here, whatever
 the query terms' Σdf; one search is a batch of one (query/batch.py).
@@ -28,16 +30,28 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.sortbuild import RERANK_NS
 
-
-# docs columns the kernel reads; every other docs column rides along to the
-# rows it emits
-_KERNEL_DOC_COLS = ("seg", "slice", "doc_id", "tfnorm", "const", "bucket")
+# the kernel's rows, the schema its applyInArrow declares; the columns after
+# `quota` ride along from the docs side
+KERNEL_SCHEMA = pa.schema(
+    [
+        ("query_id", pa.string()),
+        ("doc_id", pa.int64()),
+        ("score", pa.float32()),
+        ("bucket", pa.int32()),
+        ("n_common", pa.int32()),
+        ("min2", pa.int32()),
+        ("quota", pa.int32()),
+        ("update_date", pa.int32()),
+        ("conv_id", pa.string()),
+    ]
+)
+_CARRY = KERNEL_SCHEMA.names[KERNEL_SCHEMA.get_field_index("quota") + 1:]
 
 
 class Rerank(NamedTuple):
@@ -55,65 +69,61 @@ _NO_RERANK = Rerank([], 0, 0)
 
 def batch_score_kernel(
     key,
-    postings: pd.DataFrame,
-    docs: pd.DataFrame,
+    postings: pa.Table,
+    docs: pa.Table,
     by_slice: dict[int, dict[str, dict[str, float]]],
     seg_size: int,
     pool: int,
     rerank: dict[str, Rerank] | None = None,
-) -> pd.DataFrame:
+) -> pa.Table:
     """Per-(segment, query-slice) batched scoring: localize every needed
     posting list ONCE, then scatter-add each query's term contributions into
-    a dense per-segment accumulator. Float discipline is the pinned spec
-    (bm25.py): f32 per-term product, f64 accumulate + const, final f32.
-    Emits ≤ pool rows per (segment, query, bucket), in (bucket, score desc,
-    doc_id asc) order. Each row's `n_common` counts the query's `rerank`
-    tokens whose rerank posting list (term RERANK_NS + token) holds the doc,
-    a scatter-add of list membership like the score's; the row also carries
-    the query's rerank `min2` and `quota` (0 for a query without a Rerank)."""
-    carry = [c for c in docs.columns if c not in _KERNEL_DOC_COLS]
-    empty = pd.DataFrame(
-        {
-            "query_id": pd.Series(dtype="object"),
-            "doc_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float32"),
-            "bucket": pd.Series(dtype="int32"),
-            "n_common": pd.Series(dtype="int32"),
-            "min2": pd.Series(dtype="int32"),
-            "quota": pd.Series(dtype="int32"),
-            **{c: docs[c].iloc[:0] for c in carry},
-        }
-    )
-    queries = by_slice.get(int(key[1]), {})
-    if len(docs) == 0 or len(postings) == 0 or not queries:
-        return empty
-    seg = int(key[0])
-    base = seg * seg_size
+    a dense per-segment accumulator. `key` is the (seg, slice) pair of
+    Arrow scalars. Float discipline is the pinned spec (bm25.py): f32
+    per-term product, f64 accumulate + const, final f32. Emits ≤ pool rows
+    per (segment, query, bucket), in (bucket, score desc, doc_id asc)
+    order, as a KERNEL_SCHEMA table. Each row's `n_common` counts the
+    query's `rerank` tokens whose rerank posting list (term RERANK_NS +
+    token) holds the doc, a scatter-add of list membership like the
+    score's; the row also carries the query's rerank `min2` and `quota` (0
+    for a query without a Rerank)."""
+    queries = by_slice.get(key[1].as_py(), {})
+    if docs.num_rows == 0 or postings.num_rows == 0 or not queries:
+        return KERNEL_SCHEMA.empty_table()
+    base = key[0].as_py() * seg_size
     rerank = rerank or {}
 
-    local = docs["doc_id"].to_numpy() - base
+    def col(name: str, dtype) -> np.ndarray:
+        return docs.column(name).to_numpy().astype(dtype, copy=False)
+
+    local = col("doc_id", np.int64) - base
     n_local = int(local.max()) + 1
     tfnorm = np.full(n_local, np.nan, dtype=np.float32)
-    tfnorm[local] = docs["tfnorm"].to_numpy(dtype=np.float32)
+    tfnorm[local] = col("tfnorm", np.float32)
     const = np.zeros(n_local, dtype=np.float64)
-    const[local] = docs["const"].to_numpy(dtype=np.float64)
+    const[local] = col("const", np.float64)
     allowed = np.zeros(n_local, dtype=bool)
     allowed[local] = True
     bucket = np.zeros(n_local, dtype=np.int32)
-    bucket[local] = docs["bucket"].to_numpy(dtype=np.int32)
+    bucket[local] = col("bucket", np.int32)
     row_of = np.zeros(n_local, dtype=np.int64)
-    row_of[local] = np.arange(len(docs))
+    row_of[local] = np.arange(docs.num_rows)
 
+    # each list is a slice of the ListArray's one values buffer
+    lists = postings.column("doc_ids").combine_chunks()
+    offsets = lists.offsets.to_numpy()
+    values = lists.values.to_numpy()
     ids_by_term: dict[str, np.ndarray] = {}
-    for row in postings.itertuples(index=False):
-        if row.term not in ids_by_term:
-            ids = np.asarray(row.doc_ids, dtype=np.int64) - base
+    for i, term in enumerate(postings.column("term").to_pylist()):
+        if term not in ids_by_term:
+            ids = values[offsets[i]:offsets[i + 1]] - base
             # docs outside the filtered window were never materialized in
             # the dense arrays; clip before indexing (NaN tfnorm + allowed
             # mask handles in-range disallowed docs)
-            ids_by_term[row.term] = ids[(ids >= 0) & (ids < n_local)]
+            ids_by_term[term] = ids[(ids >= 0) & (ids < n_local)]
 
-    frames: list[pd.DataFrame] = []
+    # per emitting query: (qid, its Rerank, hit docs, their scores, n_common)
+    out: list[tuple[str, Rerank, np.ndarray, np.ndarray, np.ndarray]] = []
     acc = np.zeros(n_local, dtype=np.float64)
     matched = np.zeros(n_local, dtype=bool)
     common = np.zeros(n_local, dtype=np.int32)
@@ -145,21 +155,29 @@ def batch_score_kernel(
         b = bucket[idxs[order]]
         order = order[np.arange(order.size) - np.searchsorted(b, b) < pool]
         hit = idxs[order]
-        frames.append(
-            pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "doc_id": (hit + base).astype(np.int64),
-                    "score": scores[order],
-                    "bucket": bucket[hit],
-                    "n_common": common[hit],
-                    "min2": np.int32(rr.min2),
-                    "quota": np.int32(rr.quota),
-                    **{c: docs[c].to_numpy()[row_of[hit]] for c in carry},
-                }
-            )
-        )
-    return pd.concat(frames, ignore_index=True) if frames else empty
+        out.append((qid, rr, hit, scores[order], common[hit]))
+    if not out:
+        return KERNEL_SCHEMA.empty_table()
+    qids, rrs, hits, hit_scores, hit_common = zip(*out)
+    hit = np.concatenate(hits)
+    of_query = np.repeat(np.arange(len(out)), [h.size for h in hits])
+
+    def per_query(values) -> pa.Array:
+        return pa.array(np.asarray(values, dtype=np.int32)[of_query])
+
+    return pa.Table.from_arrays(
+        [
+            pa.array(qids, pa.string()).take(of_query),
+            pa.array(hit + base),
+            pa.array(np.concatenate(hit_scores)),
+            pa.array(bucket[hit]),
+            pa.array(np.concatenate(hit_common)),
+            per_query([r.min2 for r in rrs]),
+            per_query([r.quota for r in rrs]),
+            *(docs.column(c).take(row_of[hit]) for c in _CARRY),
+        ],
+        schema=KERNEL_SCHEMA,
+    )
 
 
 def wand_score_batch(
@@ -183,6 +201,8 @@ def wand_score_batch(
     would only cross-join docs that meet no postings."""
     import math
     import zlib
+
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     spark = engine.spark
     rerank = rerank or {}
@@ -230,9 +250,5 @@ def wand_score_batch(
     return (
         postings.groupBy("seg", "slice")
         .cogroup(docs.groupBy("seg", "slice"))
-        .applyInPandas(
-            kernel,
-            schema="query_id string, doc_id long, score float, bucket int, n_common int, "
-            "min2 int, quota int, update_date int, conv_id string",
-        )
+        .applyInArrow(kernel, schema=from_arrow_schema(KERNEL_SCHEMA))
     )

@@ -210,13 +210,16 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 #   kernel stage reading ~8 MB to 7 tasks on 32 cores (4.1 s for 22 s of
 #   executor CPU); AQE's target is max(floor, bytes / parallelism), so
 #   there the floor does not bind. On small inputs it decides how many
-#   Python tasks a stage runs, and each one costs ~0.17 s of worker CPU
-#   whatever its row count (4-vCPU x86 host, local[4]); ~60 ms of that is
-#   pyspark's per-task importlib.invalidate_caches() (worker_util), which
-#   re-reads pyspark.zip's directory for 14 zipimporters. A serve search's
-#   kernel stage reads ~55 KB (the docs side carries conv_id): at a 16k
-#   floor that ran as 2 Python tasks, at 64k as 1 (median process CPU per
-#   search 0.61-0.69 s against 0.79 s).
+#   Python tasks a stage runs, and each one costs CPU whatever its row
+#   count: a cogroup task that returns nothing, in a reused worker, takes
+#   ~0.015 s of Python-worker CPU and ~0.085 s of JVM CPU (4-vCPU x86 host,
+#   local[4]). The worker side was ~0.10 s while pyspark's per-task
+#   importlib.invalidate_caches() re-read pyspark.zip's directory for each
+#   of its 16 zipimporters; the package's import now stops that (see
+#   similardocs_spark/__init__.py). A serve search's kernel stage reads
+#   ~55 KB (the docs side carries conv_id): at a 16k floor that ran as 2
+#   Python tasks, at 64k as 1 (median process CPU per search 0.61-0.69 s
+#   against 0.79 s, before the zip hook).
 def _kernel_confs(spark: SparkSession) -> dict[str, str]:
     confs = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k"}
     master = spark.sparkContext.master or ""
@@ -232,5 +235,5 @@ def _kernel_confs(spark: SparkSession) -> dict[str, str]:
 def kernel_exec_conf(spark: SparkSession):
     """scoped_conf of _kernel_confs, for plans whose hot stage is a
     CPU-bound Python kernel over a SMALL shuffle input (cogroup +
-    applyInPandas scoring)."""
+    applyInArrow scoring)."""
     return scoped_conf(spark, _kernel_confs(spark))

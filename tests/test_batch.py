@@ -67,9 +67,11 @@ def test_batch_matches_oracle(corpus, mode, with_aliases):
     [dict(), dict(split_time=True), dict(sources={"MEDLINE", "LILACS"})],
 )
 def test_batch_serving_mode_matches_oracle(spark, corpus, mode):
-    """Serving mode (cache=True): docs cached pre-partitioned on doc_id,
-    rerank join via shuffled-hash (docs-stationary). Must be row-identical
-    to the oracle (same results as the ad hoc broadcast-join path)."""
+    """Serving mode (cache=True): the engine persists its doc stats and its
+    term-sorted postings, and the one rerank plan reads them. Must be
+    row-identical to the oracle (same results as the uncached engine). The
+    two persisted frames are released, so no cached block outlives the
+    test."""
     engine, oracle = corpus
     serving = SearchEngine(spark, engine.paths, PINNED_TODAY, END_DAYS_AGO, cache=True)
     try:
@@ -78,7 +80,7 @@ def test_batch_serving_mode_matches_oracle(spark, corpus, mode):
             exp = oracle.search(text, **mode)
             assert_hits_equal(res[qname], exp, f"fused {qname} {mode}")
     finally:
-        serving._docs.unpersist()
+        serving._doc_stats.unpersist()
         serving._postings.unpersist()
 
 
@@ -225,7 +227,9 @@ def _jobs_run(spark, fn) -> int:
 def test_search_runs_one_plan(corpus):
     """A non-split search() is one plan: at most 4 Spark jobs (with AQE, the
     postings and docs map stages, the kernel stage and the result stage),
-    one kernel cogroup, and no candidate join against the docs."""
+    one kernel cogroup, and no candidate join against the docs. Its Python
+    steps, and those of a split_time ladder's later buckets, are Arrow
+    UDFs: no plan holds an *InPandas node."""
     from similardocs_spark.plans.audit import audit_query_plan
 
     engine, _ = corpus
@@ -234,6 +238,7 @@ def test_search_runs_one_plan(corpus):
     assert _jobs_run(engine.spark, lambda: engine.search(text)) <= 4
     checks = audit_query_plan(engine, text)
     assert checks["kernel_cogroup"] and checks["no_candidate_join"], checks
+    assert checks["no_pandas_udf"], checks
 
 
 @pytest.mark.spark

@@ -93,6 +93,7 @@ def test_plan_audit(spark, tmp_path):
     assert checks["topk_not_global_sort"], checks
     assert checks["column_pruned_docs"], checks
     assert checks["no_candidate_join"], checks
+    assert checks["no_pandas_udf"], checks
 
 
 @pytest.mark.spark

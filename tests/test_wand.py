@@ -66,16 +66,22 @@ def test_wand_matches_oracle(corpus, qname):
 
 def test_batch_score_kernel_unit():
     """Kernel-level unit test without Spark: one segment, synthetic postings
-    (doc_ids arrays), two queries in one slice sharing a term, docs spread
-    over 3 day buckets. Each (query, bucket) is cut to the pool in exact
-    (score desc, doc_id asc) order — including ties that straddle the pool
-    boundary — and a single-bucket input is cut over the whole segment."""
+    (a list<int64> doc_ids column, as applyInArrow hands it over), two
+    queries in one slice sharing a term, docs spread over 3 day buckets.
+    Each (query, bucket) is cut to the pool in exact (score desc, doc_id
+    asc) order — including ties that straddle the pool boundary — and a
+    single-bucket input is cut over the whole segment. An empty postings or
+    docs side yields no rows. Every returned table has the schema the
+    kernel's applyInArrow declares, typed as the worker checks it."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
     from similardocs_spark import bm25
-    from similardocs_spark.query.wand import batch_score_kernel
+    from similardocs_spark.query.wand import KERNEL_SCHEMA, batch_score_kernel
 
+    declared = [(f.name, to_arrow_type(f.dataType)) for f in from_arrow_schema(KERNEL_SCHEMA)]
+    key = (pa.scalar(0, pa.int32()), pa.scalar(0, pa.int32()))
     rng = np.random.default_rng(3)
     n_docs, seg_size, avgdl = 500, 1024, 42.5
     dlq = rng.integers(5, 120, n_docs).astype(np.int64)
@@ -84,8 +90,11 @@ def test_batch_score_kernel_unit():
     ids_by_term = {
         t: np.sort(rng.choice(n_docs, size=300, replace=False)) for t in ("aaa", "bbb")
     }
-    postings = pd.DataFrame(
-        [{"term": t, "doc_ids": ids} for t, ids in ids_by_term.items()]
+    postings = pa.table(
+        {
+            "term": list(ids_by_term),
+            "doc_ids": pa.array(list(ids_by_term.values()), pa.list_(pa.int64())),
+        }
     )
     queries = {"q1": {"aaa": 2.0, "bbb": 1.0}, "q2": {"bbb": 1.5}}
 
@@ -102,6 +111,11 @@ def test_batch_score_kernel_unit():
             key=lambda t: (-t[0], t[1]),
         )
 
+    def run(postings, docs):
+        got = batch_score_kernel(key, postings, docs, {0: queries}, seg_size, pool)
+        assert list(zip(got.schema.names, got.schema.types)) == declared
+        return got.to_pandas()
+
     def check(got, exp, pool):
         for (qid, b), truth in exp.items():
             rows = got[(got["query_id"] == qid) & (got["bucket"] == b)]
@@ -109,6 +123,9 @@ def test_batch_score_kernel_unit():
             assert [float(x) for x in rows["score"]] == pytest.approx(
                 [float(s) for s, _ in truth[:pool]], rel=1e-6
             ), (qid, b)
+            # the carried docs columns stay with their doc
+            assert rows["conv_id"].tolist() == [f"c{d}" for _, d in truth[:pool]], (qid, b)
+            assert rows["update_date"].tolist() == [20200000 + d for _, d in truth[:pool]]
         assert len(got) == sum(min(pool, len(t)) for t in exp.values())
 
     exp = {
@@ -121,19 +138,24 @@ def test_batch_score_kernel_unit():
     # membership
     q2 = exp[("q2", 0)]
     pool = next(i for i in range(20, len(q2)) if q2[i - 1][0] == q2[i][0])
-    docs = pd.DataFrame(
+    docs = pa.table(
         {
-            "doc_id": np.arange(n_docs),
-            "tfnorm": tfn,
+            "doc_id": np.arange(n_docs, dtype=np.int64),
+            "tfnorm": tfn.astype(np.float32),
             "const": np.ones(n_docs),
             "bucket": bucket,
+            "update_date": (20200000 + np.arange(n_docs)).astype(np.int32),
+            "conv_id": [f"c{d}" for d in range(n_docs)],
         }
     )
-    check(batch_score_kernel((0, 0), postings, docs, {0: queries}, seg_size, pool), exp, pool)
+    check(run(postings, docs), exp, pool)
 
-    one = docs.assign(bucket=np.zeros(n_docs, dtype=np.int32))
+    one = docs.set_column(3, "bucket", pa.array(np.zeros(n_docs, dtype=np.int32)))
     exp_one = {(qid, 0): ranked(w, lambda d: True) for qid, w in queries.items()}
-    check(batch_score_kernel((0, 0), postings, one, {0: queries}, seg_size, pool), exp_one, pool)
+    check(run(postings, one), exp_one, pool)
+
+    assert run(postings.slice(0, 0), docs).empty
+    assert run(postings, docs.slice(0, 0)).empty
 
 
 @pytest.mark.spark
