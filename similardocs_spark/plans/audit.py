@@ -6,6 +6,9 @@ one plan a search runs (query/batch.py:rerank_plan):
   - doc-stats scan prunes columns (ReadSchema excludes text/tokens)
   - postings and doc stats meet in the per-segment kernel cogroup
     (FlatMapCoGroupsInArrow), never in a nested-loop or cartesian join
+  - the kernel reads its inputs in place: a default search is under the
+    kernel's one-task gate (query/wand.py), so no Exchange sits below the
+    cogroup
   - the candidate pool is cut by a window per query, never a global sort
   - no candidate join: the plan joins nothing, and the docs are scanned
     once, for the kernel
@@ -20,6 +23,7 @@ Used by tests/test_sources_streaming_plans.py and handy interactively:
 from __future__ import annotations
 
 import re
+from itertools import takewhile
 
 
 def _plan(df) -> str:
@@ -54,9 +58,11 @@ def audit_query_plan(engine, text: str) -> dict[str, bool]:
     plan = _search_plan(engine, text)
     ladder = _search_plan(engine, text, split_time=True)
     joins = re.findall(r"^\(\d+\) (\w*Join)\b", plan, re.M)
+    kernel_in = _subtree(plan, "FlatMapCoGroupsInArrow (")
     return {
         "term_filter_pushed": "PushedFilters: [In(term" in plan or "In(term," in plan,
         "kernel_cogroup": plan.count("FlatMapCoGroupsInArrow (") == 1,
+        "kernel_in_place": kernel_in is not None and "Exchange" not in kernel_in,
         "no_nested_loop": "BroadcastNestedLoopJoin" not in plan
         and "CartesianProduct" not in plan,
         "topk_not_global_sort": "Window (" in plan
@@ -66,6 +72,20 @@ def audit_query_plan(engine, text: str) -> dict[str, bool]:
         and len(re.findall(r"Location: \w+ \[\S*/docs\]", plan)) == 1,
         "no_pandas_udf": "InPandas" not in plan + ladder,
     }
+
+
+def _subtree(plan: str, node: str) -> str | None:
+    """The plan tree's lines below its first `node` line (None without one)."""
+    lines = plan.split("\n\n")[0].splitlines()
+    at = next((i for i, line in enumerate(lines) if node in line), None)
+    if at is None:
+        return None
+
+    def indent(line: str) -> int:
+        return len(line) - len(line.lstrip())
+
+    below = takewhile(lambda line: indent(line) > indent(lines[at]), lines[at + 1:])
+    return "\n".join(below)
 
 
 def _read_schema_of(plan: str, table_hint: str) -> str:

@@ -6,7 +6,8 @@ postings scan and the shuffles are shared:
 
   postings (term-pruned scan: query terms and rerank tokens) cogroup doc
   stats (filters pushed to the parquet scan, each doc tagged with its day
-  bucket), per (segment × slice)
+  bucket), per segment: read in place into one task when queries × docs is
+  at most util.KERNEL_TASK_WORK, else shuffled per (segment × slice)
     → batched per-segment kernel (query/wand.py, cogroup applyInArrow):
       each posting list read ONCE, float32-spec scoring and the rerank's
       n_common, ≤ pool rows per (segment, query, bucket)
@@ -28,9 +29,11 @@ ladder_hits. search() runs the same plans as a batch of one.
 """
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Row, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from ..oracle.refsearch import (
@@ -102,11 +105,7 @@ def rerank_plan(
     Either way the collect is ≤ quota rows per query."""
     from .wand import Rerank, wand_score_batch
 
-    wc = Window.partitionBy("query_id", "bucket").orderBy(F.desc("score"), F.asc("doc_id"))
-    tier = F.when(F.col("bucket") > 0, F.floor((F.col("_r") - 1) / CANDIDATE_FACTOR))
-    wf = Window.partitionBy("query_id", "bucket", tier.otherwise(0)).orderBy(
-        F.desc("n_common"), F.desc("update_date"), F.desc("score"), F.asc("doc_id")
-    )
+    cols = engine._rerank_cols
     ranked = (
         wand_score_batch(
             engine,
@@ -122,20 +121,44 @@ def rerank_plan(
         )
         # one exchange for both windows and the per-query settle
         .repartition("query_id")
-        .select("*", F.row_number().over(wc).alias("_r"))
-        .filter(
-            (F.col("_r") <= CANDIDATE_FACTOR * F.col("quota"))
-            & (F.col("n_common") >= F.col("min2"))
-        )
-        .select(
-            "query_id", "quota", "bucket", "_r", *HIT_COLS,
-            F.row_number().over(wf).alias("rank"),
-        )
-        .filter(F.col("rank") <= F.col("quota"))
+        .select(*cols.pool_rank)
+        .filter(cols.pool_cut)
+        .select(*cols.rerank_rank)
+        .filter(cols.rerank_cut)
     )
     if len(buckets) > 1:
         ranked = ranked.groupBy("query_id").applyInArrow(_settle, ranked.schema)
     return ranked
+
+
+class RerankCols(NamedTuple):
+    """rerank_plan's query-independent columns: a SearchEngine builds them
+    once (each Column call is several py4j round trips)."""
+
+    pool_rank: list[Column]
+    pool_cut: Column
+    rerank_rank: list[Column]
+    rerank_cut: Column
+
+    @classmethod
+    def build(cls) -> RerankCols:
+        wc = Window.partitionBy("query_id", "bucket").orderBy(
+            F.desc("score"), F.asc("doc_id")
+        )
+        tier = F.when(F.col("bucket") > 0, F.floor((F.col("_r") - 1) / CANDIDATE_FACTOR))
+        wf = Window.partitionBy("query_id", "bucket", tier.otherwise(0)).orderBy(
+            F.desc("n_common"), F.desc("update_date"), F.desc("score"), F.asc("doc_id")
+        )
+        return cls(
+            [F.col("*"), F.row_number().over(wc).alias("_r")],
+            (F.col("_r") <= CANDIDATE_FACTOR * F.col("quota"))
+            & (F.col("n_common") >= F.col("min2")),
+            [
+                *map(F.col, ("query_id", "quota", "bucket", "_r", *HIT_COLS)),
+                F.row_number().over(wf).alias("rank"),
+            ],
+            F.col("rank") <= F.col("quota"),
+        )
 
 
 def _settle(table: pa.Table) -> pa.Table:

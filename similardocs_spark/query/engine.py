@@ -4,11 +4,15 @@ One plan per search, whatever the postings volume Σdf of the query terms: a
 search is a batch of one (query/batch.py:rerank_plan), as search_batch scores
 N queries. The per-segment kernel (query/wand.py) reads one segment's
 postings for the query terms and the query's rerank tokens only, scores the
-docs and counts each pool row's common rerank tokens on the executor; the
-kernel's ≤ pool rows per segment meet in one exchange on query_id, where a
-window cuts the global pool and a second one reranks it. Nothing joins the
-docs: conv_id and update_date ride through the kernel, and only explain=True
-reads `rerank_tokens`, for its own hits.
+docs and counts each pool row's common rerank tokens on the executor; on an
+index of up to util.KERNEL_TASK_WORK docs a search scores every segment in
+one task, reading both inputs in place. The kernel's ≤ pool rows per segment
+meet in one exchange on query_id, where a window cuts the global pool and a
+second one reranks it. Nothing joins the docs: conv_id and update_date ride
+through the kernel, and only explain=True reads `rerank_tokens`, for its own
+hits. What a plan shares with the engine's other searches is built once: the
+docs side per filter set (_bucket_docs) and the rerank's windows
+(_rerank_cols), so a warm search's plan takes ~120 py4j calls.
 
 Query lifecycle (reference SimDocsSearch.scala:122-347): text → word prep →
 term weights (duplicate-prefix boosts) → MUST-clause score constants →
@@ -19,11 +23,13 @@ one more scores all later buckets at once (query/batch.py:ladder_hits).
 """
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 from datetime import date
+from functools import cached_property
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .. import bm25
@@ -44,6 +50,9 @@ from ..textnorm import query_rerank_tokens, uniform_text
 # (the share of queries with Σdf ≥ this) imports it; at 0 that share is 1.
 # It goes with the benchmark's next revision, like score_bucket.
 WAND_AUTO_MIN_POSTINGS = 0
+
+# filter sets whose _bucket_docs frame an engine keeps
+BUCKET_DOCS_MEMO = 8
 
 # a search hit; search_batch rows carry query_id and rank in front
 HIT_COLS = ("doc_id", "conv_id", "score", "n_common", "update_date")
@@ -76,6 +85,8 @@ class SearchEngine:
 
         io = get_io_for_index(self.spark, self.paths)
         self._io = io
+        self._bucket_docs_memo: dict[tuple, DataFrame] = {}
+        self._memo_lock = threading.Lock()
         row = io.read(self.spark, self.paths.stats).collect()[0]
         self.n_docs: int = row["n_docs"]
         self.avgdl: float = row["avgdl"]
@@ -228,13 +239,35 @@ class SearchEngine:
         buckets: list[tuple[str, str]],
         sources: set[str] | None,
         instances: set[str] | None,
-        *extra: Column,
     ) -> DataFrame:
         """The kernel's docs side: the doc stats of the span of `buckets`
         (_day_buckets), narrowed by the db/instance filters (all pushed to the
         docs scan), as (seg, doc_id, tfnorm, const, bucket, update_date int,
-        conv_id, *extra). `bucket` is the index of the doc's range in
-        `buckets`; update_date stays yyyyMMdd as an int."""
+        conv_id). `bucket` is the index of the doc's range in `buckets`;
+        update_date stays yyyyMMdd as an int. The frame depends on nothing
+        but its filter set, so the last BUCKET_DOCS_MEMO of them are kept
+        (unpersisted plans, not data): a serve loop's searches share one and
+        skip the ~100 py4j calls of its `when` chains."""
+        key = (
+            tuple(buckets),
+            None if sources is None else frozenset(sources),
+            None if instances is None else frozenset(instances),
+        )
+        with self._memo_lock:
+            docs = self._bucket_docs_memo.pop(key, None)
+            if docs is None:
+                docs = self._filtered_docs(buckets, sources, instances)
+            self._bucket_docs_memo[key] = docs
+            while len(self._bucket_docs_memo) > BUCKET_DOCS_MEMO:
+                del self._bucket_docs_memo[next(iter(self._bucket_docs_memo))]
+        return docs
+
+    def _filtered_docs(
+        self,
+        buckets: list[tuple[str, str]],
+        sources: set[str] | None,
+        instances: set[str] | None,
+    ) -> DataFrame:
         cond = F.col("update_date").between(buckets[-1][0], buckets[0][1])
         if sources is not None:
             cond = cond & F.col("db").isin(sorted(sources))
@@ -251,8 +284,15 @@ class SearchEngine:
             bucket.cast("int").alias("bucket"),
             F.col("update_date").cast("int").alias("update_date"),
             "conv_id",
-            *extra,
         )
+
+    @cached_property
+    def _rerank_cols(self):
+        """The rerank plan's query-independent windows, cuts and select list
+        (query/batch.py:RerankCols), built once per engine."""
+        from .batch import RerankCols
+
+        return RerankCols.build()
 
     def score_bucket(
         self,

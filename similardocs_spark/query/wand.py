@@ -1,12 +1,16 @@
 """Batched per-segment scoring kernel — the engine's one scoring plan.
 
-Executes per (SEGMENT × query-slice) via `cogroup(...).applyInArrow`: the
-segment's postings rows (term, doc_ids) for the batch's terms and rerank
-tokens, cogrouped with its filtered doc stats (doc_id, tfnorm, const,
-bucket, update_date, conv_id). All of a term's postings for a doc range are
-co-located by the index layout, and the kernel reads each posting list as a
-slice of the Arrow `list<int64>` column's one values buffer, with no pandas
-in between (the round trip cost more than the numpy it wrapped). It
+Executes per SEGMENT via `cogroup(...).applyInArrow`: the segment's postings
+rows (term, doc_ids) for the batch's terms and rerank tokens, cogrouped with
+its filtered doc stats (doc_id, tfnorm, const, bucket, update_date,
+conv_id). A plan of at most util.KERNEL_TASK_WORK doc·query pairs (a serve
+search, a profile sweep on a small index) reads both sides through one
+partition and scores every segment in one task, with no exchange before
+the kernel; a larger one shuffles both sides on (segment × query-slice), so
+the kernel fans out over the executors. All of a term's postings for a doc
+range are co-located by the index layout, and the kernel reads each posting
+list as a slice of the Arrow `list<int64>` column's one values buffer, with
+no pandas in between (the round trip cost more than the numpy it wrapped). It
 localizes every needed list once, scatter-adds each query's float32 term
 contributions into a dense per-segment float64 accumulator
 (term-at-a-time, exhaustive), counts each doc's common rerank tokens the
@@ -33,6 +37,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..index.sortbuild import RERANK_NS
 
@@ -51,6 +56,7 @@ KERNEL_SCHEMA = pa.schema(
         ("conv_id", pa.string()),
     ]
 )
+KERNEL_SPARK_SCHEMA = from_arrow_schema(KERNEL_SCHEMA)
 _CARRY = KERNEL_SCHEMA.names[KERNEL_SCHEMA.get_field_index("quota") + 1:]
 
 
@@ -79,15 +85,15 @@ def batch_score_kernel(
     """Per-(segment, query-slice) batched scoring: localize every needed
     posting list ONCE, then scatter-add each query's term contributions into
     a dense per-segment accumulator. `key` is the (seg, slice) pair of
-    Arrow scalars. Float discipline is the pinned spec (bm25.py): f32
-    per-term product, f64 accumulate + const, final f32. Emits ≤ pool rows
-    per (segment, query, bucket), in (bucket, score desc, doc_id asc)
-    order, as a KERNEL_SCHEMA table. Each row's `n_common` counts the
-    query's `rerank` tokens whose rerank posting list (term RERANK_NS +
-    token) holds the doc, a scatter-add of list membership like the
-    score's; the row also carries the query's rerank `min2` and `quota` (0
-    for a query without a Rerank)."""
-    queries = by_slice.get(key[1].as_py(), {})
+    Arrow scalars, or (seg,) alone for an unsliced plan. Float discipline
+    is the pinned spec (bm25.py): f32 per-term product, f64 accumulate +
+    const, final f32. Emits ≤ pool rows per (segment, query, bucket), in
+    (bucket, score desc, doc_id asc) order, as a KERNEL_SCHEMA table. Each
+    row's `n_common` counts the query's `rerank` tokens whose rerank posting
+    list (term RERANK_NS + token) holds the doc, a scatter-add of list
+    membership like the score's; the row also carries the query's rerank
+    `min2` and `quota` (0 for a query without a Rerank)."""
+    queries = by_slice.get(key[1].as_py() if len(key) > 1 else 0, {})
     if docs.num_rows == 0 or postings.num_rows == 0 or not queries:
         return KERNEL_SCHEMA.empty_table()
     base = key[0].as_py() * seg_size
@@ -192,9 +198,14 @@ def wand_score_batch(
     """Per-segment top-`pool` candidates of each of `buckets` for EVERY query
     in one cogrouped pass → DataFrame(query_id, doc_id, score f32, bucket,
     n_common, min2, quota, update_date int (yyyyMMdd), conv_id), n_common
-    against the query's `rerank` tokens. Parallelism
-    axis is (segment × query-slice): with few segments
-    (small corpora) the queries are hash-sliced so the kernel still fans out
+    against the query's `rerank` tokens.
+
+    A plan whose work, queries × the index's docs, is at most
+    util.KERNEL_TASK_WORK runs its kernel as ONE task: both inputs are read
+    through coalesce(1) and cogrouped by segment, so neither is shuffled.
+    A larger plan shuffles both on (segment × query-slice), and AQE's
+    coalescing floor picks the task count: with few segments (small
+    corpora) the queries are hash-sliced so the kernel still fans out
     across all executor slots; postings rows are replicated only to the
     slices whose queries need that term (bounded duplication, factor ≤
     n_slices). There are never more slices than queries: an empty slice
@@ -202,13 +213,16 @@ def wand_score_batch(
     import math
     import zlib
 
-    from pyspark.sql.pandas.types import from_arrow_schema
+    from ..util import KERNEL_TASK_WORK, filter_terms, local_df
 
     spark = engine.spark
     rerank = rerank or {}
-    n_segs = max(1, math.ceil(engine.n_docs / engine.seg_size))
-    par = spark.sparkContext.defaultParallelism
-    n_slices = max(1, min(8, math.ceil(par / n_segs), len(w_idf_by_qid)))
+    one_task = len(w_idf_by_qid) * engine.n_docs <= KERNEL_TASK_WORK
+    n_slices = 1
+    if not one_task:
+        n_segs = max(1, math.ceil(engine.n_docs / engine.seg_size))
+        par = spark.sparkContext.defaultParallelism
+        n_slices = max(1, min(8, math.ceil(par / n_segs), len(w_idf_by_qid)))
 
     def slice_of(qid: str) -> int:
         return zlib.crc32(qid.encode()) % n_slices
@@ -220,19 +234,19 @@ def wand_score_batch(
         by_slice.setdefault(s, {})[qid] = w_idf
         term_slices.update((t, s) for t in w_idf)
         term_slices.update((RERANK_NS + t, s) for t in rerank.get(qid, _NO_RERANK).tokens)
-    all_terms = sorted({t for t, _ in term_slices})
 
-    from ..util import filter_terms
-
-    postings = filter_terms(engine._postings, all_terms)
+    postings = filter_terms(engine._postings, {t for t, _ in term_slices})
+    docs = engine._bucket_docs(buckets, sources, instances)
     if n_slices == 1:
-        # no query slicing needed (enough segments for full fan-out, or a
-        # single query): skip the term→slice join and the docs replication
-        postings = postings.select("seg", "term", "doc_ids", F.lit(0).alias("slice"))
-        docs = engine._bucket_docs(buckets, sources, instances, F.lit(0).alias("slice"))
+        # no query slicing: no term→slice join, no docs replication
+        keys = ["seg"]
+        postings = postings.select("seg", "term", "doc_ids")
+        if one_task:
+            # one partition on each side satisfies the cogroup's clustering
+            # as it is: no exchange, one kernel task
+            postings, docs = postings.coalesce(1), docs.coalesce(1)
     else:
-        from ..util import local_df
-
+        keys = ["seg", "slice"]
         ts_df = F.broadcast(
             local_df(spark, sorted(term_slices), "term string, slice int")
         )
@@ -240,7 +254,7 @@ def wand_score_batch(
         slices_df = F.broadcast(
             local_df(spark, [(s,) for s in range(n_slices)], "slice int")
         )
-        docs = engine._bucket_docs(buckets, sources, instances).crossJoin(slices_df)
+        docs = docs.crossJoin(slices_df)
 
     seg_size = engine.seg_size
 
@@ -248,7 +262,7 @@ def wand_score_batch(
         return batch_score_kernel(key, p, d, by_slice, seg_size, pool, rerank)
 
     return (
-        postings.groupBy("seg", "slice")
-        .cogroup(docs.groupBy("seg", "slice"))
-        .applyInArrow(kernel, schema=from_arrow_schema(KERNEL_SCHEMA))
+        postings.groupBy(*keys)
+        .cogroup(docs.groupBy(*keys))
+        .applyInArrow(kernel, schema=KERNEL_SPARK_SCHEMA)
     )

@@ -121,21 +121,28 @@ def read_spread(spark: SparkSession, path: str) -> DataFrame:
 ISIN_MAX_LITERALS = 128
 
 
+def _sql_string(s: str) -> str:
+    """`s` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def filter_terms(df: DataFrame, terms, col: str = "term") -> DataFrame:
     """`df` restricted to rows whose `col` ∈ terms.
 
     Small sets use a literal In() — it reaches the parquet scan as a pushed
-    filter (row-group min/max pruning on term-sorted files). Large sets use
-    a broadcast LEFT SEMI join against an Arrow LocalRelation instead:
-    PySpark's Column.isin makes a py4j round-trip PER LITERAL (~12 s of
-    driver time measured for a 1152-query batch's ~2.6k distinct terms),
-    and a thousands-element In() defeats row-group pruning anyway (every
-    row group matches some term)."""
+    filter (row-group min/max pruning on term-sorted files). It is written
+    as one SQL predicate, which the JVM parses in one py4j call: PySpark's
+    Column.isin makes a round trip per literal, and each Column call five
+    more to record its call site. Large sets use a broadcast LEFT SEMI join
+    against an Arrow LocalRelation instead: a thousands-element In() defeats
+    row-group pruning anyway (every row group matches some term)."""
     terms = sorted(terms)
     from pyspark.sql import functions as F
 
+    if not terms:
+        return df.filter(F.lit(False))
     if len(terms) <= ISIN_MAX_LITERALS:
-        return df.filter(F.col(col).isin(terms))
+        return df.filter(f"`{col}` IN ({', '.join(map(_sql_string, terms))})")
     tdf = F.broadcast(
         local_df(df.sparkSession, [(t,) for t in terms], f"{col} string")
     )
@@ -205,21 +212,20 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 #   batch a wash) — so local[N] keeps AQE. Skew splitting is not needed
 #   on this path either way: postings are bounded per segment and kernel
 #   output is capped at pool rows per (segment, query).
-# - minPartitionSize=64k, applied whenever AQE is active in the scope.
-#   Byte-based coalescing at the 1 MB default collapsed the CPU-bound
-#   kernel stage reading ~8 MB to 7 tasks on 32 cores (4.1 s for 22 s of
-#   executor CPU); AQE's target is max(floor, bytes / parallelism), so
-#   there the floor does not bind. On small inputs it decides how many
-#   Python tasks a stage runs, and each one costs CPU whatever its row
-#   count: a cogroup task that returns nothing, in a reused worker, takes
-#   ~0.015 s of Python-worker CPU and ~0.085 s of JVM CPU (4-vCPU x86 host,
-#   local[4]). The worker side was ~0.10 s while pyspark's per-task
-#   importlib.invalidate_caches() re-read pyspark.zip's directory for each
-#   of its 16 zipimporters; the package's import now stops that (see
-#   similardocs_spark/__init__.py). A serve search's kernel stage reads
-#   ~55 KB (the docs side carries conv_id): at a 16k floor that ran as 2
-#   Python tasks, at 64k as 1 (median process CPU per search 0.61-0.69 s
-#   against 0.79 s, before the zip hook).
+# - minPartitionSize=64k, applied whenever AQE is active in the scope. It
+#   decides the kernel's task count only for a plan over KERNEL_TASK_WORK,
+#   whose kernel inputs are shuffled on (seg, slice); a plan under it runs
+#   its kernel as one task with no exchange (query/wand.py). Byte-based
+#   coalescing at the 1 MB default collapsed the CPU-bound kernel stage
+#   reading ~8 MB to 7 tasks on 32 cores (4.1 s for 22 s of executor CPU);
+#   AQE's target is max(floor, bytes / parallelism), so there the floor does
+#   not bind. On small inputs it decides how many Python tasks a stage runs,
+#   and each one costs CPU whatever its row count: a cogroup task that
+#   returns nothing, in a reused worker, takes ~0.015 s of Python-worker CPU
+#   and ~0.085 s of JVM CPU (4-vCPU x86 host, local[4]). The worker side was
+#   ~0.10 s while pyspark's per-task importlib.invalidate_caches() re-read
+#   pyspark.zip's directory for each of its 16 zipimporters; the package's
+#   import now stops that (see similardocs_spark/__init__.py).
 def _kernel_confs(spark: SparkSession) -> dict[str, str]:
     confs = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k"}
     master = spark.sparkContext.master or ""
@@ -230,6 +236,17 @@ def _kernel_confs(spark: SparkSession) -> dict[str, str]:
     if not single_jvm:  # executors in separate JVMs
         confs["spark.sql.adaptive.enabled"] = "false"
     return confs
+
+
+# One kernel task's worth of work, in doc·query pairs (queries × the index's
+# docs). Each Python task a kernel stage adds costs at least the ~0.015 s of
+# Python-worker CPU above plus its JVM share, ~0.015-0.03 s in all, whatever
+# its rows. The kernel costs ~0.15 µs per doc·query (query/wand.py's
+# docstring: 9.8 ms for one query at 64k docs), so 2^17 pairs are ~0.02 s
+# of kernel work: a plan that small spends less CPU in one task than in the
+# fixed cost of a second one, and runs its kernel in one task with no
+# exchange before it.
+KERNEL_TASK_WORK = 1 << 17
 
 
 def kernel_exec_conf(spark: SparkSession):

@@ -21,22 +21,26 @@ N_CONVS = 100
 SEED = 42
 
 
-@pytest.fixture(scope="module")
-def corpus(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("batchindex"))
-    turns = make_transcripts(N_CONVS, seed=SEED)
+def _engine_and_oracle(spark, root: str, n_convs: int, **build_kw):
+    turns = make_transcripts(n_convs, seed=SEED)
     meta = docs_meta_for(turns)
     meta_df = spark.createDataFrame(
         [(cid, m["db"], m["instance"], m["update_date"]) for cid, m in meta.items()],
         "conv_id string, db string, instance string, update_date string",
     )
-    tdf = transcripts_df(spark, n_convs=N_CONVS, seed=SEED)
-    paths = build_index(spark, tdf, root, docs_meta=meta_df, seg_size=32)
+    tdf = transcripts_df(spark, n_convs=n_convs, seed=SEED)
+    paths = build_index(spark, tdf, root, docs_meta=meta_df, **build_kw)
     engine = SearchEngine(spark, paths, PINNED_TODAY, END_DAYS_AGO)
     oracle = OracleSearch(
         OracleIndex.build(oracle_docs(turns)), PINNED_TODAY, END_DAYS_AGO
     )
     return engine, oracle
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("batchindex"))
+    return _engine_and_oracle(spark, root, N_CONVS, seg_size=32)
 
 
 @pytest.mark.spark
@@ -225,20 +229,156 @@ def _jobs_run(spark, fn) -> int:
 
 @pytest.mark.spark
 def test_search_runs_one_plan(corpus):
-    """A non-split search() is one plan: at most 4 Spark jobs (with AQE, the
-    postings and docs map stages, the kernel stage and the result stage),
-    one kernel cogroup, and no candidate join against the docs. Its Python
-    steps, and those of a split_time ladder's later buckets, are Arrow
-    UDFs: no plan holds an *InPandas node."""
+    """A non-split search() is one plan: at most 2 Spark jobs (with AQE, the
+    kernel stage, whose inputs are read in place, and the result stage),
+    one kernel cogroup with no Exchange below it, and no candidate join
+    against the docs. Its Python steps, and those of a split_time ladder's
+    later buckets, are Arrow UDFs: no plan holds an *InPandas node."""
     from similardocs_spark.plans.audit import audit_query_plan
 
     engine, _ = corpus
     text = REFERENCE_QUERIES[sorted(REFERENCE_QUERIES)[0]]
     assert engine.search(text)  # warm-up, and the search has hits
-    assert _jobs_run(engine.spark, lambda: engine.search(text)) <= 4
+    assert _jobs_run(engine.spark, lambda: engine.search(text)) <= 2
     checks = audit_query_plan(engine, text)
     assert checks["kernel_cogroup"] and checks["no_candidate_join"], checks
+    assert checks["kernel_in_place"], checks
     assert checks["no_pandas_udf"], checks
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("over_gate", [False, True])
+@pytest.mark.parametrize("cache", [False, True])
+def test_kernel_gate_sides_match_oracle(spark, corpus, monkeypatch, cache, over_gate):
+    """The same searches through the one-task kernel (every plan here is
+    under util.KERNEL_TASK_WORK) and, with the gate at 0, through the
+    exchange path: a single search, a batch and a split_time ladder each
+    equal the oracle, on an uncached and a serving (cache=True) engine. Only
+    the plan under the gate reads its kernel inputs in place."""
+    from similardocs_spark import util
+    from similardocs_spark.plans.audit import audit_query_plan
+
+    engine, oracle = corpus
+    assert len(REFERENCE_QUERIES) * engine.n_docs <= util.KERNEL_TASK_WORK
+    if cache:
+        engine = SearchEngine(spark, engine.paths, PINNED_TODAY, END_DAYS_AGO, cache=True)
+    if over_gate:
+        monkeypatch.setattr(util, "KERNEL_TASK_WORK", 0)
+    text = REFERENCE_QUERIES["profile_1"]
+    try:
+        assert_hits_equal(engine.search(text), oracle.search(text), "search")
+        assert_hits_equal(
+            engine.search(text, split_time=True), oracle.search(text, split_time=True), "ladder"
+        )
+        for mode in (dict(), dict(split_time=True)):
+            res = engine.search_batch(dict(REFERENCE_QUERIES), **mode)
+            for qname, q in REFERENCE_QUERIES.items():
+                assert_hits_equal(res[qname], oracle.search(q, **mode), f"{qname} {mode}")
+        assert audit_query_plan(engine, text)["kernel_in_place"] is not over_gate
+    finally:
+        if cache:
+            engine._doc_stats.unpersist()
+            engine._postings.unpersist()
+
+
+@pytest.fixture(scope="module")
+def tiny(spark, tmp_path_factory):
+    """A one-segment index: over the gate, a batch on it slices its queries."""
+    return _engine_and_oracle(spark, str(tmp_path_factory.mktemp("tinyindex")), 30)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("over_gate", [False, True])
+def test_tiny_index_batch_gate_sides_match_oracle(tiny, monkeypatch, over_gate):
+    """A many-query batch on a one-segment index: one kernel task under the
+    gate; over it, the queries are hash-sliced across the executor slots
+    (the kernel cogroups by (seg, slice) after an exchange). Both equal the
+    oracle."""
+    from similardocs_spark import util
+    from similardocs_spark.plans.audit import _plan, _subtree
+    from similardocs_spark.query.wand import wand_score_batch
+
+    engine, oracle = tiny
+    assert engine.n_docs <= engine.seg_size  # one segment
+    if over_gate:
+        monkeypatch.setattr(util, "KERNEL_TASK_WORK", 0)
+    queries = dict(REFERENCE_QUERIES)
+    queries.update({f"{n}_x": f"{t} saude" for n, t in REFERENCE_QUERIES.items()})
+    res = engine.search_batch(queries)
+    for qid, text in queries.items():
+        assert_hits_equal(res[qid], oracle.search(text), qid)
+    prepared = {qid: w for qid, (w, _) in engine._prepare_all(queries).items()}
+    plan = _plan(
+        wand_score_batch(engine, prepared, 30, [("19000101", "29991231")], None, None)
+    )
+    kernel_in = _subtree(plan, "FlatMapCoGroupsInArrow (")
+    assert ("Exchange" in kernel_in) is over_gate, plan
+    # the postings' join to the slices of the queries that need each term
+    assert ("BroadcastHashJoin" in kernel_in) is over_gate, plan
+
+
+@pytest.mark.spark
+def test_plan_build_py4j_budget(corpus, monkeypatch):
+    """Building a search's plan on a warm engine takes at most 250 py4j
+    calls (the per-literal isin, the per-search `when` chains and windows
+    took ~740), and the engine's filter-set memo of docs frames stays at its
+    bound and holds plans, not persisted data."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+    from pyspark import StorageLevel
+
+    from similardocs_spark.oracle.refsearch import DEFAULT_MAX_DOCS, DEFAULT_MIN_NGRAMS
+    from similardocs_spark.query.batch import rerank_plan
+    from similardocs_spark.query.engine import BUCKET_DOCS_MEMO
+
+    engine, _ = corpus
+    text = REFERENCE_QUERIES["profile_4"]
+    engine.search(text)  # warm: the engine's memo and rerank columns
+    prep = engine.prepare(text)
+    buckets = engine._day_buckets(*engine._day_bounds(None), False)
+    calls = []
+    me = threading.get_ident()
+    real = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if threading.get_ident() == me:  # not py4j's object-release thread
+            calls.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    rerank_plan(
+        engine, {"q": prep}, {"q": DEFAULT_MAX_DOCS}, DEFAULT_MIN_NGRAMS, buckets, None, None
+    )
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 250, len(calls)
+
+    assert engine._bucket_docs(buckets, None, None) is engine._bucket_docs(buckets, None, None)
+    for i in range(3 * BUCKET_DOCS_MEMO):
+        engine._bucket_docs(buckets, {f"src{i}"}, None)
+    memo = engine._bucket_docs_memo
+    assert len(memo) == BUCKET_DOCS_MEMO
+    assert all(df.storageLevel == StorageLevel.NONE for df in memo.values())
+
+
+@pytest.mark.spark
+def test_filter_terms_sql_literals(spark):
+    """filter_terms writes its In() as SQL text: quotes and backslashes in a
+    term are escaped, an empty set matches nothing, and a set over
+    ISIN_MAX_LITERALS takes the semi-join with the same rows."""
+    from similardocs_spark.util import ISIN_MAX_LITERALS, filter_terms
+
+    terms = ["a'b", "c\\d", "e\\'f", "plain", "~x", "other"]
+    df = spark.createDataFrame([(t,) for t in terms], "term string")
+
+    def got(ts):
+        return sorted(r["term"] for r in filter_terms(df, ts).collect())
+
+    want = ["a'b", "c\\d", "e\\'f", "~x"]
+    assert got(want) == sorted(want)
+    assert got([]) == []
+    many = want + [f"t{i}" for i in range(ISIN_MAX_LITERALS)]
+    assert got(many) == sorted(want)
 
 
 @pytest.mark.spark
