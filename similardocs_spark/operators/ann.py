@@ -7,6 +7,10 @@
   neighborhood; exactness traded for a bounded candidate set. At 100 TB the
   brute force is a full scan per probe; the LSH variant prunes to
   |bucket| ≈ n / 2^bits with multi-probe fallback.
+- embedding_near_dup_pairs: LSH near-dup pairs — the tables stacked as the
+  bands of bands.py's one pair join, cap audit (embedding_oversized_buckets)
+  and cosine verify join-back, the same join every near-dup operator runs;
+  embedding_near_dup_pairs_exact is its all-pairs reference.
 """
 from __future__ import annotations
 
@@ -14,7 +18,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .bands import band_pairs, oversized_buckets, verify_pairs
 
 
 def _dot(a, b):
@@ -186,6 +191,61 @@ def embedding_near_dup_pairs_exact(
     )
 
 
+def state_for(
+    embeddings: DataFrame,
+    dim: int | None = None,
+    bits: int = 6,
+    tables: int = 2,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """LSH rows (id, vector, _n, b0..b{tables-1}): the vector norm and one
+    hyperplane bucket per table — the input of the batch operator and the
+    state ann_incremental persists for a corpus. Bucket columns carry the
+    LSH config as field metadata."""
+    if dim is None:
+        dim = infer_dim(embeddings, vec_col)
+    cols = [
+        F.col(id_col),
+        F.col(vec_col),
+        _norm(F.col(vec_col)).alias("_n"),
+    ]
+    meta = {"dim": dim, "bits": bits, "tables": tables, "seed": seed}
+    for t in range(tables):
+        cols.append(
+            lsh_bucket_col(
+                F.col(vec_col), hyperplanes(dim, bits, seed + t)
+            ).alias(f"b{t}", metadata=meta)
+        )
+    return embeddings.select(*cols)
+
+
+def _bucket_rows(state: DataFrame, id_col: str, tables: int) -> DataFrame:
+    """(doc_id, band, key) rows: the LSH tables stacked as bands — one
+    pass over the state (posexplode, as dedup._band_buckets), null
+    buckets (null vectors) dropped."""
+    return state.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(F.array(*[F.col(f"b{t}") for t in range(tables)])).alias(
+            "band", "key"
+        ),
+    ).filter(F.col("key").isNotNull())
+
+
+def _table_audit(rows: DataFrame, max_bucket: int) -> DataFrame:
+    """`bands.oversized_buckets` of stacked LSH rows, as (table, bucket,
+    bucket_size)."""
+    return oversized_buckets(rows, max_bucket).select(
+        F.col("band").alias("table"), F.col("key").alias("bucket"), "bucket_size"
+    )
+
+
+def cosine_e6(a: list, b: list):
+    """round(cosine · 1e6) of two [vector, norm] column pairs."""
+    return F.round(_dot(a[0], b[0]) / (a[1] * b[1]) * 1e6).cast("long")
+
+
 def embedding_near_dup_pairs(
     embeddings: DataFrame, threshold: float = 0.9, bits: int = 6,
     tables: int = 2, seed: int = 42, max_bucket: int = 2000,
@@ -193,69 +253,38 @@ def embedding_near_dup_pairs(
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: random-hyperplane LSH
-    buckets (multiple independent tables union'd for recall), within-bucket
-    self-join only, exact cosine verification of candidates, bucket-size cap
-    (one hot bucket would make the join O(|bucket|²) — same guard as
-    minhash_lsh_pairs). Candidate recall is probabilistic (pytest-verified
-    against the exact operator); every emitted pair is exactly verified.
+    buckets (multiple independent tables, stacked as the bands of one
+    `bands.band_pairs` join for recall), within-bucket self-join only,
+    exact cosine verification of candidates, bucket-size cap (one hot
+    bucket would make the join O(|bucket|²) — same guard as
+    minhash_lsh_pairs, audited by embedding_oversized_buckets). Candidate
+    recall is probabilistic (pytest-verified against the exact operator);
+    every emitted pair is exactly verified.
 
     Pass `dim` (the embedding dimensionality) to skip the one-row probe job
     that otherwise learns it from the data at plan-build time."""
-    if dim is None:
-        dim = infer_dim(embeddings, vec_col)
-    base = embeddings.select(F.col(id_col), F.col(vec_col))
-    # candidate generation carries IDS ONLY through the bucket join, the
-    # cross-table union and the pair dedup — full vectors would otherwise be
-    # shuffled once per candidate (pair multiplicity), the dominant shuffle
-    # at scale. Vectors + norms are re-joined once per UNIQUE pair below.
-    pair_frames = []
-    for t in range(tables):
-        planes = hyperplanes(dim, bits, seed + t)
-        bucketed = base.select(
-            id_col, lsh_bucket_col(F.col(vec_col), planes).alias("bucket")
-        )
-        capped = (
-            bucketed.withColumn(
-                "_bsz", F.count("*").over(Window.partitionBy("bucket"))
-            )
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-        a = capped.select("bucket", F.col(id_col).alias("vec_a"))
-        b = capped.select("bucket", F.col(id_col).alias("vec_b"))
-        pair_frames.append(
-            a.join(b, ["bucket"]).filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b")
-        )
-    cands = pair_frames[0]
-    for x in pair_frames[1:]:
-        cands = cands.unionByName(x)
-    cands = cands.dropDuplicates(["vec_a", "vec_b"])
-    withn = embeddings.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("_n")
-    )
-    va = withn.select(
-        F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"),
-        F.col("_n").alias("_na"),
-    )
-    vb = withn.select(
-        F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    return (
-        cands.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .withColumn(
-            "cosine_e6",
-            F.round(
-                _dot(F.col("_va"), F.col("_vb"))
-                / (F.col("_na") * F.col("_nb"))
-                * 1e6
-            ).cast("long"),
-        )
-        .filter(F.col("cosine_e6") >= int(round(threshold * 1e6)))
-        .select("vec_a", "vec_b", "cosine_e6")
-    )
+    state = state_for(embeddings, dim, bits, tables, seed, id_col, vec_col)
+    # ids only through the candidate join: vectors + norms are joined back
+    # once per UNIQUE pair, not shuffled once per shared bucket
+    cands = band_pairs(
+        _bucket_rows(state, id_col, tables).withColumn("is_new", F.lit(True)),
+        max_bucket,
+    ).select(F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b"))
+    return verify_pairs(
+        cands, state, [id_col, vec_col, "_n"], "cosine_e6", cosine_e6,
+        "vec_a", "vec_b",
+    ).filter(F.col("cosine_e6") >= int(round(threshold * 1e6)))
+
+
+def embedding_oversized_buckets(
+    embeddings: DataFrame, bits: int = 6, tables: int = 2, seed: int = 42,
+    max_bucket: int = 2000, id_col: str = "vec_id",
+    vec_col: str = "embedding", dim: int | None = None,
+) -> DataFrame:
+    """Audit (no-silent-caps): the (table, bucket, bucket_size) LSH buckets
+    embedding_near_dup_pairs skips at the same config."""
+    state = state_for(embeddings, dim, bits, tables, seed, id_col, vec_col)
+    return _table_audit(_bucket_rows(state, id_col, tables), max_bucket)
 
 
 # --------------------------------------------------------------------- IVF

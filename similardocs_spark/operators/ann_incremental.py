@@ -6,12 +6,15 @@ State is the ACCEPTED embeddings enriched with their LSH artifacts —
 per-table hyperplane buckets (b0..b{tables-1}) and the vector norm —
 so per ingest tick the corpus side is read as-is: no re-projection
 (the matmul bucket UDF runs over the new batch only), no norm
-recompute, and no corpus shuffle. The candidate join, the edge-wise
-rejection and the tick are dedup_incremental's (`touched_bucket_pairs`
-over the tables stacked as bands, `edgewise_survivors`,
-`adjudicate_batch`): the state is STREAMED through broadcast semi-joins
-on the batch's touched buckets and on the bounded pair-member ids, so a
-tick shuffles O(batch + hits) rows regardless of corpus size. Unlike the
+recompute, and no corpus shuffle. The state rows are ann.py's
+`state_for`, the input of the batch embedding_near_dup_pairs too. The
+candidate join, the edge-wise rejection and the tick are
+dedup_incremental's (`touched_bucket_pairs` over the tables stacked as
+bands, `edgewise_survivors`, `adjudicate_batch`); the pair join, the cap
+audit and the cosine verify join-back are bands.py's, as in the batch
+operator. The state is STREAMED through broadcast semi-joins on the
+batch's touched buckets and on the bounded pair-member ids, so a tick
+shuffles O(batch + hits) rows regardless of corpus size. Unlike the
 text case the vectors themselves must live in state anyway (exact cosine
 verification needs them), so the win is compute + the ingestion
 CONTRACT: new×corpus and new×new candidates only, never corpus×corpus,
@@ -38,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ann import _dot, _norm, hyperplanes, infer_dim, lsh_bucket_col
+from .ann import _bucket_rows, _table_audit, cosine_e6, infer_dim, state_for
+from .bands import verify_pairs
 from .dedup_incremental import (
     adjudicate_batch,
     pair_member_rows,
@@ -91,35 +95,6 @@ def _resolve_config(
     )
 
 
-def state_for(
-    embeddings: DataFrame,
-    dim: int | None = None,
-    bits: int = 6,
-    tables: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """State rows (id, vector, _n, b0..b{tables-1}) for a batch — what a
-    caller appends to its corpus state after accepting the batch. Bucket
-    columns carry the LSH config as field metadata."""
-    if dim is None:
-        dim = infer_dim(embeddings, vec_col)
-    cols = [
-        F.col(id_col),
-        F.col(vec_col),
-        _norm(F.col(vec_col)).alias("_n"),
-    ]
-    meta = {"dim": dim, "bits": bits, "tables": tables, "seed": seed}
-    for t in range(tables):
-        cols.append(
-            lsh_bucket_col(
-                F.col(vec_col), hyperplanes(dim, bits, seed + t)
-            ).alias(f"b{t}", metadata=meta)
-        )
-    return embeddings.select(*cols)
-
-
 def reband_state(
     state: DataFrame,
     bits: int,
@@ -170,18 +145,6 @@ def _validate_state(state: DataFrame, tables: int, expect: dict) -> None:
                 )
 
 
-def _bucket_rows(state: DataFrame, id_col: str, tables: int) -> DataFrame:
-    """(doc_id, band, key) rows: the LSH tables stacked as bands — one
-    pass over the state (posexplode, as dedup._band_buckets), null
-    buckets (null vectors) dropped."""
-    return state.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.array(*[F.col(f"b{t}") for t in range(tables)])).alias(
-            "band", "key"
-        ),
-    ).filter(F.col("key").isNotNull())
-
-
 def pairs_against(
     new_embeddings: DataFrame,
     corpus_state: DataFrame,
@@ -197,9 +160,9 @@ def pairs_against(
 ) -> DataFrame:
     """Verified near-dup pairs (vec_a, vec_b, cosine_e6) with ≥1 side in
     the new batch; vec_a < vec_b; corpus×corpus pairs never produced.
-    Same scale shape as embedding_near_dup_pairs: ids-only candidate
-    shuffle, per-table combined-bucket cap, exact cosine verification of
-    every emitted pair. `new_state` lets a caller reuse `state_for`
+    Same join as embedding_near_dup_pairs: ids-only candidate shuffle,
+    per-table combined-bucket cap, exact cosine verification of every
+    emitted pair. `new_state` lets a caller reuse `state_for`
     output computed for the append.
 
     Candidates come from dedup_incremental's `touched_bucket_pairs` over
@@ -236,31 +199,11 @@ def pairs_against(
     vec_src = pair_member_rows(
         cands, corpus_state, new_state, [id_col, vec_col, "_n"],
         "vec_a", "vec_b",
-    ).localCheckpoint(eager=False)  # pair members + batch; feeds va AND vb
-    va = vec_src.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("_va"),
-        F.col("_n").alias("_na"),
-    )
-    vb = vec_src.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    return (
-        cands.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .withColumn(
-            "cosine_e6",
-            F.round(
-                _dot(F.col("_va"), F.col("_vb"))
-                / (F.col("_na") * F.col("_nb"))
-                * 1e6
-            ).cast("long"),
-        )
-        .filter(F.col("cosine_e6") >= int(round(threshold * 1e6)))
-        .select("vec_a", "vec_b", "cosine_e6")
-    )
+    ).localCheckpoint(eager=False)  # pair members + batch; feeds both sides
+    return verify_pairs(
+        cands, vec_src, [id_col, vec_col, "_n"], "cosine_e6", cosine_e6,
+        "vec_a", "vec_b",
+    ).filter(F.col("cosine_e6") >= int(round(threshold * 1e6)))
 
 
 def accept_batch(
@@ -314,15 +257,9 @@ def oversized_buckets_against(
     new_state = state_for(
         new_embeddings, dim, bits, tables, seed, id_col, vec_col
     )
-    return (
-        _bucket_rows(corpus_state, id_col, tables)
-        .unionByName(_bucket_rows(new_state, id_col, tables))
-        .groupBy("band", "key")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select(
-            F.col("band").alias("table"),
-            F.col("key").alias("bucket"),
-            "bucket_size",
-        )
+    return _table_audit(
+        _bucket_rows(corpus_state, id_col, tables).unionByName(
+            _bucket_rows(new_state, id_col, tables)
+        ),
+        max_bucket,
     )

@@ -13,14 +13,19 @@ hashlib), so every operator here is cross-engine deterministic:
 At 100 TB the shapes matter: exact dedup is one hash-groupBy shuffle;
 minhash banding turns the O(n²) pair problem into groupBy(band, key) with
 bounded bucket sizes; the pair join happens only WITHIN buckets.
+
+The banded pair join, the oversized-bucket audit and the verify join-back
+are bands.py's (`band_pairs`, `oversized_buckets`, `verify_pairs`), the
+one copy every near-dup operator runs: MinHash and SimHash here, the
+embedding LSH tables in ann.py, and both incremental modalities.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.tokenize import tokenize as tokenize_udf
+from .bands import band_pairs, oversized_buckets, verify_pairs
 
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
@@ -138,15 +143,17 @@ def lsh_oversized_buckets(
 ) -> DataFrame:
     """Audit helper (no-silent-caps): the band buckets minhash_lsh_pairs
     would DROP, with their sizes — run it to quantify what the cap skipped."""
-    bb = _band_buckets(
-        minhash_signatures(exact_representatives(docs, text_col), text_col, n_hashes),
-        n_hashes, n_bands,
+    sig = minhash_signatures(
+        exact_representatives(docs, text_col), text_col, n_hashes
     )
-    return (
-        bb.groupBy("band", "key")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-    )
+    return oversized_buckets(_band_buckets(sig, n_hashes, n_bands), max_bucket)
+
+
+def jaccard_estimate(a: list, b: list):
+    """The fraction of signature components that agree: the unbiased
+    MinHash estimate of shingle Jaccard (resolution 1/len(a))."""
+    agree = sum(F.when(x == y, 1).otherwise(0) for x, y in zip(a, b))
+    return (agree / F.lit(len(a))).cast("double")
 
 
 def minhash_lsh_pairs(
@@ -197,49 +204,14 @@ def minhash_lsh_pairs(
         # doc — far smaller than the texts) so the tokenize→shingle→minhash
         # lineage still runs exactly once.
         sig = sig.localCheckpoint(eager=False)
-    all_bands = _band_buckets(sig, n_hashes, n_bands)
-    capped = (
-        all_bands.withColumn(
-            "_bsz", F.count("*").over(Window.partitionBy("band", "key"))
-        )
-        .filter(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
-    )
-    a, b_ = capped.alias("a"), capped.alias("b")
-    pairs = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
+    pairs = band_pairs(
+        _band_buckets(sig, n_hashes, n_bands).withColumn("is_new", F.lit(True)),
+        max_bucket,
     )
     if not want_est:
         return pairs
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"_a{i}") for i in range(n_hashes)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"_b{i}") for i in range(n_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"_a{i}") == F.col(f"_b{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
-    est = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard_est", (agree / F.lit(n_hashes)).cast("double")
-        )
-        .select("doc_a", "doc_b", "jaccard_est")
-    )
+    keep = ["doc_id", *[f"mh{i}" for i in range(n_hashes)]]
+    est = verify_pairs(pairs, sig, keep, "jaccard_est", jaccard_estimate)
     if min_jaccard is not None:
         est = est.filter(F.col("jaccard_est") >= min_jaccard)
     return est
@@ -524,12 +496,7 @@ def simhash_oversized_buckets(
     lsh_oversized_buckets for the MinHash operator)."""
     bits = _resolve_simhash_bits(docs, bits)
     sig = (simhash32 if bits == SIMHASH_BITS else simhash64)(docs, text_col)
-    bb = _simhash_bands(sig, max_hamming, bits)
-    return (
-        bb.groupBy("band", "key")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-    )
+    return oversized_buckets(_simhash_bands(sig, max_hamming, bits), max_bucket)
 
 
 def simhash_near_dup_pairs(
@@ -580,36 +547,13 @@ def simhash_near_dup_pairs(
             (simhash32 if bits == SIMHASH_BITS else simhash64)(docs, text_col)
             .localCheckpoint(eager=False)
         )
-    all_bands = _simhash_bands(sh, max_hamming, bits)
-    capped = (
-        all_bands.withColumn(
-            "_bsz", F.count("*").over(Window.partitionBy("band", "key"))
-        )
-        .filter(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
+    cand = band_pairs(
+        _simhash_bands(sh, max_hamming, bits).withColumn("is_new", F.lit(True)),
+        max_bucket,
     )
-    a, b_ = capped.alias("a"), capped.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("_sa"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("_sb"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    return verify_pairs(
+        cand, sh, ["doc_id", "simhash"], "hamming",
+        lambda a, b: F.bit_count(a[0].bitwiseXOR(b[0])).cast("long"),
+    ).filter(F.col("hamming") <= max_hamming)
 
 

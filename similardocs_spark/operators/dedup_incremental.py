@@ -25,6 +25,10 @@ this module is that idea applied to the dedup signature state):
 The candidate join (`touched_bucket_pairs`), the rejection
 (`edgewise_survivors`) and the tick (`adjudicate_batch`) are shared with
 the vector modality (ann_incremental.py, LSH tables stacked as bands).
+`touched_bucket_pairs` is only the touched-key semi-join and hot-bucket
+pre-drop in front of bands.py's `band_pairs`, the pair join of the batch
+operators too; the audit and the estimate join-back are bands.py's
+`oversized_buckets` and `verify_pairs`.
 
 The seed-i hash family (dedup._minhash_cols) is shared across configs and
 widening `n_hashes` only APPENDS columns, so a corpus signature table
@@ -41,14 +45,15 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from .bands import band_pairs, oversized_buckets, verify_pairs
 from .dedup import (
     MAX_BUCKET,
     N_BANDS,
     N_HASHES,
     _band_buckets,
     exact_representatives,
+    jaccard_estimate,
     minhash_signatures,
 )
 
@@ -75,25 +80,6 @@ def _validate_sig(sig: DataFrame, n_hashes: int) -> None:
             "or query with a smaller n_hashes (the seed-i family is shared, "
             "so narrowing is always valid)"
         )
-
-
-def _pairs_from_bands(capped: DataFrame) -> DataFrame:
-    """(doc_a, doc_b) with doc_a < doc_b and ≥1 new side, from capped
-    (doc_id, band, key, is_new) band rows."""
-    a, b = capped.alias("a"), capped.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.is_new") | F.col("b.is_new")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
 
 
 def touched_bucket_pairs(
@@ -141,14 +127,7 @@ def touched_bucket_pairs(
     both = new_rows.select("doc_id", "band", "key").withColumn(
         "is_new", F.lit(True)
     ).unionByName(hits.withColumn("is_new", F.lit(False)))
-    capped = (
-        both.withColumn(
-            "_bsz", F.count("*").over(Window.partitionBy("band", "key"))
-        )
-        .filter(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
-    )
-    return _pairs_from_bands(capped)
+    return band_pairs(both, max_bucket)
 
 
 def pair_member_rows(
@@ -173,37 +152,6 @@ def pair_member_rows(
         .join(F.broadcast(members), id_col, "left_semi")
         .unionByName(new.select(*cols))
     )
-
-
-def _attach_estimate(
-    pairs: DataFrame,
-    sig: DataFrame,
-    n_hashes: int,
-    min_jaccard: float | None,
-) -> DataFrame:
-    """jaccard_est = signature-agreement fraction, joined onto the bounded
-    pair set from `sig` (which must cover every pair member)."""
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"_a{i}") for i in range(n_hashes)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"_b{i}") for i in range(n_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"_a{i}") == F.col(f"_b{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
-    est = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard_est", (agree / F.lit(n_hashes)).cast("double"))
-        .select("doc_a", "doc_b", "jaccard_est")
-    )
-    if min_jaccard is not None:
-        est = est.filter(F.col("jaccard_est") >= min_jaccard)
-    return est
 
 
 def pairs_against(
@@ -265,7 +213,10 @@ def pairs_against(
         return pairs
     pairs = pairs.localCheckpoint(eager=False)  # id broadcast + estimate
     sig_small = pair_member_rows(pairs, corpus_sig, new_sig, keep)
-    return _attach_estimate(pairs, sig_small, n_hashes, min_jaccard)
+    est = verify_pairs(pairs, sig_small, keep, "jaccard_est", jaccard_estimate)
+    if min_jaccard is not None:
+        est = est.filter(F.col("jaccard_est") >= min_jaccard)
+    return est
 
 
 def oversized_buckets_against(
@@ -285,12 +236,7 @@ def oversized_buckets_against(
             "doc_id", *[f"mh{i}" for i in range(n_hashes)]
         )
     )
-    return (
-        _band_buckets(sig, n_hashes, n_bands)
-        .groupBy("band", "key")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-    )
+    return oversized_buckets(_band_buckets(sig, n_hashes, n_bands), max_bucket)
 
 
 def edgewise_survivors(

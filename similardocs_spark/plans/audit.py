@@ -2,7 +2,9 @@
 
 Run against a built index to verify, from `explain(formatted)` output of the
 one plan a search runs (query/batch.py:rerank_plan):
-  - query-term predicate reaches the postings parquet scan (PushedFilters)
+  - query-term predicate reaches the postings scan: the parquet scan's
+    PushedFilters, or on a cache=True engine the in-memory scan's
+    batch-pruning predicate
   - doc-stats scan prunes columns (ReadSchema excludes text/tokens)
   - postings and doc stats meet in the per-segment kernel cogroup
     (FlatMapCoGroupsInArrow), never in a nested-loop or cartesian join
@@ -59,8 +61,11 @@ def audit_query_plan(engine, text: str) -> dict[str, bool]:
     ladder = _search_plan(engine, text, split_time=True)
     joins = re.findall(r"^\(\d+\) (\w*Join)\b", plan, re.M)
     kernel_in = _subtree(plan, "FlatMapCoGroupsInArrow (")
+    cached_term_in = re.search(
+        r"InMemoryTableScan\n(?:.+\n)*?Arguments: .*\bterm#\d+ IN \(", plan
+    )
     return {
-        "term_filter_pushed": "PushedFilters: [In(term" in plan or "In(term," in plan,
+        "term_filter_pushed": "In(term," in plan or cached_term_in is not None,
         "kernel_cogroup": plan.count("FlatMapCoGroupsInArrow (") == 1,
         "kernel_in_place": kernel_in is not None and "Exchange" not in kernel_in,
         "no_nested_loop": "BroadcastNestedLoopJoin" not in plan

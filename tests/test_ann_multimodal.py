@@ -82,6 +82,62 @@ def test_embedding_near_dup_pairs(spark):
     assert embedding_near_dup_pairs(emb, threshold=0.95, max_bucket=1).count() == 0
 
 
+def _uneven_clusters(spark):
+    """Six dim-8 clusters of 3, 5, ..., 13 noisy copies of a base vector."""
+    rng = np.random.default_rng(23)
+    rows = []
+    for i in range(6):
+        base = rng.standard_normal(8)
+        for _ in range(3 + 2 * i):
+            v = base + rng.standard_normal(8) * 0.01
+            rows.append((len(rows), [float(x) for x in v]))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.spark
+def test_embedding_bucket_cap_and_audit(spark):
+    """No silent cap: at a binding max_bucket the audit names the skipped
+    buckets and the capped pairs are a strict subset of the uncapped ones;
+    at a loose cap the audit is empty and the pair sets are equal."""
+    from similardocs_spark.operators.ann import (
+        embedding_near_dup_pairs,
+        embedding_oversized_buckets,
+    )
+
+    emb = _uneven_clusters(spark)
+
+    def pairs(max_bucket):
+        df = embedding_near_dup_pairs(
+            emb, threshold=0.95, tables=3, dim=8, max_bucket=max_bucket
+        )
+        return {(r["vec_a"], r["vec_b"]) for r in df.collect()}
+
+    uncapped = pairs(2000)
+    assert pairs(200) == uncapped
+    assert embedding_oversized_buckets(emb, tables=3, dim=8, max_bucket=200).count() == 0
+    capped = pairs(8)
+    assert capped < uncapped
+    audited = embedding_oversized_buckets(emb, tables=3, dim=8, max_bucket=8).collect()
+    assert audited and all(r["bucket_size"] > 8 for r in audited)
+    assert {r["table"] for r in audited} <= {0, 1, 2}
+
+
+@pytest.mark.spark
+def test_embedding_near_dup_pairs_one_cap_window_for_all_tables(spark):
+    """The batch operator stacks its LSH tables as bands: one candidate
+    self-join over ONE bucket-cap window for tables=3. The executed plan
+    holds that window once per side of the self-join (2 distinct Window
+    nodes; a per-table plan holds 2 × tables)."""
+    import re
+
+    from similardocs_spark.operators.ann import embedding_near_dup_pairs
+
+    df = embedding_near_dup_pairs(_uneven_clusters(spark), tables=3, dim=8)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # a subtree is printed at every use: count distinct nodes
+    assert len(set(re.findall(r"Window \[[^\]]*\]", plan))) == 2, plan
+
+
 @pytest.mark.spark
 def test_lsh_bucket_udf_matches_jvm_path(spark, emb):
     """The vectorized matmul UDF (high-dim path) assigns the same bucket ids

@@ -254,7 +254,8 @@ def test_kernel_gate_sides_match_oracle(spark, corpus, monkeypatch, cache, over_
     under util.KERNEL_TASK_WORK) and, with the gate at 0, through the
     exchange path: a single search, a batch and a split_time ladder each
     equal the oracle, on an uncached and a serving (cache=True) engine. Only
-    the plan under the gate reads its kernel inputs in place."""
+    the plan under the gate reads its kernel inputs in place; on both
+    engines the query terms prune the postings scan."""
     from similardocs_spark import util
     from similardocs_spark.plans.audit import audit_query_plan
 
@@ -274,7 +275,10 @@ def test_kernel_gate_sides_match_oracle(spark, corpus, monkeypatch, cache, over_
             res = engine.search_batch(dict(REFERENCE_QUERIES), **mode)
             for qname, q in REFERENCE_QUERIES.items():
                 assert_hits_equal(res[qname], oracle.search(q, **mode), f"{qname} {mode}")
-        assert audit_query_plan(engine, text)["kernel_in_place"] is not over_gate
+        audit = audit_query_plan(engine, text)
+        assert audit["kernel_in_place"] is not over_gate
+        # the term In reaches the postings scan, parquet or in-memory
+        assert audit["term_filter_pushed"]
     finally:
         if cache:
             engine._doc_stats.unpersist()
